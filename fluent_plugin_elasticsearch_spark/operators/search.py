@@ -2,15 +2,31 @@
 sorted/paged scans — the search surface the reference drives through
 `client.search` (in_elasticsearch.rb:272-294, out_elasticsearch.rb:947-957).
 
-Distributed plan for ``search``:
+Every posting-backed query runs one shard kernel (operators/wand.py,
+operators/positions.py) on each shard's blocks of the query terms, then
+merges the per-shard results into the global top-k by (score desc,
+doc_id asc). ``InvertedIndex._per_shard`` picks one of two execution
+paths for that kernel:
+
+Resident (after ``warm()``): the postings live in driver memory as one
+Arrow table per shard, sorted by (term, first_doc), with each term's row
+range. A query takes its terms' rows from each shard, runs the kernel
+in-process, merges in pandas and returns the rows as a local relation —
+collecting it starts no Spark job. Memory cost: about the postings'
+Arrow ``nbytes`` (6.8 MB for the 16k-doc perfbench index), plus one
+term→id dict over the vocabulary.
+
+Spark (unwarmed): one job per query
     term_stats lookup (≤ query-term rows, parquet min/max pruned)
   → postings.filter(term ∈ terms)            [scan limited to query terms]
-  → groupBy(shard).applyInPandas(local top-k) [WAND or exhaustive numpy]
+  → groupBy(shard).applyInPandas(kernel)      [WAND or exhaustive numpy]
   → global orderBy(score desc, doc_id asc).limit(k)   [TakeOrderedAndProject]
 
-Doc lengths ride inside the posting blocks, so query time touches no
-doc-side table; the final (≤ k rows) result can be broadcast-joined back to
-``docmap``/docs for materialization.
+Both paths hand the kernel the same rows and merge with the same
+tie-break, so their ids and scores are bit-identical. Doc lengths ride
+inside the posting blocks, so query time touches no doc-side table; the
+final (≤ k rows) result can be broadcast-joined back to ``docmap``/docs
+for materialization.
 """
 
 from __future__ import annotations
@@ -19,8 +35,12 @@ import json
 import math
 import os
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as pads
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..textproc import bm25_idf, tokenize_simple, tokenize_unicode
@@ -39,17 +59,60 @@ WAND_FALLBACK_POSTINGS = 16384
 
 
 def empty_topk_df(spark: SparkSession, schema: str) -> DataFrame:
-    """Empty result frame from a pure-SQL plan (Range(0) + casts).
-    ``spark.createDataFrame([], schema)`` builds an RDD-backed relation —
-    measured ~0.1-1.3 s on first use per session (parallelize + schema
-    conversion), and every search() constructed one eagerly even when
-    unused. This form is a LeafNode with zero driver-side data work.
-    Only simple "name type, ..." schemas (the TOPK shapes) are supported."""
+    """Empty result frame: a projection of typed NULLs ``WHERE false``,
+    which the optimizer folds to an empty local relation, so collecting
+    it starts no Spark job (``spark.range(0)`` started one with 0 tasks,
+    and ``spark.createDataFrame([], schema)`` builds an RDD-backed
+    relation). Only simple "name type, ..." schemas (the TOPK shapes)
+    are supported."""
     exprs = []
     for field in schema.split(","):
         name, typ = field.strip().split(None, 1)
         exprs.append(f"CAST(NULL AS {typ}) AS {name}")
-    return spark.range(0).selectExpr(*exprs)
+    return spark.sql(f"SELECT {', '.join(exprs)} WHERE false")
+
+
+_ARROW_TYPES = {"long": pa.int64(), "int": pa.int32(), "double": pa.float64()}
+
+
+def _arrow_schema(schema: str) -> pa.Schema:
+    """The Arrow schema of a simple "name type, ..." schema string."""
+    return pa.schema([(name, _ARROW_TYPES[typ]) for name, typ in
+                      (field.split() for field in schema.split(","))])
+
+
+class _ResidentPostings:
+    """A postings table held in driver memory: one Arrow table per shard,
+    sorted by (term, first_doc), and each term's row range in it
+    (``starts[id]:starts[id + 1]`` for the term's id in ``term_ids``)."""
+
+    def __init__(self, postings_path: str):
+        table = pads.dataset(postings_path, format="parquet",
+                             partitioning="hive").to_table()
+        vocab = pc.unique(table["term"]).sort()
+        self.term_ids = {t: i for i, t in enumerate(vocab.to_pylist())}
+        self.shards = []
+        for s in sorted(pc.unique(table["shard"]).to_pylist()):
+            part = table.filter(pc.equal(table["shard"], s)).sort_by(
+                [("term", "ascending"), ("first_doc", "ascending")])
+            ids = pc.index_in(part["term"], value_set=vocab).to_numpy()
+            self.shards.append((part, np.searchsorted(ids, np.arange(len(vocab) + 1))))
+        del table
+        pa.default_memory_pool().release_unused()
+
+    def blocks(self, terms) -> list[pd.DataFrame]:
+        """Each shard's blocks of ``terms`` as the pandas frame
+        applyInPandas would hand the kernel; shards holding none of the
+        terms are left out, as groupBy leaves them out."""
+        ids = sorted({self.term_ids[t] for t in terms if t in self.term_ids})
+        if not ids:
+            return []
+        out = []
+        for part, starts in self.shards:
+            rows = np.concatenate([np.arange(starts[i], starts[i + 1]) for i in ids])
+            if rows.size:
+                out.append(part.take(rows).to_pandas())
+        return out
 
 
 class InvertedIndex:
@@ -74,6 +137,7 @@ class InvertedIndex:
             self.meta = json.load(f)
         self._df_cache: dict[str, int] | None = None
         self._df_cache_bc = None
+        self._resident: _ResidentPostings | None = None
         if cache_term_stats:
             m = {r["term"]: int(r["df"]) for r in self.term_stats().collect()}
             if cache_term_stats == "broadcast":
@@ -96,45 +160,64 @@ class InvertedIndex:
 
     # --- table accessors -------------------------------------------------
     def postings(self) -> DataFrame:
-        if getattr(self, "_postings_cached", None) is not None:
-            return self._postings_cached
         return self.spark.read.parquet(os.path.join(self.path, "postings"))
 
     def warm(self) -> "InvertedIndex":
-        """Pin the postings table in executor memory (columnar, compressed)
-        — the serving-mode analogue of ES's page-cache-resident segments.
-        Cached pre-partitioned by shard so the per-query groupBy(shard)
-        reuses the partitioning: a search becomes a single-stage job (no
-        exchange), just filter → per-shard WAND → top-k.
+        """Load the postings into driver memory — the serving-mode
+        analogue of ES's segments resident on the serving node. One
+        pyarrow read of the postings parquet becomes one Arrow table per
+        shard, sorted by (term, first_doc), plus each term's row range;
+        freed read buffers go back to the OS.
 
-        Also spins up the Python worker pool and JITs the per-shard kernel
-        path by running one real head-term search (round-7): an ES node
-        pays exactly this once at segment-load time, not per query —
-        previously the FIRST timed search carried ~0.5-2.5 s of worker
-        fork + Arrow codec import, which is what the old first-query p99
-        measured. No results are retained — pure pool/codegen warm-up."""
-        n = self.spark.sparkContext.defaultParallelism
-        self._postings_cached = (
-            self.spark.read.parquet(os.path.join(self.path, "postings"))
-            .repartition(n, "shard")
-            .persist()
-        )
-        self._postings_cached.count()
-        head = None
-        if self._df_cache:
-            head = max(self._df_cache, key=self._df_cache.get)
-        elif self._df_cache_bc is not None:
-            m = self._df_cache_bc.value
-            head = max(m, key=m.get) if m else None
-        else:
-            row = (self.term_stats().orderBy(F.desc("df")).limit(1).collect() or [None])[0]
-            head = row["term"] if row is not None else None
-        if head is not None:
-            try:
-                self.search(head, k=1, mode="exhaustive").collect()
-            except Exception:  # warm-up must never fail an open
-                pass
+        From then on every posting-backed query runs its shard kernel
+        in-process on the query terms' rows and returns a local relation:
+        with a term cache (``cache_term_stats``) a warmed search starts no
+        Spark job. Results are bit-identical to the unwarmed Spark path.
+        The cost is driver memory of about the postings' Arrow ``nbytes``
+        (6.8 MB for the 16k-doc perfbench index); the tables are freed
+        with the index object."""
+        self._resident = _ResidentPostings(os.path.join(self.path, "postings"))
         return self
+
+    def _empty(self, schema: str = TOPK_SCHEMA) -> DataFrame:
+        return empty_topk_df(self.spark, schema)
+
+    def _per_shard(self, terms, kernel, schema: str, k: int | None = None,
+                   per_query: bool = False) -> DataFrame:
+        """Run ``kernel`` (pandas blocks → rows of ``schema``) on each
+        shard's posting blocks of ``terms`` and merge the shards' rows:
+        with ``k``, the global top k by (score desc, doc_id asc) — per
+        query_id, numbered in a ``rank`` column, when ``per_query`` — and
+        without it, every row. Warmed, the kernel runs in-process on the
+        resident blocks and the result is a local relation; otherwise it
+        runs in one Spark job through applyInPandas."""
+        if self._resident is None:
+            blocks = self.postings().filter(F.col("term").isin(list(terms)))
+            local = blocks.groupBy("shard").applyInPandas(kernel, schema)
+            if k is None:
+                return local
+            if not per_query:
+                return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+            w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
+            return (local.withColumn("rank", F.row_number().over(w))
+                    .filter(F.col("rank") <= k)
+                    .select("query_id", "doc_id", "score", "rank"))
+        if per_query:
+            schema += ", rank int"
+        parts = [kernel(pdf) for pdf in self._resident.blocks(terms)]
+        out = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame()
+        if out.empty:
+            return self._empty(schema)
+        if k is not None:
+            keys = [out["doc_id"], -out["score"]] + ([out["query_id"]] if per_query else [])
+            out = out.iloc[np.lexsort(keys)]
+            if per_query:
+                out = out.assign(rank=out.groupby("query_id").cumcount() + 1)
+                out = out[out["rank"] <= k]
+            else:
+                out = out.head(k)
+        return self.spark.createDataFrame(
+            pa.Table.from_pandas(out, _arrow_schema(schema), preserve_index=False))
 
     def doc_stats(self) -> DataFrame:
         return self.spark.read.parquet(os.path.join(self.path, "doc_stats"))
@@ -167,13 +250,11 @@ class InvertedIndex:
         the full BM25 sum over matched terms — ES semantics."""
         terms = self.query_terms(query_text)
         msm = len(terms) if operator == "and" else int(minimum_should_match)
-        spark = self.spark
-        empty = empty_topk_df(spark, TOPK_SCHEMA)
         if not terms:
-            return empty
+            return self._empty()
         dfs = self._lookup_dfs(terms)
         if not dfs:
-            return empty
+            return self._empty()
         n_docs, avgdl = self.meta["n_docs"], self.meta["avgdl"]
         k1, b = self.meta["k1"], self.meta["b"]
         idfs = {t: bm25_idf(df, n_docs) for t, df in dfs.items()}
@@ -188,9 +269,7 @@ class InvertedIndex:
                 return _wand.score_shard_wand(pdf, idfs, k, avgdl, k1, b)
             return _wand.score_shard_exhaustive(pdf, idfs, k, avgdl, k1, b)
 
-        blocks = self.postings().filter(F.col("term").isin(list(dfs)))
-        local = blocks.groupBy("shard").applyInPandas(shard_topk, TOPK_SCHEMA)
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return self._per_shard(dfs, shard_topk, TOPK_SCHEMA, k)
 
     def match_scores(self, query_terms: list[str],
                      groups: list[list[str]] | None = None,
@@ -213,13 +292,11 @@ class InvertedIndex:
             # mid-job inside the kernel
             raise ValueError(
                 f"query_string gate supports <= 64 distinct terms, got {len(terms)}")
-        spark = self.spark
-        empty = empty_topk_df(spark, TOPK_SCHEMA)
         if not terms:
-            return empty
+            return self._empty()
         dfs = self._lookup_dfs(terms)
         if not dfs:
-            return empty
+            return self._empty()
         n_docs, avgdl = self.meta["n_docs"], self.meta["avgdl"]
         k1, b = self.meta["k1"], self.meta["b"]
         if weights is None:
@@ -232,8 +309,7 @@ class InvertedIndex:
             return _wand.score_shard_matched(pdf, idfs, avgdl, k1, b, groups,
                                              quantize=quantize)
 
-        blocks = self.postings().filter(F.col("term").isin(list(dfs)))
-        return blocks.groupBy("shard").applyInPandas(shard_all, TOPK_SCHEMA)
+        return self._per_shard(dfs, shard_all, TOPK_SCHEMA)
 
     def sparse_vector_scores(self, query_vector: dict) -> DataFrame:
         """Index-backed sparse_vector serving: Σ_t round(w·1e3)·tf·1000
@@ -246,19 +322,15 @@ class InvertedIndex:
         from .relevance import _sparse_query_units
 
         qus = dict(_sparse_query_units(query_vector))
-        spark = self.spark
-        empty = empty_topk_df(spark, "doc_id long, score_u long")
         dfs = self._lookup_dfs(list(qus))
         if not dfs:
-            return empty
+            return self._empty("doc_id long, score_u long")
         units = {t: qus[t] for t in dfs}
 
         def shard_sparse(pdf: pd.DataFrame) -> pd.DataFrame:
             return _wand.score_shard_weighted_tf(pdf, units)
 
-        blocks = self.postings().filter(F.col("term").isin(list(dfs)))
-        return blocks.groupBy("shard").applyInPandas(
-            shard_sparse, "doc_id long, score_u long")
+        return self._per_shard(dfs, shard_sparse, "doc_id long, score_u long")
 
     def expand_prefix(self, prefix: str, max_expansions: int = 1024) -> list[str]:
         """Dictionary expansion for a prefix clause: every index term
@@ -313,15 +385,13 @@ class InvertedIndex:
         approximation (wand.score_shard_dismax). Returns (doc_id, score),
         tie (score desc, doc_id asc); the single-subquery case is
         rank-identical to search(mode='exhaustive')."""
-        spark = self.spark
         per_q_terms = [self.query_terms(q) for q in queries]
         all_terms = sorted({t for ts in per_q_terms for t in ts})
-        empty = empty_topk_df(spark, TOPK_SCHEMA)
         if not all_terms:
-            return empty
+            return self._empty()
         dfs = self._lookup_dfs(all_terms)
         if not dfs:
-            return empty
+            return self._empty()
         n_docs, avgdl = self.meta["n_docs"], self.meta["avgdl"]
         k1, b = self.meta["k1"], self.meta["b"]
         subquery_idfs = [
@@ -330,33 +400,27 @@ class InvertedIndex:
         ]
         subquery_idfs = [m for m in subquery_idfs if m]
         if not subquery_idfs:
-            return empty
+            return self._empty()
 
         def shard_dismax(pdf: pd.DataFrame) -> pd.DataFrame:
             return _wand.score_shard_dismax(pdf, subquery_idfs, tie_breaker,
                                             k, avgdl, k1, b)
 
-        blocks = self.postings().filter(F.col("term").isin(list(dfs)))
-        local = blocks.groupBy("shard").applyInPandas(shard_dismax, TOPK_SCHEMA)
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return self._per_shard(dfs, shard_dismax, TOPK_SCHEMA, k)
 
     def search_batch(self, queries: dict[int, str], k: int = 10) -> DataFrame:
-        """Batched multi-query top-k (offline query sets): ONE job decodes
+        """Batched multi-query top-k (offline query sets): ONE pass decodes
         the union of the queries' posting data per shard and scores every
         query — per-query cost amortizes to near-zero for large sets.
         Returns (query_id, doc_id, score, rank), rank-identical per query
         to `search()`."""
-        spark = self.spark
-        from pyspark.sql import Window
-
         per_query_terms = {qid: self.query_terms(q) for qid, q in queries.items()}
         all_terms = sorted({t for ts in per_query_terms.values() for t in ts})
-        empty = empty_topk_df(spark, "query_id long, doc_id long, score double, rank int")
         if not all_terms:
-            return empty
+            return self._empty("query_id long, doc_id long, score double, rank int")
         dfs = self._lookup_dfs(all_terms)
         if not dfs:
-            return empty
+            return self._empty("query_id long, doc_id long, score double, rank int")
         n_docs, avgdl = self.meta["n_docs"], self.meta["avgdl"]
         k1, b = self.meta["k1"], self.meta["b"]
         query_idfs = {
@@ -368,16 +432,8 @@ class InvertedIndex:
         def shard_batch(pdf: pd.DataFrame) -> pd.DataFrame:
             return _wand.score_shard_batch(pdf, query_idfs, k, avgdl, k1, b)
 
-        blocks = self.postings().filter(F.col("term").isin(list(dfs)))
-        local = blocks.groupBy("shard").applyInPandas(
-            shard_batch, "query_id long, doc_id long, score double"
-        )
-        w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-        return (
-            local.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "doc_id", "score", "rank")
-        )
+        return self._per_shard(dfs, shard_batch, "query_id long, doc_id long, score double",
+                               k, per_query=True)
 
     def match_phrase(self, phrase: str, k: int = 10) -> DataFrame:
         """ES match_phrase over a positional index (build_index with
@@ -393,14 +449,12 @@ class InvertedIndex:
         from ..textproc import bm25_idf
 
         terms = _TOKENIZE[self.meta["tokenizer"]](phrase)
-        spark = self.spark
-        empty = empty_topk_df(spark, TOPK_SCHEMA)
         if not terms:
-            return empty
+            return self._empty()
         uniq = sorted(set(terms))
         dfs = self._lookup_dfs(uniq)
         if len(dfs) < len(set(terms)):
-            return empty  # a phrase term absent from the corpus ⇒ no match
+            return self._empty()  # a phrase term absent from the corpus ⇒ no match
         n_docs, avgdl = self.meta["n_docs"], self.meta["avgdl"]
         k1, b = self.meta["k1"], self.meta["b"]
         # idf sum in PHRASE order (duplicates counted), matching match_phrase_df
@@ -409,9 +463,7 @@ class InvertedIndex:
         def shard_phrase(pdf: pd.DataFrame) -> pd.DataFrame:
             return score_shard_phrase(pdf, terms, idf_sum, k, avgdl, k1, b)
 
-        blocks = self.postings().filter(F.col("term").isin(uniq))
-        local = blocks.groupBy("shard").applyInPandas(shard_phrase, TOPK_SCHEMA)
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return self._per_shard(uniq, shard_phrase, TOPK_SCHEMA, k)
 
     def match_phrase_prefix(self, phrase: str, k: int = 10,
                             max_expansions: int = 1024) -> DataFrame:
@@ -430,25 +482,23 @@ class InvertedIndex:
         from ..textproc import bm25_idf
 
         terms = _TOKENIZE[self.meta["tokenizer"]](phrase)
-        spark = self.spark
-        empty = empty_topk_df(spark, TOPK_SCHEMA)
         if not terms:
-            return empty
+            return self._empty()
         exact, pref = terms[:-1], terms[-1]
         expansion = self.expand_prefix(pref, max_expansions)
         if not expansion:
-            return empty
+            return self._empty()
         uniq_exact = sorted(set(exact))
         dfs = self._lookup_dfs(uniq_exact)
         if len(dfs) < len(uniq_exact):
-            return empty  # an exact term absent from the corpus ⇒ no match
+            return self._empty()  # an exact term absent from the corpus ⇒ no match
         n_docs, avgdl = self.meta["n_docs"], self.meta["avgdl"]
         k1, b = self.meta["k1"], self.meta["b"]
         # prefix-clause df = docs containing ANY expansion term (a small
         # postings-bounded count job), matching the DF scorer's df
         df_prefix = self.matched_doc_ids(expansion).count()
         if df_prefix == 0:
-            return empty
+            return self._empty()
         idf_sum = sum(bm25_idf(dfs[t], n_docs) for t in exact) \
             + bm25_idf(df_prefix, n_docs)
 
@@ -457,9 +507,7 @@ class InvertedIndex:
                                       last_terms=expansion)
 
         wanted = sorted(set(exact) | set(expansion))
-        blocks = self.postings().filter(F.col("term").isin(wanted))
-        local = blocks.groupBy("shard").applyInPandas(shard_phrase, TOPK_SCHEMA)
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return self._per_shard(wanted, shard_phrase, TOPK_SCHEMA, k)
 
     def span_near(self, first: str, second: str, slop: int = 0,
                   k: int = 10) -> DataFrame:
@@ -474,11 +522,9 @@ class InvertedIndex:
         from .positions import score_shard_span_near
         from ..textproc import bm25_idf
 
-        spark = self.spark
-        empty = empty_topk_df(spark, TOPK_SCHEMA)
         dfs = self._lookup_dfs(sorted({first, second}))
         if len(dfs) < len({first, second}):
-            return empty  # a clause term absent from the corpus ⇒ no span
+            return self._empty()  # a clause term absent from the corpus ⇒ no span
         n_docs, avgdl = self.meta["n_docs"], self.meta["avgdl"]
         k1, b = self.meta["k1"], self.meta["b"]
         # idf sum in CLAUSE order (first + second), matching span_near_df
@@ -488,9 +534,7 @@ class InvertedIndex:
             return score_shard_span_near(pdf, first, second, int(slop),
                                          idf_sum, k, avgdl, k1, b)
 
-        blocks = self.postings().filter(F.col("term").isin(sorted({first, second})))
-        local = blocks.groupBy("shard").applyInPandas(shard_span, TOPK_SCHEMA)
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return self._per_shard(sorted({first, second}), shard_span, TOPK_SCHEMA, k)
 
     def span_first(self, term: str, end: int, k: int = 10) -> DataFrame:
         """ES span_first served from the positional index: sf = the
@@ -503,10 +547,9 @@ class InvertedIndex:
         from .positions import score_shard_span_first
         from ..textproc import bm25_idf
 
-        empty = empty_topk_df(self.spark, TOPK_SCHEMA)
         dfs = self._lookup_dfs([term])
         if not dfs:
-            return empty
+            return self._empty()
         n_docs, avgdl = self.meta["n_docs"], self.meta["avgdl"]
         k1, b = self.meta["k1"], self.meta["b"]
         idf = bm25_idf(dfs[term], n_docs)
@@ -515,9 +558,7 @@ class InvertedIndex:
             return score_shard_span_first(pdf, term, int(end), idf, k,
                                           avgdl, k1, b)
 
-        blocks = self.postings().filter(F.col("term") == term)
-        local = blocks.groupBy("shard").applyInPandas(shard, TOPK_SCHEMA)
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return self._per_shard([term], shard, TOPK_SCHEMA, k)
 
     def span_or(self, terms: list[str], k: int = 10) -> DataFrame:
         """ES span_or over single-term clauses served from the tf index:
@@ -527,11 +568,10 @@ class InvertedIndex:
         from ..textproc import bm25_idf
         from .wand import score_shard_span_or
 
-        empty = empty_topk_df(self.spark, TOPK_SCHEMA)
         uniq = sorted(set(terms))
         dfs = self._lookup_dfs(uniq)
         if not dfs:
-            return empty
+            return self._empty()
         n_docs, avgdl = self.meta["n_docs"], self.meta["avgdl"]
         k1, b = self.meta["k1"], self.meta["b"]
         # idf sum in CLAUSE order over every clause term (absent terms
@@ -541,9 +581,7 @@ class InvertedIndex:
         def shard(pdf: pd.DataFrame) -> pd.DataFrame:
             return score_shard_span_or(pdf, idf_sum, k, avgdl, k1, b)
 
-        blocks = self.postings().filter(F.col("term").isin(list(dfs)))
-        local = blocks.groupBy("shard").applyInPandas(shard, TOPK_SCHEMA)
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return self._per_shard(dfs, shard, TOPK_SCHEMA, k)
 
     def span_not(self, include: str, exclude: str, pre: int = 0,
                  post: int = 0, k: int = 10) -> DataFrame:
@@ -556,10 +594,9 @@ class InvertedIndex:
         from .positions import score_shard_span_not
         from ..textproc import bm25_idf
 
-        empty = empty_topk_df(self.spark, TOPK_SCHEMA)
         dfs = self._lookup_dfs(sorted({include, exclude}))
         if include not in dfs:
-            return empty
+            return self._empty()
         n_docs, avgdl = self.meta["n_docs"], self.meta["avgdl"]
         k1, b = self.meta["k1"], self.meta["b"]
         idf = bm25_idf(dfs[include], n_docs)
@@ -568,10 +605,7 @@ class InvertedIndex:
             return score_shard_span_not(pdf, include, exclude, int(pre),
                                         int(post), idf, k, avgdl, k1, b)
 
-        blocks = self.postings().filter(
-            F.col("term").isin(sorted({include, exclude})))
-        local = blocks.groupBy("shard").applyInPandas(shard, TOPK_SCHEMA)
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return self._per_shard(sorted({include, exclude}), shard, TOPK_SCHEMA, k)
 
     def span_multi(self, value: str, kind: str = "prefix",
                    max_expansions: int = 50, k: int = 10) -> DataFrame:
@@ -590,12 +624,11 @@ class InvertedIndex:
         from .wand import score_shard_span_or
 
         like = _span_multi_like(value, kind)
-        empty = empty_topk_df(self.spark, TOPK_SCHEMA)
         exp_rows = (self.term_stats().filter(F.col("term").like(like))
                     .orderBy(F.asc("term"))
                     .limit(int(max_expansions)).collect())
         if not exp_rows:
-            return empty
+            return self._empty()
         n_docs, avgdl = self.meta["n_docs"], self.meta["avgdl"]
         k1, b = self.meta["k1"], self.meta["b"]
         idf_u = sum(_m.floor(bm25_idf(r["df"], n_docs) * 1e6)
@@ -606,9 +639,7 @@ class InvertedIndex:
         def shard(pdf: pd.DataFrame) -> pd.DataFrame:
             return score_shard_span_or(pdf, idf_sum, k, avgdl, k1, b)
 
-        blocks = self.postings().filter(F.col("term").isin(terms))
-        local = blocks.groupBy("shard").applyInPandas(shard, TOPK_SCHEMA)
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return self._per_shard(terms, shard, TOPK_SCHEMA, k)
 
     def span_containing(self, first: str, second: str, little: str,
                         slop: int = 0, k: int = 10,
@@ -626,11 +657,10 @@ class InvertedIndex:
         from .positions import score_shard_span_contain
         from ..textproc import bm25_idf
 
-        empty = empty_topk_df(self.spark, TOPK_SCHEMA)
         wanted = sorted({first, second, little})
         dfs = self._lookup_dfs(wanted)
         if any(t not in dfs for t in (first, second, little)):
-            return empty  # a clause term absent ⇒ no span anywhere
+            return self._empty()  # a clause term absent ⇒ no span anywhere
         n_docs, avgdl = self.meta["n_docs"], self.meta["avgdl"]
         k1, b = self.meta["k1"], self.meta["b"]
         idf_sum = (bm25_idf(dfs[little], n_docs) if within
@@ -642,9 +672,7 @@ class InvertedIndex:
                                             int(slop), within, idf_sum, k,
                                             avgdl, k1, b)
 
-        blocks = self.postings().filter(F.col("term").isin(wanted))
-        local = blocks.groupBy("shard").applyInPandas(shard, TOPK_SCHEMA)
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return self._per_shard(wanted, shard, TOPK_SCHEMA, k)
 
     def span_within(self, first: str, second: str, little: str,
                     slop: int = 0, k: int = 10) -> DataFrame:
@@ -670,11 +698,10 @@ class InvertedIndex:
         from .positions import score_shard_intervals
         from ..textproc import bm25_idf
 
-        empty = empty_topk_df(self.spark, TOPK_SCHEMA)
         uniq = sorted(set(terms))
         dfs = self._lookup_dfs(uniq)
         if len(dfs) < len(uniq):
-            return empty  # a clause term absent ⇒ no interval
+            return self._empty()  # a clause term absent ⇒ no interval
         n_docs, avgdl = self.meta["n_docs"], self.meta["avgdl"]
         k1, b = self.meta["k1"], self.meta["b"]
         idf_sum = sum(bm25_idf(dfs[t], n_docs) for t in terms)
@@ -684,9 +711,7 @@ class InvertedIndex:
                                          bool(ordered), idf_sum, k,
                                          avgdl, k1, b)
 
-        blocks = self.postings().filter(F.col("term").isin(uniq))
-        local = blocks.groupBy("shard").applyInPandas(shard, TOPK_SCHEMA)
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return self._per_shard(uniq, shard, TOPK_SCHEMA, k)
 
     def suggest(self, prefix: str, k: int = 10) -> DataFrame:
         """Completion suggester: top-k index terms with the given prefix,
@@ -820,14 +845,13 @@ def more_like_this_topk(index: "InvertedIndex", docs: DataFrame,
     from ..textproc import bm25_idf
 
     spark = index.spark
-    empty = empty_topk_df(spark, "doc_id long, score_u long")
     row = docs.filter(F.col(id_col) == like_id).select(text_col).collect()
     if not row or row[0][0] is None:
-        return empty
+        return empty_topk_df(spark, "doc_id long, score_u long")
     tokens = [t for t in _TOKENIZE[index.meta["tokenizer"]](row[0][0])
               if len(t) >= min_term_len]
     if not tokens:
-        return empty
+        return empty_topk_df(spark, "doc_id long, score_u long")
     tfc = Counter(tokens)
     dfs = index._lookup_dfs(sorted(tfc))
     n_docs = index.meta["n_docs"]
@@ -837,7 +861,7 @@ def more_like_this_topk(index: "InvertedIndex", docs: DataFrame,
     )
     sel = [t for _, t in ranked[:max_query_terms]]
     if not sel:
-        return empty
+        return empty_topk_df(spark, "doc_id long, score_u long")
     scores = index.match_scores(sel).filter(F.col("doc_id") != like_id)
     return _quantized_topk(scores, k)
 

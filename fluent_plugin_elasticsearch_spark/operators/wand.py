@@ -3,11 +3,19 @@
 skipping) — the ES-side scoring the reference invokes via `client.search`
 (out_elasticsearch.rb:957, in_elasticsearch.rb:275), implemented natively.
 
-Both run inside ``applyInPandas`` groups keyed by shard: the distributed
-query plan is  postings.filter(term ∈ query) → per-shard local top-k →
-global top-k merge. Work per shard is proportional to the query terms'
-posting data only (doc lengths are inlined in the blocks, so no doc_stats
-join at query time).
+Every kernel takes one shard's posting blocks of the query terms as a
+pandas frame and returns that shard's local result; the caller merges the
+shards into the global top-k (search.InvertedIndex._per_shard). The same
+kernel runs on either of two paths:
+
+* resident — on a warmed index, in-process on the driver, over the rows
+  taken from the shard's Arrow table in memory (about the postings' Arrow
+  ``nbytes``: 6.8 MB for the 16k-doc perfbench index), with no Spark job;
+* Spark — on an unwarmed index, inside ``applyInPandas`` groups keyed by
+  shard: postings.filter(term ∈ query) → groupBy(shard) → kernel.
+
+Work per shard is proportional to the query terms' posting data only (doc
+lengths are inlined in the blocks, so no doc_stats join at query time).
 
 Tie-break everywhere: (score desc, doc_id asc) — rank-identical contract.
 """

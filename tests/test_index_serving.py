@@ -58,43 +58,56 @@ def field_registry(spark, docs, tmp_path_factory):
     return reg
 
 
+def _on_path(registry, path):
+    """``registry`` on one execution path: "unwarmed" (one Spark job per
+    query) or "warmed" (driver-resident postings, in-process kernels)."""
+    if path == "unwarmed":
+        return registry
+    return {f: InvertedIndex(idx.spark, idx.path).warm() for f, idx in registry.items()}
+
+
+@pytest.fixture(scope="module", params=["warmed", "unwarmed"])
+def served_registry(request, field_registry):
+    return _on_path(field_registry, request.param)
+
+
 def _rows(df):
     return [(r["doc_id"], r["score_u"]) for r in df.collect()]
 
 
 @pytest.mark.parametrize("mtype", ["best_fields", "most_fields"])
-def test_multi_match_index_identity(spark, docs, field_registry, mtype):
+def test_multi_match_index_identity(spark, docs, served_registry, mtype):
     want = _rows(_bm25.multi_match_df(docs, TERMS, ["text", "source"],
                                       k=10, match_type=mtype))
     got = _rows(multi_match_topk(
-        {f: field_registry[f] for f in ("text", "source")},
+        {f: served_registry[f] for f in ("text", "source")},
         TERMS, k=10, match_type=mtype))
     assert got == want
 
 
-def test_query_string_index_identity(spark, docs, field_registry):
+def test_query_string_index_identity(spark, docs, served_registry):
     q = "fast AND table OR window"
     want = _rows(_bm25.query_string_df(docs, q, k=10))
-    got = _rows(query_string_topk(field_registry["text"], q, k=10))
+    got = _rows(query_string_topk(served_registry["text"], q, k=10))
     assert got == want
 
 
-def test_combined_fields_index_identity(spark, docs, field_registry):
+def test_combined_fields_index_identity(spark, docs, served_registry):
     ck = combined_index_key(["text", "source"], {"source": 2})
     want = _rows(_bm25.combined_fields_df(
         docs, TERMS, ["text", "source"], k=10, weights={"source": 2}))
-    got = _rows(combined_fields_topk(field_registry[ck], TERMS, k=10))
+    got = _rows(combined_fields_topk(served_registry[ck], TERMS, k=10))
     assert got == want
 
 
-def test_match_bool_prefix_index_identity(spark, docs, field_registry):
+def test_match_bool_prefix_index_identity(spark, docs, served_registry):
     terms = ["merge", "ta"]  # the oracle entry's own query
     want = _rows(_bm25.match_bool_prefix_df(docs, terms, k=15))
-    got = _rows(match_bool_prefix_topk(field_registry["text"], terms, k=15))
+    got = _rows(match_bool_prefix_topk(served_registry["text"], terms, k=15))
     assert got == want
     # prefix-only form (no full terms)
     want1 = _rows(_bm25.match_bool_prefix_df(docs, ["ta"], k=15))
-    got1 = _rows(match_bool_prefix_topk(field_registry["text"], ["ta"], k=15))
+    got1 = _rows(match_bool_prefix_topk(served_registry["text"], ["ta"], k=15))
     assert got1 == want1
 
 
@@ -111,9 +124,14 @@ def pos_field_registry(spark, docs, tmp_path_factory):
     return {f: InvertedIndex(spark, p) for f, p in paths.items()}
 
 
+@pytest.fixture(scope="module", params=["warmed", "unwarmed"])
+def served_pos_registry(request, pos_field_registry):
+    return _on_path(pos_field_registry, request.param)
+
+
 @pytest.mark.parametrize("prefix,phrase", [(False, "the data"),
                                            (True, "the da")])
-def test_multi_match_phrase_index_identity(spark, docs, pos_field_registry,
+def test_multi_match_phrase_index_identity(spark, docs, served_pos_registry,
                                            prefix, phrase):
     from fluent_plugin_elasticsearch_spark.operators.relevance import (
         multi_match_phrase_df,
@@ -125,7 +143,7 @@ def test_multi_match_phrase_index_identity(spark, docs, pos_field_registry,
     want = _rows(multi_match_phrase_df(docs, phrase.split(),
                                        ["text", "source"], k=10,
                                        prefix=prefix))
-    got = _rows(multi_match_phrase_topk(pos_field_registry, phrase, k=10,
+    got = _rows(multi_match_phrase_topk(served_pos_registry, phrase, k=10,
                                         prefix=prefix))
     assert got == want
 
@@ -171,7 +189,7 @@ def test_match_phrase_slop_raises(spark, docs, pos_field_registry):
             compile_query(docs, body, index=pos_field_registry)
 
 
-def test_fuzzy_match_index_identity(spark, docs, field_registry):
+def test_fuzzy_match_index_identity(spark, docs, served_registry):
     from fluent_plugin_elasticsearch_spark.operators.relevance import (
         fuzzy_match_df,
     )
@@ -181,16 +199,16 @@ def test_fuzzy_match_index_identity(spark, docs, field_registry):
 
     for text, fz in [("mergee window", 1), ("spark tabel", "AUTO")]:
         want = _rows(fuzzy_match_df(docs, text.split(), fuzziness=fz, k=10))
-        got = _rows(fuzzy_match_topk(field_registry["text"], text,
+        got = _rows(fuzzy_match_topk(served_registry["text"], text,
                                      fuzziness=fz, k=10))
         assert got == want, (text, fz)
     # no dictionary term within budget -> empty, both paths
-    assert _rows(fuzzy_match_topk(field_registry["text"], "qqqqqq",
+    assert _rows(fuzzy_match_topk(served_registry["text"], "qqqqqq",
                                   fuzziness=1, k=10)) == []
     assert _rows(fuzzy_match_df(docs, ["qqqqqq"], fuzziness=1, k=10)) == []
 
 
-def test_more_like_this_index_identity(spark, docs, field_registry):
+def test_more_like_this_index_identity(spark, docs, served_registry):
     from fluent_plugin_elasticsearch_spark.operators.relevance import (
         more_like_this_df,
     )
@@ -200,11 +218,11 @@ def test_more_like_this_index_identity(spark, docs, field_registry):
 
     for lid, mqt in [(0, 8), (7, 10)]:
         want = _rows(more_like_this_df(docs, lid, max_query_terms=mqt, k=12))
-        got = _rows(more_like_this_topk(field_registry["text"], docs, lid,
+        got = _rows(more_like_this_topk(served_registry["text"], docs, lid,
                                         max_query_terms=mqt, k=12))
         assert got == want, lid
     # absent seed id -> empty
-    assert _rows(more_like_this_topk(field_registry["text"], docs,
+    assert _rows(more_like_this_topk(served_registry["text"], docs,
                                      like_id=10**9, k=5)) == []
 
 
@@ -315,18 +333,18 @@ def test_query_string_gate_over_64_terms_raises(spark, field_registry):
 
 
 def test_sparse_vector_index_identity_and_plan(spark, docs, field_registry,
-                                               monkeypatch):
+                                               served_registry, monkeypatch):
     from fluent_plugin_elasticsearch_spark.operators import relevance as _rel
     from fluent_plugin_elasticsearch_spark.plans.query_ast import compile_query
 
     qv = {"fast": 1.5, "table": 0.7, "zzznope": 2.0}
     want = _rows(_rel.sparse_vector_df(docs, qv, k=10))
-    idx = field_registry["text"]
+    idx = served_registry["text"]
     got = _rows(idx.sparse_vector_scores(qv)
                 .orderBy(F.desc("score_u"), F.asc("doc_id")).limit(10))
     assert got == want and len(got) == 10
-    # the serving path reads only posting blocks, never the corpus
-    plan = (idx.sparse_vector_scores(qv)
+    # the Spark serving path reads only posting blocks, never the corpus
+    plan = (field_registry["text"].sparse_vector_scores(qv)
             ._jdf.queryExecution().executedPlan().toString())
     assert "documents.parquet" not in plan and "postings" in plan
     # AST route: DF scorer must not run under a registry
@@ -338,7 +356,7 @@ def test_sparse_vector_index_identity_and_plan(spark, docs, field_registry,
                         lambda *a, **kw: (_ for _ in ()).throw(
                             AssertionError("DF scorer ran under registry")))
     served = [r["doc_id"] for r in
-              compile_query(docs, body, index=field_registry).collect()]
+              compile_query(docs, body, index=served_registry).collect()]
     assert served == fallback
     # absent-everywhere query vector → empty result, not an error
     assert idx.sparse_vector_scores({"zzznope": 1.0}).count() == 0

@@ -26,10 +26,19 @@ def pos_index(spark, sf_dir, tmp_path_factory):
     return out
 
 
-@pytest.mark.parametrize("phrase", PHRASES)
-def test_phrase_index_matches_dataframe_form(spark, sf_dir, pos_index, phrase):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+@pytest.fixture(scope="module", params=["warmed", "unwarmed"])
+def pos_idx(request, spark, pos_index):
+    """The positional index on both execution paths: warmed
+    (driver-resident postings, in-process kernels) and unwarmed (one
+    Spark job)."""
     idx = InvertedIndex(spark, pos_index)
+    return idx.warm() if request.param == "warmed" else idx
+
+
+@pytest.mark.parametrize("phrase", PHRASES)
+def test_phrase_index_matches_dataframe_form(spark, sf_dir, pos_idx, phrase):
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    idx = pos_idx
     got = idx.match_phrase(phrase, k=10).collect()
     exp = match_phrase_df(docs, phrase.split(), k=10).collect()
     assert [r["doc_id"] for r in got] == [r["doc_id"] for r in exp], phrase
@@ -65,14 +74,14 @@ PREFIX_PHRASES = ["the da", "data que", "th", "the data que", "zzznope da"]
 
 
 @pytest.mark.parametrize("phrase", PREFIX_PHRASES)
-def test_phrase_prefix_index_matches_dataframe_form(spark, sf_dir, pos_index,
+def test_phrase_prefix_index_matches_dataframe_form(spark, sf_dir, pos_idx,
                                                     phrase):
     from fluent_plugin_elasticsearch_spark.operators.relevance import (
         match_phrase_prefix_df,
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    idx = InvertedIndex(spark, pos_index)
+    idx = pos_idx
     got = idx.match_phrase_prefix(phrase, k=10, max_expansions=10**6).collect()
     exp = match_phrase_prefix_df(docs, phrase.split(), k=10).collect()
     assert [r["doc_id"] for r in got] == [r["doc_id"] for r in exp], phrase
@@ -135,14 +144,14 @@ def test_query_ast_match_phrase_prefix_routes(spark, sf_dir, pos_index,
 
 @pytest.mark.parametrize("first,second,slop", [
     ("merge", "window", 2), ("the", "data", 0), ("spark", "fast", 5)])
-def test_span_near_index_matches_dataframe_form(spark, sf_dir, pos_index,
+def test_span_near_index_matches_dataframe_form(spark, sf_dir, pos_idx,
                                                 first, second, slop):
     from fluent_plugin_elasticsearch_spark.operators.relevance import (
         span_near_df,
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    idx = InvertedIndex(spark, pos_index)
+    idx = pos_idx
     got = idx.span_near(first, second, slop=slop, k=10).collect()
     exp = span_near_df(docs, first, second, slop=slop, k=10).collect()
     assert [r["doc_id"] for r in got] == [r["doc_id"] for r in exp]
@@ -179,14 +188,14 @@ def test_span_near_slop_semantics(spark, tmp_path):
     assert sc[5] > sc[1]
 
 
-def test_span_family_index_matches_dataframe_forms(spark, sf_dir, pos_index):
+def test_span_family_index_matches_dataframe_forms(spark, sf_dir, pos_idx):
     """span_first / span_or / span_not served from the positional index
     must equal their DataFrame scorers rank- and score-exactly
     (span_or needs only the tf postings; the others use positions)."""
     from fluent_plugin_elasticsearch_spark.operators import relevance as rel
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    idx = InvertedIndex(spark, pos_index)
+    idx = pos_idx
     cases = [
         ("span_first", idx.span_first("merge", 5, 10),
          rel.span_first_df(docs, "merge", 5, 10)),
@@ -222,14 +231,14 @@ def test_span_family_index_matches_dataframe_forms(spark, sf_dir, pos_index):
     (["the", "the"], 3, False),          # same-term: self-hit correction
     (["the", "data", "the"], 5, True),   # repeated term in the chain
 ])
-def test_intervals_index_matches_dataframe_form(spark, sf_dir, pos_index,
+def test_intervals_index_matches_dataframe_form(spark, sf_dir, pos_idx,
                                                 terms, mg, ordered):
     from fluent_plugin_elasticsearch_spark.operators.relevance import (
         intervals_match_df,
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    idx = InvertedIndex(spark, pos_index)
+    idx = pos_idx
     got = idx.intervals_match(terms, max_gaps=mg, ordered=ordered, k=10).collect()
     exp = intervals_match_df(docs, terms, max_gaps=mg, ordered=ordered,
                              k=10).collect()
@@ -372,7 +381,7 @@ def test_query_ast_match_phrase_routes_to_index(spark, sf_dir, pos_index):
     ("the", "data", "zzznope", 2),   # absent little → empty
     ("data", "query", "table", 5),
 ])
-def test_span_containing_within_index_matches_df(spark, sf_dir, pos_index,
+def test_span_containing_within_index_matches_df(spark, sf_dir, pos_idx,
                                                  first, second, little, slop):
     from fluent_plugin_elasticsearch_spark.operators.relevance import (
         span_containing_df,
@@ -380,7 +389,7 @@ def test_span_containing_within_index_matches_df(spark, sf_dir, pos_index,
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    idx = InvertedIndex(spark, pos_index)
+    idx = pos_idx
     for got_df, want_df in [
         (idx.span_containing(first, second, little, slop, 10),
          span_containing_df(docs, first, second, little, slop, 10)),
@@ -401,13 +410,13 @@ def test_span_containing_within_index_matches_df(spark, sf_dir, pos_index,
     ("qu*y", "wildcard", 50),
     ("zzz", "prefix", 50),      # empty expansion
 ])
-def test_span_multi_index_matches_df(spark, sf_dir, pos_index, value, kind, mx):
+def test_span_multi_index_matches_df(spark, sf_dir, pos_idx, value, kind, mx):
     from fluent_plugin_elasticsearch_spark.operators.relevance import (
         span_multi_df,
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    idx = InvertedIndex(spark, pos_index)
+    idx = pos_idx
     got = idx.span_multi(value, kind=kind, max_expansions=mx, k=10).collect()
     want = span_multi_df(docs, value, kind=kind, max_expansions=mx,
                          k=10).collect()

@@ -30,17 +30,23 @@ def test_bm25_df_broadcasts_small_sides(spark, sf_dir):
 
 
 @pytest.mark.parametrize("cache_mode", [True, "broadcast"])
-def test_warm_search_has_single_stage_no_exchange(spark, index_dir, cache_mode):
+def test_warm_search_is_local_and_starts_no_job(spark, index_dir, cache_mode):
+    """A warmed, term-cached search scores on the driver-resident postings:
+    its plan is a LocalTableScan, building and collecting it starts no
+    Spark job, and its rows are those of the unwarmed index."""
+    sc = spark.sparkContext
     idx = InvertedIndex(spark, index_dir, cache_term_stats=cache_mode).warm()
-    q = idx.search("the of", k=5, mode="exhaustive")
-    plan = plan_of(q)
-    assert "InMemoryTableScan" in plan
-    # the only plan segment above the cached relation must be exchange-free:
-    # cached partitioning (repartition by shard) satisfies the groupBy
-    above_cache = plan.split("InMemoryTableScan")[0]
-    assert "Exchange" not in above_cache, above_cache
-    rows = q.collect()
-    assert len(rows) == 5
+    group = f"warm-search-{cache_mode}"
+    sc.setJobGroup(group, group)
+    try:
+        q = idx.search("the of", k=5, mode="exhaustive")
+        rows = q.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert plan_of(q).startswith("LocalTableScan")
+    cold = InvertedIndex(spark, index_dir).search("the of", k=5, mode="exhaustive")
+    assert len(rows) == 5 and rows == cold.collect()
 
 
 def test_ids_query_uses_broadcast_semi_join(spark, index_dir):

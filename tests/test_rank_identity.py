@@ -1,8 +1,14 @@
 """End-to-end rank-identity: compressed index + WAND == exhaustive ==
 pure-Python brute-force oracle, on the reference query set (FIXTURES.md §3:
-rare terms, head/stopword terms, Unicode terms, multi-term mixes).
+rare terms, head/stopword terms, Unicode terms, multi-term mixes), on both
+execution paths (warmed: driver-resident postings; unwarmed: Spark job).
 """
 
+import gc
+import sys
+import threading
+
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -30,6 +36,14 @@ def oracle_docs(corpus_pdf):
     return None  # filled by fixture below
 
 
+@pytest.fixture(scope="module", params=["warmed", "unwarmed"])
+def idx(request, spark, index_dir):
+    """The index on both execution paths: warmed (driver-resident
+    postings, in-process kernels) and unwarmed (one Spark job)."""
+    idx = InvertedIndex(spark, index_dir)
+    return idx.warm() if request.param == "warmed" else idx
+
+
 @pytest.fixture(scope="module")
 def docs_tokens(spark, corpus_pdf, index_dir):
     idx_docmap = InvertedIndex(spark, index_dir).docmap().select("doc_id", "url").collect()
@@ -41,8 +55,7 @@ def docs_tokens(spark, corpus_pdf, index_dir):
 
 
 @pytest.mark.parametrize("query", QUERIES)
-def test_wand_and_exhaustive_match_oracle(spark, index_dir, docs_tokens, query):
-    idx = InvertedIndex(spark, index_dir)
+def test_wand_and_exhaustive_match_oracle(idx, docs_tokens, query):
     expected = bm25_topk_oracle(docs_tokens, tokenize_unicode(query), K)
     for mode in ("exhaustive", "wand", "auto"):
         got = idx.search(query, k=K, mode=mode).collect()
@@ -51,6 +64,52 @@ def test_wand_and_exhaustive_match_oracle(spark, index_dir, docs_tokens, query):
         assert got_ids == exp_ids, f"mode={mode} q={query!r}"
         for (eid, escore), row in zip(expected, got):
             assert abs(row["score"] - escore) < 1e-9, f"mode={mode} q={query!r} doc={eid}"
+
+
+def test_warm_index_serves_concurrent_clients(spark, index_dir):
+    """Two threads searching one warmed index get exactly the rows that
+    sequential calls return, and those are bit-identical to the unwarmed
+    index's rows."""
+    idx = InvertedIndex(spark, index_dir, cache_term_stats=True).warm()
+    calls = [(q, mode) for q in QUERIES for mode in ("exhaustive", "wand", "auto")]
+
+    def run(call, index=idx):
+        q, mode = call
+        return [(r["doc_id"], r["score"]) for r in index.search(q, k=K, mode=mode).collect()]
+
+    want = [run(c) for c in calls]
+    assert want == [run(c, InvertedIndex(spark, index_dir)) for c in calls]
+    calls, want = calls * 2, want * 2
+    got: dict[int, list] = {}
+
+    def client(offset: int) -> None:
+        for i in range(offset, len(calls), 2):
+            got[i] = run(calls[i])
+
+    threads = [threading.Thread(target=client, args=(i,)) for i in range(2)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # interleave the two clients finely
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert [got.get(i) for i in range(len(calls))] == want
+
+
+def test_dropped_warm_index_frees_its_postings(spark, index_dir):
+    """A server that re-opens and re-warms an index must not keep the
+    resident postings of the index it drops."""
+    gc.collect()
+    before = pa.total_allocated_bytes()
+    idx = InvertedIndex(spark, index_dir).warm()
+    assert pa.total_allocated_bytes() > before
+    del idx
+    gc.collect()
+    assert pa.total_allocated_bytes() <= before
 
 
 def test_index_stats_match_oracle(spark, index_dir, docs_tokens):
@@ -101,9 +160,8 @@ def test_ids_query_and_pagination(spark, index_dir):
     assert seen == idx.meta["n_docs"]
 
 
-def test_search_batch_matches_per_query(spark, index_dir, docs_tokens):
-    """Batched multi-query mode: one job, rank-identical per query."""
-    idx = InvertedIndex(spark, index_dir)
+def test_search_batch_matches_per_query(idx, docs_tokens):
+    """Batched multi-query mode: one posting pass, rank-identical per query."""
     queries = {1: "the", 2: "of and to", 3: "the baba café", 4: "zzzznotaterm"}
     batch = idx.search_batch(queries, k=K)
     rows = batch.collect()
@@ -134,8 +192,7 @@ def test_suggest_prefix_completion(spark, index_dir, docs_tokens):
     assert got == expected and len(got) > 0
 
 
-def test_search_dismax_matches_oracle(spark, index_dir, docs_tokens):
-    idx = InvertedIndex(spark, index_dir)
+def test_search_dismax_matches_oracle(idx, docs_tokens):
     subqueries = ["the bababa", "madaba of café"]
     tie = 0.35
     # brute-force DisMax: full per-subquery scores, max + tie*(sum-max)
@@ -153,8 +210,7 @@ def test_search_dismax_matches_oracle(spark, index_dir, docs_tokens):
         assert abs(row["score"] - escore) < 1e-9, eid
 
 
-def test_search_dismax_single_query_is_exhaustive_search(spark, index_dir):
-    idx = InvertedIndex(spark, index_dir)
+def test_search_dismax_single_query_is_exhaustive_search(idx):
     a = [(r["doc_id"], round(r["score"], 9)) for r in
          idx.search("the bababa café", k=10, mode="exhaustive").collect()]
     b = [(r["doc_id"], round(r["score"], 9)) for r in
@@ -163,8 +219,7 @@ def test_search_dismax_single_query_is_exhaustive_search(spark, index_dir):
 
 
 @pytest.mark.parametrize("query,msm", [("the bababa café", 2), ("the of bababa madaba", 3)])
-def test_search_minimum_should_match(spark, index_dir, docs_tokens, query, msm):
-    idx = InvertedIndex(spark, index_dir)
+def test_search_minimum_should_match(idx, docs_tokens, query, msm):
     terms = sorted(set(tokenize_unicode(query)))
     full = dict(bm25_topk_oracle(docs_tokens, terms, len(docs_tokens)))
     qualified = {d: s for d, s in full.items()
@@ -176,8 +231,7 @@ def test_search_minimum_should_match(spark, index_dir, docs_tokens, query, msm):
         assert abs(row["score"] - escore) < 1e-9
 
 
-def test_search_operator_and(spark, index_dir, docs_tokens):
-    idx = InvertedIndex(spark, index_dir)
+def test_search_operator_and(idx, docs_tokens):
     got = idx.search("the bababa", k=K, operator="and").collect()
     for r in got:
         toks = docs_tokens[r["doc_id"]]
