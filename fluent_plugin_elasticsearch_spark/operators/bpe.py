@@ -61,15 +61,20 @@ def _symbols_col(word: Column, merges: list[tuple[str, str]]) -> Column:
 
         return step
 
+    def finish(acc):
+        # flush the pending symbol ("" when none; done never holds "")
+        return F.filter(F.concat(acc["done"], F.array(acc["pend"])), lambda s: s != "")
+
     for a, b in merges:
         # fold: acc = struct(done array, pend string). pend holds the
         # previous symbol not yet emitted; seeing `b` while pend == `a`
-        # emits the merged symbol and clears pend.
+        # emits the merged symbol and clears pend. The flush runs in the
+        # fold's finish lambda so each merge references the previous
+        # symbols once: the expression grows linearly with the merges, not
+        # geometrically.
         zero = F.struct(F.array().cast("array<string>").alias("done"),
                         F.lit("").alias("pend"))
-        folded = F.aggregate(syms, zero, step_fn(a, b))
-        syms = F.when(folded["pend"] == "", folded["done"]).otherwise(
-            F.concat(folded["done"], F.array(folded["pend"])))
+        syms = F.aggregate(syms, zero, step_fn(a, b), finish)
     return syms
 
 

@@ -9,9 +9,33 @@ Both encode and decode are vectorized: the only Python-level loops are over
 the ≤10 varint byte positions (constant), never over elements. Encode/decode
 operate on uint64 numpy arrays and run inside applyInPandas groups, so a
 1000-executor build pays C-speed per partition.
+
+Posting rows. Every postings table — the build's phase-1 partials, the
+index's posting blocks, a shard kernel's input — is a set of rows, each
+holding one run of one term's postings (one posting per (term, doc)),
+doc ids strictly increasing within the run:
+
+    n_docs     the row's posting count — it segments every other column
+    docs_enc   doc ids: first absolute, then gaps (delta_encode)
+    tfs_enc    term frequency per posting (varint)
+    dls_enc    doc length per posting (varint) — inline, so scoring needs
+               no doc-side table
+    pos_enc    positional indexes only: each posting's tf token positions,
+               ascending, delta-encoded within the posting (first absolute),
+               postings concatenated in doc order
+    max_tfn    blocks only: the block's maximum of the BM25 tf-factor
+               wand._tfn(tf, dl) — the idf-independent bound block-max
+               WAND multiplies by the query-time idf
+
+A partial row is a whole (shard, term, salt) run; an index block row holds
+at most the build's ``block_size`` postings and adds ``block_id``,
+``first_doc`` and ``last_doc``. ``decode_postings`` is the one reader of
+these columns; the encoders below write them.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 import numpy as np
 
@@ -24,29 +48,8 @@ def varint_encode(values: np.ndarray) -> bytes:
     v = np.ascontiguousarray(values, dtype=np.uint64)
     if v.size == 0:
         return b""
-    # byte length per value: ceil(bit_length / 7), min 1
-    nbits = np.zeros(v.shape, dtype=np.int64)
-    tmp = v.copy()
-    while True:
-        nz = tmp > 0
-        if not nz.any():
-            break
-        nbits[nz] += 1
-        tmp >>= np.uint64(1)
-    nbytes = np.maximum((nbits + 6) // 7, 1)
-
-    max_b = int(nbytes.max())
-    out = np.zeros((v.size, max_b), dtype=np.uint8)
-    rem = v.copy()
-    for i in range(max_b):
-        out[:, i] = (rem & np.uint64(0x7F)).astype(np.uint8)
-        rem >>= np.uint64(7)
-    # continuation bit on all but each value's last byte
-    cols = np.arange(max_b)
-    cont = cols[None, :] < (nbytes[:, None] - 1)
-    out[cont] |= 0x80
-    valid = cols[None, :] < nbytes[:, None]
-    return out[valid].tobytes()
+    mat, nbytes = _varint_bytes_matrix(v)
+    return mat[np.arange(mat.shape[1])[None, :] < nbytes[:, None]].tobytes()
 
 
 def varint_decode(buf: bytes | bytearray | memoryview, count: int | None = None) -> np.ndarray:
@@ -174,3 +177,41 @@ def encode_blocks(doc_ids: np.ndarray, tfs: np.ndarray, tfns: np.ndarray,
 
 def decode_block(docs_enc: bytes, tfs_enc: bytes, n_docs: int) -> tuple[np.ndarray, np.ndarray]:
     return delta_decode(docs_enc, n_docs), varint_decode(tfs_enc, n_docs)
+
+
+class Postings(NamedTuple):
+    """Decoded posting rows, one entry per posting in row order."""
+
+    ids: np.ndarray  # doc ids, int64
+    tfs: np.ndarray  # term frequencies, int64
+    dls: np.ndarray  # doc lengths, int64
+    n: np.ndarray  # postings per row (n_docs), int64
+    positions: np.ndarray | None  # int64, tfs[i] per posting, concatenated
+
+
+def decode_postings(rows, sel: np.ndarray | None = None,
+                    positions: bool = False) -> Postings:
+    """Decode posting rows — a pandas frame, or a mapping of the row
+    columns to sequences — in one segmented pass per column: the rows'
+    buffers are joined, varint-decoded at once, and doc ids (and, with
+    ``positions``, token positions) rebuilt from their per-segment gaps.
+    ``sel`` picks rows by position, in the given order (list-like
+    columns only)."""
+    n = np.asarray(rows["n_docs"], dtype=np.int64)
+    cols = ("docs_enc", "tfs_enc", "dls_enc") + (("pos_enc",) if positions else ())
+    if sel is None:
+        bufs = [b"".join(rows[c]) for c in cols]
+    else:
+        n = n[sel]
+        bufs = [b"".join([rows[c][i] for i in sel]) for c in cols]
+    total = int(n.sum())
+    gaps = varint_decode(bufs[0], total)
+    ids = (segmented_cumsum(gaps, np.cumsum(n) - n, n) if total else gaps).view(np.int64)
+    tfs = varint_decode(bufs[1], total).view(np.int64)
+    dls = varint_decode(bufs[2], total).view(np.int64)
+    pos = None
+    if positions:
+        pos_gaps = varint_decode(bufs[3], int(tfs.sum()))
+        pos = (segmented_cumsum(pos_gaps, np.cumsum(tfs) - tfs, tfs)
+               if total else pos_gaps).view(np.int64)
+    return Postings(ids, tfs, dls, n, pos)

@@ -66,7 +66,7 @@ from ..extraction import (
     tokenize_unicode_tf_udf,
     tokenize_unicode_udf,
 )
-from .codec import BLOCK_SIZE, delta_encode, varint_encode
+from .codec import BLOCK_SIZE
 
 PARTIAL_SCHEMA = (
     "shard int, term string, term_bucket int, salt int, n_docs int, "
@@ -173,58 +173,60 @@ def _encode_partials(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def _make_merge_fn(avgdl: float, k1: float, b: float, block_size: int):
+def _make_merge_fn(avgdl: float, k1: float, b: float, block_size: int,
+                   positions: bool = False):
     from .codec import (
+        decode_postings,
         delta_encode_segments,
-        segmented_cumsum,
-        varint_decode,
+        delta_gaps_segments,
         varint_encode_segments,
     )
+    from .wand import _tfn
 
     def merge(pdf: pd.DataFrame) -> pd.DataFrame:
         """Phase 2 applyInPandas over one (shard, term_bucket) group: merge
         every term's salted partials and re-block — all in whole-group numpy
-        passes (one concatenated varint decode, one lexsort, segmented
-        re-encode). Group memory is bounded by one term-bucket of one shard."""
-        shard = int(pdf["shard"].iloc[0])
-        n_per_row = pdf["n_docs"].to_numpy().astype(np.int64)
-        total = int(n_per_row.sum())
-        row_starts = np.concatenate([[0], np.cumsum(n_per_row)[:-1]])
-        gaps = varint_decode(b"".join(pdf["docs_enc"]), total)
-        ids = segmented_cumsum(gaps, row_starts, n_per_row)
-        tfs = varint_decode(b"".join(pdf["tfs_enc"]), total)
-        dls = varint_decode(b"".join(pdf["dls_enc"]), total)
+        passes (one concatenated decode, one lexsort, segmented re-encode;
+        with ``positions``, each posting's positions follow it through the
+        lexsort by positions._gather_segments). Group memory is bounded by
+        one term-bucket of one shard."""
+        p = decode_postings(pdf, positions=positions)
         codes, uniq_terms = pd.factorize(pdf["term"])
-        term_idx = np.repeat(codes, n_per_row)
-
-        order = np.lexsort((ids, term_idx))
-        ids, tfs, dls, term_idx = ids[order], tfs[order], dls[order], term_idx[order]
+        term_idx = np.repeat(codes, p.n)
+        order = np.lexsort((p.ids, term_idx))
+        ids, tfs, dls, term_idx = p.ids[order], p.tfs[order], p.dls[order], term_idx[order]
 
         # block boundaries: every `block_size` postings within each term run
+        total = ids.size
         term_starts = np.nonzero(np.diff(term_idx, prepend=-1))[0]
         term_lens = np.diff(np.append(term_starts, total))
         pos_in_term = np.arange(total) - np.repeat(term_starts, term_lens)
         block_starts = np.nonzero(pos_in_term % block_size == 0)[0]
         block_ends = np.append(block_starts[1:], total)
 
-        tff = tfs.astype(np.float64)
-        tfns = (k1 + 1.0) * tff / (tff + k1 * (1.0 - b + b * dls.astype(np.float64) / avgdl))
-
         terms_arr = uniq_terms.to_numpy() if hasattr(uniq_terms, "to_numpy") else np.asarray(uniq_terms)
-        return pd.DataFrame(
+        out = pd.DataFrame(
             {
-                "shard": np.full(block_starts.size, shard, dtype=np.int64),
+                "shard": np.full(block_starts.size, int(pdf["shard"].iloc[0]), dtype=np.int64),
                 "term": terms_arr[term_idx[block_starts]],
                 "block_id": (pos_in_term[block_starts] // block_size).astype(np.int64),
                 "n_docs": (block_ends - block_starts).astype(np.int64),
-                "first_doc": ids[block_starts].astype(np.int64),
-                "last_doc": ids[block_ends - 1].astype(np.int64),
+                "first_doc": ids[block_starts],
+                "last_doc": ids[block_ends - 1],
                 "docs_enc": delta_encode_segments(ids, block_starts),
                 "tfs_enc": varint_encode_segments(tfs, block_starts),
                 "dls_enc": varint_encode_segments(dls, block_starts),
-                "max_tfn": np.maximum.reduceat(tfns, block_starts),
+                "max_tfn": np.maximum.reduceat(_tfn(tfs, dls, avgdl, k1, b), block_starts),
             }
         )
+        if positions:
+            from .positions import _gather_segments
+
+            pos = _gather_segments(p.positions, (np.cumsum(p.tfs) - p.tfs)[order], tfs)
+            entry_starts = np.cumsum(tfs) - tfs
+            out["pos_enc"] = varint_encode_segments(delta_gaps_segments(pos, entry_starts),
+                                                    entry_starts[block_starts])
+        return out
 
     return merge
 
@@ -452,18 +454,13 @@ def build_index(
             done = set()
 
     if with_positions:
-        from .positions import (
-            BLOCK_POS_SCHEMA,
-            PARTIAL_POS_SCHEMA,
-            encode_partials_pos,
-            make_merge_fn_pos,
-        )
+        from .positions import BLOCK_POS_SCHEMA, PARTIAL_POS_SCHEMA, encode_partials_pos
 
         phase1_fn, phase1_schema = encode_partials_pos, PARTIAL_POS_SCHEMA
-        merge_fn, block_schema = make_merge_fn_pos(avgdl, k1, b, block_size), BLOCK_POS_SCHEMA
+        block_schema = BLOCK_POS_SCHEMA
     else:
-        phase1_fn, phase1_schema = _encode_partials, PARTIAL_SCHEMA
-        merge_fn, block_schema = _make_merge_fn(avgdl, k1, b, block_size), BLOCK_SCHEMA
+        phase1_fn, phase1_schema, block_schema = _encode_partials, PARTIAL_SCHEMA, BLOCK_SCHEMA
+    merge_fn = _make_merge_fn(avgdl, k1, b, block_size, with_positions)
     all_shards = [s for s in range(n_shards) if s not in done]
     # Crash safety: postings/doc_stats are APPENDED before the manifest row
     # marks a shard 'done', so a crash between the writes would make a

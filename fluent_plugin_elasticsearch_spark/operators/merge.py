@@ -79,12 +79,10 @@ def merge_indexes(spark: SparkSession, src_dirs: list[str], out_dir: str,
         blocks = part if blocks is None else blocks.unionByName(part)
     blocks = blocks.withColumn("term_bucket", _bucket_col())
 
-    if with_positions:
-        from .positions import BLOCK_POS_SCHEMA, make_merge_fn_pos
+    from .positions import BLOCK_POS_SCHEMA
 
-        merge_fn, schema = make_merge_fn_pos(avgdl, k1, b, block_size), BLOCK_POS_SCHEMA
-    else:
-        merge_fn, schema = _make_merge_fn(avgdl, k1, b, block_size), BLOCK_SCHEMA
+    schema = BLOCK_POS_SCHEMA if with_positions else BLOCK_SCHEMA
+    merge_fn = _make_merge_fn(avgdl, k1, b, block_size, with_positions)
 
     os.makedirs(out_dir, exist_ok=True)
     merged = blocks.groupBy("shard", "term_bucket").applyInPandas(merge_fn, schema)

@@ -2,12 +2,12 @@
 phrase scorer over it — ES/Lucene PhraseQuery, natively (SURVEY.md Q5
 extension; the reference delegates phrase matching to Elasticsearch).
 
-Layout: each posting block gains one `pos_enc` binary — the block's token
-positions, delta-encoded WITHIN each (term, doc) posting (first position
-absolute), concatenated in posting order. The per-posting tf doubles as
-the position count, so no extra length stream is needed. Everything is
-segment-vectorized numpy (the repeat-gather trick reorders variable-length
-position segments without a per-posting Python loop).
+Layout: each posting row gains one `pos_enc` binary (operators/codec.py
+header) — the per-posting tf doubles as the position count, so no extra
+length stream is needed. Everything is segment-vectorized numpy (the
+repeat-gather trick reorders variable-length position segments without a
+per-posting Python loop); the build's phase-2 merge is
+index_build._make_merge_fn, shared with tf-only indexes.
 
 Phrase scoring (Lucene PhraseQuery): a doc matches when positions align
 adjacently across all phrase terms; tf = number of alignments (phrase
@@ -18,16 +18,14 @@ so the n-way adjacency intersection is n-1 sorted np.isin passes.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import types as T
 
-from .codec import (
-    delta_gaps_segments,
-    segmented_cumsum,
-    varint_decode,
-    varint_encode_segments,
-)
+from .codec import delta_encode_segments, delta_gaps_segments, varint_encode_segments
+from .wand import _decode, _empty, _span_topk
 
 PARTIAL_POS_SCHEMA = (
     "shard int, term string, term_bucket int, salt int, n_docs int, "
@@ -167,8 +165,6 @@ def encode_partials_pos(pdf: pd.DataFrame) -> pd.DataFrame:
     pos_gaps = delta_gaps_segments(pos_s, entry_starts_s)
     term_pos_starts = entry_starts_s[term_starts]
 
-    from .codec import delta_encode_segments
-
     return pd.DataFrame(
         {
             "shard": np.full(term_starts.size, int(pdf["shard"].iloc[0]), dtype=np.int64),
@@ -184,68 +180,69 @@ def encode_partials_pos(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def make_merge_fn_pos(avgdl: float, k1: float, b: float, block_size: int):
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        """Phase-2 over one (shard, term_bucket) group: merge salted
-        positional partials, re-block, re-encode (positions re-segmented
-        per block via the same repeat-gather)."""
-        shard = int(pdf["shard"].iloc[0])
-        n_per_row = pdf["n_docs"].to_numpy().astype(np.int64)
-        total = int(n_per_row.sum())
-        row_starts = np.concatenate([[0], np.cumsum(n_per_row)[:-1]])
-        gaps = varint_decode(b"".join(pdf["docs_enc"]), total)
-        ids = segmented_cumsum(gaps, row_starts, n_per_row)
-        tfs = varint_decode(b"".join(pdf["tfs_enc"]), total)
-        dls = varint_decode(b"".join(pdf["dls_enc"]), total)
-        tf64 = tfs.astype(np.int64)
-        total_pos = int(tf64.sum())
-        pos_gaps = varint_decode(b"".join(pdf["pos_enc"]), total_pos)
-        entry_pos_starts = np.concatenate([[0], np.cumsum(tf64)[:-1]]).astype(np.int64)
-        positions = segmented_cumsum(pos_gaps, entry_pos_starts, tf64)
-
-        codes, uniq_terms = pd.factorize(pdf["term"])
-        term_idx = np.repeat(codes, n_per_row)
-        order = np.lexsort((ids, term_idx))
-        ids_s, tfs_s, dls_s, term_s = ids[order], tfs[order], dls[order], term_idx[order]
-        tf_s64 = tfs_s.astype(np.int64)
-        pos_s = _gather_segments(positions, entry_pos_starts[order], tf_s64)
-        entry_starts_s = np.concatenate([[0], np.cumsum(tf_s64)[:-1]]).astype(np.int64)
-
-        term_starts = np.nonzero(np.diff(term_s, prepend=-1))[0]
-        term_lens = np.diff(np.append(term_starts, total))
-        pos_in_term = np.arange(total) - np.repeat(term_starts, term_lens)
-        block_starts = np.nonzero(pos_in_term % block_size == 0)[0]
-        block_ends = np.append(block_starts[1:], total)
-
-        tff = tfs_s.astype(np.float64)
-        tfns = (k1 + 1.0) * tff / (tff + k1 * (1.0 - b + b * dls_s.astype(np.float64) / avgdl))
-
-        pos_gaps_s = delta_gaps_segments(pos_s, entry_starts_s)
-        block_pos_starts = entry_starts_s[block_starts]
-
-        from .codec import delta_encode_segments
-
-        terms_arr = uniq_terms.to_numpy() if hasattr(uniq_terms, "to_numpy") else np.asarray(uniq_terms)
-        return pd.DataFrame(
-            {
-                "shard": np.full(block_starts.size, shard, dtype=np.int64),
-                "term": terms_arr[term_s[block_starts]],
-                "block_id": (pos_in_term[block_starts] // block_size).astype(np.int64),
-                "n_docs": (block_ends - block_starts).astype(np.int64),
-                "first_doc": ids_s[block_starts].astype(np.int64),
-                "last_doc": ids_s[block_ends - 1].astype(np.int64),
-                "docs_enc": delta_encode_segments(ids_s, block_starts),
-                "tfs_enc": varint_encode_segments(tfs_s, block_starts),
-                "dls_enc": varint_encode_segments(dls_s, block_starts),
-                "max_tfn": np.maximum.reduceat(tfns, block_starts),
-                "pos_enc": varint_encode_segments(pos_gaps_s, block_pos_starts),
-            }
-        )
-
-    return merge
-
-
 _POS_SHIFT = np.uint64(32)  # doc_code * 2^32 + position keys
+_POS_MASK = np.uint64(0xFFFFFFFF)
+
+
+def _key(doc: np.ndarray, pos: np.ndarray) -> np.ndarray:
+    """Composite (doc_code << 32 | position) keys: one sorted array orders
+    every doc's positions, so per-doc window tests are global searchsorted
+    calls."""
+    return (doc.astype(np.uint64) << _POS_SHIFT) | pos.astype(np.uint64)
+
+
+def _is_in(values: np.ndarray, terms) -> np.ndarray:
+    return (values == terms[0]) if len(terms) == 1 else np.isin(values, terms)
+
+
+class _Expanded(NamedTuple):
+    """A shard's positional postings, one entry per token position."""
+
+    doc: np.ndarray  # doc code of each position (int64)
+    term: np.ndarray  # term of each position
+    pos: np.ndarray  # the position (int64)
+    doc_ids: np.ndarray  # doc code → doc id
+    dl: np.ndarray  # doc code → doc length
+
+    def keys(self, term: str) -> np.ndarray:
+        """Sorted composite keys of ``term``'s positions."""
+        m = self.term == term
+        return np.sort(_key(self.doc[m], self.pos[m]))
+
+    def score(self, match_docs: np.ndarray, idf_sum: float, k: int,
+              avgdl: float, k1: float, b: float) -> pd.DataFrame:
+        """Span-frequency BM25 (sf = matches per doc code in
+        ``match_docs``), local top-k."""
+        codes, sf = np.unique(match_docs, return_counts=True)
+        return _span_topk(self.doc_ids[codes], sf, self.dl[codes],
+                          idf_sum, k, avgdl, k1, b)
+
+
+def _expand(pdf: pd.DataFrame, required=()) -> _Expanded | None:
+    """Decode a shard's positional rows and expand them to one entry per
+    token position, docs coded by pd.factorize. ``required``: term sets
+    (phrase slots, clause terms) a matching doc must each hit with >= 1
+    term — docs missing one are dropped at posting level, before the
+    expansion (entry-level doc sets are much smaller than positions; with
+    one rare term this collapses the position key-space: the
+    conjunctive-query prefilter). None when no doc qualifies."""
+    if len(pdf) == 0:
+        return None
+    pdf, p = _decode(pdf, positions=True)
+    terms = np.repeat(pdf["term"].to_numpy(), p.n)
+    doc_codes, uniq_docs = pd.factorize(p.ids)
+    keep = None
+    for req in required:
+        docs_t = np.unique(doc_codes[_is_in(terms, req)])
+        keep = docs_t if keep is None else keep[np.isin(keep, docs_t)]
+        if keep.size == 0:
+            return None
+    pos_keep = slice(None) if keep is None else np.repeat(np.isin(doc_codes, keep), p.tfs)
+    dl = np.zeros(len(uniq_docs), dtype=np.int64)
+    dl[doc_codes] = p.dls  # last write wins; all equal per doc
+    return _Expanded(np.repeat(doc_codes.astype(np.int64), p.tfs)[pos_keep],
+                     np.repeat(terms, p.tfs)[pos_keep], p.positions[pos_keep],
+                     np.asarray(uniq_docs, dtype=np.int64), dl)
 
 
 def score_shard_phrase(pdf: pd.DataFrame, phrase_terms: list[str], idf_sum: float,
@@ -259,79 +256,21 @@ def score_shard_phrase(pdf: pd.DataFrame, phrase_terms: list[str], idf_sum: floa
     the dictionary expansion of a match_phrase_prefix last term (any of
     the set aligns). A position holds exactly one token, so set
     membership can't double-count an alignment."""
-    from .wand import _topk_ties
-
-    empty = pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                          "score": pd.Series([], dtype="float64")})
-    if len(pdf) == 0:
-        return empty
     # phrase as slot matchers: exact slots are singleton lists, the
     # optional prefix slot is the expansion set
     slots: list[list[str]] = [[t] for t in phrase_terms]
     if last_terms is not None:
         slots.append(sorted(last_terms))
-    pdf = pdf.sort_values(["term", "first_doc"], kind="stable")
-    n_per_blk = pdf["n_docs"].to_numpy().astype(np.int64)
-    total = int(n_per_blk.sum())
-    blk_starts = np.concatenate([[0], np.cumsum(n_per_blk)[:-1]])
-    gaps = varint_decode(b"".join(pdf["docs_enc"]), total)
-    ids = segmented_cumsum(gaps, blk_starts, n_per_blk).astype(np.int64)
-    tfs = varint_decode(b"".join(pdf["tfs_enc"]), total).astype(np.int64)
-    dls = varint_decode(b"".join(pdf["dls_enc"]), total).astype(np.int64)
-    total_pos = int(tfs.sum())
-    pos_gaps = varint_decode(b"".join(pdf["pos_enc"]), total_pos)
-    entry_pos_starts = np.concatenate([[0], np.cumsum(tfs)[:-1]]).astype(np.int64)
-    positions = segmented_cumsum(pos_gaps, entry_pos_starts, tfs).astype(np.int64)
-    terms = np.repeat(pdf["term"].to_numpy(), n_per_blk)
-
-    doc_codes, uniq_docs = pd.factorize(ids)
-
-    # doc-level pre-intersection: a matching doc must satisfy EVERY slot
-    # (>= 1 of the slot's terms), so intersect the (entry-level, much
-    # smaller than positions) doc sets first — with one rare term this
-    # collapses the position key-space before any expansion (the
-    # conjunctive-query prefilter).
-    cand = None
-    for slot in {tuple(s) for s in slots}:
-        mask = (terms == slot[0]) if len(slot) == 1 else np.isin(terms, slot)
-        docs_t = np.unique(doc_codes[mask])
-        cand = docs_t if cand is None else cand[np.isin(cand, docs_t)]
-        if cand.size == 0:
-            return empty
-    entry_keep = np.isin(doc_codes, cand)
-    pos_keep = np.repeat(entry_keep, tfs)
-    positions = positions[pos_keep]
-    per_pos_doc = np.repeat(doc_codes.astype(np.int64), tfs)[pos_keep]
-    per_pos_term = np.repeat(terms, tfs)[pos_keep]
-
-    def slot_mask(slot):
-        return (per_pos_term == slot[0]) if len(slot) == 1 \
-            else np.isin(per_pos_term, slot)
-
+    x = _expand(pdf, {tuple(s) for s in slots})
+    if x is None:
+        return _empty()
     # keys for slot j shifted left by j: alignment ⇔ same key as slot 0
-    m0 = slot_mask(slots[0])
-    target = (per_pos_doc[m0].astype(np.uint64) << _POS_SHIFT) | positions[m0].astype(np.uint64)
+    m0 = _is_in(x.term, slots[0])
+    target = _key(x.doc[m0], x.pos[m0])
     for j, slot in enumerate(slots[1:], start=1):
-        mj = slot_mask(slot)
-        keys_j = (per_pos_doc[mj].astype(np.uint64) << _POS_SHIFT) | (
-            positions[mj].astype(np.uint64) - np.uint64(j)
-        )
-        target = target[np.isin(target, keys_j)]
-        if target.size == 0:
-            return empty
-    match_docs = (target >> _POS_SHIFT).astype(np.int64)
-    pf_docs, pf = np.unique(match_docs, return_counts=True)
-
-    # doc length lookup from any posting of the doc
-    dl_by_code = np.zeros(len(uniq_docs), dtype=np.int64)
-    dl_by_code[doc_codes] = dls  # last write wins; all equal per doc
-    dl = dl_by_code[pf_docs].astype(np.float64)
-    pff = pf.astype(np.float64)
-    scores = idf_sum * (k1 + 1.0) * pff / (pff + k1 * (1.0 - b + b * dl / avgdl))
-    uniq_arr = np.asarray(uniq_docs, dtype=np.int64)
-    out_ids, out_scores = _topk_ties(uniq_arr[pf_docs], scores, k)
-    order = np.lexsort((out_ids, -out_scores))[:k]
-    return pd.DataFrame({"doc_id": out_ids[order], "score": out_scores[order]})
+        mj = _is_in(x.term, slot)
+        target = target[np.isin(target, _key(x.doc[mj], x.pos[mj].astype(np.uint64) - np.uint64(j)))]
+    return x.score((target >> _POS_SHIFT).astype(np.int64), idf_sum, k, avgdl, k1, b)
 
 
 def score_shard_span_near(pdf: pd.DataFrame, first: str, second: str,
@@ -347,103 +286,18 @@ def score_shard_span_near(pdf: pd.DataFrame, first: str, second: str,
     composite (doc_code << 32 | position) keys — no per-doc loop: a
     `second` at p has a qualifying `first` iff the sorted first-keys
     contain an entry in [doc|max(p-slop-1, 0), doc|p-1]."""
-    from .wand import _topk_ties
-
-    empty = pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                          "score": pd.Series([], dtype="float64")})
-    if len(pdf) == 0:
-        return empty
-    pdf = pdf.sort_values(["term", "first_doc"], kind="stable")
-    n_per_blk = pdf["n_docs"].to_numpy().astype(np.int64)
-    total = int(n_per_blk.sum())
-    blk_starts = np.concatenate([[0], np.cumsum(n_per_blk)[:-1]])
-    gaps = varint_decode(b"".join(pdf["docs_enc"]), total)
-    ids = segmented_cumsum(gaps, blk_starts, n_per_blk).astype(np.int64)
-    tfs = varint_decode(b"".join(pdf["tfs_enc"]), total).astype(np.int64)
-    dls = varint_decode(b"".join(pdf["dls_enc"]), total).astype(np.int64)
-    total_pos = int(tfs.sum())
-    pos_gaps = varint_decode(b"".join(pdf["pos_enc"]), total_pos)
-    entry_pos_starts = np.concatenate([[0], np.cumsum(tfs)[:-1]]).astype(np.int64)
-    positions = segmented_cumsum(pos_gaps, entry_pos_starts, tfs).astype(np.int64)
-    terms = np.repeat(pdf["term"].to_numpy(), n_per_blk)
-
-    doc_codes, uniq_docs = pd.factorize(ids)
-    # both terms must appear in a matching doc — entry-level intersection
-    cand = None
-    for t in {first, second}:
-        docs_t = np.unique(doc_codes[terms == t])
-        cand = docs_t if cand is None else cand[np.isin(cand, docs_t)]
-        if cand.size == 0:
-            return empty
-    entry_keep = np.isin(doc_codes, cand)
-    pos_keep = np.repeat(entry_keep, tfs)
-    positions = positions[pos_keep]
-    per_pos_doc = np.repeat(doc_codes.astype(np.int64), tfs)[pos_keep]
-    per_pos_term = np.repeat(terms, tfs)[pos_keep]
-
-    m1 = per_pos_term == first
-    keys1 = np.sort((per_pos_doc[m1].astype(np.uint64) << _POS_SHIFT)
-                    | positions[m1].astype(np.uint64))
-    m2 = per_pos_term == second
-    d2 = per_pos_doc[m2].astype(np.uint64)
-    p2 = positions[m2].astype(np.int64)
-    lo = (d2 << _POS_SHIFT) | np.maximum(p2 - slop - 1, 0).astype(np.uint64)
-    hi_ok = p2 >= 1  # a position with no possible predecessor never matches
-    hi = (d2 << _POS_SHIFT) | np.maximum(p2 - 1, 0).astype(np.uint64)
+    x = _expand(pdf, [(first,), (second,)])
+    if x is None:
+        return _empty()
+    keys1 = x.keys(first)
+    m2 = x.term == second
+    d2, p2 = x.doc[m2], x.pos[m2]
+    lo = _key(d2, np.maximum(p2 - slop - 1, 0))
+    hi = _key(d2, np.maximum(p2 - 1, 0))
+    # a position with no possible predecessor (p2 = 0) never matches
     exists = (np.searchsorted(keys1, lo, side="left")
-              < np.searchsorted(keys1, hi, side="right")) & hi_ok
-    if not exists.any():
-        return empty
-    sf_docs, sf = np.unique(per_pos_doc[m2][exists], return_counts=True)
-
-    dl_by_code = np.zeros(len(uniq_docs), dtype=np.int64)
-    dl_by_code[doc_codes] = dls
-    dl = dl_by_code[sf_docs].astype(np.float64)
-    sff = sf.astype(np.float64)
-    scores = idf_sum * (k1 + 1.0) * sff / (sff + k1 * (1.0 - b + b * dl / avgdl))
-    uniq_arr = np.asarray(uniq_docs, dtype=np.int64)
-    out_ids, out_scores = _topk_ties(uniq_arr[sf_docs], scores, k)
-    order = np.lexsort((out_ids, -out_scores))[:k]
-    return pd.DataFrame({"doc_id": out_ids[order], "score": out_scores[order]})
-
-
-def _decode_shard(pdf: pd.DataFrame):
-    """Shared decode for the positional span kernels: returns
-    (ids, tfs, dls, positions, per-entry terms) with positions expanded
-    per entry. Factorization is left to the caller."""
-    pdf = pdf.sort_values(["term", "first_doc"], kind="stable")
-    n_per_blk = pdf["n_docs"].to_numpy().astype(np.int64)
-    total = int(n_per_blk.sum())
-    blk_starts = np.concatenate([[0], np.cumsum(n_per_blk)[:-1]])
-    gaps = varint_decode(b"".join(pdf["docs_enc"]), total)
-    ids = segmented_cumsum(gaps, blk_starts, n_per_blk).astype(np.int64)
-    tfs = varint_decode(b"".join(pdf["tfs_enc"]), total).astype(np.int64)
-    dls = varint_decode(b"".join(pdf["dls_enc"]), total).astype(np.int64)
-    total_pos = int(tfs.sum())
-    pos_gaps = varint_decode(b"".join(pdf["pos_enc"]), total_pos)
-    entry_pos_starts = np.concatenate([[0], np.cumsum(tfs)[:-1]]).astype(np.int64)
-    positions = segmented_cumsum(pos_gaps, entry_pos_starts, tfs).astype(np.int64)
-    terms = np.repeat(pdf["term"].to_numpy(), n_per_blk)
-    return ids, tfs, dls, positions, terms
-
-
-def _span_topk(doc_ids: np.ndarray, sf: np.ndarray, dl: np.ndarray,
-               idf_sum: float, k: int, avgdl: float, k1: float,
-               b: float) -> pd.DataFrame:
-    """Shared tail: BM25 with tf = span frequency, local top-k."""
-    from .wand import _topk_ties
-
-    sff = sf.astype(np.float64)
-    scores = idf_sum * (k1 + 1.0) * sff / (
-        sff + k1 * (1.0 - b + b * dl.astype(np.float64) / avgdl))
-    out_ids, out_scores = _topk_ties(doc_ids, scores, k)
-    order = np.lexsort((out_ids, -out_scores))[:k]
-    return pd.DataFrame({"doc_id": out_ids[order], "score": out_scores[order]})
-
-
-def _empty_topk() -> pd.DataFrame:
-    return pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                         "score": pd.Series([], dtype="float64")})
+              < np.searchsorted(keys1, hi, side="right")) & (p2 >= 1)
+    return x.score(d2[exists], idf_sum, k, avgdl, k1, b)
 
 
 def score_shard_span_first(pdf: pd.DataFrame, term: str, end: int,
@@ -453,14 +307,11 @@ def score_shard_span_first(pdf: pd.DataFrame, term: str, end: int,
     first `end` token positions (DF contract positions 1..end, 1-based;
     stored positions are 0-based, so pos <= end-1)."""
     if len(pdf) == 0:
-        return _empty_topk()
-    ids, tfs, dls, positions, _terms = _decode_shard(pdf)
-    per_pos_doc = np.repeat(np.arange(len(ids), dtype=np.int64), tfs)
-    keep = positions <= end - 1
-    if not keep.any():
-        return _empty_topk()
-    e_idx, sf = np.unique(per_pos_doc[keep], return_counts=True)
-    return _span_topk(ids[e_idx], sf, dls[e_idx], idf_sum, k, avgdl, k1, b)
+        return _empty()
+    _, p = _decode(pdf, positions=True)
+    per_pos_entry = np.repeat(np.arange(p.ids.size, dtype=np.int64), p.tfs)
+    e_idx, sf = np.unique(per_pos_entry[p.positions <= end - 1], return_counts=True)
+    return _span_topk(p.ids[e_idx], sf, p.dls[e_idx], idf_sum, k, avgdl, k1, b)
 
 
 def score_shard_span_not(pdf: pd.DataFrame, include: str, exclude: str,
@@ -471,38 +322,16 @@ def score_shard_span_not(pdf: pd.DataFrame, include: str, exclude: str,
     The two-sided window test is two global searchsorted calls over
     composite (doc_code << 32 | position) keys — no per-doc loop. Docs
     holding `include` but not `exclude` match with their full tf."""
-    if len(pdf) == 0:
-        return _empty_topk()
-    ids, tfs, dls, positions, terms = _decode_shard(pdf)
-    doc_codes, uniq_docs = pd.factorize(ids)
-    per_pos_doc = np.repeat(doc_codes.astype(np.int64), tfs)
-    per_pos_term = np.repeat(terms, tfs)
-
-    mi = per_pos_term == include
-    if not mi.any():
-        return _empty_topk()
-    mx = per_pos_term == exclude
-    keys_x = np.sort((per_pos_doc[mx].astype(np.uint64) << _POS_SHIFT)
-                     | positions[mx].astype(np.uint64))
-    di = per_pos_doc[mi].astype(np.uint64)
-    pi = positions[mi].astype(np.int64)
-    lo = (di << _POS_SHIFT) | np.maximum(pi - pre, 0).astype(np.uint64)
-    hi = (di << _POS_SHIFT) | (pi + post).astype(np.uint64)
+    x = _expand(pdf)
+    if x is None:
+        return _empty()
+    keys_x = x.keys(exclude)
+    mi = x.term == include
+    di, pi = x.doc[mi], x.pos[mi]
     # searchsorted(hi, 'right') counts keys <= hi — inclusive both ends
-    rejected = (np.searchsorted(keys_x, lo, side="left")
-                < np.searchsorted(keys_x, hi, side="right"))
-    survive = ~rejected
-    if not survive.any():
-        return _empty_topk()
-    codes_sf, sf = np.unique(per_pos_doc[mi][survive], return_counts=True)
-    dl_by_code = np.zeros(len(uniq_docs), dtype=np.int64)
-    dl_by_code[doc_codes] = dls
-    uniq_arr = np.asarray(uniq_docs, dtype=np.int64)
-    return _span_topk(uniq_arr[codes_sf], sf, dl_by_code[codes_sf],
-                      idf_sum, k, avgdl, k1, b)
-
-
-_POS_MASK = np.uint64(0xFFFFFFFF)
+    rejected = (np.searchsorted(keys_x, _key(di, np.maximum(pi - pre, 0)), side="left")
+                < np.searchsorted(keys_x, _key(di, pi + post), side="right"))
+    return x.score(di[~rejected], idf_sum, k, avgdl, k1, b)
 
 
 def score_shard_intervals(pdf: pd.DataFrame, terms: list[str], max_gaps: int,
@@ -523,50 +352,31 @@ def score_shard_intervals(pdf: pd.DataFrame, terms: list[str], max_gaps: int,
     qualifying first-term occurrence a has |p - a| - 1 <= max_gaps and
     a != p — one two-sided searchsorted window count with a self-hit
     correction when the clause terms are equal."""
-    if len(pdf) == 0:
-        return _empty_topk()
-    ids, tfs, dls, positions, per_entry_terms = _decode_shard(pdf)
-    doc_codes, uniq_docs = pd.factorize(ids)
     # every clause term must occur in a matching doc
-    cand = None
-    for t in set(terms):
-        docs_t = np.unique(doc_codes[per_entry_terms == t])
-        cand = docs_t if cand is None else cand[np.isin(cand, docs_t)]
-        if cand.size == 0:
-            return _empty_topk()
-    entry_keep = np.isin(doc_codes, cand)
-    pos_keep = np.repeat(entry_keep, tfs)
-    positions = positions[pos_keep]
-    per_pos_doc = np.repeat(doc_codes.astype(np.int64), tfs)[pos_keep]
-    per_pos_term = np.repeat(per_entry_terms, tfs)[pos_keep]
-
-    def keys_of(t):
-        m = per_pos_term == t
-        return np.sort((per_pos_doc[m].astype(np.uint64) << _POS_SHIFT)
-                       | positions[m].astype(np.uint64))
-
+    x = _expand(pdf, [(t,) for t in set(terms)])
+    if x is None:
+        return _empty()
     mg = int(max_gaps)
-    anchor_term = terms[-1] if ordered else terms[1]
-    ma = per_pos_term == anchor_term
-    a_doc = per_pos_doc[ma].astype(np.uint64)
-    a_pos = positions[ma].astype(np.int64)
+    ma = x.term == (terms[-1] if ordered else terms[1])
+    a_doc = x.doc[ma].astype(np.uint64)
+    a_pos = x.pos[ma]
 
     if not ordered:
-        k0 = keys_of(terms[0])
+        k0 = x.keys(terms[0])
         if mg < 0:
             lo = a_doc << _POS_SHIFT
             hi = (a_doc << _POS_SHIFT) | _POS_MASK
         else:
-            lo = (a_doc << _POS_SHIFT) | np.maximum(a_pos - mg - 1, 0).astype(np.uint64)
-            hi = (a_doc << _POS_SHIFT) | (a_pos + mg + 1).astype(np.uint64)
+            lo = _key(a_doc, np.maximum(a_pos - mg - 1, 0))
+            hi = _key(a_doc, a_pos + mg + 1)
         cnt = (np.searchsorted(k0, hi, side="right")
                - np.searchsorted(k0, lo, side="left"))
         if terms[0] == terms[1]:
             cnt = cnt - 1  # the anchor itself sits inside its own window
         alive = cnt > 0
     else:
-        per_term_keys = {t: keys_of(t) for t in set(terms[:-1])}
-        cur = (a_doc << _POS_SHIFT) | a_pos.astype(np.uint64)
+        per_term_keys = {t: x.keys(t) for t in set(terms[:-1])}
+        cur = _key(a_doc, a_pos)
         alive = np.ones(cur.size, dtype=bool)
         for i in range(len(terms) - 2, -1, -1):
             ki = per_term_keys[terms[i]]
@@ -580,15 +390,7 @@ def score_shard_intervals(pdf: pd.DataFrame, terms: list[str], max_gaps: int,
         if mg >= 0:
             q0 = (cur & _POS_MASK).astype(np.int64)
             alive &= (a_pos - q0 + 1 - len(terms)) <= mg
-
-    if not alive.any():
-        return _empty_topk()
-    codes_sf, sf = np.unique(per_pos_doc[ma][alive], return_counts=True)
-    dl_by_code = np.zeros(len(uniq_docs), dtype=np.int64)
-    dl_by_code[doc_codes] = dls
-    uniq_arr = np.asarray(uniq_docs, dtype=np.int64)
-    return _span_topk(uniq_arr[codes_sf], sf, dl_by_code[codes_sf],
-                      idf_sum, k, avgdl, k1, b)
+    return x.score(x.doc[ma][alive], idf_sum, k, avgdl, k1, b)
 
 
 def score_shard_span_contain(pdf: pd.DataFrame, first: str, second: str,
@@ -611,28 +413,20 @@ def score_shard_span_contain(pdf: pd.DataFrame, first: str, second: str,
     over the slop+2 candidate offsets — each a vectorized exact-match
     probe into the `second` keys plus a start-window existence probe
     with the a <= q cap. sf = count of qualifying q."""
-    if len(pdf) == 0:
-        return _empty_topk()
-    ids, tfs, dls, positions, terms = _decode_shard(pdf)
-    doc_codes, uniq_docs = pd.factorize(ids)
-    per_pos_doc = np.repeat(doc_codes.astype(np.int64), tfs)
-    per_pos_term = np.repeat(terms, tfs)
-
-    def keys_of(t):
-        m = per_pos_term == t
-        return np.sort((per_pos_doc[m].astype(np.uint64) << _POS_SHIFT)
-                       | positions[m].astype(np.uint64))
-
-    keys1 = keys_of(first)
-    if keys1.size == 0:
-        return _empty_topk()
+    x = _expand(pdf)
+    if x is None:
+        return _empty()
+    keys1 = x.keys(first)
+    keys2 = x.keys(second)
+    if keys1.size == 0 or keys2.size == 0:
+        return _empty()  # no big span in this shard
 
     def amin_ok(d: np.ndarray, b2: np.ndarray, a_cap: np.ndarray):
         """Per anchor: does a valid big start a in [b2-slop-1,
         min(a_cap, b2-1)] exist, and if so its minimal value."""
-        lo = (d << _POS_SHIFT) | np.maximum(b2 - slop - 1, 0).astype(np.uint64)
+        lo = _key(d, np.maximum(b2 - slop - 1, 0))
         cap = np.minimum(a_cap, b2 - 1)
-        hi = (d << _POS_SHIFT) | np.maximum(cap, 0).astype(np.uint64)
+        hi = _key(d, np.maximum(cap, 0))
         i_lo = np.searchsorted(keys1, lo, side="left")
         ok = (b2 >= 1) & (cap >= 0) & (
             i_lo < np.searchsorted(keys1, hi, side="right"))
@@ -641,38 +435,22 @@ def score_shard_span_contain(pdf: pd.DataFrame, first: str, second: str,
         return ok, amin
 
     if not within:
-        ma = per_pos_term == second
-        d = per_pos_doc[ma].astype(np.uint64)
-        b2 = positions[ma].astype(np.int64)
+        ma = x.term == second
+        d, b2 = x.doc[ma], x.pos[ma]
         ok, amin = amin_ok(d, b2, b2 - 1)
-        keysq = keys_of(little)
-        lo_q = (d << _POS_SHIFT) | np.maximum(amin, 0).astype(np.uint64)
-        hi_q = (d << _POS_SHIFT) | b2.astype(np.uint64)
-        alive = ok & (np.searchsorted(keysq, lo_q, side="left")
-                      < np.searchsorted(keysq, hi_q, side="right"))
-        anchor_mask = ma
+        keysq = x.keys(little)
+        alive = ok & (np.searchsorted(keysq, _key(d, np.maximum(amin, 0)), side="left")
+                      < np.searchsorted(keysq, _key(d, b2), side="right"))
     else:
-        keys2 = keys_of(second)
-        ma = per_pos_term == little
-        d = per_pos_doc[ma].astype(np.uint64)
-        q = positions[ma].astype(np.int64)
+        ma = x.term == little
+        d, q = x.doc[ma], x.pos[ma]
         alive = np.zeros(q.size, dtype=bool)
         for off in range(0, slop + 2):
             b2 = q + off
-            key2 = (d << _POS_SHIFT) | b2.astype(np.uint64)
+            key2 = _key(d, b2)
             i2 = np.searchsorted(keys2, key2, side="left")
             hit = (i2 < keys2.size) & (keys2[np.minimum(i2, keys2.size - 1)]
                                        == key2)
             ok, _ = amin_ok(d, b2, q)
             alive |= hit & ok
-        anchor_mask = ma
-
-    if not alive.any():
-        return _empty_topk()
-    codes_sf, sf = np.unique(per_pos_doc[anchor_mask][alive],
-                             return_counts=True)
-    dl_by_code = np.zeros(len(uniq_docs), dtype=np.int64)
-    dl_by_code[doc_codes] = dls
-    uniq_arr = np.asarray(uniq_docs, dtype=np.int64)
-    return _span_topk(uniq_arr[codes_sf], sf, dl_by_code[codes_sf],
-                      idf_sum, k, avgdl, k1, b)
+    return x.score(d[alive], idf_sum, k, avgdl, k1, b)

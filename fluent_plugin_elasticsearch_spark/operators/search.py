@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..textproc import bm25_idf, tokenize_simple, tokenize_unicode
+from . import positions as _pos
 from . import wand as _wand
 
 _TOKENIZE = {"unicode": tokenize_unicode, "simple": tokenize_simple, "simple_udf": tokenize_simple}
@@ -117,18 +118,13 @@ class _ResidentPostings:
 
 class InvertedIndex:
     def __init__(self, spark: SparkSession, path: str,
-                 cache_term_stats: bool | str = False):
+                 cache_term_stats: bool = False):
         """``cache_term_stats``: opt-in term→df cache — one parquet read at
         open time saves one Spark job per query.
 
         * ``True`` — plain driver dict. A Python str→int dict costs
           ~100-200 B/entry, so this holds to ~10^6–10^7 terms (hundreds of
-          MB of driver heap); beyond that leave it off (per-query pruned
-          lookup) or use "broadcast".
-        * ``"broadcast"`` — the map lives in a Spark broadcast variable:
-          one torrent-distributed, MEMORY_AND_DISK-backed copy in the block
-          manager (spill-able, shared by every query and executor) instead
-          of raw driver heap; same lookup API via ``.value``.
+          MB of driver heap); beyond that leave it off.
         * ``False`` (default) — per-query pruned term_stats lookup; the
           right mode for vocabularies that shouldn't live in one process."""
         self.spark = spark
@@ -136,27 +132,23 @@ class InvertedIndex:
         with open(os.path.join(path, "meta.json")) as f:
             self.meta = json.load(f)
         self._df_cache: dict[str, int] | None = None
-        self._df_cache_bc = None
         self._resident: _ResidentPostings | None = None
         if cache_term_stats:
-            m = {r["term"]: int(r["df"]) for r in self.term_stats().collect()}
-            if cache_term_stats == "broadcast":
-                self._df_cache_bc = spark.sparkContext.broadcast(m)
-            else:
-                self._df_cache = m
+            self._df_cache = {r["term"]: int(r["df"]) for r in self.term_stats().collect()}
 
     def _lookup_dfs(self, terms: list[str]) -> dict[str, int]:
-        """term→df for the query terms, from whichever cache mode is on
-        (falling back to a pruned parquet lookup)."""
+        """term→df for the query terms, from the cache when it is on
+        (otherwise a pruned parquet lookup)."""
         if self._df_cache is not None:
             return {t: self._df_cache[t] for t in terms if t in self._df_cache}
-        if self._df_cache_bc is not None:
-            m = self._df_cache_bc.value
-            return {t: m[t] for t in terms if t in m}
         return {
             r["term"]: int(r["df"])
             for r in self.term_stats().filter(F.col("term").isin(terms)).collect()
         }
+
+    def _require_positions(self) -> None:
+        if not self.meta.get("with_positions"):
+            raise ValueError("index was built without positions (with_positions=True)")
 
     # --- table accessors -------------------------------------------------
     def postings(self) -> DataFrame:
@@ -260,14 +252,12 @@ class InvertedIndex:
         idfs = {t: bm25_idf(df, n_docs) for t, df in dfs.items()}
 
         def shard_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-            if msm > 1:
-                return _wand.score_shard_exhaustive_msm(pdf, idfs, k, avgdl, k1, b, msm)
-            use_wand = mode == "wand" or (
+            use_wand = msm <= 1 and (mode == "wand" or (
                 mode == "auto" and int(pdf["n_docs"].sum()) >= WAND_FALLBACK_POSTINGS
-            )
+            ))
             if use_wand:
                 return _wand.score_shard_wand(pdf, idfs, k, avgdl, k1, b)
-            return _wand.score_shard_exhaustive(pdf, idfs, k, avgdl, k1, b)
+            return _wand.score_shard_exhaustive(pdf, idfs, k, avgdl, k1, b, msm)
 
         return self._per_shard(dfs, shard_topk, TOPK_SCHEMA, k)
 
@@ -443,10 +433,7 @@ class InvertedIndex:
         PhraseQuery semantics — same contract as bm25.match_phrase_df),
         then global top-k merge. Work per shard is the phrase terms'
         posting+position data only."""
-        if not self.meta.get("with_positions"):
-            raise ValueError("index was built without positions (with_positions=True)")
-        from .positions import score_shard_phrase
-        from ..textproc import bm25_idf
+        self._require_positions()
 
         terms = _TOKENIZE[self.meta["tokenizer"]](phrase)
         if not terms:
@@ -461,7 +448,7 @@ class InvertedIndex:
         idf_sum = sum(bm25_idf(dfs[t], n_docs) for t in terms)
 
         def shard_phrase(pdf: pd.DataFrame) -> pd.DataFrame:
-            return score_shard_phrase(pdf, terms, idf_sum, k, avgdl, k1, b)
+            return _pos.score_shard_phrase(pdf, terms, idf_sum, k, avgdl, k1, b)
 
         return self._per_shard(uniq, shard_phrase, TOPK_SCHEMA, k)
 
@@ -476,10 +463,7 @@ class InvertedIndex:
         the exact terms' and expansion's posting/position data — never
         the corpus (contract as relevance.match_phrase_prefix_df, which
         remains the no-index fallback)."""
-        if not self.meta.get("with_positions"):
-            raise ValueError("index was built without positions (with_positions=True)")
-        from .positions import score_shard_phrase
-        from ..textproc import bm25_idf
+        self._require_positions()
 
         terms = _TOKENIZE[self.meta["tokenizer"]](phrase)
         if not terms:
@@ -503,8 +487,8 @@ class InvertedIndex:
             + bm25_idf(df_prefix, n_docs)
 
         def shard_phrase(pdf: pd.DataFrame) -> pd.DataFrame:
-            return score_shard_phrase(pdf, exact, idf_sum, k, avgdl, k1, b,
-                                      last_terms=expansion)
+            return _pos.score_shard_phrase(pdf, exact, idf_sum, k, avgdl, k1, b,
+                                           last_terms=expansion)
 
         wanted = sorted(set(exact) | set(expansion))
         return self._per_shard(wanted, shard_phrase, TOPK_SCHEMA, k)
@@ -517,10 +501,7 @@ class InvertedIndex:
         relevance.span_near_df, which stays the no-index fallback);
         BM25 with tf=sf and summed idfs. Work per shard is the two
         terms' posting+position data only — never the corpus."""
-        if not self.meta.get("with_positions"):
-            raise ValueError("index was built without positions (with_positions=True)")
-        from .positions import score_shard_span_near
-        from ..textproc import bm25_idf
+        self._require_positions()
 
         dfs = self._lookup_dfs(sorted({first, second}))
         if len(dfs) < len({first, second}):
@@ -531,8 +512,8 @@ class InvertedIndex:
         idf_sum = bm25_idf(dfs[first], n_docs) + bm25_idf(dfs[second], n_docs)
 
         def shard_span(pdf: pd.DataFrame) -> pd.DataFrame:
-            return score_shard_span_near(pdf, first, second, int(slop),
-                                         idf_sum, k, avgdl, k1, b)
+            return _pos.score_shard_span_near(pdf, first, second, int(slop),
+                                              idf_sum, k, avgdl, k1, b)
 
         return self._per_shard(sorted({first, second}), shard_span, TOPK_SCHEMA, k)
 
@@ -542,10 +523,7 @@ class InvertedIndex:
         (contract as relevance.span_first_df — 1-based 1..end window,
         0-based stored positions). Work = one term's posting/position
         data."""
-        if not self.meta.get("with_positions"):
-            raise ValueError("index was built without positions (with_positions=True)")
-        from .positions import score_shard_span_first
-        from ..textproc import bm25_idf
+        self._require_positions()
 
         dfs = self._lookup_dfs([term])
         if not dfs:
@@ -555,8 +533,8 @@ class InvertedIndex:
         idf = bm25_idf(dfs[term], n_docs)
 
         def shard(pdf: pd.DataFrame) -> pd.DataFrame:
-            return score_shard_span_first(pdf, term, int(end), idf, k,
-                                          avgdl, k1, b)
+            return _pos.score_shard_span_first(pdf, term, int(end), idf, k,
+                                               avgdl, k1, b)
 
         return self._per_shard([term], shard, TOPK_SCHEMA, k)
 
@@ -565,8 +543,6 @@ class InvertedIndex:
         sf = total occurrences of ANY clause term, one saturation with
         the summed clause idfs (contract as relevance.span_or_df). No
         positions needed — postings only."""
-        from ..textproc import bm25_idf
-        from .wand import score_shard_span_or
 
         uniq = sorted(set(terms))
         dfs = self._lookup_dfs(uniq)
@@ -579,7 +555,7 @@ class InvertedIndex:
         idf_sum = sum(bm25_idf(dfs.get(t, 0), n_docs) for t in terms)
 
         def shard(pdf: pd.DataFrame) -> pd.DataFrame:
-            return score_shard_span_or(pdf, idf_sum, k, avgdl, k1, b)
+            return _wand.score_shard_span_or(pdf, idf_sum, k, avgdl, k1, b)
 
         return self._per_shard(dfs, shard, TOPK_SCHEMA, k)
 
@@ -589,10 +565,7 @@ class InvertedIndex:
         positions with no `exclude` position in [p-pre, p+post]
         (contract as relevance.span_not_df). Docs holding `include` but
         not `exclude` match with their full tf."""
-        if not self.meta.get("with_positions"):
-            raise ValueError("index was built without positions (with_positions=True)")
-        from .positions import score_shard_span_not
-        from ..textproc import bm25_idf
+        self._require_positions()
 
         dfs = self._lookup_dfs(sorted({include, exclude}))
         if include not in dfs:
@@ -602,8 +575,8 @@ class InvertedIndex:
         idf = bm25_idf(dfs[include], n_docs)
 
         def shard(pdf: pd.DataFrame) -> pd.DataFrame:
-            return score_shard_span_not(pdf, include, exclude, int(pre),
-                                        int(post), idf, k, avgdl, k1, b)
+            return _pos.score_shard_span_not(pdf, include, exclude, int(pre),
+                                             int(post), idf, k, avgdl, k1, b)
 
         return self._per_shard(sorted({include, exclude}), shard, TOPK_SCHEMA, k)
 
@@ -617,11 +590,7 @@ class InvertedIndex:
         saturation with the integer-quantized summed expansion idfs). No
         positions needed; work per shard is the expansion terms'
         postings only."""
-        import math as _m
-
-        from ..textproc import bm25_idf
         from .relevance import _span_multi_like
-        from .wand import score_shard_span_or
 
         like = _span_multi_like(value, kind)
         exp_rows = (self.term_stats().filter(F.col("term").like(like))
@@ -631,13 +600,13 @@ class InvertedIndex:
             return self._empty()
         n_docs, avgdl = self.meta["n_docs"], self.meta["avgdl"]
         k1, b = self.meta["k1"], self.meta["b"]
-        idf_u = sum(_m.floor(bm25_idf(r["df"], n_docs) * 1e6)
+        idf_u = sum(math.floor(bm25_idf(r["df"], n_docs) * 1e6)
                     for r in exp_rows)
         idf_sum = idf_u / 1e6
         terms = [r["term"] for r in exp_rows]
 
         def shard(pdf: pd.DataFrame) -> pd.DataFrame:
-            return score_shard_span_or(pdf, idf_sum, k, avgdl, k1, b)
+            return _wand.score_shard_span_or(pdf, idf_sum, k, avgdl, k1, b)
 
         return self._per_shard(terms, shard, TOPK_SCHEMA, k)
 
@@ -652,10 +621,7 @@ class InvertedIndex:
         data only; scoring idf is the big's summed clause idfs for
         containing, the little's idf for within (the Lucene source-span
         contract)."""
-        if not self.meta.get("with_positions"):
-            raise ValueError("index was built without positions (with_positions=True)")
-        from .positions import score_shard_span_contain
-        from ..textproc import bm25_idf
+        self._require_positions()
 
         wanted = sorted({first, second, little})
         dfs = self._lookup_dfs(wanted)
@@ -668,9 +634,9 @@ class InvertedIndex:
                    + bm25_idf(dfs[second], n_docs))
 
         def shard(pdf: pd.DataFrame) -> pd.DataFrame:
-            return score_shard_span_contain(pdf, first, second, little,
-                                            int(slop), within, idf_sum, k,
-                                            avgdl, k1, b)
+            return _pos.score_shard_span_contain(pdf, first, second, little,
+                                                 int(slop), within, idf_sum, k,
+                                                 avgdl, k1, b)
 
         return self._per_shard(wanted, shard, TOPK_SCHEMA, k)
 
@@ -693,10 +659,7 @@ class InvertedIndex:
             raise UnsupportedQuery("intervals match needs >= 2 terms")
         if not ordered and len(terms) > 2:
             raise UnsupportedQuery("unordered intervals support exactly 2 terms")
-        if not self.meta.get("with_positions"):
-            raise ValueError("index was built without positions (with_positions=True)")
-        from .positions import score_shard_intervals
-        from ..textproc import bm25_idf
+        self._require_positions()
 
         uniq = sorted(set(terms))
         dfs = self._lookup_dfs(uniq)
@@ -707,9 +670,9 @@ class InvertedIndex:
         idf_sum = sum(bm25_idf(dfs[t], n_docs) for t in terms)
 
         def shard(pdf: pd.DataFrame) -> pd.DataFrame:
-            return score_shard_intervals(pdf, terms, int(max_gaps),
-                                         bool(ordered), idf_sum, k,
-                                         avgdl, k1, b)
+            return _pos.score_shard_intervals(pdf, terms, int(max_gaps),
+                                              bool(ordered), idf_sum, k,
+                                              avgdl, k1, b)
 
         return self._per_shard(uniq, shard, TOPK_SCHEMA, k)
 
@@ -842,8 +805,6 @@ def more_like_this_topk(index: "InvertedIndex", docs: DataFrame,
     fallback."""
     from collections import Counter
 
-    from ..textproc import bm25_idf
-
     spark = index.spark
     row = docs.filter(F.col(id_col) == like_id).select(text_col).collect()
     if not row or row[0][0] is None:
@@ -905,8 +866,6 @@ def fuzzy_match_topk(index: "InvertedIndex", text: str,
         [(t, auto_fuzziness(t) if fuzziness == "AUTO" else int(fuzziness))
          for t in uniq],
         "input_term string, fz int")
-    from pyspark.sql import Window
-
     wq = Window.partitionBy("input_term").orderBy(
         F.asc("distance"), F.desc("df"), F.asc("term"))
     rows = (

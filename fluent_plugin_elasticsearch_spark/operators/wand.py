@@ -16,6 +16,11 @@ kernel runs on either of two paths:
 
 Work per shard is proportional to the query terms' posting data only (doc
 lengths are inlined in the blocks, so no doc_stats join at query time).
+The blocks' columns are laid out in the operators/codec.py header; every
+kernel reads them through codec.decode_postings, and scores with the one
+BM25 tf-factor ``_tfn`` the build also uses for ``max_tfn``. Kernels sort
+their rows by (term, first_doc) first, so a result does not depend on the
+order the rows arrive in (applyInPandas does not order them).
 
 Tie-break everywhere: (score desc, doc_id asc) — rank-identical contract.
 """
@@ -25,59 +30,118 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from .codec import delta_decode, varint_decode
+from .codec import Postings, decode_postings
 
 EPS = 1e-12  # conservative slack on float upper bounds (sum-order slop)
 
+TOPK_COLS = {"doc_id": "int64", "score": "float64"}
 
-def _tfn(tf: np.ndarray, dl: np.ndarray, avgdl: float, k1: float, b: float) -> np.ndarray:
+
+def _empty(cols: dict[str, str] = TOPK_COLS) -> pd.DataFrame:
+    """A kernel's typed empty result."""
+    return pd.DataFrame({c: pd.Series([], dtype=t) for c, t in cols.items()})
+
+
+def _tfn(tf: np.ndarray, dl: np.ndarray, avgdl: float, k1: float, b: float,
+         weight: float = 1.0) -> np.ndarray:
+    """The BM25 tf-factor weight·(k1+1)·tf / (tf + k1·(1−b+b·dl/avgdl)).
+    With weight 1 it is the idf-independent factor: the build stores its
+    block maximum as ``max_tfn`` and the kernels multiply it by idf, so
+    WAND's block bound and the scores come from one formula (pruning is
+    safe only while they agree bit for bit). With the summed clause idfs
+    as weight it is a span-frequency score (_span_topk)."""
     tff = tf.astype(np.float64)
-    return (k1 + 1.0) * tff / (tff + k1 * (1.0 - b + b * dl.astype(np.float64) / avgdl))
+    return weight * (k1 + 1.0) * tff / (tff + k1 * (1.0 - b + b * dl.astype(np.float64) / avgdl))
 
 
-def _groupsum(ids: np.ndarray, contrib: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+def _decode(pdf: pd.DataFrame, positions: bool = False) -> tuple[pd.DataFrame, Postings]:
+    """A shard's posting rows in (term, first_doc) order — the order every
+    per-doc float sum follows, whatever order the rows arrived in — and
+    their decoded postings."""
+    pdf = pdf.sort_values(["term", "first_doc"], kind="stable", ignore_index=True)
+    return pdf, decode_postings(pdf, positions=positions)
+
+
+def _runs(ids: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(stable argsort of ids, start of each equal-id run in that order)."""
+    order = np.argsort(ids, kind="stable")
+    return order, np.concatenate([[0], np.nonzero(np.diff(ids[order]))[0] + 1])
+
+
+def _groupsum(ids: np.ndarray, contrib: np.ndarray,
+              runs: tuple[np.ndarray, np.ndarray] | None = None
+              ) -> tuple[np.ndarray, np.ndarray]:
     """(unique ids asc, per-id contribution sums) — the scatter-add at the
     heart of every exhaustive kernel, as STABLE argsort + add.reduceat
     instead of np.unique + np.add.at (the unbuffered scatter-add is the
     slowest op in the high-mass tail; reduceat is a sequential C pass,
     ~1.7x faster at 5M postings). Bit-identical scores: the stable sort
     keeps each doc's postings in original (term-sorted) order and reduceat
-    sums them sequentially — the same IEEE order add.at produced."""
+    sums them sequentially — the same IEEE order add.at produced. Pass
+    ``runs`` (from _runs) to reuse the grouping for other per-id
+    reductions."""
     if ids.size == 0:
-        return ids.astype(np.int64), contrib.astype(np.float64)
-    order = np.argsort(ids, kind="stable")
-    sids = ids[order]
-    scon = contrib[order]
-    starts = np.concatenate([[0], np.nonzero(np.diff(sids))[0] + 1])
-    return sids[starts], np.add.reduceat(scon, starts)
+        return ids.astype(np.int64), contrib
+    order, starts = _runs(ids) if runs is None else runs
+    return ids[order[starts]], np.add.reduceat(contrib[order], starts)
+
+
+def _top(ids: np.ndarray, scores: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
+    """Exact (score desc, doc_id asc) top-k. The candidates are every doc
+    at or above the k-th score (argpartition threshold): docs tied at the
+    boundary must survive so the lexsort can pick the smallest doc_ids
+    (dropping them returned larger ids and broke the rank-identity
+    contract)."""
+    if ids.size > k:
+        part = np.argpartition(-scores, k - 1)
+        mask = scores >= scores[part[:k]].min()
+        ids, scores = ids[mask], scores[mask]
+    order = np.lexsort((ids, -scores))[:k]
+    return ids[order], scores[order]
+
+
+def _topk(ids: np.ndarray, scores: np.ndarray, k: int) -> pd.DataFrame:
+    ids, scores = _top(ids, scores, k)
+    return pd.DataFrame({"doc_id": ids, "score": scores})
+
+
+def _span_topk(doc_ids: np.ndarray, sf: np.ndarray, dl: np.ndarray,
+               idf_sum: float, k: int, avgdl: float, k1: float,
+               b: float) -> pd.DataFrame:
+    """Span-frequency BM25 (tf = sf, one saturation with the summed clause
+    idfs), local top-k — the tail of span_or and the positional kernels."""
+    return _topk(doc_ids, _tfn(sf, dl, avgdl, k1, b, idf_sum), k)
+
+
+def _per_posting(pdf: pd.DataFrame, p: Postings, by_term: dict, dtype) -> np.ndarray:
+    """``by_term`` (term → value) per posting of the decoded rows."""
+    return np.repeat(pdf["term"].map(by_term).to_numpy(dtype=dtype), p.n)
 
 
 def score_shard_exhaustive(pdf: pd.DataFrame, idfs: dict[str, float], k: int,
-                           avgdl: float, k1: float, b: float) -> pd.DataFrame:
+                           avgdl: float, k1: float, b: float,
+                           msm: int = 1) -> pd.DataFrame:
     """Decode every block of the query terms in this shard, accumulate BM25
     fully vectorized (_groupsum: stable argsort + add.reduceat), return
-    local top-k. This is the throughput path (no per-doc Python)."""
-    from .codec import segmented_cumsum
+    local top-k. This is the throughput path (no per-doc Python).
 
+    ``msm`` (minimum_should_match): a doc qualifies only if it contains
+    >= msm DISTINCT query terms (ES match operator=and ≡ msm =
+    len(terms)). Postings hold one entry per (term, doc), so the matched
+    term count is the doc's run length in the grouping pass. The gate
+    must run BEFORE top-k (not after WAND): block-max skipping ranks
+    unqualified docs too, so a post-filter could return < k or wrong
+    members."""
     if len(pdf) == 0:
-        return pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                             "score": pd.Series([], dtype="float64")})
-    # one concatenated decode for all blocks of all query terms (sorted by
-    # term so per-doc accumulation order is deterministic)
-    pdf = pdf.sort_values(["term", "first_doc"], kind="stable")
-    n_per_blk = pdf["n_docs"].to_numpy().astype(np.int64)
-    total = int(n_per_blk.sum())
-    blk_starts = np.concatenate([[0], np.cumsum(n_per_blk)[:-1]])
-    gaps = varint_decode(b"".join(pdf["docs_enc"]), total)
-    ids = segmented_cumsum(gaps, blk_starts, n_per_blk).astype(np.int64)
-    tfs = varint_decode(b"".join(pdf["tfs_enc"]), total)
-    dls = varint_decode(b"".join(pdf["dls_enc"]), total)
-    idf_per_blk = pdf["term"].map(idfs).to_numpy(dtype=np.float64)
-    contrib = np.repeat(idf_per_blk, n_per_blk) * _tfn(tfs, dls, avgdl, k1, b)
-    uniq, scores = _groupsum(ids, contrib)
-    cand_ids, cand_scores = _topk_ties(uniq, scores, k)
-    order = np.lexsort((cand_ids, -cand_scores))[:k]
-    return pd.DataFrame({"doc_id": cand_ids[order], "score": cand_scores[order]})
+        return _empty()
+    pdf, p = _decode(pdf)
+    contrib = _per_posting(pdf, p, idfs, np.float64) * _tfn(p.tfs, p.dls, avgdl, k1, b)
+    runs = _runs(p.ids)
+    uniq, scores = _groupsum(p.ids, contrib, runs)
+    if msm > 1:
+        keep = np.diff(np.append(runs[1], p.ids.size)) >= msm
+        uniq, scores = uniq[keep], scores[keep]
+    return _topk(uniq, scores, k)
 
 
 def score_shard_span_or(pdf: pd.DataFrame, idf_sum: float, k: int,
@@ -87,29 +151,14 @@ def score_shard_span_or(pdf: pd.DataFrame, idf_sum: float, k: int,
     postings), ONE saturation with the summed clause idfs — the span
     contract (relevance.span_or_df), not the per-term BM25 sum. tf
     postings only; no positions needed. Returns local top-k."""
-    from .codec import segmented_cumsum
-
     if len(pdf) == 0:
-        return pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                             "score": pd.Series([], dtype="float64")})
-    pdf = pdf.sort_values(["term", "first_doc"], kind="stable")
-    n_per_blk = pdf["n_docs"].to_numpy().astype(np.int64)
-    total = int(n_per_blk.sum())
-    blk_starts = np.concatenate([[0], np.cumsum(n_per_blk)[:-1]])
-    gaps = varint_decode(b"".join(pdf["docs_enc"]), total)
-    ids = segmented_cumsum(gaps, blk_starts, n_per_blk).astype(np.int64)
-    tfs = varint_decode(b"".join(pdf["tfs_enc"]), total).astype(np.int64)
-    dls = varint_decode(b"".join(pdf["dls_enc"]), total).astype(np.int64)
-    uniq, sf = _groupsum(ids, tfs.astype(np.float64))
+        return _empty()
+    pdf, p = _decode(pdf)
+    runs = _runs(p.ids)
+    uniq, sf = _groupsum(p.ids, p.tfs.astype(np.float64), runs)
     # dl per unique doc: first posting's dl (all equal per doc)
-    order = np.argsort(ids, kind="stable")
-    starts = np.concatenate([[0], np.nonzero(np.diff(ids[order]))[0] + 1])
-    dl = dls[order][starts].astype(np.float64)
-    scores = idf_sum * (k1 + 1.0) * sf / (
-        sf + k1 * (1.0 - b + b * dl / avgdl))
-    out_ids, out_scores = _topk_ties(uniq, scores, k)
-    order2 = np.lexsort((out_ids, -out_scores))[:k]
-    return pd.DataFrame({"doc_id": out_ids[order2], "score": out_scores[order2]})
+    dl = p.dls[runs[0][runs[1]]]
+    return _span_topk(uniq, sf, dl, idf_sum, k, avgdl, k1, b)
 
 
 def score_shard_weighted_tf(pdf: pd.DataFrame,
@@ -121,25 +170,11 @@ def score_shard_weighted_tf(pdf: pd.DataFrame,
     int64 per-(term,doc) products summed per doc). No corpus stats, no
     float path anywhere; work is proportional to the query terms'
     posting data only. Returns every doc with score_u > 0."""
-    from .codec import segmented_cumsum
-
     if len(pdf) == 0:
-        return pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                             "score_u": pd.Series([], dtype="int64")})
-    pdf = pdf.sort_values(["term", "first_doc"], kind="stable")
-    n_per_blk = pdf["n_docs"].to_numpy().astype(np.int64)
-    total = int(n_per_blk.sum())
-    blk_starts = np.concatenate([[0], np.cumsum(n_per_blk)[:-1]])
-    gaps = varint_decode(b"".join(pdf["docs_enc"]), total)
-    ids = segmented_cumsum(gaps, blk_starts, n_per_blk).astype(np.int64)
-    tfs = varint_decode(b"".join(pdf["tfs_enc"]), total).astype(np.int64)
-    w_per_blk = pdf["term"].map(weight_units).to_numpy(dtype=np.int64)
-    contrib = np.repeat(w_per_blk, n_per_blk) * tfs * 1000
-    order_ = np.argsort(ids, kind="stable")
-    sids = ids[order_]
-    starts_ = np.concatenate([[0], np.nonzero(np.diff(sids))[0] + 1])
-    uniq = sids[starts_]
-    scores = np.add.reduceat(contrib[order_], starts_)
+        return _empty({"doc_id": "int64", "score_u": "int64"})
+    pdf, p = _decode(pdf)
+    contrib = _per_posting(pdf, p, weight_units, np.int64) * p.tfs * 1000
+    uniq, scores = _groupsum(p.ids, contrib)
     keep = scores > 0
     return pd.DataFrame({"doc_id": uniq[keep], "score_u": scores[keep]})
 
@@ -163,40 +198,25 @@ def score_shard_matched(pdf: pd.DataFrame, idfs: dict[str, float],
     same reduceat pass as the scores, so the gate is O(postings) with no
     Python loop over docs; > 64 distinct terms raises (loudly) rather
     than silently truncating."""
-    from .codec import segmented_cumsum
-
     if len(pdf) == 0:
-        return pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                             "score": pd.Series([], dtype="float64")})
-    pdf = pdf.sort_values(["term", "first_doc"], kind="stable")
-    n_per_blk = pdf["n_docs"].to_numpy().astype(np.int64)
-    total = int(n_per_blk.sum())
-    blk_starts = np.concatenate([[0], np.cumsum(n_per_blk)[:-1]])
-    gaps = varint_decode(b"".join(pdf["docs_enc"]), total)
-    ids = segmented_cumsum(gaps, blk_starts, n_per_blk).astype(np.int64)
-    tfs = varint_decode(b"".join(pdf["tfs_enc"]), total)
-    dls = varint_decode(b"".join(pdf["dls_enc"]), total)
-    idf_per_blk = pdf["term"].map(idfs).to_numpy(dtype=np.float64)
-    contrib = np.repeat(idf_per_blk, n_per_blk) * _tfn(tfs, dls, avgdl, k1, b)
+        return _empty()
+    pdf, p = _decode(pdf)
+    contrib = _per_posting(pdf, p, idfs, np.float64) * _tfn(p.tfs, p.dls, avgdl, k1, b)
     if quantize:
         # per-(term, doc) integer quantization BEFORE the per-doc sum: an
         # exact int64 sum is partition- and order-independent, so callers
         # with weighted/expanded term sets (fuzzy match) get an
         # engine-exact contract without an ordered float fold
         contrib = np.floor(contrib * 1e6)
-    order_ = np.argsort(ids, kind="stable")
-    sids = ids[order_]
-    starts_ = np.concatenate([[0], np.nonzero(np.diff(sids))[0] + 1])
-    uniq = sids[starts_]
-    scores = np.add.reduceat(contrib[order_], starts_)
+    runs = _runs(p.ids)
+    uniq, scores = _groupsum(p.ids, contrib, runs)
     if groups is not None:
         bit = {t: i for i, t in enumerate(sorted(idfs))}
         if len(bit) > 64:
             raise ValueError(
                 f"query_string gate supports <= 64 distinct terms, got {len(bit)}")
-        code_per_blk = pdf["term"].map(bit).to_numpy(dtype=np.uint64)
-        masks = np.repeat(np.uint64(1) << code_per_blk, n_per_blk)
-        docmask = np.bitwise_or.reduceat(masks[order_], starts_)
+        masks = np.uint64(1) << _per_posting(pdf, p, bit, np.uint64)
+        docmask = np.bitwise_or.reduceat(masks[runs[0]], runs[1])
         keep = np.zeros(uniq.size, dtype=bool)
         for g in groups:
             # a group term absent from the query-term df map (df = 0 in
@@ -211,18 +231,25 @@ def score_shard_matched(pdf: pd.DataFrame, idfs: dict[str, float],
     return pd.DataFrame({"doc_id": uniq, "score": scores})
 
 
-def _topk_ties(ids: np.ndarray, scores: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
-    """Candidate set for an exact (score desc, doc_id asc) top-k: argpartition
-    for the k-th score threshold, then include EVERY doc at or above it —
-    docs tied at the boundary must survive so the lexsort can pick the
-    smallest doc_ids (dropping them returned larger ids and broke the
-    rank-identity contract)."""
-    if ids.size <= k:
-        return ids, scores
-    part = np.argpartition(-scores, k - 1)
-    thresh = scores[part[:k]].min()
-    mask = scores >= thresh
-    return ids[mask], scores[mask]
+def _term_luts(pdf: pd.DataFrame, p: Postings, term_maps):
+    """Per-posting values of each term→value map in ``term_maps`` (NaN
+    where the map lacks the posting's term), skipping maps that hit none
+    of the shard's terms: yields (map index, values). Terms are factorized
+    ONCE per shard, so each map costs one integer LUT gather — no np.isin
+    string scans, no per-element Python calls."""
+    blk_codes, uniq_terms = pd.factorize(pdf["term"])
+    codes = np.repeat(blk_codes, p.n)
+    term_pos = {t: i for i, t in enumerate(uniq_terms)}
+    for j, m in enumerate(term_maps):
+        lut = np.full(len(uniq_terms), np.nan, dtype=np.float64)
+        hit = False
+        for t, v in m.items():
+            i = term_pos.get(t)
+            if i is not None:
+                lut[i] = v
+                hit = True
+        if hit:
+            yield j, lut[codes]
 
 
 def score_shard_batch(pdf: pd.DataFrame, query_terms: dict[int, dict[str, float]], k: int,
@@ -231,59 +258,25 @@ def score_shard_batch(pdf: pd.DataFrame, query_terms: dict[int, dict[str, float]
     query term's blocks once, score every query that uses the term, local
     top-k per query. This is the offline-query-set mode — one pass over the
     union of the queries' posting data serves the whole set."""
-    from .codec import segmented_cumsum
-
+    cols = {"query_id": "int64", **TOPK_COLS}
     if len(pdf) == 0:
-        return pd.DataFrame({"query_id": pd.Series([], dtype="int64"),
-                             "doc_id": pd.Series([], dtype="int64"),
-                             "score": pd.Series([], dtype="float64")})
-    pdf = pdf.sort_values(["term", "first_doc"], kind="stable")
-    n_per_blk = pdf["n_docs"].to_numpy().astype(np.int64)
-    total = int(n_per_blk.sum())
-    blk_starts = np.concatenate([[0], np.cumsum(n_per_blk)[:-1]])
-    gaps = varint_decode(b"".join(pdf["docs_enc"]), total)
-    ids = segmented_cumsum(gaps, blk_starts, n_per_blk).astype(np.int64)
-    tfs = varint_decode(b"".join(pdf["tfs_enc"]), total)
-    dls = varint_decode(b"".join(pdf["dls_enc"]), total)
-    tfn = _tfn(tfs, dls, avgdl, k1, b)
-    # factorize terms ONCE per shard: per-query term selection and idf
-    # lookup become integer LUT indexing (no np.isin string scans, no
-    # np.vectorize per-element Python calls)
-    blk_codes, uniq_terms = pd.factorize(pdf["term"])
-    codes = np.repeat(blk_codes, n_per_blk)
-    term_pos = {t: i for i, t in enumerate(uniq_terms)}
-
+        return _empty(cols)
+    pdf, p = _decode(pdf)
+    tfn = _tfn(p.tfs, p.dls, avgdl, k1, b)
+    qids = sorted(query_terms)
     out_q, out_d, out_s = [], [], []
-    for qid in sorted(query_terms):
-        idfs = query_terms[qid]
-        lut = np.full(len(uniq_terms), np.nan, dtype=np.float64)
-        hit = False
-        for t, v in idfs.items():
-            i = term_pos.get(t)
-            if i is not None:
-                lut[i] = v
-                hit = True
-        if not hit:
-            continue
-        idf_per_posting = lut[codes]
+    for j, idf_per_posting in _term_luts(pdf, p, [query_terms[q] for q in qids]):
         mask = ~np.isnan(idf_per_posting)
-        q_ids = ids[mask]
-        q_contrib = tfn[mask] * idf_per_posting[mask]
-        uniq, scores = _groupsum(q_ids, q_contrib)
-        cand_ids, cand_scores = _topk_ties(uniq, scores, k)
-        order = np.lexsort((cand_ids, -cand_scores))[:k]
-        out_q.append(np.full(order.size, qid, dtype=np.int64))
-        out_d.append(cand_ids[order])
-        out_s.append(cand_scores[order])
+        ids, scores = _top(*_groupsum(p.ids[mask], tfn[mask] * idf_per_posting[mask]), k)
+        out_q.append(np.full(ids.size, qids[j], dtype=np.int64))
+        out_d.append(ids)
+        out_s.append(scores)
     if not out_q:
-        return pd.DataFrame({"query_id": pd.Series([], dtype="int64"),
-                             "doc_id": pd.Series([], dtype="int64"),
-                             "score": pd.Series([], dtype="float64")})
+        return _empty(cols)
     return pd.DataFrame(
         {"query_id": np.concatenate(out_q), "doc_id": np.concatenate(out_d),
          "score": np.concatenate(out_s)}
     )
-
 
 
 # Blocks gathered per essential term per scoring window. Small windows
@@ -297,23 +290,6 @@ NB_PER_TERM = 32
 # the worst case (all-head disjunctions, where nothing is prunable) at
 # roughly one exhaustive pass.
 NE_MIN_FRACTION = 0.2
-
-def _decode_selected(sel: np.ndarray, docs_enc: list, tfs_enc: list, dls_enc: list,
-                     nblk: np.ndarray, idf_blk: np.ndarray,
-                     avgdl: float, k1: float, b: float) -> tuple[np.ndarray, np.ndarray]:
-    """Batch-decode a set of blocks (ascending global index = term-sorted
-    order) in ONE segmented pass: (doc_ids, bm25 contribution) arrays."""
-    from .codec import segmented_cumsum
-
-    n_sel = nblk[sel]
-    total = int(n_sel.sum())
-    starts = np.concatenate([[0], np.cumsum(n_sel)[:-1]])
-    gaps = varint_decode(b"".join(docs_enc[bi] for bi in sel), total)
-    ids = segmented_cumsum(gaps, starts, n_sel).astype(np.int64)
-    tfs = varint_decode(b"".join(tfs_enc[bi] for bi in sel), total)
-    dls = varint_decode(b"".join(dls_enc[bi] for bi in sel), total)
-    con = np.repeat(idf_blk[sel], n_sel) * _tfn(tfs, dls, avgdl, k1, b)
-    return ids, con
 
 
 def score_shard_wand(pdf: pd.DataFrame, idfs: dict[str, float], k: int,
@@ -353,17 +329,23 @@ def score_shard_wand(pdf: pd.DataFrame, idfs: dict[str, float], k: int,
     doc_id asc) tie-break anyway — the split prunes at ≤ θ−EPS, strictly
     below θ."""
     if len(pdf) == 0:
-        return pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                             "score": pd.Series([], dtype="float64")})
-    pdf = pdf.sort_values(["term", "first_doc"], kind="stable").reset_index(drop=True)
+        return _empty()
+    pdf = pdf.sort_values(["term", "first_doc"], kind="stable", ignore_index=True)
     firsts = pdf["first_doc"].to_numpy(dtype=np.int64)
     lasts = pdf["last_doc"].to_numpy(dtype=np.int64)
     nblk = pdf["n_docs"].to_numpy(dtype=np.int64)
     idf_blk = pdf["term"].map(idfs).to_numpy(dtype=np.float64)
     ub_blk = idf_blk * pdf["max_tfn"].to_numpy(dtype=np.float64)
-    docs_enc = pdf["docs_enc"].tolist()
-    tfs_enc = pdf["tfs_enc"].tolist()
-    dls_enc = pdf["dls_enc"].tolist()
+    # the block columns as lists, so a window's selection decodes without
+    # building a frame
+    rows = {c: pdf[c].tolist() for c in ("docs_enc", "tfs_enc", "dls_enc")}
+    rows["n_docs"] = nblk
+
+    def decode(sel: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """(doc ids, bm25 contributions) of the selected blocks, decoded
+        in ascending block (= term-sorted) order in one segmented pass."""
+        p = decode_postings(rows, sel)
+        return p.ids, np.repeat(idf_blk[sel], p.n) * _tfn(p.tfs, p.dls, avgdl, k1, b)
 
     # per-term contiguous block slices (pdf is term-sorted; within a term
     # blocks are first_doc-sorted and non-overlapping)
@@ -384,9 +366,7 @@ def score_shard_wand(pdf: pd.DataFrame, idfs: dict[str, float], k: int,
         best_ids = np.concatenate([best_ids, cands])
         best_scores = np.concatenate([best_scores, scores])
         if best_ids.size >= k:
-            cand_i, cand_s = _topk_ties(best_ids, best_scores, k)
-            order = np.lexsort((cand_i, -cand_s))[:k]
-            best_ids, best_scores = cand_i[order], cand_s[order]
+            best_ids, best_scores = _top(best_ids, best_scores, k)
             theta = best_scores[-1]
 
     def score_range(sel: np.ndarray, lo: int, hi: int | None,
@@ -394,8 +374,7 @@ def score_shard_wand(pdf: pd.DataFrame, idfs: dict[str, float], k: int,
         """Decode `sel` blocks, keep postings in [lo, hi) — hi=None means
         unbounded (doc ids are arbitrary int64, so no sentinel is safe) —
         and, when `cands` is given, only candidate docs; accumulate, merge."""
-        ids, con = _decode_selected(sel, docs_enc, tfs_enc, dls_enc, nblk,
-                                    idf_blk, avgdl, k1, b)
+        ids, con = decode(sel)
         m = ids >= lo
         if hi is not None:
             m &= ids < hi
@@ -459,8 +438,7 @@ def score_shard_wand(pdf: pd.DataFrame, idfs: dict[str, float], k: int,
         if sel_e.size == 0:
             cur = hi
             continue
-        e_ids, _ = _decode_selected(np.sort(sel_e), docs_enc, tfs_enc, dls_enc,
-                                    nblk, idf_blk, avgdl, k1, b)
+        e_ids, _ = decode(np.sort(sel_e))
         em = e_ids >= cur
         if hi is not None:
             em &= e_ids < hi
@@ -488,8 +466,7 @@ def score_shard_wand(pdf: pd.DataFrame, idfs: dict[str, float], k: int,
         if hi is None:
             break  # every essential list was consumed to its end
         cur = hi
-    order = np.lexsort((best_ids, -best_scores))[:k]
-    return pd.DataFrame({"doc_id": best_ids[order], "score": best_scores[order]})
+    return _topk(best_ids, best_scores, k)
 
 
 def score_shard_dismax(pdf: pd.DataFrame, subquery_idfs: list[dict[str, float]],
@@ -501,89 +478,23 @@ def score_shard_dismax(pdf: pd.DataFrame, subquery_idfs: list[dict[str, float]],
     max + tie_breaker * (sum - max) per doc. Exact by construction — every
     matching doc in the shard is scored for every subquery before the
     combined local top-k (no per-list over-fetch heuristics)."""
-    from .codec import segmented_cumsum
-
-    empty = pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                          "score": pd.Series([], dtype="float64")})
     if len(pdf) == 0:
-        return empty
-    pdf = pdf.sort_values(["term", "first_doc"], kind="stable")
-    n_per_blk = pdf["n_docs"].to_numpy().astype(np.int64)
-    total = int(n_per_blk.sum())
-    blk_starts = np.concatenate([[0], np.cumsum(n_per_blk)[:-1]])
-    gaps = varint_decode(b"".join(pdf["docs_enc"]), total)
-    ids = segmented_cumsum(gaps, blk_starts, n_per_blk).astype(np.int64)
-    tfs = varint_decode(b"".join(pdf["tfs_enc"]), total)
-    dls = varint_decode(b"".join(pdf["dls_enc"]), total)
-    tfn = _tfn(tfs, dls, avgdl, k1, b)
-    blk_codes, uniq_terms = pd.factorize(pdf["term"])
-    codes = np.repeat(blk_codes, n_per_blk)
-    term_pos = {t: i for i, t in enumerate(uniq_terms)}
-
-    uniq, inv = np.unique(ids, return_inverse=True)
+        return _empty()
+    pdf, p = _decode(pdf)
+    tfn = _tfn(p.tfs, p.dls, avgdl, k1, b)
+    uniq, inv = np.unique(p.ids, return_inverse=True)
     best = np.zeros(uniq.size, dtype=np.float64)
     summed = np.zeros(uniq.size, dtype=np.float64)
     any_hit = False
-    for idfs in subquery_idfs:
-        lut = np.full(len(uniq_terms), np.nan, dtype=np.float64)
-        hit = False
-        for t, v in idfs.items():
-            i = term_pos.get(t)
-            if i is not None:
-                lut[i] = v
-                hit = True
-        if not hit:
-            continue
+    for _, idf_per_posting in _term_luts(pdf, p, subquery_idfs):
         any_hit = True
-        idf_per_posting = lut[codes]
         mask = ~np.isnan(idf_per_posting)
         scores = np.zeros(uniq.size, dtype=np.float64)
         np.add.at(scores, inv[mask], tfn[mask] * idf_per_posting[mask])
         np.maximum(best, scores, out=best)
         summed += scores
     if not any_hit:
-        return empty
+        return _empty()
     combined = best + tie_breaker * (summed - best)
     nz = combined > 0.0
-    cand_ids, cand_scores = _topk_ties(uniq[nz], combined[nz], k)
-    order = np.lexsort((cand_ids, -cand_scores))[:k]
-    return pd.DataFrame({"doc_id": cand_ids[order], "score": cand_scores[order]})
-
-
-def score_shard_exhaustive_msm(pdf: pd.DataFrame, idfs: dict[str, float], k: int,
-                               avgdl: float, k1: float, b: float,
-                               msm: int) -> pd.DataFrame:
-    """Exhaustive shard scorer with a minimum_should_match gate: a doc
-    qualifies only if it contains >= msm DISTINCT query terms (ES match
-    operator=and ≡ msm = len(terms)). Postings hold one entry per
-    (term, doc), so the per-doc matched-term count is a bincount over the
-    factorized doc ids — one extra O(postings) pass, no Python loop.
-    The gate must run BEFORE top-k (not after WAND): block-max skipping
-    ranks unqualified docs too, so a post-filter could return < k or
-    wrong members."""
-    from .codec import segmented_cumsum
-
-    if len(pdf) == 0:
-        return pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                             "score": pd.Series([], dtype="float64")})
-    pdf = pdf.sort_values(["term", "first_doc"], kind="stable")
-    n_per_blk = pdf["n_docs"].to_numpy().astype(np.int64)
-    total = int(n_per_blk.sum())
-    blk_starts = np.concatenate([[0], np.cumsum(n_per_blk)[:-1]])
-    gaps = varint_decode(b"".join(pdf["docs_enc"]), total)
-    ids = segmented_cumsum(gaps, blk_starts, n_per_blk).astype(np.int64)
-    tfs = varint_decode(b"".join(pdf["tfs_enc"]), total)
-    dls = varint_decode(b"".join(pdf["dls_enc"]), total)
-    idf_per_blk = pdf["term"].map(idfs).to_numpy(dtype=np.float64)
-    contrib = np.repeat(idf_per_blk, n_per_blk) * _tfn(tfs, dls, avgdl, k1, b)
-    order_ = np.argsort(ids, kind="stable")
-    sids = ids[order_]
-    starts_ = np.concatenate([[0], np.nonzero(np.diff(sids))[0] + 1])
-    uniq = sids[starts_]
-    scores = np.add.reduceat(contrib[order_], starts_)
-    # postings hold one entry per (term, doc) → run length = matched terms
-    n_matched = np.diff(np.append(starts_, sids.size))
-    keep = n_matched >= msm
-    cand_ids, cand_scores = _topk_ties(uniq[keep], scores[keep], k)
-    order = np.lexsort((cand_ids, -cand_scores))[:k]
-    return pd.DataFrame({"doc_id": cand_ids[order], "score": cand_scores[order]})
+    return _topk(uniq[nz], combined[nz], k)

@@ -5,6 +5,11 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+# The session's default driver heap (48g) is sized for production boxes; the
+# suite's corpora are small, and a heap that fits a 16 GB machine keeps the
+# JVM from being killed by the kernel instead of collecting garbage.
+os.environ.setdefault("SPARK_DRIVER_MEM", "4g")
+
 from fluent_plugin_elasticsearch_spark.session import get_spark  # noqa: E402
 
 

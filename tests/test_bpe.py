@@ -72,6 +72,13 @@ def test_train_matches_reference_trainer(spark, docs):
     assert train_bpe(docs.repartition(5), n_merges=6) == m
 
 
+def test_train_matches_reference_trainer_at_20_merges(spark, docs):
+    """Twenty merges nest twenty folds in one column expression, which
+    must stay small enough for the driver to plan."""
+    wf = {r["word"]: r["cnt"] for r in word_freqs(docs).collect()}
+    assert train_bpe(docs, n_merges=20) == _ref_train(wf, 20)
+
+
 def test_encode_applies_merges_leftmost(spark, docs):
     m = train_bpe(docs, n_merges=4)
     enc = {r["doc_id"]: r["subwords"]

@@ -4,14 +4,20 @@ frequency, idf = Σ constituent idfs)."""
 
 from __future__ import annotations
 
+import json
 import math
+import os
 
+import numpy as np
+import pyarrow.dataset as pads
 import pytest
 from pyspark.sql import Row
 
 from fluent_plugin_elasticsearch_spark.operators.bm25 import match_phrase_df
+from fluent_plugin_elasticsearch_spark.operators.codec import decode_postings
 from fluent_plugin_elasticsearch_spark.operators.index_build import build_index
 from fluent_plugin_elasticsearch_spark.operators.search import InvertedIndex
+from fluent_plugin_elasticsearch_spark.operators.wand import _tfn
 
 PHRASES = ["the data", "data query", "the", "the data query", "zzznope data"]
 
@@ -33,6 +39,24 @@ def pos_idx(request, spark, pos_index):
     Spark job)."""
     idx = InvertedIndex(spark, pos_index)
     return idx.warm() if request.param == "warmed" else idx
+
+
+@pytest.mark.parametrize("which", ["index_dir", "pos_index"])
+def test_block_max_tfn_is_the_kernels_bound(request, which):
+    """Block-max WAND skips a block only when idf × max_tfn cannot beat θ,
+    which is safe while max_tfn is EXACTLY the block's maximum of the
+    tf-factor the kernels score with — on the tf and the positional
+    index alike."""
+    path = request.getfixturevalue(which)
+    with open(os.path.join(path, "meta.json")) as f:
+        meta = json.load(f)
+    blocks = pads.dataset(os.path.join(path, "postings"), format="parquet",
+                          partitioning="hive").to_table().to_pandas()
+    p = decode_postings(blocks, positions=bool(meta.get("with_positions")))
+    tfn = _tfn(p.tfs, p.dls, meta["avgdl"], meta["k1"], meta["b"])
+    got = blocks["max_tfn"].to_numpy()
+    want = np.array([t.max() for t in np.split(tfn, np.cumsum(p.n)[:-1])])
+    assert len(blocks) > 100 and np.array_equal(got, want)
 
 
 @pytest.mark.parametrize("phrase", PHRASES)

@@ -1,7 +1,6 @@
 """Physical-plan assertions: the plans we designed for are the plans
 Catalyst actually produces (pushdown, broadcast, no spurious exchanges)."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from fluent_plugin_elasticsearch_spark.operators.bm25 import bm25_topk_df
@@ -29,14 +28,13 @@ def test_bm25_df_broadcasts_small_sides(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan
 
 
-@pytest.mark.parametrize("cache_mode", [True, "broadcast"])
-def test_warm_search_is_local_and_starts_no_job(spark, index_dir, cache_mode):
+def test_warm_search_is_local_and_starts_no_job(spark, index_dir):
     """A warmed, term-cached search scores on the driver-resident postings:
     its plan is a LocalTableScan, building and collecting it starts no
     Spark job, and its rows are those of the unwarmed index."""
     sc = spark.sparkContext
-    idx = InvertedIndex(spark, index_dir, cache_term_stats=cache_mode).warm()
-    group = f"warm-search-{cache_mode}"
+    idx = InvertedIndex(spark, index_dir, cache_term_stats=True).warm()
+    group = "warm-search"
     sc.setJobGroup(group, group)
     try:
         q = idx.search("the of", k=5, mode="exhaustive")

@@ -11,6 +11,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from fluent_plugin_elasticsearch_spark.operators import positions, wand
 from fluent_plugin_elasticsearch_spark.operators.codec import delta_encode, varint_encode
 from fluent_plugin_elasticsearch_spark.operators.wand import (
     _tfn,
@@ -101,3 +102,118 @@ def test_batch_multiquery_factorized_lut(tied_pdf):
     u_score = 2.0 * float(_tfn(np.array([1]), np.array([10]), AVGDL, K1, B)[0])
     expect = [100, 101, 102] if t_score >= u_score else [500, 501, 502]
     assert by_q[4] == expect
+
+
+# --- order invariance -------------------------------------------------------
+# applyInPandas hands a kernel its shard's block rows in no particular order,
+# while the resident (warmed) path hands them over sorted by (term,
+# first_doc): every kernel must return the same frame, bit for bit, either way.
+
+VOCAB = ["a", "b", "c", "d", "e"]
+
+
+def _positional_blocks(n_docs: int = 240, block_size: int = 8, seed: int = 3) -> pd.DataFrame:
+    """Block rows (positions included) of a seeded random corpus over VOCAB,
+    laid out as the build writes them: per term, doc-sorted runs of at most
+    ``block_size`` postings."""
+    rng = np.random.default_rng(seed)
+    docs = {100 + 3 * i: rng.choice(VOCAB, int(rng.integers(3, 30)),
+                                    p=[0.4, 0.25, 0.15, 0.12, 0.08]).tolist()
+            for i in range(n_docs)}
+    avgdl = float(np.mean([len(t) for t in docs.values()]))
+    rows = []
+    for term in VOCAB:
+        post = [(d, [i for i, t in enumerate(toks) if t == term], len(toks))
+                for d, toks in sorted(docs.items()) if term in toks]
+        for s in range(0, len(post), block_size):
+            blk = post[s:s + block_size]
+            ids = np.array([d for d, _, _ in blk], dtype=np.int64)
+            tf = np.array([len(p) for _, p, _ in blk], dtype=np.int64)
+            dl = np.array([n for _, _, n in blk], dtype=np.int64)
+            rows.append({
+                "term": term, "first_doc": int(ids[0]), "last_doc": int(ids[-1]),
+                "n_docs": int(ids.size), "docs_enc": delta_encode(ids),
+                "tfs_enc": varint_encode(tf), "dls_enc": varint_encode(dl),
+                "max_tfn": float(_tfn(tf, dl, avgdl, K1, B).max()),
+                "pos_enc": b"".join(delta_encode(np.array(p, dtype=np.uint64)) for _, p, _ in blk),
+            })
+    return pd.DataFrame(rows), avgdl
+
+
+# every kernel gets rows of exactly its query's terms, as in serving: all
+# of VOCAB (span_first gets only its term's rows)
+IDFS = {t: 0.3 + 0.4 * i for i, t in enumerate(VOCAB)}
+# the head terms' bounds fall below θ quickly, so WAND prunes
+WAND_IDFS = {"a": 0.05, "b": 0.1, "c": 1.5, "d": 2.0, "e": 3.0}
+TOPK = {"doc_id": "int64", "score": "float64"}
+
+# name → (kernel(pdf, avgdl), result columns)
+KERNELS = {
+    "exhaustive": (lambda p, a: score_shard_exhaustive(p, IDFS, 7, a, K1, B), TOPK),
+    "exhaustive_msm": (lambda p, a: score_shard_exhaustive(p, IDFS, 7, a, K1, B, 3), TOPK),
+    "wand": (lambda p, a: score_shard_wand(p, WAND_IDFS, 7, a, K1, B), TOPK),
+    "span_or": (lambda p, a: wand.score_shard_span_or(p, 1.7, 7, a, K1, B), TOPK),
+    "weighted_tf": (lambda p, a: wand.score_shard_weighted_tf(p, {t: 7 * i for i, t in enumerate(VOCAB)}),
+                    {"doc_id": "int64", "score_u": "int64"}),
+    "matched": (lambda p, a: wand.score_shard_matched(p, IDFS, a, K1, B), TOPK),
+    "matched_gated": (lambda p, a: wand.score_shard_matched(
+        p, IDFS, a, K1, B, groups=[["b", "e"], ["d"]], quantize=True), TOPK),
+    "batch": (lambda p, a: score_shard_batch(p, {1: IDFS, 2: {"e": 1.0}, 3: {"zz": 1.0}}, 7, a, K1, B),
+              {"query_id": "int64", **TOPK}),
+    "dismax": (lambda p, a: wand.score_shard_dismax(p, [{"a": 1.0, "b": 1.5}, {"e": 2.0}], 0.3,
+                                                    7, a, K1, B), TOPK),
+    "phrase": (lambda p, a: positions.score_shard_phrase(p, ["a", "b"], 2.0, 7, a, K1, B), TOPK),
+    "phrase_prefix": (lambda p, a: positions.score_shard_phrase(
+        p, ["a"], 2.0, 7, a, K1, B, last_terms=["b", "c"]), TOPK),
+    "span_near": (lambda p, a: positions.score_shard_span_near(p, "b", "a", 2, 2.0, 7, a, K1, B), TOPK),
+    "span_first": (lambda p, a: positions.score_shard_span_first(
+        p[p["term"] == "c"], "c", 5, 1.1, 7, a, K1, B), TOPK),
+    "span_not": (lambda p, a: positions.score_shard_span_not(p, "a", "b", 1, 1, 1.1, 7, a, K1, B), TOPK),
+    "intervals_ordered": (lambda p, a: positions.score_shard_intervals(
+        p, ["a", "b", "c"], 4, True, 2.0, 7, a, K1, B), TOPK),
+    "intervals_unordered": (lambda p, a: positions.score_shard_intervals(
+        p, ["c", "a"], 1, False, 2.0, 7, a, K1, B), TOPK),
+    "span_containing": (lambda p, a: positions.score_shard_span_contain(
+        p, "a", "b", "c", 3, False, 2.0, 7, a, K1, B), TOPK),
+    "span_within": (lambda p, a: positions.score_shard_span_contain(
+        p, "a", "b", "c", 3, True, 2.0, 7, a, K1, B), TOPK),
+}
+
+
+def test_order_invariance_covers_every_kernel():
+    kernels = {n for m in (wand, positions) for n in dir(m) if n.startswith("score_shard_")}
+    covered = {n for fn, _ in KERNELS.values() for n in fn.__code__.co_names}
+    assert kernels <= covered
+
+
+@pytest.mark.parametrize("name", sorted(KERNELS))
+def test_kernel_ignores_row_order(name, monkeypatch):
+    # one block per WAND window, so the sweep crosses many windows
+    monkeypatch.setattr(wand, "NB_PER_TERM", 1)
+    kernel, _ = KERNELS[name]
+    pdf, avgdl = _positional_blocks()
+    want = kernel(pdf, avgdl)
+    assert len(want) > 0
+    for seed in range(3):
+        got = kernel(pdf.sample(frac=1.0, random_state=seed), avgdl)
+        pd.testing.assert_frame_equal(got.reset_index(drop=True),
+                                      want.reset_index(drop=True), check_exact=True)
+
+
+@pytest.mark.parametrize("name", sorted(KERNELS))
+def test_kernel_on_zero_rows_returns_typed_empty_frame(name):
+    kernel, cols = KERNELS[name]
+    pdf, avgdl = _positional_blocks()
+    got = kernel(pdf.iloc[:0], avgdl)
+    assert len(got) == 0
+    assert {c: str(t) for c, t in got.dtypes.items()} == cols
+
+
+def test_span_within_without_big_span_terms_is_empty():
+    """A shard holding `first` and `little` but not `second` has no big
+    span: span_within matches nothing there (it used to index an empty
+    key array)."""
+    pdf, avgdl = _positional_blocks()
+    got = positions.score_shard_span_contain(pdf[pdf["term"] != "b"], "a", "b", "c", 3, True,
+                                             2.0, 7, avgdl, K1, B)
+    assert len(got) == 0 and list(got.columns) == ["doc_id", "score"]
