@@ -3,13 +3,25 @@ implementations — the analysis chain the reference delegates to
 Elasticsearch (`client.bulk` → ES analyzer; out_elasticsearch.rb:1158).
 
 No per-row Python UDFs anywhere (BASELINE.json input_hint): everything is
-``pandas_udf`` — one Python invocation per Arrow batch. The simple
-tokenizer additionally has a pure-JVM column-expression form
+``pandas_udf`` — one Python invocation per Arrow batch. The index build's
+tokenizer (``doc_terms_udf``) emits one struct per doc, the same layout
+for tf-only and positional indexes:
+
+    terms    the doc's distinct terms
+    tfs      their term frequencies, in ``terms`` order
+    poss     positional builds only: every term's token positions,
+             ascending within a term, terms concatenated in ``terms`` order
+    doc_len  token count
+
+The simple tokenizer additionally has a pure-JVM column-expression form
 (``simple_tokens_col``) used on hot paths and for oracle-matched queries.
 """
 
 from __future__ import annotations
 
+from collections import Counter
+
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -23,63 +35,66 @@ def extract_text_udf(html: pd.Series) -> pd.Series:
     return html.map(extract_text)
 
 
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def tokenize_unicode_udf(text: pd.Series) -> pd.Series:
-    return text.map(tokenize_unicode)
+def _doc_terms_schema(positions: bool) -> T.StructType:
+    ints = T.ArrayType(T.IntegerType())
+    return T.StructType(
+        [T.StructField("terms", T.ArrayType(T.StringType())), T.StructField("tfs", ints)]
+        + ([T.StructField("poss", ints)] if positions else [])
+        + [T.StructField("doc_len", T.IntegerType())]
+    )
 
 
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def tokenize_simple_udf(text: pd.Series) -> pd.Series:
-    return text.map(tokenize_simple)
+def _doc_terms(series: pd.Series, tokenize, positions: bool) -> pd.DataFrame:
+    """The tokenizer output (module header) of one Arrow batch. Fusing the
+    per-doc term-frequency aggregation into the tokenizer removes the
+    corpus-scale (doc, term) hash aggregation from the build: a groupBy
+    over ~30M exploded rows spills and anti-scales with task parallelism."""
+    tok_lists = [tokenize(t) for t in series]
+    n = len(tok_lists)
+    lens = np.fromiter((len(t) for t in tok_lists), dtype=np.int32, count=n)
+    if not positions:
+        counts = [Counter(toks) for toks in tok_lists]
+        return pd.DataFrame({"terms": [list(c) for c in counts],
+                             "tfs": [list(c.values()) for c in counts], "doc_len": lens})
+    # positional: one factorize + one stable lexsort across the whole batch
+    # (a per-token python dict version was 5x slower end-to-end at 600k
+    # docs); the stable sort keeps each (doc, term) run's positions in
+    # token order, so they come out ascending
+    total = int(lens.sum())
+    flat = np.empty(total, dtype=object)
+    flat[:] = [t for toks in tok_lists for t in toks]
+    codes, vocab = pd.factorize(flat)
+    doc_idx = np.repeat(np.arange(n, dtype=np.int64), lens)
+    pos_in_doc = np.arange(total) - np.repeat(np.cumsum(lens, dtype=np.int64) - lens, lens)
+    order = np.lexsort((codes, doc_idx))
+    d_s, c_s = doc_idx[order], codes[order]
+    # entry = (doc, term) run
+    entry_starts = np.nonzero((np.diff(d_s, prepend=-1) != 0) | (np.diff(c_s, prepend=-1) != 0))[0]
+    tf = np.diff(np.append(entry_starts, total)).astype(np.int32)
+    entry_terms = np.asarray(vocab, dtype=object)[c_s[entry_starts]]
+    # per-doc slice boundaries in entry space and position space
+    e_bounds = np.searchsorted(d_s[entry_starts], np.arange(n + 1))
+    p_bounds = np.searchsorted(d_s, np.arange(n + 1))
+    p_s = pos_in_doc[order].astype(np.int32)
+    return pd.DataFrame({
+        "terms": [entry_terms[e_bounds[i]:e_bounds[i + 1]] for i in range(n)],
+        "tfs": [tf[e_bounds[i]:e_bounds[i + 1]] for i in range(n)],
+        "poss": [p_s[p_bounds[i]:p_bounds[i + 1]] for i in range(n)],
+        "doc_len": lens,
+    })
 
 
-_TF_SCHEMA = T.StructType(
-    [
-        T.StructField("tfs", T.MapType(T.StringType(), T.IntegerType())),
-        T.StructField("doc_len", T.IntegerType()),
-    ]
-)
+def doc_terms_udf(tokenizer: str, from_html: bool, positions: bool):
+    """The build's tokenizer UDF. ``from_html`` fuses extraction into it:
+    chained pandas UDFs plan as two ArrowEvalPython nodes and ship the
+    extracted text JVM→Python twice; fused, the raw html crosses once."""
+    tokenize = tokenize_unicode if tokenizer == "unicode" else tokenize_simple
 
+    @F.pandas_udf(_doc_terms_schema(positions))
+    def doc_terms(col: pd.Series) -> pd.DataFrame:
+        return _doc_terms(col.map(extract_text) if from_html else col, tokenize, positions)
 
-def _tf_struct(series: pd.Series, tokenize) -> pd.DataFrame:
-    from collections import Counter
-
-    tfs, lens = [], []
-    for text in series:
-        toks = tokenize(text)
-        tfs.append(dict(Counter(toks)))
-        lens.append(len(toks))
-    return pd.DataFrame({"tfs": tfs, "doc_len": lens})
-
-
-@F.pandas_udf(_TF_SCHEMA)
-def tokenize_unicode_tf_udf(text: pd.Series) -> pd.DataFrame:
-    """(term→tf map, doc_len) per doc — the per-doc term-frequency
-    aggregation fused into the tokenizer. This removes the corpus-scale
-    (doc, term) hash aggregation from the build: a groupBy over ~30M
-    exploded rows spills execution memory and measurably ANTI-scales with
-    task parallelism; a Counter per doc inside the same Arrow batch is
-    local work with perfect combining."""
-    return _tf_struct(text, tokenize_unicode)
-
-
-@F.pandas_udf(_TF_SCHEMA)
-def tokenize_simple_tf_udf(text: pd.Series) -> pd.DataFrame:
-    return _tf_struct(text, tokenize_simple)
-
-
-# Fused extract+tokenize variants: chained pandas UDFs (extract_text_udf →
-# tokenize_*_tf_udf) plan as TWO ArrowEvalPython nodes, shipping the
-# extracted text JVM→Python→JVM→Python. One fused UDF is one crossing and
-# the raw html column crosses exactly once (guide §4.1).
-@F.pandas_udf(_TF_SCHEMA)
-def tokenize_unicode_tf_html_udf(html: pd.Series) -> pd.DataFrame:
-    return _tf_struct(html.map(extract_text), tokenize_unicode)
-
-
-@F.pandas_udf(_TF_SCHEMA)
-def tokenize_simple_tf_html_udf(html: pd.Series) -> pd.DataFrame:
-    return _tf_struct(html.map(extract_text), tokenize_simple)
+    return doc_terms
 
 
 def simple_tokens_col(text: Column) -> Column:

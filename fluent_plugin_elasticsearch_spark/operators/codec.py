@@ -29,8 +29,10 @@ doc ids strictly increasing within the run:
 
 A partial row is a whole (shard, term, salt) run; an index block row holds
 at most the build's ``block_size`` postings and adds ``block_id``,
-``first_doc`` and ``last_doc``. ``decode_postings`` is the one reader of
-these columns; the encoders below write them.
+``first_doc`` and ``last_doc``. ``encode_postings`` is the one writer of
+the ``*_enc`` columns — the build's phase-1 partials and phase-2 blocks
+(index_build) call it, for tf-only and positional indexes alike — and
+``decode_postings`` the one reader.
 """
 
 from __future__ import annotations
@@ -151,32 +153,36 @@ def segmented_cumsum(gaps: np.ndarray, seg_starts: np.ndarray, seg_lens: np.ndar
     return acc - np.repeat(carry, seg_lens)
 
 
-def encode_blocks(doc_ids: np.ndarray, tfs: np.ndarray, tfns: np.ndarray,
-                  block_size: int = BLOCK_SIZE) -> list[dict]:
-    """Chunk one (shard, term) posting run — doc_ids strictly increasing —
-    into compressed blocks. ``tfns`` is the idf-independent BM25 factor
-    (k1+1)*tf/(tf + k1*(1-b+b*dl/avgdl)) per posting; block max_tfn × idf
-    gives the block-max WAND upper bound at query time (keeps df/idf out of
-    the build shuffle)."""
-    blocks = []
-    n = doc_ids.size
-    for s in range(0, n, block_size):
-        e = min(s + block_size, n)
-        blocks.append(
-            {
-                "n_docs": int(e - s),
-                "first_doc": int(doc_ids[s]),
-                "last_doc": int(doc_ids[e - 1]),
-                "docs_enc": delta_encode(doc_ids[s:e]),
-                "tfs_enc": varint_encode(tfs[s:e]),
-                "max_tfn": float(tfns[s:e].max()),
-            }
-        )
-    return blocks
+def gather_segments(values: np.ndarray, seg_starts_src: np.ndarray,
+                    seg_lens: np.ndarray) -> np.ndarray:
+    """Reorder variable-length segments: emit values of segment k (source
+    start seg_starts_src[k], length seg_lens[k]) consecutively, for k in
+    the given order — fully vectorized (repeat + intra-offset gather)."""
+    total = int(seg_lens.sum())
+    if total == 0:
+        return values[:0]
+    out_starts = np.cumsum(seg_lens) - seg_lens
+    intra = np.arange(total, dtype=np.int64) - np.repeat(out_starts, seg_lens)
+    src_idx = np.repeat(seg_starts_src.astype(np.int64), seg_lens) + intra
+    return values[src_idx]
 
 
-def decode_block(docs_enc: bytes, tfs_enc: bytes, n_docs: int) -> tuple[np.ndarray, np.ndarray]:
-    return delta_decode(docs_enc, n_docs), varint_decode(tfs_enc, n_docs)
+def encode_postings(ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
+                    seg_starts: np.ndarray, positions: np.ndarray | None = None) -> dict:
+    """Encode postings — doc ids increasing within each segment, and with
+    ``positions`` each posting's tfs[i] positions, ascending, concatenated
+    in posting order — as one row per segment: the ``*_enc`` columns of
+    the header's layout, one object array of bytes per column."""
+    cols = {
+        "docs_enc": delta_encode_segments(ids, seg_starts),
+        "tfs_enc": varint_encode_segments(tfs, seg_starts),
+        "dls_enc": varint_encode_segments(dls, seg_starts),
+    }
+    if positions is not None:
+        entry_starts = np.cumsum(tfs) - tfs
+        cols["pos_enc"] = varint_encode_segments(delta_gaps_segments(positions, entry_starts),
+                                                 entry_starts[seg_starts])
+    return {c: np.array(v, dtype=object) for c, v in cols.items()}
 
 
 class Postings(NamedTuple):

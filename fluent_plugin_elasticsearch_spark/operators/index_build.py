@@ -21,14 +21,22 @@ Design (Spark-first, sized for 10^12 docs / 1000 executors):
     and ``max_tfn`` — the idf-independent BM25 upper-bound factor — so
     block-max WAND bounds are ``idf × max_tfn`` with idf resolved at query
     time from the tiny per-term df lookup.
-  * **Everything vectorized**: tokenization via Arrow pandas UDFs
-    (extraction.py), tf/df/doc-len via Catalyst hash aggregates,
-    encode/merge via numpy inside ``applyInPandas`` (no per-row Python).
+  * **Everything vectorized**: tokenization via one Arrow pandas UDF
+    (extraction.doc_terms_udf) whose output is one row per doc —
+    ``terms[]``, ``tfs[]``, ``doc_len``, plus ``poss[]`` when
+    ``with_positions`` — for either index kind; df via a Catalyst hash
+    aggregate; encode/merge via numpy inside ``applyInPandas`` (no
+    per-row Python). ``with_positions`` is a column switch: the same
+    plan, phase-1 encoder and phase-2 merge carry ``poss``/``pos_enc``
+    or not.
   * **Resumable**: ``build_index`` can run shard-batch by shard-batch; a
     ``_manifest`` parquet records per-shard lineage (run id, app id,
     timestamps) + metrics (docs, postings, blocks, bytes, wall seconds);
     completed shards are skipped on restart (north rule: "resumable from
-    checkpoint with per-partition lineage + metrics").
+    checkpoint with per-partition lineage + metrics"). The settings the
+    checkpoint depends on (input columns, tokenizer, shards, salts, block
+    size, BM25 k1/b, positions) are recorded next to it, and a resume
+    with other settings raises instead of mixing two builds.
 
 Storage layout under ``out_dir`` (parquet; Iceberg DDL is the cluster
 path — the sandbox image has no Iceberg runtime jar, the layout maps 1:1
@@ -36,10 +44,13 @@ onto an Iceberg table partitioned by ``shard``):
 
     postings/shard=K/*.parquet   (term, block_id, n_docs, first_doc,
                                   last_doc, docs_enc, tfs_enc, dls_enc,
-                                  max_tfn)   sorted by (term, first_doc)
+                                  max_tfn[, pos_enc])  sorted by
+                                  (term, first_doc); codec.py header
     doc_stats/shard=K/*.parquet  (doc_id, doc_len[, url])
     term_stats/*.parquet         (term, df)           sorted by term
+    _tokenized/*.parquet         staging: the tokenizer output per doc
     _manifest/*.parquet          per-shard lineage + metrics rows
+    _build_params.json           the settings the checkpoint was built with
     meta.json                    corpus stats + codec/scoring params
 """
 
@@ -56,50 +67,30 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import BM25_B, BM25_K1
-from ..extraction import (
-    extract_text_udf,
-    simple_tokens_col,
-    tokenize_simple_tf_html_udf,
-    tokenize_simple_tf_udf,
-    tokenize_simple_udf,
-    tokenize_unicode_tf_html_udf,
-    tokenize_unicode_tf_udf,
-    tokenize_unicode_udf,
-)
-from .codec import BLOCK_SIZE
+from ..extraction import doc_terms_udf
+from .codec import BLOCK_SIZE, decode_postings, encode_postings, gather_segments
 
-PARTIAL_SCHEMA = (
-    "shard int, term string, term_bucket int, salt int, n_docs int, "
-    "docs_enc binary, tfs_enc binary, dls_enc binary"
-)
 N_TERM_BUCKETS = 64  # phase-2 merge granularity within a shard
 
 # Conservative in-task footprint per corpus token in a phase-1 pandas group
-# (per-doc tf-map entries: object header + short string + two ints). Used
-# only for the group-memory warning, never for allocation.
+# (per-doc term-list entries: object header + short string + two ints).
+# Used only for the group-memory warning, never for allocation.
 PHASE1_BYTES_PER_TOKEN = 64
-BLOCK_SCHEMA = (
-    "shard int, term string, block_id int, n_docs int, first_doc long, "
-    "last_doc long, docs_enc binary, tfs_enc binary, dls_enc binary, max_tfn double"
-)
 
-TOKENIZERS = {
-    "unicode": lambda c: tokenize_unicode_udf(c),
-    "simple_udf": lambda c: tokenize_simple_udf(c),
-    "simple": simple_tokens_col,  # pure-JVM fast path
-}
 
-TF_TOKENIZERS = {
-    "unicode": tokenize_unicode_tf_udf,
-    "simple_udf": tokenize_simple_tf_udf,
-    "simple": tokenize_simple_tf_udf,
-}
+def _schemas(positions: bool) -> tuple[str, str]:
+    """(phase-1 partial, phase-2 block) row schemas — codec.py header."""
+    enc = "docs_enc binary, tfs_enc binary, dls_enc binary"
+    pos = ", pos_enc binary" if positions else ""
+    return (f"shard int, term string, salt int, n_docs int, {enc}{pos}",
+            f"shard int, term string, block_id int, n_docs int, first_doc long, "
+            f"last_doc long, {enc}, max_tfn double{pos}")
 
-TF_HTML_TOKENIZERS = {
-    "unicode": tokenize_unicode_tf_html_udf,
-    "simple_udf": tokenize_simple_tf_html_udf,
-    "simple": tokenize_simple_tf_html_udf,
-}
+
+def _bucket_col() -> F.Column:
+    """Phase-2 group of a term within its shard: JVM-side crc32, so the
+    build and merge_indexes put a term's rows in the same group."""
+    return F.pmod(F.crc32(F.encode(F.col("term"), "utf-8")), F.lit(N_TERM_BUCKETS)).cast("int")
 
 
 def with_doc_id(docs: DataFrame, url_col: str = "url", out_col: str = "doc_id") -> DataFrame:
@@ -109,126 +100,138 @@ def with_doc_id(docs: DataFrame, url_col: str = "url", out_col: str = "doc_id") 
     return docs.withColumn(out_col, F.shiftrightunsigned(F.xxhash64(F.col(url_col)), 1))
 
 
-def tokens_df(docs: DataFrame, id_col: str, text_col: str | None = None,
-              html_col: str | None = None, tokenizer: str = "unicode") -> DataFrame:
-    """(id, tokens) with text extracted from html if needed. Extraction and
-    tokenization both Arrow-vectorized."""
-    if text_col is None:
-        if html_col is None:
-            raise ValueError("need text_col or html_col")
-        docs = docs.withColumn("__text", extract_text_udf(F.col(html_col)))
-        text_col = "__text"
-    return docs.withColumn("tokens", TOKENIZERS[tokenizer](F.col(text_col)))
-
-
-def _hash_bucket(terms: np.ndarray, n_buckets: int = N_TERM_BUCKETS) -> np.ndarray:
-    # deterministic cross-process string bucket (python hash() is salted
-    # per worker — it would scatter one term's partials across buckets)
-    from zlib import crc32
-
-    return np.array([crc32(t.encode("utf-8")) for t in terms], dtype=np.int64) % n_buckets
+def _sort_postings(term_codes, ids, tfs, dls, positions):
+    """Order postings by (term, doc id); each posting's positions (if any)
+    follow it."""
+    order = np.lexsort((ids, term_codes))
+    tfs_s = tfs[order]
+    if positions is not None:
+        positions = gather_segments(positions, (np.cumsum(tfs) - tfs)[order], tfs_s)
+    return term_codes[order], ids[order], tfs_s, dls[order], positions
 
 
 def _encode_partials(pdf: pd.DataFrame) -> pd.DataFrame:
     """Phase 1 applyInPandas over one (shard, salt) group of DOC rows
-    (doc_id, doc_len, tfs:map<term,tf>) → one compressed sorted partial row
-    per term. The map explosion happens HERE, python-side: shuffling the
-    compact per-doc maps instead of exploded (doc, term, tf) rows cuts the
-    phase-1 shuffle ~20x (the exploded shuffle measured superlinear
-    slowdown under high task parallelism from spill). Encoding is one
-    segmented varint pass (codec.varint_encode_segments)."""
-    from itertools import chain
+    (doc_id, doc_len and the tokenizer's terms[], tfs[] and, in positional
+    builds, poss[] cells) → one compressed sorted partial row per term.
+    The per-doc lists are exploded HERE, numpy-side: shuffling the compact
+    per-doc rows instead of exploded (doc, term, tf) rows cuts the phase-1
+    shuffle ~20x (the exploded shuffle measured superlinear slowdown under
+    high task parallelism from spill)."""
+    counts = pdf["terms"].map(len).to_numpy(dtype=np.int64)
 
-    from .codec import delta_encode_segments, varint_encode_segments
+    def flat(col, dtype):
+        return np.concatenate([np.empty(0, dtype), *(np.asarray(c, dtype) for c in pdf[col])])
 
-    # Arrow map → pandas cell is a dict (or list[(k, v)] on some versions)
-    tfs_col = [m.items() if isinstance(m, dict) else m for m in pdf["tfs"]]
-    counts = np.fromiter((len(m) for m in tfs_col), dtype=np.int64, count=len(pdf))
-    total = int(counts.sum())
-    ids = np.repeat(pdf["doc_id"].to_numpy().astype(np.uint64), counts)
-    dls = np.repeat(pdf["doc_len"].to_numpy().astype(np.uint64), counts)
-    flat = list(chain.from_iterable(tfs_col))
-    terms = np.empty(total, dtype=object)
-    terms[:] = [kv[0] for kv in flat]
-    tfv = np.fromiter((kv[1] for kv in flat), dtype=np.uint64, count=total)
-
-    codes, uniq_terms = pd.factorize(pd.Series(terms))
-    order = np.lexsort((ids, codes))
-    codes_s, ids_s, tfs_s, dls_s = codes[order], ids[order], tfv[order], dls[order]
-    starts = np.nonzero(np.diff(codes_s, prepend=-1))[0]
-    n_docs = np.diff(np.append(starts, codes_s.size))
-    uniq_arr = uniq_terms.to_numpy() if hasattr(uniq_terms, "to_numpy") else np.asarray(uniq_terms)
-    terms_out = uniq_arr[codes_s[starts]]
-    return pd.DataFrame(
-        {
-            "shard": np.full(starts.size, int(pdf["shard"].iloc[0]), dtype=np.int64),
-            "term": terms_out,
-            "term_bucket": _hash_bucket(terms_out),
-            "salt": np.full(starts.size, int(pdf["salt"].iloc[0]), dtype=np.int64),
-            "n_docs": n_docs,
-            "docs_enc": delta_encode_segments(ids_s, starts),
-            "tfs_enc": varint_encode_segments(tfs_s, starts),
-            "dls_enc": varint_encode_segments(dls_s, starts),
-        }
-    )
+    ids = np.repeat(pdf["doc_id"].to_numpy(dtype=np.int64), counts)
+    dls = np.repeat(pdf["doc_len"].to_numpy(dtype=np.int64), counts)
+    positions = flat("poss", np.int64) if "poss" in pdf else None
+    codes, uniq_terms = pd.factorize(flat("terms", object))
+    codes, ids, tfs, dls, positions = _sort_postings(codes, ids, flat("tfs", np.int64), dls,
+                                                     positions)
+    starts = np.nonzero(np.diff(codes, prepend=-1))[0]
+    return pd.DataFrame({
+        "shard": np.repeat(pdf["shard"].to_numpy(dtype=np.int64)[:1], starts.size),
+        "term": np.asarray(uniq_terms, dtype=object)[codes[starts]],
+        "salt": np.repeat(pdf["salt"].to_numpy(dtype=np.int64)[:1], starts.size),
+        "n_docs": np.diff(np.append(starts, codes.size)),
+        **encode_postings(ids, tfs, dls, starts, positions),
+    })
 
 
 def _make_merge_fn(avgdl: float, k1: float, b: float, block_size: int,
                    positions: bool = False):
-    from .codec import (
-        decode_postings,
-        delta_encode_segments,
-        delta_gaps_segments,
-        varint_encode_segments,
-    )
     from .wand import _tfn
 
     def merge(pdf: pd.DataFrame) -> pd.DataFrame:
         """Phase 2 applyInPandas over one (shard, term_bucket) group: merge
         every term's salted partials and re-block — all in whole-group numpy
-        passes (one concatenated decode, one lexsort, segmented re-encode;
-        with ``positions``, each posting's positions follow it through the
-        lexsort by positions._gather_segments). Group memory is bounded by
-        one term-bucket of one shard."""
+        passes (one concatenated decode, one lexsort, segmented re-encode).
+        Group memory is bounded by one term-bucket of one shard."""
         p = decode_postings(pdf, positions=positions)
         codes, uniq_terms = pd.factorize(pdf["term"])
-        term_idx = np.repeat(codes, p.n)
-        order = np.lexsort((p.ids, term_idx))
-        ids, tfs, dls, term_idx = p.ids[order], p.tfs[order], p.dls[order], term_idx[order]
-
+        term_idx, ids, tfs, dls, pos = _sort_postings(np.repeat(codes, p.n), p.ids, p.tfs,
+                                                      p.dls, p.positions)
         # block boundaries: every `block_size` postings within each term run
         total = ids.size
         term_starts = np.nonzero(np.diff(term_idx, prepend=-1))[0]
         term_lens = np.diff(np.append(term_starts, total))
         pos_in_term = np.arange(total) - np.repeat(term_starts, term_lens)
         block_starts = np.nonzero(pos_in_term % block_size == 0)[0]
-        block_ends = np.append(block_starts[1:], total)
-
-        terms_arr = uniq_terms.to_numpy() if hasattr(uniq_terms, "to_numpy") else np.asarray(uniq_terms)
-        out = pd.DataFrame(
-            {
-                "shard": np.full(block_starts.size, int(pdf["shard"].iloc[0]), dtype=np.int64),
-                "term": terms_arr[term_idx[block_starts]],
-                "block_id": (pos_in_term[block_starts] // block_size).astype(np.int64),
-                "n_docs": (block_ends - block_starts).astype(np.int64),
-                "first_doc": ids[block_starts],
-                "last_doc": ids[block_ends - 1],
-                "docs_enc": delta_encode_segments(ids, block_starts),
-                "tfs_enc": varint_encode_segments(tfs, block_starts),
-                "dls_enc": varint_encode_segments(dls, block_starts),
-                "max_tfn": np.maximum.reduceat(_tfn(tfs, dls, avgdl, k1, b), block_starts),
-            }
-        )
-        if positions:
-            from .positions import _gather_segments
-
-            pos = _gather_segments(p.positions, (np.cumsum(p.tfs) - p.tfs)[order], tfs)
-            entry_starts = np.cumsum(tfs) - tfs
-            out["pos_enc"] = varint_encode_segments(delta_gaps_segments(pos, entry_starts),
-                                                    entry_starts[block_starts])
-        return out
+        block_ends = np.append(block_starts, total)[1:]
+        return pd.DataFrame({
+            "shard": np.repeat(pdf["shard"].to_numpy(dtype=np.int64)[:1], block_starts.size),
+            "term": np.asarray(uniq_terms, dtype=object)[term_idx[block_starts]],
+            "block_id": pos_in_term[block_starts] // block_size,
+            "n_docs": block_ends - block_starts,
+            "first_doc": ids[block_starts],
+            "last_doc": ids[block_ends - 1],
+            "max_tfn": np.maximum.reduceat(_tfn(tfs, dls, avgdl, k1, b), block_starts),
+            **encode_postings(ids, tfs, dls, block_starts, pos),
+        })
 
     return merge
+
+
+def _tokenize(spark: SparkSession, docs: DataFrame, *, id_col: str, text_col: str | None,
+              html_col: str | None, url_col: str | None, tokenizer: str, n_shards: int,
+              n_salts: int, positions: bool, input_partitions: int | None) -> DataFrame:
+    """Per-doc rows of the build: doc_id[, url], the tokenizer output
+    (extraction.py header), shard and salt."""
+    # Parallelize the extraction/tokenization map side even when the input
+    # is a handful of parquet files (a 50 MB file is ONE scan partition —
+    # on a 32-core runner that serializes the whole analysis chain).
+    if input_partitions is None:
+        input_partitions = spark.sparkContext.defaultParallelism * 2
+    if docs.rdd.getNumPartitions() < input_partitions:
+        docs = docs.repartition(input_partitions)
+    from_html = text_col is None
+    tok = doc_terms_udf(tokenizer, from_html, positions)
+    url = [F.col(url_col).alias("url")] if url_col else []
+    return (
+        docs.select(F.col(id_col).alias("doc_id"), *url,
+                    tok(F.col(html_col if from_html else text_col)).alias("tk"))
+        .select("doc_id", *(["url"] if url_col else []), "tk.*")
+        .withColumn("shard", F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)).cast("int"))
+        .withColumn("salt", F.pmod(F.xxhash64("doc_id", F.lit(1)), F.lit(n_salts)).cast("int"))
+    )
+
+
+def _posting_blocks(spark: SparkSession, toks: DataFrame, n_group_shards: int, avgdl: float,
+                    k1: float, b: float, block_size: int,
+                    positions: bool) -> tuple[DataFrame, bool]:
+    """Phase 1 (salted partials) → phase 2 (merged, re-blocked postings)
+    over tokenized doc rows. Returns (blocks, shard-clustered?)."""
+    partial_schema, block_schema = _schemas(positions)
+    # phase 1 shuffles COMPACT per-doc rows (term lists), not exploded
+    # (doc, term, tf) rows — ~20x less shuffle; the explosion happens
+    # numpy-side inside each (shard, salt) group
+    partials = (
+        toks.select("shard", "salt", "doc_id", "doc_len", "terms", "tfs",
+                    *(["poss"] if positions else []))
+        .groupBy("shard", "salt")
+        .applyInPandas(_encode_partials, partial_schema)
+        .withColumn("term_bucket", _bucket_col())
+    )
+    # Exchange fusion (guide §2.4), scale-adaptive: when the shard
+    # count dwarfs the core count (any real cluster build), hash-
+    # partition the COMPACT partials by shard once —
+    # HashPartitioning(shard) satisfies the phase-2
+    # ClusteredDistribution(shard, term_bucket) and the merge output
+    # lands shard-clustered, so the write's partitionBy(shard) needs
+    # NO third exchange of the full encoded blocks (the heaviest
+    # rows). At sandbox scale (shards ≈ cores) the interleaved A/B
+    # measured the opposite trade — shard-granular phase-2 tasks lose
+    # more to balls-in-bins imbalance than the (tmpfs-cheap) block
+    # exchange costs — so small builds keep the fine-grained
+    # (shard, term_bucket) exchange and pay the extra block exchange
+    # at write. Both paths produce identical files.
+    fused = n_group_shards >= 2 * spark.sparkContext.defaultParallelism
+    if fused:
+        partials = partials.repartition(2 * n_group_shards, "shard")
+    blocks = partials.groupBy("shard", "term_bucket").applyInPandas(
+        _make_merge_fn(avgdl, k1, b, block_size, positions), block_schema)
+    return blocks, fused
 
 
 def build_compute_only(
@@ -255,39 +258,73 @@ def build_compute_only(
     N→4N wall-clock ratio; a real 4N cluster brings 4N disks. avgdl only
     parameterizes max_tfn arithmetic (same work shape), so a nominal value
     avoids a stats pre-pass. Returns the number of blocks produced."""
-    if input_partitions is None:
-        input_partitions = spark.sparkContext.defaultParallelism * 2
-    if docs.rdd.getNumPartitions() < input_partitions:
-        docs = docs.repartition(input_partitions)
-    if text_col is None:
-        tok_udf = TF_HTML_TOKENIZERS[tokenizer](F.col(html_col))
-    else:
-        tok_udf = TF_TOKENIZERS[tokenizer](F.col(text_col))
-    toks = (
-        docs.select(F.col(id_col).alias("doc_id"), tok_udf.alias("tk"))
-        .select("doc_id", F.col("tk.tfs").alias("tfs"), F.col("tk.doc_len").alias("doc_len"))
-        .withColumn("shard", F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)).cast("int"))
-        .withColumn("salt", F.pmod(F.xxhash64("doc_id", F.lit(1)), F.lit(n_salts)).cast("int"))
-    )
-    partials = (
-        toks.select("shard", "salt", "doc_id", "doc_len", "tfs")
-        .groupBy("shard", "salt")
-        .applyInPandas(_encode_partials, PARTIAL_SCHEMA)
-    )
-    # same scale-adaptive exchange shape as build_index (compute proxy
-    # fidelity); no write here, so the non-fused path needs no block
-    # exchange either
-    if n_shards >= 2 * spark.sparkContext.defaultParallelism:
-        partials = partials.repartition(2 * n_shards, "shard")
-    blocks = partials.groupBy("shard", "term_bucket").applyInPandas(
-        _make_merge_fn(avgdl, k1, b, block_size), BLOCK_SCHEMA
-    )
+    toks = _tokenize(spark, docs, id_col=id_col, text_col=text_col, html_col=html_col,
+                     url_col=None, tokenizer=tokenizer, n_shards=n_shards, n_salts=n_salts,
+                     positions=False, input_partitions=input_partitions)
+    # no write here, so the non-fused path needs no block exchange either
+    blocks, _ = _posting_blocks(spark, toks, n_shards, avgdl, k1, b, block_size, False)
     from pyspark.sql import Observation
 
     obs = Observation("compute_only")
     blocks = blocks.observe(obs, F.count(F.lit(1)).alias("n_blocks"))
     blocks.write.format("noop").mode("overwrite").save()
     return int(obs.get["n_blocks"])
+
+
+def _shard_metrics(shards, positions: bool) -> list[F.Column]:
+    """Per-shard blocks, postings and encoded bytes, observed on the
+    written blocks (3 conditional aggs per shard — no second pass)."""
+    enc_len = F.length("docs_enc") + F.length("tfs_enc") + F.length("dls_enc")
+    if positions:
+        enc_len = enc_len + F.length("pos_enc")
+    exprs = []
+    for s in shards:
+        is_s = F.col("shard") == s
+        exprs += [
+            F.count(F.when(is_s, 1)).alias(f"blk_{s}"),
+            F.sum(F.when(is_s, F.col("n_docs"))).alias(f"pst_{s}"),
+            F.sum(F.when(is_s, enc_len)).alias(f"byt_{s}"),
+        ]
+    return exprs
+
+
+def _manifest_rows(spark: SparkSession, got: dict, shards, run_id: str,
+                   wall: float) -> list[dict]:
+    """'done' manifest rows, with lineage, of the shards that got blocks."""
+    return [
+        {
+            "shard": int(s), "status": "done", "run_id": run_id,
+            "app_id": spark.sparkContext.applicationId,
+            "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+            "n_blocks": int(got[f"blk_{s}"] or 0),
+            "n_postings": int(got[f"pst_{s}"] or 0),
+            "enc_bytes": int(got[f"byt_{s}"] or 0),
+            "wall_s": wall,
+        }
+        for s in shards
+        if int(got[f"blk_{s}"] or 0) > 0
+    ]
+
+
+def _check_resume_params(out_dir: str, params: dict) -> None:
+    """Record ``params`` next to the checkpoint; if ``out_dir`` already
+    holds one (staging table, manifest or postings) built with other
+    settings, raise instead of mixing the two into one index."""
+    path = os.path.join(out_dir, "_build_params.json")
+    if any(os.path.exists(os.path.join(out_dir, p))
+           for p in (os.path.join("_tokenized", "_SUCCESS"), "_manifest", "postings")):
+        try:
+            with open(path) as f:
+                recorded = json.load(f)
+        except FileNotFoundError:
+            recorded = {}
+        changed = [f"{k}: {recorded.get(k, '<unrecorded>')!r} -> {v!r}"
+                   for k, v in params.items() if recorded.get(k, "<unrecorded>") != v]
+        if changed:
+            raise ValueError(f"{out_dir} holds a build checkpoint made with other settings "
+                             f"({'; '.join(changed)}); build into a new directory or delete it")
+    with open(path, "w") as f:
+        json.dump(params, f)
 
 
 def _write_manifest_rows(manifest_path: str, rows: list[dict], file_tag: str) -> None:
@@ -344,44 +381,16 @@ def build_index(
     enabling exact phrase queries (operators/positions.py)."""
     run_id = run_id or f"run-{int(time.time())}"
     os.makedirs(out_dir, exist_ok=True)
-
-    # Parallelize the extraction/tokenization map side even when the input
-    # is a handful of parquet files (a 50 MB file is ONE scan partition —
-    # on a 32-core runner that serializes the whole analysis chain).
-    if input_partitions is None:
-        input_partitions = spark.sparkContext.defaultParallelism * 2
-    if docs.rdd.getNumPartitions() < input_partitions:
-        docs = docs.repartition(input_partitions)
-
-    # per-doc term-frequency maps straight out of the (extraction +)
-    # tokenizer UDF: the corpus-scale (doc, term) groupBy is fused away.
-    # When extracting from html, the extract+tokenize chain is ONE fused
-    # pandas UDF (guide §4.1): chained UDFs plan as two ArrowEvalPython
-    # nodes and ship the extracted text across the boundary twice.
-    from_html = text_col is None
-    in_col = html_col if from_html else text_col
-    base_cols = [F.col(id_col).alias("doc_id")] + ([F.col(url_col).alias("url")] if url_col else [])
-    if with_positions:
-        from .positions import make_pos_tokenizer_udf
-
-        tok_udf = make_pos_tokenizer_udf(tokenizer, from_html=from_html)
-        payload_cols = [F.col("tk.terms").alias("terms"), F.col("tk.tfs").alias("tfs"),
-                        F.col("tk.poss").alias("poss")]
-        payload_names = ["terms", "tfs", "poss"]
-    else:
-        tok_udf = (TF_HTML_TOKENIZERS if from_html else TF_TOKENIZERS)[tokenizer]
-        payload_cols = [F.col("tk.tfs").alias("tfs")]
-        payload_names = ["tfs"]
-    toks = docs.select(*base_cols, tok_udf(F.col(in_col)).alias("tk"))
-    toks = (
-        toks.select("doc_id", *(["url"] if url_col else []),
-                    *payload_cols, F.col("tk.doc_len").alias("doc_len"))
-        .withColumn("shard", F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)).cast("int"))
-        .withColumn("salt", F.pmod(F.xxhash64("doc_id", F.lit(1)), F.lit(n_salts)).cast("int"))
-    )
+    _check_resume_params(out_dir, dict(
+        id_col=id_col, text_col=text_col, html_col=html_col, url_col=url_col,
+        tokenizer=tokenizer, n_shards=n_shards, n_salts=n_salts, block_size=block_size,
+        k1=k1, b=b, with_positions=with_positions))
+    toks = _tokenize(spark, docs, id_col=id_col, text_col=text_col, html_col=html_col,
+                     url_col=url_col, tokenizer=tokenizer, n_shards=n_shards, n_salts=n_salts,
+                     positions=with_positions, input_partitions=input_partitions)
     # Materialize the tokenized layer to parquet once (the staging table an
     # Iceberg deployment would use): tokenization runs exactly once, every
-    # downstream pass gets columnar pruning, and no multi-GB map-typed
+    # downstream pass gets columnar pruning, and no multi-GB
     # cache sits on the driver heap.
     # Reuse is gated on Spark's _SUCCESS marker, not bare dir existence: a
     # crash mid-write leaves a partial directory that must be rebuilt.
@@ -414,7 +423,7 @@ def build_index(
     n_docs, avgdl = int(stats["n"]), float(stats["avgdl"])
     # --- phase-1 group-memory guard -------------------------------------
     # Phase 1 materializes one (shard, salt) group per applyInPandas task:
-    # ~corpus/(n_shards·n_salts) of per-doc tf-map entries live in that
+    # ~corpus/(n_shards·n_salts) of per-doc term-list entries live in that
     # task's pandas frame at once. SIZING RULE the caller must satisfy:
     #     n_shards · n_salts ≥ total_tokens × PHASE1_BYTES_PER_TOKEN
     #                          / target_group_bytes
@@ -422,7 +431,7 @@ def build_index(
     # 10^12 docs size n_shards·n_salts so a group stays under executor
     # memory). We estimate from the Observation-carried token count and
     # WARN rather than fail — the estimate is intentionally conservative
-    # (every token counted as a distinct map entry).
+    # (every token counted as a distinct term entry).
     est_group_bytes = (
         int(stats["total_tokens"]) * PHASE1_BYTES_PER_TOKEN / (n_shards * n_salts)
     )
@@ -453,14 +462,6 @@ def build_index(
         except Exception:  # crashed mid-manifest-write: treat as no checkpoint
             done = set()
 
-    if with_positions:
-        from .positions import BLOCK_POS_SCHEMA, PARTIAL_POS_SCHEMA, encode_partials_pos
-
-        phase1_fn, phase1_schema = encode_partials_pos, PARTIAL_POS_SCHEMA
-        block_schema = BLOCK_POS_SCHEMA
-    else:
-        phase1_fn, phase1_schema, block_schema = _encode_partials, PARTIAL_SCHEMA, BLOCK_SCHEMA
-    merge_fn = _make_merge_fn(avgdl, k1, b, block_size, with_positions)
     all_shards = [s for s in range(n_shards) if s not in done]
     # Crash safety: postings/doc_stats are APPENDED before the manifest row
     # marks a shard 'done', so a crash between the writes would make a
@@ -483,48 +484,12 @@ def build_index(
     for gi, group in enumerate(groups):
         t0 = time.time()
         part = toks.filter(F.col("shard").isin(group)) if len(group) < n_shards else toks
-        # phase 1 shuffles COMPACT per-doc rows (tf maps), not exploded
-        # (doc, term, tf) rows — ~20x less shuffle; the explosion happens
-        # numpy-side inside each (shard, salt) group
-        partials = (
-            part.select("shard", "salt", "doc_id", "doc_len", *payload_names)
-            .groupBy("shard", "salt")
-            .applyInPandas(phase1_fn, phase1_schema)
-        )
-        # Exchange fusion (guide §2.4), scale-adaptive: when the shard
-        # count dwarfs the core count (any real cluster build), hash-
-        # partition the COMPACT partials by shard once —
-        # HashPartitioning(shard) satisfies the phase-2
-        # ClusteredDistribution(shard, term_bucket) and the merge output
-        # lands shard-clustered, so the write's partitionBy(shard) needs
-        # NO third exchange of the full encoded blocks (the heaviest
-        # rows). At sandbox scale (shards ≈ cores) the interleaved A/B
-        # measured the opposite trade — shard-granular phase-2 tasks lose
-        # more to balls-in-bins imbalance than the (tmpfs-cheap) block
-        # exchange costs — so small builds keep the fine-grained
-        # (shard, term_bucket) exchange and pay the extra block exchange
-        # at write. Both paths produce identical files.
-        fuse_exchange = len(group) >= 2 * spark.sparkContext.defaultParallelism
-        if fuse_exchange:
-            partials = partials.repartition(2 * len(group), "shard")
-        blocks = partials.groupBy("shard", "term_bucket").applyInPandas(merge_fn, block_schema)
-        if not fuse_exchange:
+        blocks, fused = _posting_blocks(spark, part, len(group), avgdl, k1, b, block_size,
+                                        with_positions)
+        if not fused:
             blocks = blocks.repartition("shard")
-        # per-shard metrics observed DURING the write (3 conditional aggs
-        # per shard) — no second pass over the written postings
         obs = Observation(f"shard_metrics_{gi}")
-        enc_len = F.length("docs_enc") + F.length("tfs_enc") + F.length("dls_enc")
-        if with_positions:
-            enc_len = enc_len + F.length("pos_enc")
-        metric_exprs = []
-        for s in group:
-            is_s = F.col("shard") == s
-            metric_exprs += [
-                F.count(F.when(is_s, 1)).alias(f"blk_{s}"),
-                F.sum(F.when(is_s, F.col("n_docs"))).alias(f"pst_{s}"),
-                F.sum(F.when(is_s, enc_len)).alias(f"byt_{s}"),
-            ]
-        blocks = blocks.observe(obs, *metric_exprs)
+        blocks = blocks.observe(obs, *_shard_metrics(group, with_positions))
 
         # doc-side table (doc_len + url) written CONCURRENTLY with the
         # postings job from a second thread: both read the same staging
@@ -556,22 +521,7 @@ def build_index(
             fut.result()
 
         wall = time.time() - t0
-        got = obs.get
-        rows = [
-            {
-                "shard": int(s),
-                "status": "done",
-                "run_id": run_id,
-                "app_id": spark.sparkContext.applicationId,
-                "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-                "n_blocks": int(got[f"blk_{s}"] or 0),
-                "n_postings": int(got[f"pst_{s}"] or 0),
-                "enc_bytes": int(got[f"byt_{s}"] or 0),
-                "wall_s": wall,
-            }
-            for s in group
-            if int(got[f"blk_{s}"] or 0) > 0
-        ]
+        rows = _manifest_rows(spark, obs.get, group, run_id, wall)
         if rows:
             _write_manifest_rows(manifest_path, rows, f"{run_id}-g{gi}")
             metrics.extend(rows)

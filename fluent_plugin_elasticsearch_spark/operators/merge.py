@@ -21,21 +21,17 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .index_build import (
-    BLOCK_SCHEMA,
-    N_TERM_BUCKETS,
+    _bucket_col,
     _make_merge_fn,
+    _manifest_rows,
+    _schemas,
+    _shard_metrics,
     _write_manifest_rows,
 )
-
-
-def _bucket_col() -> F.Column:
-    # JVM-side crc32 (java.util.zip.CRC32 == zlib.crc32) — matches
-    # index_build._hash_bucket's python-side bucketing exactly
-    return F.pmod(F.crc32(F.encode(F.col("term"), "utf-8")), F.lit(N_TERM_BUCKETS)).cast("int")
 
 
 def compact_generations(spark: SparkSession, index_dir: str,
@@ -78,29 +74,16 @@ def merge_indexes(spark: SparkSession, src_dirs: list[str], out_dir: str,
         part = spark.read.parquet(os.path.join(d, "postings"))
         blocks = part if blocks is None else blocks.unionByName(part)
     blocks = blocks.withColumn("term_bucket", _bucket_col())
-
-    from .positions import BLOCK_POS_SCHEMA
-
-    schema = BLOCK_POS_SCHEMA if with_positions else BLOCK_SCHEMA
     merge_fn = _make_merge_fn(avgdl, k1, b, block_size, with_positions)
 
     os.makedirs(out_dir, exist_ok=True)
-    merged = blocks.groupBy("shard", "term_bucket").applyInPandas(merge_fn, schema)
+    merged = blocks.groupBy("shard", "term_bucket").applyInPandas(
+        merge_fn, _schemas(with_positions)[1])
     from pyspark.sql import Observation
 
     obs = Observation("merge_metrics")
-    enc_len = F.length("docs_enc") + F.length("tfs_enc") + F.length("dls_enc")
-    if with_positions:
-        enc_len = enc_len + F.length("pos_enc")
-    metric_exprs = []
-    for s in range(m0["n_shards"]):
-        is_s = F.col("shard") == s
-        metric_exprs += [
-            F.count(F.when(is_s, 1)).alias(f"blk_{s}"),
-            F.sum(F.when(is_s, F.col("n_docs"))).alias(f"pst_{s}"),
-            F.sum(F.when(is_s, enc_len)).alias(f"byt_{s}"),
-        ]
-    merged = merged.observe(obs, *metric_exprs)
+    shards = range(m0["n_shards"])
+    merged = merged.observe(obs, *_shard_metrics(shards, with_positions))
     t0 = time.time()
     (
         merged.repartition("shard")
@@ -110,7 +93,6 @@ def merge_indexes(spark: SparkSession, src_dirs: list[str], out_dir: str,
         .parquet(os.path.join(out_dir, "postings"))
     )
     wall = time.time() - t0
-    got = obs.get
     ds = None
     for d in src_dirs:
         part = spark.read.parquet(os.path.join(d, "doc_stats"))
@@ -134,18 +116,6 @@ def merge_indexes(spark: SparkSession, src_dirs: list[str], out_dir: str,
     )
     with open(os.path.join(out_dir, "meta.json"), "w") as f:
         json.dump(meta, f)
-    rows = [
-        {
-            "shard": s, "status": "done", "run_id": run_id,
-            "app_id": spark.sparkContext.applicationId,
-            "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "n_blocks": int(got[f"blk_{s}"] or 0),
-            "n_postings": int(got[f"pst_{s}"] or 0),
-            "enc_bytes": int(got[f"byt_{s}"] or 0),
-            "wall_s": wall,
-        }
-        for s in range(m0["n_shards"])
-        if int(got[f"blk_{s}"] or 0) > 0
-    ]
+    rows = _manifest_rows(spark, obs.get, shards, run_id, wall)
     _write_manifest_rows(os.path.join(out_dir, "_manifest"), rows, run_id)
     return {"meta": meta}

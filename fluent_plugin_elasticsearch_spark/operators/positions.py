@@ -1,13 +1,11 @@
-"""Positional postings: the `with_positions=True` build path and the
-phrase scorer over it — ES/Lucene PhraseQuery, natively (SURVEY.md Q5
-extension; the reference delegates phrase matching to Elasticsearch).
-
-Layout: each posting row gains one `pos_enc` binary (operators/codec.py
-header) — the per-posting tf doubles as the position count, so no extra
-length stream is needed. Everything is segment-vectorized numpy (the
-repeat-gather trick reorders variable-length position segments without a
-per-posting Python loop); the build's phase-2 merge is
-index_build._make_merge_fn, shared with tf-only indexes.
+"""Positional scorers over positional postings — ES/Lucene PhraseQuery,
+span and intervals queries, natively (SURVEY.md Q5 extension; the
+reference delegates phrase matching to Elasticsearch). Only the scorers
+live here: a ``with_positions=True`` index is written by the same build
+as a tf-only one (index_build), with each posting row carrying one
+``pos_enc`` column (operators/codec.py header) — the per-posting tf
+doubles as the position count, so no extra length stream is needed.
+Everything is segment-vectorized numpy.
 
 Phrase scoring (Lucene PhraseQuery): a doc matches when positions align
 adjacently across all phrase terms; tf = number of alignments (phrase
@@ -22,163 +20,8 @@ from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import types as T
 
-from .codec import delta_encode_segments, delta_gaps_segments, varint_encode_segments
 from .wand import _decode, _empty, _span_topk
-
-PARTIAL_POS_SCHEMA = (
-    "shard int, term string, term_bucket int, salt int, n_docs int, "
-    "docs_enc binary, tfs_enc binary, dls_enc binary, pos_enc binary"
-)
-BLOCK_POS_SCHEMA = (
-    "shard int, term string, block_id int, n_docs int, first_doc long, "
-    "last_doc long, docs_enc binary, tfs_enc binary, dls_enc binary, "
-    "max_tfn double, pos_enc binary"
-)
-
-# carrier: three parallel list columns instead of map<term, array<pos>> —
-# numpy-constructible cells (no per-token python dict ops, no Arrow map
-# conversion). Per doc: unique terms (factorize order), their tfs, and all
-# positions concatenated in the same term order (ascending within a term).
-_POS_SCHEMA = T.StructType(
-    [
-        T.StructField("terms", T.ArrayType(T.StringType())),
-        T.StructField("tfs", T.ArrayType(T.IntegerType())),
-        T.StructField("poss", T.ArrayType(T.IntegerType())),
-        T.StructField("doc_len", T.IntegerType()),
-    ]
-)
-
-
-def _pos_struct(series: pd.Series, tokenize) -> pd.DataFrame:
-    """Batch-vectorized positional tokenization: one factorize + one lexsort
-    across the whole Arrow batch (the per-token python dict version was 5x
-    slower end-to-end at 600k docs)."""
-    n = len(series)
-    tok_lists = [tokenize(t) for t in series]
-    lens = np.fromiter((len(t) for t in tok_lists), dtype=np.int64, count=n)
-    total = int(lens.sum())
-    doc_starts = np.concatenate([[0], np.cumsum(lens)[:-1]]).astype(np.int64)
-    if total == 0:
-        empty = [np.array([], dtype=object)] * n
-        zeros = [np.array([], dtype=np.int32)] * n
-        return pd.DataFrame({"terms": empty, "tfs": zeros, "poss": zeros,
-                             "doc_len": lens.astype(np.int32)})
-    flat = np.empty(total, dtype=object)
-    flat[:] = [t for toks in tok_lists for t in toks]
-    codes, vocab = pd.factorize(pd.Series(flat))
-    doc_idx = np.repeat(np.arange(n, dtype=np.int64), lens)
-    pos_in_doc = np.arange(total, dtype=np.int64) - np.repeat(doc_starts, lens)
-    order = np.lexsort((pos_in_doc, codes, doc_idx))
-    d_s, c_s, p_s = doc_idx[order], codes[order], pos_in_doc[order]
-    # entry = (doc, term) run boundaries
-    entry_starts = np.nonzero((np.diff(d_s, prepend=-1) != 0) | (np.diff(c_s, prepend=-1) != 0))[0]
-    tf = np.diff(np.append(entry_starts, total)).astype(np.int32)
-    vocab_arr = vocab.to_numpy() if hasattr(vocab, "to_numpy") else np.asarray(vocab)
-    entry_terms = vocab_arr[c_s[entry_starts]]
-    entry_docs = d_s[entry_starts]
-    # per-doc slice boundaries in entry space and position space
-    e_bounds = np.searchsorted(entry_docs, np.arange(n + 1))
-    p_bounds = np.searchsorted(d_s, np.arange(n + 1))
-    p32 = p_s.astype(np.int32)
-    return pd.DataFrame(
-        {
-            "terms": [entry_terms[e_bounds[i]:e_bounds[i + 1]] for i in range(n)],
-            "tfs": [tf[e_bounds[i]:e_bounds[i + 1]] for i in range(n)],
-            "poss": [p32[p_bounds[i]:p_bounds[i + 1]] for i in range(n)],
-            "doc_len": lens.astype(np.int32),
-        }
-    )
-
-
-def make_pos_tokenizer_udf(tokenizer: str, from_html: bool = False):
-    from pyspark.sql import functions as F
-
-    from ..textproc import extract_text, tokenize_simple, tokenize_unicode
-
-    fn = tokenize_unicode if tokenizer == "unicode" else tokenize_simple
-
-    if from_html:
-        # fused extract+tokenize: one Python crossing instead of two
-        # chained ArrowEvalPython nodes (guide §4.1)
-        @F.pandas_udf(_POS_SCHEMA)
-        def tok(html: pd.Series) -> pd.DataFrame:
-            return _pos_struct(html.map(extract_text), fn)
-    else:
-        @F.pandas_udf(_POS_SCHEMA)
-        def tok(text: pd.Series) -> pd.DataFrame:
-            return _pos_struct(text, fn)
-
-    return tok
-
-
-def _gather_segments(values: np.ndarray, seg_starts_src: np.ndarray,
-                     seg_lens: np.ndarray) -> np.ndarray:
-    """Reorder variable-length segments: emit values of segment k (source
-    start seg_starts_src[k], length seg_lens[k]) consecutively, for k in
-    the given order — fully vectorized (repeat + intra-offset gather)."""
-    total = int(seg_lens.sum())
-    if total == 0:
-        return values[:0]
-    out_starts = np.concatenate([[0], np.cumsum(seg_lens)[:-1]])
-    intra = np.arange(total, dtype=np.int64) - np.repeat(out_starts, seg_lens)
-    src_idx = np.repeat(seg_starts_src.astype(np.int64), seg_lens) + intra
-    return values[src_idx]
-
-
-def encode_partials_pos(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Phase-1 over one (shard, salt) group of doc rows (doc_id, doc_len,
-    terms[], tfs[], poss[] — the parallel-list carrier) → one compressed
-    sorted partial per term, positions included. All-numpy: the cells
-    concatenate without touching per-token python objects."""
-    from .index_build import _hash_bucket
-
-    term_cells = list(pdf["terms"])
-    counts = np.fromiter((len(c) for c in term_cells), dtype=np.int64, count=len(pdf))
-    total = int(counts.sum())
-    ids = np.repeat(pdf["doc_id"].to_numpy().astype(np.uint64), counts)
-    dls = np.repeat(pdf["doc_len"].to_numpy().astype(np.uint64), counts)
-    terms = (
-        np.concatenate([np.asarray(c, dtype=object) for c in term_cells])
-        if total else np.empty(0, dtype=object)
-    )
-    tf = (
-        np.concatenate([np.asarray(c, dtype=np.int64) for c in pdf["tfs"]])
-        if total else np.empty(0, np.int64)
-    )
-    pos_cells = [np.asarray(c, dtype=np.uint64) for c in pdf["poss"]]
-    positions = np.concatenate(pos_cells) if pos_cells else np.empty(0, np.uint64)
-    entry_pos_starts = np.concatenate([[0], np.cumsum(tf)[:-1]]).astype(np.int64)
-
-    codes, uniq_terms = pd.factorize(pd.Series(terms))
-    order = np.lexsort((ids, codes))
-    codes_s, ids_s, dls_s, tf_s = codes[order], ids[order], dls[order], tf[order]
-    pos_s = _gather_segments(positions, entry_pos_starts[order], tf_s)
-    entry_starts_s = np.concatenate([[0], np.cumsum(tf_s)[:-1]]).astype(np.int64)
-
-    term_starts = np.nonzero(np.diff(codes_s, prepend=-1))[0]
-    n_docs = np.diff(np.append(term_starts, codes_s.size))
-    uniq_arr = uniq_terms.to_numpy() if hasattr(uniq_terms, "to_numpy") else np.asarray(uniq_terms)
-    terms_out = uniq_arr[codes_s[term_starts]]
-
-    pos_gaps = delta_gaps_segments(pos_s, entry_starts_s)
-    term_pos_starts = entry_starts_s[term_starts]
-
-    return pd.DataFrame(
-        {
-            "shard": np.full(term_starts.size, int(pdf["shard"].iloc[0]), dtype=np.int64),
-            "term": terms_out,
-            "term_bucket": _hash_bucket(terms_out),
-            "salt": np.full(term_starts.size, int(pdf["salt"].iloc[0]), dtype=np.int64),
-            "n_docs": n_docs,
-            "docs_enc": delta_encode_segments(ids_s, term_starts),
-            "tfs_enc": varint_encode_segments(tf_s.astype(np.uint64), term_starts),
-            "dls_enc": varint_encode_segments(dls_s, term_starts),
-            "pos_enc": varint_encode_segments(pos_gaps, term_pos_starts),
-        }
-    )
-
 
 _POS_SHIFT = np.uint64(32)  # doc_code * 2^32 + position keys
 _POS_MASK = np.uint64(0xFFFFFFFF)

@@ -13,12 +13,12 @@ from fluent_plugin_elasticsearch_spark.operators.codec import (
     delta_decode,
     delta_encode,
     delta_gaps_segments,
+    gather_segments,
     segmented_cumsum,
     varint_decode,
     varint_encode,
     varint_encode_segments,
 )
-from fluent_plugin_elasticsearch_spark.operators.positions import _gather_segments
 
 u64 = st.integers(min_value=0, max_value=2**64 - 1)
 boundary = st.sampled_from(
@@ -61,7 +61,7 @@ def test_segmented_encode_matches_per_segment(vals, data):
 @given(st.lists(st.lists(st.integers(0, 2**31), min_size=0, max_size=20), max_size=20))
 def test_position_segments_roundtrip(seglists):
     """delta_gaps_segments + segmented_cumsum invert each other over
-    sorted per-segment position lists, and _gather_segments reorders
+    sorted per-segment position lists, and gather_segments reorders
     variable-length segments exactly."""
     segs = [np.sort(np.array(s, dtype=np.uint64)) for s in seglists]
     flat = np.concatenate(segs) if segs else np.empty(0, np.uint64)
@@ -74,6 +74,6 @@ def test_position_segments_roundtrip(seglists):
     # reversed-order gather
     if len(segs) > 1:
         order = np.arange(len(segs))[::-1]
-        got = _gather_segments(flat, starts[order], lens[order])
+        got = gather_segments(flat, starts[order], lens[order])
         expected = np.concatenate([segs[i] for i in order])
         assert np.array_equal(got, expected)

@@ -123,3 +123,15 @@ def test_reindex_filters_and_rebuilds(spark, corpus_df, tmp_path):
     hits = idx.search("the", k=20).collect()
     assert hits and all(r["doc_id"] < 2 ** 62 for r in hits)
     assert kept < docs.count()  # the filter actually dropped docs
+
+
+def test_compute_only_build_makes_the_build_blocks(spark, halves, tmp_path):
+    """build_compute_only (the scaling proxy) runs the build's own plan:
+    it produces exactly as many blocks as the real build writes."""
+    from fluent_plugin_elasticsearch_spark.operators.index_build import build_compute_only
+
+    a, _ = halves
+    built = _build(spark, a, str(tmp_path / "built"))
+    n_blocks = build_compute_only(spark, a, id_col="doc_id", html_col="html", text_col=None,
+                                  tokenizer="unicode", n_shards=4, n_salts=2, block_size=32)
+    assert n_blocks == InvertedIndex(spark, built).postings().count() > 0

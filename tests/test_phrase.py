@@ -32,6 +32,16 @@ def pos_index(spark, sf_dir, tmp_path_factory):
     return out
 
 
+@pytest.fixture(scope="module")
+def tf_index(spark, sf_dir, tmp_path_factory):
+    """pos_index's corpus and settings, without positions."""
+    out = str(tmp_path_factory.mktemp("tfidx") / "idx")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    build_index(spark, docs, out, id_col="doc_id", text_col="text",
+                tokenizer="simple", n_shards=4, n_salts=4, block_size=32)
+    return out
+
+
 @pytest.fixture(scope="module", params=["warmed", "unwarmed"])
 def pos_idx(request, spark, pos_index):
     """The positional index on both execution paths: warmed
@@ -50,13 +60,30 @@ def test_block_max_tfn_is_the_kernels_bound(request, which):
     path = request.getfixturevalue(which)
     with open(os.path.join(path, "meta.json")) as f:
         meta = json.load(f)
-    blocks = pads.dataset(os.path.join(path, "postings"), format="parquet",
-                          partitioning="hive").to_table().to_pandas()
+    blocks = _blocks(path)
     p = decode_postings(blocks, positions=bool(meta.get("with_positions")))
     tfn = _tfn(p.tfs, p.dls, meta["avgdl"], meta["k1"], meta["b"])
     got = blocks["max_tfn"].to_numpy()
     want = np.array([t.max() for t in np.split(tfn, np.cumsum(p.n)[:-1])])
     assert len(blocks) > 100 and np.array_equal(got, want)
+
+
+def _blocks(path):
+    return pads.dataset(os.path.join(path, "postings"), format="parquet",
+                        partitioning="hive").to_table().to_pandas()
+
+
+def test_positions_only_add_pos_enc(tf_index, pos_index):
+    """with_positions is a column switch in one build: the positional
+    index's postings equal the tf-only index's in every other column."""
+    keys = ["shard", "term", "block_id"]
+    tf = _blocks(tf_index).sort_values(keys).reset_index(drop=True)
+    pos = _blocks(pos_index).sort_values(keys).reset_index(drop=True)
+    assert "pos_enc" not in tf and pos["pos_enc"].map(len).gt(0).all()
+    assert len(tf) > 100
+    for col in ["term", "block_id", "n_docs", "first_doc", "last_doc", "docs_enc",
+                "tfs_enc", "dls_enc", "max_tfn"]:
+        assert tf[col].tolist() == pos[col].tolist(), col
 
 
 @pytest.mark.parametrize("phrase", PHRASES)

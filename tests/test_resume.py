@@ -68,6 +68,33 @@ def test_kill_and_resume_identical(spark, small_docs, tmp_path):
     assert got_a == got_b
 
 
+def test_resume_rejects_changed_settings(spark, small_docs, tmp_path):
+    """A checkpoint built with one tokenizer must not be finished with
+    another (the index would hold terms its meta's tokenizer never emits)
+    nor with positions switched on (its staging table lacks them): the
+    resume raises a ValueError naming the setting and leaves the
+    checkpoint as it was."""
+    out = str(tmp_path / "idx")
+    kw = dict(id_col="doc_id", html_col="html", text_col=None, tokenizer="unicode",
+              n_shards=4, n_salts=2, shard_batches=2)
+
+    def die_after_first(group):
+        raise Boom(f"crash after {group}")
+
+    with pytest.raises(Boom):
+        build_index(spark, small_docs, out, run_id="r1", on_batch_done=die_after_first, **kw)
+    for changed in ({"tokenizer": "simple"}, {"with_positions": True}, {"n_shards": 2},
+                    {"block_size": 4}, {"url_col": "url"}):
+        (key,) = changed
+        with pytest.raises(ValueError, match=key):
+            build_index(spark, small_docs, out, run_id="r2", **{**kw, **changed})
+    build_index(spark, small_docs, out, run_id="r3", **kw)
+    idx = InvertedIndex(spark, out)
+    assert idx.meta["n_docs"] == 200 and idx.meta["tokenizer"] == "unicode"
+    assert {r["run_id"] for r in idx.manifest().collect()} == {"r1", "r3"}
+    assert idx.search("café", 5).count() > 0
+
+
 def test_rerun_completed_build_is_noop(spark, small_docs, tmp_path):
     out = str(tmp_path / "idx")
     build_index(spark, small_docs, out, id_col="doc_id", html_col="html",

@@ -5,19 +5,20 @@ extract_text(html) == text for every corpus row.
 """
 
 import numpy as np
-import pytest
+import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from fluent_plugin_elasticsearch_spark.corpus import generate_corpus, _wrap_html
 from fluent_plugin_elasticsearch_spark.operators.codec import (
-    decode_block,
+    decode_postings,
     delta_decode,
     delta_encode,
-    encode_blocks,
     varint_decode,
     varint_encode,
 )
+from fluent_plugin_elasticsearch_spark.operators.index_build import _make_merge_fn
+from fluent_plugin_elasticsearch_spark.operators.wand import _tfn
 from fluent_plugin_elasticsearch_spark.textproc import (
     bm25_topk_oracle,
     extract_text,
@@ -62,19 +63,32 @@ def test_delta_roundtrip(ids):
 
 
 def test_encode_blocks_roundtrip_and_maxscore():
+    """The build's phase-2 block encoder: one term's postings, split over
+    three salted partials, come back as full blocks in doc order with
+    exact first/last doc and the block's max tf-factor."""
     rng = np.random.default_rng(7)
     ids = np.unique(rng.integers(0, 10**9, 1000).astype(np.uint64))
     tfs = rng.integers(1, 50, ids.size).astype(np.uint64)
-    tfns = rng.random(ids.size)
-    blocks = encode_blocks(ids, tfs, tfns, block_size=128)
+    dls = rng.integers(1, 300, ids.size).astype(np.uint64)
+    salt = rng.integers(0, 3, ids.size)
+    partials = pd.DataFrame([
+        {"shard": 0, "term": "t", "salt": s, "n_docs": int(m.sum()),
+         "docs_enc": delta_encode(ids[m]), "tfs_enc": varint_encode(tfs[m]),
+         "dls_enc": varint_encode(dls[m])}
+        for s in range(3) for m in [salt == s]
+    ])
+    avgdl, k1, b = 120.0, 1.2, 0.75
+    blocks = _make_merge_fn(avgdl, k1, b, block_size=128)(partials)
+    assert blocks["n_docs"].tolist() == [128] * 7 + [ids.size - 7 * 128]
+    assert blocks["block_id"].tolist() == list(range(8))
+    p = decode_postings(blocks)
+    assert (p.ids == ids.astype(np.int64)).all() and (p.tfs == tfs.astype(np.int64)).all()
+    assert (p.dls == dls.astype(np.int64)).all()
     pos = 0
-    for blk in blocks:
-        d_ids, d_tfs = decode_block(blk["docs_enc"], blk["tfs_enc"], blk["n_docs"])
-        e = pos + blk["n_docs"]
-        assert (d_ids == ids[pos:e]).all()
-        assert (d_tfs == tfs[pos:e]).all()
-        assert blk["max_tfn"] == pytest.approx(tfns[pos:e].max())
-        assert blk["first_doc"] == ids[pos] and blk["last_doc"] == ids[e - 1]
+    for blk in blocks.itertuples():
+        e = pos + blk.n_docs
+        assert blk.max_tfn == _tfn(p.tfs[pos:e], p.dls[pos:e], avgdl, k1, b).max()
+        assert blk.first_doc == ids[pos] and blk.last_doc == ids[e - 1]
         pos = e
     assert pos == ids.size
 
