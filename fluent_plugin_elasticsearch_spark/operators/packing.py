@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import NumericType
 
 
 def _with_global_offset(df: DataFrame, order_col: str, weight_col: str,
@@ -36,7 +37,14 @@ def _with_global_offset(df: DataFrame, order_col: str, weight_col: str,
     the driver (one approxQuantile job over `order_col`) and baked into
     the plan as literals; monotone in `order_col`, so bucket-local cumsum
     + exclusive bucket bases is the exact global prefix sum at any
-    parallelism, under any AQE decision."""
+    parallelism, under any AQE decision.
+
+    `order_col` must be numeric (approxQuantile accepts only numeric
+    columns); any other type raises ValueError before a job runs."""
+    order_type = df.schema[order_col].dataType
+    if not isinstance(order_type, NumericType):
+        raise ValueError(f"order column {order_col!r} must be numeric, "
+                         f"got {order_type.simpleString()}")
     spark = df.sparkSession
     n = num_partitions or spark.sparkContext.defaultParallelism
     bnds: list[float] = []

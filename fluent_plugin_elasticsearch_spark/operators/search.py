@@ -11,10 +11,14 @@ paths for that kernel:
 Resident (after ``warm()``): the postings live in driver memory as one
 Arrow table per shard, sorted by (term, first_doc), with each term's row
 range. A query takes its terms' rows from each shard, runs the kernel
-in-process, merges in pandas and returns the rows as a local relation —
-collecting it starts no Spark job. Memory cost: about the postings'
-Arrow ``nbytes`` (6.8 MB for the 16k-doc perfbench index), plus one
-term→id dict over the vocabulary.
+in-process, merges with one numpy lexsort and returns ``Hits``: the rows
+as a driver-side Arrow table. ``collect()``, ``toPandas()`` and
+``to_es_response`` read that table — no Spark job, no JVM call. A Spark
+DataFrame (a LocalTableScan over the table) is built only when the
+caller composes the result with Spark (a join, ``select``,
+``F.broadcast``). Memory cost: about the postings' Arrow ``nbytes``
+(6.8 MB for the 16k-doc perfbench index), plus one term→id dict over
+the vocabulary.
 
 Spark (unwarmed): one job per query
     term_stats lookup (≤ query-term rows, parquet min/max pruned)
@@ -23,10 +27,10 @@ Spark (unwarmed): one job per query
   → global orderBy(score desc, doc_id asc).limit(k)   [TakeOrderedAndProject]
 
 Both paths hand the kernel the same rows and merge with the same
-tie-break, so their ids and scores are bit-identical. Doc lengths ride
-inside the posting blocks, so query time touches no doc-side table; the
-final (≤ k rows) result can be broadcast-joined back to ``docmap``/docs
-for materialization.
+tie-break, so their rows are bit-identical (same fields, types and
+values). Doc lengths ride inside the posting blocks, so query time
+touches no doc-side table; the final (≤ k rows) result can be
+broadcast-joined back to ``docmap``/docs for materialization.
 """
 
 from __future__ import annotations
@@ -34,13 +38,14 @@ from __future__ import annotations
 import json
 import math
 import os
+import threading
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as pads
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..textproc import bm25_idf, tokenize_simple, tokenize_unicode
@@ -80,6 +85,45 @@ def _arrow_schema(schema: str) -> pa.Schema:
     """The Arrow schema of a simple "name type, ..." schema string."""
     return pa.schema([(name, _ARROW_TYPES[typ]) for name, typ in
                       (field.split() for field in schema.split(","))])
+
+
+class Hits:
+    """A warmed query's result rows (≤ k; every matching row without a
+    k), held on the driver as one Arrow table. ``collect()``,
+    ``toPandas()`` and ``count()`` read the table and never touch the
+    JVM; ``collect()`` gives the Spark path's ``Row``s (same fields,
+    order, Python types and values). Any other DataFrame use (``join``, ``select``,
+    ``hits["score"]``, ``F.broadcast(hits)``, ``explain``…) goes to one
+    Spark DataFrame over the table — a LocalTableScan — built on first
+    use, at most once, safely under concurrent callers."""
+
+    def __init__(self, spark: SparkSession, table: pa.Table):
+        self.spark = spark
+        self.table = table
+        self._df: DataFrame | None = None
+        self._lock = threading.Lock()
+
+    def collect(self) -> list[Row]:
+        row = Row(*self.table.column_names)
+        return [row(*values) for values in zip(*(c.to_pylist() for c in self.table.columns))]
+
+    def toPandas(self) -> pd.DataFrame:
+        return self.table.to_pandas()
+
+    def count(self) -> int:
+        return self.table.num_rows
+
+    def _frame(self) -> DataFrame:
+        with self._lock:
+            if self._df is None:
+                self._df = self.spark.createDataFrame(self.table)
+            return self._df
+
+    def __getattr__(self, name):
+        return getattr(self._frame(), name)
+
+    def __getitem__(self, item):
+        return self._frame()[item]
 
 
 class _ResidentPostings:
@@ -162,27 +206,34 @@ class InvertedIndex:
         freed read buffers go back to the OS.
 
         From then on every posting-backed query runs its shard kernel
-        in-process on the query terms' rows and returns a local relation:
-        with a term cache (``cache_term_stats``) a warmed search starts no
-        Spark job. Results are bit-identical to the unwarmed Spark path.
-        The cost is driver memory of about the postings' Arrow ``nbytes``
-        (6.8 MB for the 16k-doc perfbench index); the tables are freed
-        with the index object."""
+        in-process on the query terms' rows and returns ``Hits``, a
+        driver-side Arrow table: with a term cache (``cache_term_stats``)
+        a warmed search and its ``collect()`` make no JVM call, empty
+        results included. A Spark DataFrame over the rows is built only
+        when the caller composes them with Spark. Results are
+        bit-identical to the unwarmed Spark path. The cost is driver
+        memory of about the postings' Arrow ``nbytes`` (6.8 MB for the
+        16k-doc perfbench index); the tables are freed with the index
+        object."""
         self._resident = _ResidentPostings(os.path.join(self.path, "postings"))
         return self
 
-    def _empty(self, schema: str = TOPK_SCHEMA) -> DataFrame:
-        return empty_topk_df(self.spark, schema)
+    def _empty(self, schema: str = TOPK_SCHEMA) -> DataFrame | Hits:
+        if self._resident is None:
+            return empty_topk_df(self.spark, schema)
+        return Hits(self.spark, _arrow_schema(schema).empty_table())
 
     def _per_shard(self, terms, kernel, schema: str, k: int | None = None,
-                   per_query: bool = False) -> DataFrame:
+                   per_query: bool = False) -> DataFrame | Hits:
         """Run ``kernel`` (pandas blocks → rows of ``schema``) on each
         shard's posting blocks of ``terms`` and merge the shards' rows:
         with ``k``, the global top k by (score desc, doc_id asc) — per
         query_id, numbered in a ``rank`` column, when ``per_query`` — and
         without it, every row. Warmed, the kernel runs in-process on the
-        resident blocks and the result is a local relation; otherwise it
-        runs in one Spark job through applyInPandas."""
+        resident blocks and the merged rows come back as ``Hits``, a
+        driver-side Arrow table that becomes a Spark DataFrame only when
+        the caller composes it with Spark; otherwise the kernel runs in
+        one Spark job through applyInPandas."""
         if self._resident is None:
             blocks = self.postings().filter(F.col("term").isin(list(terms)))
             local = blocks.groupBy("shard").applyInPandas(kernel, schema)
@@ -194,22 +245,20 @@ class InvertedIndex:
             return (local.withColumn("rank", F.row_number().over(w))
                     .filter(F.col("rank") <= k)
                     .select("query_id", "doc_id", "score", "rank"))
-        if per_query:
-            schema += ", rank int"
+        fields = _arrow_schema(schema + (", rank int" if per_query else ""))
         parts = [kernel(pdf) for pdf in self._resident.blocks(terms)]
-        out = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame()
-        if out.empty:
-            return self._empty(schema)
-        if k is not None:
-            keys = [out["doc_id"], -out["score"]] + ([out["query_id"]] if per_query else [])
-            out = out.iloc[np.lexsort(keys)]
-            if per_query:
-                out = out.assign(rank=out.groupby("query_id").cumcount() + 1)
-                out = out[out["rank"] <= k]
-            else:
-                out = out.head(k)
-        return self.spark.createDataFrame(
-            pa.Table.from_pandas(out, _arrow_schema(schema), preserve_index=False))
+        cols = {f.name: np.concatenate([p[f.name].to_numpy() for p in parts] or [[]])
+                .astype(f.type.to_pandas_dtype()) for f in fields if f.name != "rank"}
+        if per_query:  # (query_id, score desc, doc_id); rank = 1 + place in the query's run
+            order = np.lexsort((cols["doc_id"], -cols["score"], cols["query_id"]))
+            _, starts = _wand._runs(cols["query_id"][order])
+            rank = np.arange(order.size) - np.repeat(starts, np.diff(np.r_[starts, order.size])) + 1
+            keep = rank <= k
+            cols = {name: c[order[keep]] for name, c in cols.items()}
+            cols["rank"] = rank[keep].astype(np.int32)
+        elif k is not None:
+            cols["doc_id"], cols["score"] = _wand._top(cols["doc_id"], cols["score"], k)
+        return Hits(self.spark, pa.table(cols, schema=fields))
 
     def doc_stats(self) -> DataFrame:
         return self.spark.read.parquet(os.path.join(self.path, "doc_stats"))
@@ -229,7 +278,7 @@ class InvertedIndex:
         return sorted(set(_TOKENIZE[self.meta["tokenizer"]](query_text)))
 
     def search(self, query_text: str, k: int = 10, mode: str = "wand",
-               operator: str = "or", minimum_should_match: int = 1) -> DataFrame:
+               operator: str = "or", minimum_should_match: int = 1) -> DataFrame | Hits:
         """Top-k BM25. mode='wand' (block-max skipping), 'exhaustive'
         (vectorized decode-all), or 'auto' (WAND only when the shard's
         query-term posting mass exceeds WAND_FALLBACK_POSTINGS — the serving
@@ -264,7 +313,7 @@ class InvertedIndex:
     def match_scores(self, query_terms: list[str],
                      groups: list[list[str]] | None = None,
                      weights: dict[str, float] | None = None,
-                     quantize: bool = False) -> DataFrame:
+                     quantize: bool = False) -> DataFrame | Hits:
         """All-matched scoring (no top-k cut): every doc containing >= 1
         query term, with its full BM25 sum over the terms it contains.
         Work is bounded by the query terms' POSTING data — never a corpus
@@ -301,7 +350,7 @@ class InvertedIndex:
 
         return self._per_shard(dfs, shard_all, TOPK_SCHEMA)
 
-    def sparse_vector_scores(self, query_vector: dict) -> DataFrame:
+    def sparse_vector_scores(self, query_vector: dict) -> DataFrame | Hits:
         """Index-backed sparse_vector serving: Σ_t round(w·1e3)·tf·1000
         per doc from tf postings — bit-identical to
         relevance.sparse_vector_df's BoW-tf form (same planner-side
@@ -367,7 +416,7 @@ class InvertedIndex:
         return self.match_scores(terms).select("doc_id")
 
     def search_dismax(self, queries: list[str], tie_breaker: float = 0.0,
-                      k: int = 10) -> DataFrame:
+                      k: int = 10) -> DataFrame | Hits:
         """ES dis_max served FROM THE INDEX: one job decodes the union of
         the subqueries' posting blocks per shard, scores every subquery
         over the same doc-id domain, and combines with the exact Lucene
@@ -398,7 +447,7 @@ class InvertedIndex:
 
         return self._per_shard(dfs, shard_dismax, TOPK_SCHEMA, k)
 
-    def search_batch(self, queries: dict[int, str], k: int = 10) -> DataFrame:
+    def search_batch(self, queries: dict[int, str], k: int = 10) -> DataFrame | Hits:
         """Batched multi-query top-k (offline query sets): ONE pass decodes
         the union of the queries' posting data per shard and scores every
         query — per-query cost amortizes to near-zero for large sets.
@@ -425,7 +474,7 @@ class InvertedIndex:
         return self._per_shard(dfs, shard_batch, "query_id long, doc_id long, score double",
                                k, per_query=True)
 
-    def match_phrase(self, phrase: str, k: int = 10) -> DataFrame:
+    def match_phrase(self, phrase: str, k: int = 10) -> DataFrame | Hits:
         """ES match_phrase over a positional index (build_index with
         with_positions=True): per shard, decode the phrase terms'
         positional blocks, count exact adjacent alignments (phrase freq),
@@ -453,7 +502,7 @@ class InvertedIndex:
         return self._per_shard(uniq, shard_phrase, TOPK_SCHEMA, k)
 
     def match_phrase_prefix(self, phrase: str, k: int = 10,
-                            max_expansions: int = 1024) -> DataFrame:
+                            max_expansions: int = 1024) -> DataFrame | Hits:
         """ES match_phrase_prefix served from the positional index: the
         last term expands through the term dictionary (expand_prefix) and
         occupies a SET slot in the same adjacency kernel match_phrase
@@ -478,9 +527,10 @@ class InvertedIndex:
             return self._empty()  # an exact term absent from the corpus ⇒ no match
         n_docs, avgdl = self.meta["n_docs"], self.meta["avgdl"]
         k1, b = self.meta["k1"], self.meta["b"]
-        # prefix-clause df = docs containing ANY expansion term (a small
-        # postings-bounded count job), matching the DF scorer's df
-        df_prefix = self.matched_doc_ids(expansion).count()
+        # prefix-clause df = docs containing ANY expansion term (one
+        # match_scores row per doc, a postings-bounded count), matching
+        # the DF scorer's df
+        df_prefix = self.match_scores(expansion).count()
         if df_prefix == 0:
             return self._empty()
         idf_sum = sum(bm25_idf(dfs[t], n_docs) for t in exact) \
@@ -494,7 +544,7 @@ class InvertedIndex:
         return self._per_shard(wanted, shard_phrase, TOPK_SCHEMA, k)
 
     def span_near(self, first: str, second: str, slop: int = 0,
-                  k: int = 10) -> DataFrame:
+                  k: int = 10) -> DataFrame | Hits:
         """ES span_near (two clauses, in_order=true) served from the
         positional index: span frequency = `second` positions with a
         `first` within slop+1 tokens before (exactly
@@ -517,7 +567,7 @@ class InvertedIndex:
 
         return self._per_shard(sorted({first, second}), shard_span, TOPK_SCHEMA, k)
 
-    def span_first(self, term: str, end: int, k: int = 10) -> DataFrame:
+    def span_first(self, term: str, end: int, k: int = 10) -> DataFrame | Hits:
         """ES span_first served from the positional index: sf = the
         term's occurrences within the first `end` token positions
         (contract as relevance.span_first_df — 1-based 1..end window,
@@ -538,7 +588,7 @@ class InvertedIndex:
 
         return self._per_shard([term], shard, TOPK_SCHEMA, k)
 
-    def span_or(self, terms: list[str], k: int = 10) -> DataFrame:
+    def span_or(self, terms: list[str], k: int = 10) -> DataFrame | Hits:
         """ES span_or over single-term clauses served from the tf index:
         sf = total occurrences of ANY clause term, one saturation with
         the summed clause idfs (contract as relevance.span_or_df). No
@@ -560,7 +610,7 @@ class InvertedIndex:
         return self._per_shard(dfs, shard, TOPK_SCHEMA, k)
 
     def span_not(self, include: str, exclude: str, pre: int = 0,
-                 post: int = 0, k: int = 10) -> DataFrame:
+                 post: int = 0, k: int = 10) -> DataFrame | Hits:
         """ES span_not served from the positional index: sf = `include`
         positions with no `exclude` position in [p-pre, p+post]
         (contract as relevance.span_not_df). Docs holding `include` but
@@ -581,7 +631,7 @@ class InvertedIndex:
         return self._per_shard(sorted({include, exclude}), shard, TOPK_SCHEMA, k)
 
     def span_multi(self, value: str, kind: str = "prefix",
-                   max_expansions: int = 50, k: int = 10) -> DataFrame:
+                   max_expansions: int = 50, k: int = 10) -> DataFrame | Hits:
         """ES span_multi (prefix/wildcard inner query) served from the tf
         index: the pattern expands against the TERM DICTIONARY (LIKE
         pushdown on the sorted term_stats parquet, term-ascending, capped
@@ -612,7 +662,7 @@ class InvertedIndex:
 
     def span_containing(self, first: str, second: str, little: str,
                         slop: int = 0, k: int = 10,
-                        within: bool = False) -> DataFrame:
+                        within: bool = False) -> DataFrame | Hits:
         """ES span_containing / span_within (within=True) served from the
         positional index — contract exactly relevance.span_containing_df
         / span_within_df (the no-index fallbacks): big = ordered
@@ -641,12 +691,12 @@ class InvertedIndex:
         return self._per_shard(wanted, shard, TOPK_SCHEMA, k)
 
     def span_within(self, first: str, second: str, little: str,
-                    slop: int = 0, k: int = 10) -> DataFrame:
+                    slop: int = 0, k: int = 10) -> DataFrame | Hits:
         return self.span_containing(first, second, little, slop, k,
                                     within=True)
 
     def intervals_match(self, terms: list[str], max_gaps: int = -1,
-                        ordered: bool = False, k: int = 10) -> DataFrame:
+                        ordered: bool = False, k: int = 10) -> DataFrame | Hits:
         """ES intervals `match` rule served from the positional index
         (contract as relevance.intervals_match_df, the no-index
         fallback): ordered n-term chains via a greedy searchsorted walk,
@@ -973,12 +1023,15 @@ def match_bool_prefix_topk(index: "InvertedIndex", query_terms: list[str],
     return combined.orderBy(F.desc("score_u"), F.asc("doc_id")).limit(k)
 
 
-def to_es_response(topk: DataFrame, index_name: str = "docs",
+def to_es_response(topk: DataFrame | Hits, index_name: str = "docs",
                    took_ms: int | None = None) -> dict:
     """Shape a top-k result into the ES search-response envelope the
     reference's downstream consumers parse (hits.total/max_score/hits[]
     with _index/_id/_score/_source). Collects — legitimate: a top-k result
-    is driver-sized by construction (k rows), never the corpus."""
+    is driver-sized by construction (k rows), never the corpus. A warmed
+    index's ``Hits`` collect from their driver-side Arrow table, so the
+    envelope is built without the JVM; a DataFrame collects through
+    Spark."""
     rows = topk.collect()
     hits = []
     for r in rows:

@@ -528,13 +528,18 @@ def compile_query(docs: DataFrame, body: dict[str, Any], *,
     BM25 top-k (scores joined back onto the docs)."""
     body = dict(body or {})
     if "post_filter" in body:
-        # ES post_filter: applied to the HITS after scoring/top-k (aggs —
-        # compiled separately by plans.aggs — intentionally don't see it,
-        # the faceted-navigation contract). Compile the rest of the body
-        # first, then filter the result frame.
+        # ES post_filter: filters the HITS after scoring, before from/size
+        # (aggs — compiled separately by plans.aggs — intentionally don't
+        # see it, the faceted-navigation contract). The rest of the body
+        # compiles to its whole ranking (every doc may be a hit), the
+        # filter prunes it, then from/size page it in ranking order.
         pf = body.pop("post_filter")
-        return compile_query(docs, body, index=index).filter(
-            _compile_clause(pf))
+        size, frm = body.pop("size", None), int(body.pop("from", None) or 0)
+        ranked = compile_query(docs, {**body, "size": docs.count()}, index=index)
+        out = ranked.filter(_compile_clause(pf))
+        if frm:
+            out = out.offset(frm)
+        return out.limit(10 if size is None else int(size))  # ES default size
     query = body.get("query")
     size = body.get("size")
     out = docs
@@ -640,7 +645,7 @@ def compile_query(docs: DataFrame, body: dict[str, Any], *,
         spec = body["knn"]
         field, qv = spec["field"], [float(x) for x in spec["query_vector"]]
         k = int(spec.get("k", size or 10))
-        cand = docs
+        cand = docs.filter(F.col(field).isNotNull())  # only docs with a vector
         if spec.get("filter"):
             cand = cand.filter(_compile_clause(spec["filter"]))
         spark = docs.sparkSession

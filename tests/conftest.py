@@ -52,6 +52,20 @@ def index_dir(spark, corpus_df, tmp_path_factory):
     return out
 
 
+@pytest.fixture(scope="session")
+def pos_index(spark, sf_dir, tmp_path_factory):
+    """A positional index (with_positions=True) over the sf documents'
+    text column, simple tokenizer."""
+    from fluent_plugin_elasticsearch_spark.operators.index_build import build_index
+
+    out = str(tmp_path_factory.mktemp("pidx") / "idx")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    build_index(spark, docs, out, id_col="doc_id", text_col="text",
+                tokenizer="simple", n_shards=4, n_salts=4, block_size=32,
+                with_positions=True)
+    return out
+
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.01")
 
 

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from fluent_plugin_elasticsearch_spark.operators.dedup import connected_components
 from fluent_plugin_elasticsearch_spark.operators.packing import (
+    _with_global_offset,
     pack_documents,
     stratified_sample,
 )
@@ -150,3 +151,22 @@ def test_chunk_documents_windows(spark):
 
     with _pt.raises(ValueError):
         chunk_documents(docs, chunk_len=4, overlap=4)
+
+
+def test_global_offset_rejects_non_numeric_order_column(spark):
+    """approxQuantile takes only numeric columns: a string or date order
+    column raises a ValueError naming the column and its type, before any
+    Spark job runs."""
+    df = spark.createDataFrame([("a", 1, "2024-01-01"), ("b", 2, "2024-01-02")],
+                               "key string, w long, day string").withColumn("day", F.to_date("day"))
+    sc = spark.sparkContext
+    sc.setJobGroup("offset-check", "offset-check")
+    try:
+        with pytest.raises(ValueError, match="'key' must be numeric, got string"):
+            _with_global_offset(df, "key", "w")
+        with pytest.raises(ValueError, match="'day' must be numeric, got date"):
+            _with_global_offset(df, "day", "w")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("offset-check") == []
+    assert [r["offset"] for r in _with_global_offset(df, "w", "w").orderBy("w").collect()] == [0, 1]

@@ -23,16 +23,6 @@ PHRASES = ["the data", "data query", "the", "the data query", "zzznope data"]
 
 
 @pytest.fixture(scope="module")
-def pos_index(spark, sf_dir, tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("pidx") / "idx")
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    build_index(spark, docs, out, id_col="doc_id", text_col="text",
-                tokenizer="simple", n_shards=4, n_salts=4, block_size=32,
-                with_positions=True)
-    return out
-
-
-@pytest.fixture(scope="module")
 def tf_index(spark, sf_dir, tmp_path_factory):
     """pos_index's corpus and settings, without positions."""
     out = str(tmp_path_factory.mktemp("tfidx") / "idx")

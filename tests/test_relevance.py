@@ -372,6 +372,15 @@ def test_intervals_semantics(docs, duck):
         rel.intervals_match_df(docs, ["a"])
 
 
+def test_knn_candidates_need_a_vector(spark):
+    """Docs without an embedding never pad the k nearest hits: with fewer
+    than k embedded docs, the knn side returns only those docs."""
+    rows = [(i, [1.0, float(i)] if i < 2 else None) for i in range(6)]
+    d = spark.createDataFrame(rows, "doc_id long, embedding array<double>")
+    body = {"knn": {"field": "embedding", "query_vector": [1.0, 0.0], "k": 4}}
+    assert [r["doc_id"] for r in compile_query(d, body).collect()] == [0, 1]
+
+
 def test_hybrid_knn_query(spark):
     import math
 
@@ -793,20 +802,27 @@ def test_geo_shape_point_in_polygon(spark):
 
 
 def test_post_filter_prunes_after_topk(spark, docs):
-    """post_filter must NOT change the candidate set/ranks — it prunes
-    the already-ranked hits (faceted-navigation semantics)."""
+    """ES post_filter filters the scored hits first, then from/size page
+    them: the result is the first `size` en-lang docs of the unfiltered
+    ranking — also when the filter removes hits inside the top `size` —
+    and scores and ranks stay those of the unfiltered query (faceted-
+    navigation semantics)."""
     from fluent_plugin_elasticsearch_spark.plans.query_ast import (
         compile_query as cq,
     )
 
-    base = {"query": {"simple_query_string": {"query": "quick | merge"}},
-            "size": 3}
-    top3 = [r["doc_id"] for r in cq(docs, base).collect()]
-    pf = cq(docs, {**base, "post_filter": {"term": {"lang": "en"}}})
-    got = [r["doc_id"] for r in pf.collect()]
-    # exactly the en-lang subset of the SAME top-3, order preserved
-    assert got == [d for d in top3 if d % 2 == 0]  # lang 'en' = even ids
-    assert set(got) < set(top3) or got == top3
+    base = {"query": {"simple_query_string": {"query": "quick | merge"}}}
+    ranked = cq(docs, {**base, "size": len(TEXTS)}).collect()
+    ranking = [r["doc_id"] for r in ranked]
+    en = [d for d in ranking if d % 2 == 0]  # lang 'en' = even ids
+    assert any(d % 2 for d in ranking[:3]) and len(en) >= 3
+    pf = {"term": {"lang": "en"}}
+    got = cq(docs, {**base, "size": 3, "post_filter": pf}).collect()
+    assert [r["doc_id"] for r in got] == en[:3]
+    scores = {r["doc_id"]: r["score_u"] for r in ranked}
+    assert all(r["score_u"] == scores[r["doc_id"]] for r in got)
+    paged = cq(docs, {**base, "from": 1, "size": 2, "post_filter": pf}).collect()
+    assert [r["doc_id"] for r in paged] == en[1:3]
 
 
 def test_bigram_logprob(docs, duck, spark):

@@ -1,0 +1,103 @@
+"""A warmed, term-cached index answers from driver memory: its results are
+``Hits`` (a driver-side Arrow table) that collect without a single py4j
+call, carry exactly the unwarmed (Spark) path's rows, and become a Spark
+DataFrame only when the caller composes them with Spark."""
+
+from __future__ import annotations
+
+import sys
+import threading
+from contextlib import contextmanager
+
+from pyspark.sql import functions as F
+
+from fluent_plugin_elasticsearch_spark.operators.search import Hits, InvertedIndex, to_es_response
+
+QUERIES = ["the data", "data query", "zzznope"]  # the last is absent
+
+
+@contextmanager
+def _py4j_commands(spark):
+    """Record every command the Python side sends to the JVM gateway."""
+    client = spark.sparkContext._gateway._gateway_client
+    send, sent = client.send_command, []
+
+    def counting(command, *args, **kwargs):
+        sent.append(command)
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        yield sent
+    finally:
+        del client.send_command
+
+
+def _typed(rows) -> list:
+    """Rows as (field names, values, value types): equal only when the
+    two results agree in field order, Python types and values."""
+    return [(tuple(r.__fields__), tuple(r), tuple(type(v) for v in r)) for r in rows]
+
+
+def _requests(idx: InvertedIndex) -> dict:
+    out = {}
+    for q in QUERIES:
+        for mode in ("auto", "wand", "exhaustive"):
+            out[q, mode] = _typed(idx.search(q, k=5, mode=mode).collect())
+        out[q, "phrase"] = _typed(idx.match_phrase(q, k=5).collect())
+    out["batch"] = sorted(_typed(idx.search_batch(dict(enumerate(QUERIES)), k=5).collect()))
+    out["es"] = to_es_response(idx.search("data query", k=5))
+    return out
+
+
+def test_warm_queries_make_no_jvm_call(spark, pos_index):
+    """search (auto, wand, exhaustive, an absent term), search_batch,
+    match_phrase and to_es_response on a warmed, term-cached index send
+    no command to the JVM, and their rows equal the unwarmed index's in
+    value, type and field order."""
+    warm_idx = InvertedIndex(spark, pos_index, cache_term_stats=True).warm()
+    with _py4j_commands(spark) as sent:
+        got = _requests(warm_idx)
+    assert sent == []
+    with _py4j_commands(spark) as sent:
+        want = _requests(InvertedIndex(spark, pos_index))
+    assert sent  # the unwarmed path's Spark calls are seen
+    assert got == want
+    assert got["data query", "auto"] and got["zzznope", "auto"] == []
+    assert got["es"]["hits"]["total"]["value"] == 5
+
+
+def test_warm_hits_compose_with_spark(spark, index_dir):
+    """A warmed result used as a DataFrame (search_with_urls, a broadcast
+    join, a column reference) gives the unwarmed rows, over one lazily
+    built LocalTableScan shared by concurrent callers."""
+    warm_idx = InvertedIndex(spark, index_dir, cache_term_stats=True).warm()
+    cold = InvertedIndex(spark, index_dir)
+    assert (warm_idx.search_with_urls("the baba", k=5).collect()
+            == cold.search_with_urls("the baba", k=5).collect())
+
+    def composed(idx):
+        hits = idx.search("of and to", k=5)
+        joined = (idx.docmap().join(F.broadcast(hits), "doc_id")
+                  .orderBy(F.desc("score"), F.asc("doc_id")).collect())
+        return joined, hits.select(hits["score"]).collect()
+
+    assert composed(warm_idx) == composed(cold)
+
+    hits = warm_idx.search("of and to", k=5)
+    assert isinstance(hits, Hits)
+    frames = []
+    threads = [threading.Thread(target=lambda: frames.append(hits._frame())) for _ in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # interleave the callers finely
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert len(frames) == 8 and all(f is frames[0] for f in frames)
+    plan = hits._jdf.queryExecution().executedPlan().toString()
+    assert plan.startswith("LocalTableScan")
