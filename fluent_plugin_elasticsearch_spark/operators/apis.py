@@ -316,10 +316,13 @@ def reindex(source: DataFrame, dest, body: dict | None = None) -> dict:
     dest.op_type "index" (default: upsert — existing ids overwritten) or
     "create" (only ids absent from dest land; conflicts are skipped,
     ES's conflicts=proceed). `dest` is a sinks.cow_table.CowTable; the
-    write rewrites only touched buckets. `script` raises — per-record
-    painless is the reference's T13 anti-pattern; use `pipeline`.
-    Returns {"total", "created", "updated"} (exact, from frame counts —
-    coordinator-sized scalars)."""
+    op_type is its upsert op, whose write_ops rule runs on the touched
+    buckets of the snapshot it commits against. `script` raises —
+    per-record painless is the reference's T13 anti-pattern; use
+    `pipeline`. Returns {"total", "created", "updated"}: `created` is
+    the growth of dest's row count across the write (exact when no
+    other writer commits meanwhile), `updated` the rest of an index
+    write."""
     from ..plans.query_ast import UnsupportedQuery, _compile_clause
 
     body = dict(body or {})
@@ -349,16 +352,11 @@ def reindex(source: DataFrame, dest, body: dict | None = None) -> dict:
     if not dest.exists():
         dest.create(df)
         return {"total": total, "created": total, "updated": 0}
-    existing = dest.read().select(dest.id_col)
-    if op_type == "create":
-        batch = df.join(existing, dest.id_col, "left_anti")
-        created = batch.count()
-        if created:
-            dest.upsert(batch)
-        return {"total": total, "created": created, "updated": 0}
-    created = df.join(existing, dest.id_col, "left_anti").count()
-    dest.upsert(df)
-    return {"total": total, "created": created, "updated": total - created}
+    before = dest.read().count()
+    dest.upsert(df, op=op_type)
+    created = dest.read().count() - before
+    return {"total": total, "created": created,
+            "updated": 0 if op_type == "create" else total - created}
 
 
 def downsample(df: DataFrame, fixed_interval: str, dims: list[str],

@@ -1,29 +1,45 @@
-"""Copy-on-write bucketed table — transactional-style upserts WITHOUT a
-full-table rewrite per batch.
+"""Copy-on-write bucketed table — per-id upserts and deletes that rewrite
+only the buckets they touch, committed as atomic manifest snapshots.
 
-The reference gets per-document transactional upserts from Elasticsearch
-(out_elasticsearch.rb:761-784); the plain-parquet MERGE emulations in
-``sinks/write_ops.py`` are value-correct but rewrite the whole target per
-batch — the disclosed scale seam (VERDICT r3 "missing" #1). This module
-closes it with the same mechanism Iceberg/Delta use, sized to what the
-sandbox image allows (no table-format jar ships here):
+The reference gets per-document `index`/`create`/`update` from
+Elasticsearch (out_elasticsearch.rb:761-784); the plain-parquet MERGE
+emulations in ``sinks/write_ops.py`` rewrite their whole target. This
+table applies the same ``write_ops`` rules to the touched buckets only,
+with the mechanism Iceberg/Delta use, sized to what the sandbox image
+allows (no table-format jar ships here):
 
   * rows are hash-bucketed on the id (``pmod(xxhash64(id), n_buckets)``);
     each bucket's current data lives in one immutable directory
-  * a JSON **manifest** names the current directory per bucket — the
-    table state IS the manifest (Iceberg's snapshot file list)
-  * ``upsert``/``delete_where`` rewrite ONLY the buckets whose rows are
-    touched, into a fresh generation directory, then swap the manifest
-    atomically (write-temp + ``os.replace``) — a micro-batch over a
-    100 TB table costs O(|batch| / n_buckets · table) I/O, not O(table)
-  * readers load the manifest once and union the named directories —
-    snapshot isolation: a swap after the read plan is built is invisible
-    (old generation dirs are retained until ``vacuum``)
+  * a JSON **manifest** names the current directory per bucket, the
+    bucket count and the table schema — the table state IS the manifest
+    (Iceberg's snapshot file list); ``read()`` unions the named
+    directories with the recorded schema, so it infers nothing and (up to
+    Spark's 32-path parallel-listing threshold) starts no Spark job; a
+    plan built before a later swap keeps reading its snapshot (old
+    directories are retained until ``vacuum``)
 
-Single-writer by design, like the reference's one output-plugin instance
-per index; concurrent writers need a real lock service (or the Iceberg
-jar — ``sinks/write_ops.py`` documents the 1:1 MERGE mapping for when the
-environment provides it).
+**One transaction.** ``upsert``, ``delete_where``, ``delete_ids`` and
+``compact`` each hand :meth:`_transact` a plan: given the pinned
+manifest, the touched buckets and their new rows.  The transaction
+stages those rows under a fresh uuid directory (partitioned by bucket,
+hashed with the pinned — or, for ``compact``, the new — bucket count),
+then :meth:`_commit_buckets` checks that every touched bucket still
+names the directory the plan read and swaps them.  A concurrent commit
+on an overlapping bucket raises :class:`CommitConflict` and the plan
+reruns on the new snapshot, up to ``max_retries`` times.  A crash at
+any point leaves the old manifest or the new one; the staged directory
+of an attempt that never committed is an orphan ``vacuum`` removes.
+
+**One manifest writer.** Every manifest write (``create``, each commit,
+``vacuum``) goes through :meth:`_write_manifest`: under the commit lock
+it loads the current manifest, applies the change, writes a temp file
+and ``os.replace``-s it.  The lock is a file created with
+``os.link`` (create-if-absent, atomic on POSIX) holding its owner's
+unique token.  A lock older than ``stale_secs`` is a crashed holder's:
+a waiter moves it aside with ``os.rename`` to a unique name and keeps it
+broken only if the moved file is the one it judged stale; otherwise it
+links it back.  A holder releases the lock only while it holds its own
+token.
 """
 
 from __future__ import annotations
@@ -37,8 +53,9 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
-from .write_ops import dedup_latest
+from .write_ops import MERGE_OPS, dedup_latest
 
 _MANIFEST = "manifest.json"
 _LOCK = "_commit.lock"
@@ -51,6 +68,54 @@ class CommitConflict(RuntimeError):
     it escapes only when retries are exhausted."""
 
 
+def _result(generation: int, touched) -> dict:
+    return {"generation": generation,
+            "touched_buckets": sorted(int(b) for b in touched)}
+
+
+def _try_create_lock(lockp: str, token: str) -> bool:
+    """Create the lock file already holding ``token``: write a private
+    temp file, then ``os.link`` it to the lock path (fails if present)."""
+    tmp = f"{lockp}.{uuid.uuid4().hex}"
+    with open(tmp, "w") as f:
+        f.write(token)
+    try:
+        os.link(tmp, lockp)
+        return True
+    except FileExistsError:
+        return False
+    finally:
+        os.unlink(tmp)
+
+
+def _break_if_stale(lockp: str, stale_secs: float) -> bool:
+    """True when the caller should retry creating the lock at once (the
+    lock is gone, or was stale and is now broken)."""
+    try:
+        with open(lockp) as f:
+            seen = f.read()
+            age = time.time() - os.fstat(f.fileno()).st_mtime
+    except FileNotFoundError:
+        return True
+    if age <= stale_secs:
+        return False
+    grave = f"{lockp}.stale-{uuid.uuid4().hex}"
+    try:
+        os.rename(lockp, grave)
+    except FileNotFoundError:
+        return True  # another waiter broke it first
+    with open(grave) as f:
+        if f.read() != seen:
+            # a live holder's lock replaced the stale one after it was
+            # read here: put it back rather than enter beside its holder
+            # (if a third lock was created in this one-rename window, the
+            # displaced holder's release still leaves that lock alone)
+            with contextlib.suppress(FileExistsError):
+                os.link(grave, lockp)
+    os.unlink(grave)
+    return True
+
+
 class CowTable:
     """Bucketed copy-on-write table rooted at ``path``."""
 
@@ -59,266 +124,227 @@ class CowTable:
         self.spark = spark
         self.path = path
         self.id_col = id_col
-        self.n_buckets = n_buckets
-        mf = self._manifest_path()
-        if os.path.exists(mf):
-            m = self._load_manifest()
-            self.id_col = m["id_col"]
-            self.n_buckets = m["n_buckets"]
+        self._create_buckets = n_buckets
+        if self.exists():
+            self.id_col = self._load_manifest()["id_col"]
+
+    @property
+    def n_buckets(self) -> int:
+        """The current snapshot's bucket count (before ``create``, the
+        count it will use)."""
+        if self.exists():
+            return self._load_manifest()["n_buckets"]
+        return self._create_buckets
 
     # --- manifest ---------------------------------------------------------
 
     def _manifest_path(self) -> str:
         return os.path.join(self.path, _MANIFEST)
 
-    def _load_manifest(self) -> dict:
-        with open(self._manifest_path()) as f:
-            m = json.load(f)
-        # Keep the hash modulus in lockstep with the snapshot just read
-        # (ADVICE r6): a concurrent compact(target_buckets=...) changes
-        # n_buckets; a retry loop that reloaded the manifest but hashed
-        # with the stale modulus would compute wrong touched-bucket sets
-        # and commit rows into buckets that don't match their id hash —
-        # silently missed/duplicated docs on later bucket-pruned reads.
-        nb = m.get("n_buckets")
-        if nb is not None and nb != self.n_buckets:
-            self.n_buckets = nb
-        return m
-
-    def _swap_manifest(self, m: dict) -> None:
-        """Atomic snapshot swap: temp write + os.replace (POSIX rename)."""
-        tmp = self._manifest_path() + f".tmp{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(m, f, indent=1)
-        os.replace(tmp, self._manifest_path())
-
-    # --- concurrent-writer commit protocol --------------------------------
-
-    @contextlib.contextmanager
-    def _commit_lock(self, timeout: float = 60.0, stale_secs: float = 300.0):
-        """Advisory commit lock: O_CREAT|O_EXCL is atomic on POSIX (and on
-        HDFS/many object stores via create-if-absent).  Held only for the
-        manifest validate+swap — never across a Spark job — so contention
-        is microseconds even under heavy writers.  A lock file older than
-        ``stale_secs`` is a crashed committer's and is broken."""
-        lockp = os.path.join(self.path, _LOCK)
-        deadline = time.monotonic() + timeout
-        while True:
-            try:
-                fd = os.open(lockp, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                break
-            except FileExistsError:
-                try:
-                    if time.time() - os.path.getmtime(lockp) > stale_secs:
-                        os.unlink(lockp)
-                        continue
-                except FileNotFoundError:
-                    continue  # holder just released — retry immediately
-                if time.monotonic() > deadline:
-                    raise TimeoutError(
-                        f"commit lock at {lockp} not released in {timeout}s")
-                time.sleep(0.02)
-        try:
-            os.write(fd, f"pid={os.getpid()}\n".encode())
-            os.close(fd)
-            yield
-        finally:
-            with contextlib.suppress(FileNotFoundError):
-                os.unlink(lockp)
-
-    def _commit_buckets(self, base_dirs: dict[str, str],
-                        gen_rel: str) -> dict:
-        """Optimistic commit (Iceberg's validate-from-snapshot): under the
-        advisory lock, verify every touched bucket still points at the
-        directory this writer's merge READ; if so, swap those entries to
-        the new generation dir.  Writers touching DISJOINT buckets commit
-        concurrently with no conflict; an overlap raises
-        :class:`CommitConflict` and the caller re-merges from the new
-        snapshot (the loser's staging dir becomes a vacuum-swept orphan)."""
-        with self._commit_lock():
-            m = self._load_manifest()
-            moved = [b for b, d in base_dirs.items() if m["buckets"][b] != d]
-            if moved:
-                raise CommitConflict(
-                    f"buckets {sorted(moved)} were committed by another "
-                    f"writer since this merge's snapshot")
-            gen = m["generation"] + 1
-            retired = [m["buckets"][b] for b in base_dirs]
-            for b in base_dirs:
-                m["buckets"][b] = f"{gen_rel}/__bucket={b}"
-            m["generation"] = gen
-            m["retired"] = m.get("retired", []) + retired
-            m["updated_utc"] = time.strftime("%Y-%m-%dT%H:%M:%SZ",
-                                             time.gmtime())
-            self._swap_manifest(m)
-            return {"generation": gen,
-                    "touched_buckets": sorted(int(b) for b in base_dirs)}
-
     def exists(self) -> bool:
         return os.path.exists(self._manifest_path())
 
-    # --- helpers ----------------------------------------------------------
+    def _load_manifest(self) -> dict:
+        with open(self._manifest_path()) as f:
+            m = json.load(f)
+        if "schema" not in m:
+            raise ValueError(f"{self._manifest_path()} has no 'schema' key (written before "
+                             f"tables recorded their schema); recreate the table")
+        return m
 
-    def _bucket_col(self):
+    @contextlib.contextmanager
+    def _commit_lock(self, timeout: float = 60.0, stale_secs: float = 300.0):
+        """Advisory commit lock (protocol in the module docstring).  Held
+        only for a manifest write — never across a Spark job."""
+        lockp = os.path.join(self.path, _LOCK)
+        token = f"pid={os.getpid()} {uuid.uuid4().hex}\n"
+        deadline = time.monotonic() + timeout
+        while not _try_create_lock(lockp, token):
+            if _break_if_stale(lockp, stale_secs):
+                continue
+            if time.monotonic() > deadline:
+                raise TimeoutError(f"commit lock at {lockp} not released in {timeout}s")
+            time.sleep(0.02)
+        try:
+            yield
+        finally:
+            with contextlib.suppress(FileNotFoundError), open(lockp) as f:
+                if f.read() == token:
+                    os.unlink(lockp)
+
+    def _write_manifest(self, update) -> dict:
+        """The one manifest writer: under the commit lock, ``update`` maps
+        the current manifest (None before ``create``) to the next one,
+        which is written to a temp file and swapped in with ``os.replace``."""
+        with self._commit_lock():
+            m = update(self._load_manifest() if self.exists() else None)
+            m["updated_utc"] = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
+            tmp = self._manifest_path() + f".tmp{os.getpid()}"
+            with open(tmp, "w") as f:
+                json.dump(m, f, indent=1)
+            os.replace(tmp, self._manifest_path())
+        return m
+
+    def _commit_buckets(self, base_dirs: dict[str, str],
+                        new_dirs: dict[str, str]) -> dict:
+        """Optimistic commit (Iceberg's validate-from-snapshot): every
+        bucket in ``base_dirs`` must still name the directory the plan
+        read; those entries are retired and ``new_dirs`` take their place.
+        Writers touching disjoint buckets commit without conflict."""
+        def swap(m):
+            moved = sorted(b for b, d in base_dirs.items() if m["buckets"].get(b) != d)
+            if moved:
+                raise CommitConflict(f"buckets {moved} were committed by another "
+                                     f"writer since this plan's snapshot")
+            buckets = {b: d for b, d in m["buckets"].items() if b not in base_dirs}
+            buckets.update(new_dirs)
+            m["buckets"] = {str(b): buckets[str(b)] for b in range(len(buckets))}
+            m["n_buckets"] = len(buckets)
+            m["generation"] += 1
+            m["retired"] = m["retired"] + list(base_dirs.values())
+            return m
+
+        return _result(self._write_manifest(swap)["generation"], new_dirs)
+
+    # --- staging and the transaction --------------------------------------
+
+    def _bucket_col(self, n_buckets: int):
         return F.pmod(F.xxhash64(F.col(self.id_col).cast("string")),
-                      F.lit(self.n_buckets)).cast("int")
+                      F.lit(n_buckets)).cast("int")
 
-    def _new_gen_rel(self, gen: int) -> str:
-        """Unique staging dir per write ATTEMPT, not per generation number.
+    def _buckets_of(self, df: DataFrame, n_buckets: int) -> list[int]:
+        rows = (df.select(self._bucket_col(n_buckets).alias("__b"))
+                .distinct().collect())  # bounded: ≤ n_buckets ints
+        return sorted(r["__b"] for r in rows)
 
-        A deterministic ``gen=N`` dir is unsafe under retry: if a writer
-        crashes between the parquet write and the manifest swap, a
-        redelivered micro-batch (foreachBatch effectively-once) recomputes
-        the same N and ``mode('append')`` would duplicate every row in the
-        touched buckets.  A fresh uuid token per attempt makes the write
-        idempotent — the crashed attempt's dir is an orphan no manifest
-        names, swept by ``vacuum``.
-        """
-        return os.path.join("data", f"gen={gen}-{uuid.uuid4().hex[:12]}")
+    def _stage(self, rows: DataFrame, n_buckets: int, gen: int,
+               sort_by: list[str] | None = None) -> str:
+        """Write ``rows`` partitioned by bucket into a fresh directory and
+        return its table-relative path.  The directory is unique per write
+        ATTEMPT (uuid), so a redelivered batch after a crash between this
+        write and the manifest swap never appends into the crashed
+        attempt's files."""
+        rel = os.path.join("data", f"gen={gen}-{uuid.uuid4().hex[:12]}")
+        tagged = rows.withColumn("__bucket", self._bucket_col(n_buckets))
+        if sort_by:
+            tagged = (tagged.repartition("__bucket")
+                      .sortWithinPartitions("__bucket", *sort_by))
+        tagged.write.partitionBy("__bucket").parquet(os.path.join(self.path, rel))
+        return rel
 
-    def _write_buckets(self, df: DataFrame, gen_rel: str) -> None:
-        """Write df (with __bucket) partitioned by bucket into gen dir."""
-        (df.write.mode("append").partitionBy("__bucket")
-         .parquet(os.path.join(self.path, gen_rel)))
+    def _transact(self, plan, max_retries: int,
+                  sort_by: list[str] | None = None) -> dict:
+        """The one mutation path. ``plan(m)`` returns (touched buckets of
+        the pinned manifest ``m``, their new rows, the bucket count to hash
+        them with); a new count replaces every bucket (``compact``)."""
+        for attempt in range(max_retries + 1):
+            m = self._load_manifest()
+            touched, rows, n = plan(m)
+            if not touched:
+                return _result(m["generation"], [])
+            rel = self._stage(rows, n, m["generation"] + 1, sort_by)
+            base_dirs = {str(b): m["buckets"][str(b)] for b in touched}
+            new = touched if n == m["n_buckets"] else range(n)
+            try:
+                return self._commit_buckets(
+                    base_dirs, {str(b): f"{rel}/__bucket={b}" for b in new})
+            except CommitConflict:
+                if attempt == max_retries:
+                    raise
+                # the staged dir is an orphan → swept by vacuum()
 
     # --- API --------------------------------------------------------------
 
     def create(self, df: DataFrame) -> dict:
-        """Initialize the table from a DataFrame (generation 0)."""
+        """Initialize the table from a DataFrame (generation 0), recording
+        its schema (every field nullable) in the manifest."""
         if self.exists():
             raise ValueError(f"table already exists at {self.path}")
         os.makedirs(self.path, exist_ok=True)
-        df = dedup_latest(df, self.id_col)
-        tagged = df.withColumn("__bucket", self._bucket_col())
-        gen_rel = self._new_gen_rel(0)
-        self._write_buckets(tagged, gen_rel)
-        m = {
-            "id_col": self.id_col, "n_buckets": self.n_buckets,
-            "generation": 0, "columns": df.columns,
-            "buckets": {str(b): f"{gen_rel}/__bucket={b}"
-                        for b in range(self.n_buckets)},
-            "retired": [],
-            "updated_utc": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        }
-        with self._commit_lock():
-            if self.exists():  # lost the create race — data dir is an orphan
+        n = self._create_buckets
+        rel = self._stage(dedup_latest(df, self.id_col), n, 0)
+        schema = StructType([StructField(f.name, f.dataType, True, f.metadata)
+                             for f in df.schema])
+
+        def init(m):
+            if m is not None:  # lost the create race — the staged dir is an orphan
                 raise ValueError(f"table already exists at {self.path}")
-            self._swap_manifest(m)
-        return m
+            return {"id_col": self.id_col, "n_buckets": n, "generation": 0,
+                    "schema": schema.jsonValue(),
+                    "buckets": {str(b): f"{rel}/__bucket={b}" for b in range(n)},
+                    "retired": []}
+
+        return self._write_manifest(init)
 
     def read(self, buckets: list[int] | None = None,
              manifest: dict | None = None) -> DataFrame:
-        """Current snapshot (or a pruned subset of buckets). The plan binds
-        to the directories named by the manifest AT CALL TIME — later
-        swaps don't affect it (snapshot isolation).  ``manifest`` pins an
-        already-loaded snapshot (the CAS merge path must read exactly the
-        dirs it validates at commit)."""
+        """Current snapshot (or a pruned subset of buckets), typed by the
+        recorded schema.  The plan binds to the directories named by the
+        manifest AT CALL TIME — later swaps don't affect it (snapshot
+        isolation).  ``manifest`` pins an already-loaded snapshot."""
         m = manifest if manifest is not None else self._load_manifest()
-        sel = range(self.n_buckets) if buckets is None else buckets
+        sel = range(m["n_buckets"]) if buckets is None else buckets
         dirs = [os.path.join(self.path, m["buckets"][str(b)]) for b in sel]
-        dirs = [d for d in dirs if os.path.exists(d)]
-        if not dirs:
-            return self.spark.createDataFrame(
-                [], ", ".join(f"`{c}` string" for c in m["columns"]))
-        return self.spark.read.parquet(*dirs).select(*m["columns"])
+        return (self.spark.read.schema(StructType.fromJson(m["schema"]))
+                .parquet(*[d for d in dirs if os.path.exists(d)]))
 
-    def _touched_buckets(self, batch: DataFrame) -> list[int]:
-        rows = (batch.select(self._bucket_col().alias("__b"))
-                .distinct().collect())  # bounded: ≤ n_buckets ints
-        return sorted(r["__b"] for r in rows)
-
-    def upsert(self, batch: DataFrame, insert_missing: bool = True,
+    def upsert(self, batch: DataFrame, op: str = "index",
                max_retries: int = 3) -> dict:
-        """MERGE the batch by id, rewriting ONLY the touched buckets.
-        insert_missing=False gives ES `update` (existing docs only);
-        True gives `index`/`upsert` (replace-or-insert).
+        """Apply the ``write_ops`` rule ``op`` to the batch's touched
+        buckets: ``"index"`` replaces or inserts each id, ``"create"``
+        inserts only ids absent from the table (present ones keep their
+        row), ``"update"`` changes existing ids only, and a null cell in
+        the batch keeps the stored value (ES partial update).  The batch
+        is cast to the recorded schema.  Concurrent-writer safe: a
+        conflicting commit reruns the merge on the new snapshot, so both
+        batches land exactly once (Iceberg optimistic concurrency / ES
+        per-doc versioned upserts, out_elasticsearch.rb:761-784)."""
+        if op not in MERGE_OPS:
+            raise ValueError(f"unknown write op {op!r}; expected one of {sorted(MERGE_OPS)}")
 
-        Concurrent-writer safe: the merge is computed against a pinned
-        snapshot, staged to a fresh uuid dir, and committed via
-        :meth:`_commit_buckets` (validate-then-swap under the advisory
-        lock).  A conflicting commit on an overlapping bucket triggers a
-        re-merge from the NEW snapshot — both batches land exactly once,
-        like Iceberg optimistic concurrency / ES per-doc versioned
-        upserts (out_elasticsearch.rb:761-784)."""
-        for attempt in range(max_retries + 1):
-            m = self._load_manifest()
-            b = dedup_latest(batch.select(*m["columns"]), self.id_col)
-            touched = self._touched_buckets(b)
-            if not touched:
-                # stable return shape for stats.update() callers (ADVICE r4)
-                return {"generation": m["generation"], "touched_buckets": []}
-            gen_rel = self._new_gen_rel(m["generation"] + 1)
-            current = self.read(buckets=touched, manifest=m)
-            keep = current.join(b.select(self.id_col), self.id_col, "left_anti")
-            merged = keep.unionByName(b) if insert_missing else keep.unionByName(
-                b.join(current.select(self.id_col), self.id_col, "left_semi"))
-            self._write_buckets(
-                merged.withColumn("__bucket", self._bucket_col()), gen_rel)
-            base_dirs = {str(t): m["buckets"][str(t)] for t in touched}
-            try:
-                return self._commit_buckets(base_dirs, gen_rel)
-            except CommitConflict:
-                if attempt == max_retries:
-                    raise
-                # loser's staging dir is an orphan → swept by vacuum()
+        def plan(m):
+            n = m["n_buckets"]
+            b = batch.select(*[F.col(f.name).cast(f.dataType).alias(f.name)
+                               for f in StructType.fromJson(m["schema"])])
+            touched = self._buckets_of(b, n)
+            return touched, MERGE_OPS[op](self.read(touched, m), b, self.id_col), n
 
-    def _rewrite_touched(self, m: dict, touched: list[int],
-                         survivors: DataFrame) -> dict:
-        """Stage survivors for ``touched`` and CAS-commit against the
-        snapshot ``m`` they were computed from."""
-        gen_rel = self._new_gen_rel(m["generation"] + 1)
-        self._write_buckets(
-            survivors.withColumn("__bucket", self._bucket_col()), gen_rel)
-        base_dirs = {str(b): m["buckets"][str(b)] for b in touched}
-        return self._commit_buckets(base_dirs, gen_rel)
+        return self._transact(plan, max_retries)
 
     def delete_where(self, predicate, max_retries: int = 3) -> dict:
         """DELETE FROM … WHERE predicate — rewrites only buckets that
         contain at least one matching row.  The find-hits scan reads all
         buckets (an arbitrary predicate can match anywhere); when deleting
         by id, use :meth:`delete_ids`, which prunes the scan itself."""
-        for attempt in range(max_retries + 1):
-            m = self._load_manifest()
-            hit_rows = (self.read(manifest=m).filter(predicate)
-                        .select(self._bucket_col().alias("__b")).distinct().collect())
-            touched = sorted(r["__b"] for r in hit_rows)
-            if not touched:
-                return {"generation": m["generation"], "touched_buckets": []}
-            survivors = self.read(buckets=touched, manifest=m).filter(
-                ~F.coalesce(predicate, F.lit(False)))
-            try:
-                return self._rewrite_touched(m, touched, survivors)
-            except CommitConflict:
-                if attempt == max_retries:
-                    raise
+        def plan(m):
+            n = m["n_buckets"]
+            touched = self._buckets_of(self.read(manifest=m).filter(predicate), n)
+            return (touched, self.read(touched, m).filter(
+                ~F.coalesce(predicate, F.lit(False))), n)
+
+        return self._transact(plan, max_retries)
 
     def delete_ids(self, ids: list, max_retries: int = 3) -> dict:
         """DELETE by id list.  The bucket of every id is known from the
-        hash alone, so ONLY touched buckets are scanned — no full-table
-        find-hits pass (closes the delete_where scan seam for the common
-        ES delete-by-_id case, ``out_elasticsearch.rb`` op ``delete``)."""
-        if not ids:
-            m = self._load_manifest()
-            return {"generation": m["generation"], "touched_buckets": []}
+        hash alone, so ONLY touched buckets are scanned (ES delete-by-_id,
+        ``out_elasticsearch.rb`` op ``delete``)."""
         # the id frame is string-typed; joining it straight onto a bigint
         # id column would coerce BOTH sides to double (ids >= 2^53 silently
         # stop matching — ADVICE r5).  Join on an explicit cast(id as
         # string) instead, the same representation _bucket_col hashes.
         id_df = self.spark.createDataFrame(
             [(str(i),) for i in ids], "`__del_id` string")
-        for attempt in range(max_retries + 1):
-            m = self._load_manifest()
-            touched = self._touched_buckets(
-                id_df.withColumnRenamed("__del_id", self.id_col))
-            survivors = self.read(buckets=touched, manifest=m).join(
+
+        def plan(m):
+            n = m["n_buckets"]
+            touched = self._buckets_of(
+                id_df.withColumnRenamed("__del_id", self.id_col), n)
+            return touched, self.read(touched, m).join(
                 F.broadcast(id_df),
                 F.col(self.id_col).cast("string") == F.col("__del_id"),
-                "left_anti")
-            try:
-                return self._rewrite_touched(m, touched, survivors)
-            except CommitConflict:
-                if attempt == max_retries:
-                    raise
+                "left_anti"), n
+
+        return self._transact(plan, max_retries)
 
     def compact(self, target_buckets: int | None = None,
                 max_retries: int = 3,
@@ -331,48 +357,15 @@ class CowTable:
         (ES index sorting / Iceberg's sort-order rewrite): parquet
         row-group min/max stats on the sort columns become tight ranges,
         so subsequent range/equality scans on those columns prune row
-        groups instead of reading whole buckets — the read-side payoff
-        that makes periodic compaction worth its write cost at scale.
-        The sort is a repartition-by-bucket + partition-local sort (one
-        shuffle, no global order). Commits via the same
-        validate-then-swap protocol as upsert: a concurrent writer
-        landing ANY bucket mid-compaction conflicts (compaction touches
-        every bucket) and the compaction re-reads and retries."""
-        for attempt in range(max_retries + 1):
-            m = self._load_manifest()
-            base = dict(m["buckets"])
-            all_rows = self.read(manifest=m)
-            n_new = target_buckets if target_buckets is not None else m["n_buckets"]
-            self.n_buckets = n_new
-            gen_rel = self._new_gen_rel(m["generation"] + 1)
-            tagged = all_rows.withColumn("__bucket", self._bucket_col())
-            if sort_by:
-                tagged = (tagged.repartition("__bucket")
-                          .sortWithinPartitions("__bucket", *sort_by))
-            self._write_buckets(tagged, gen_rel)
-            try:
-                with self._commit_lock():
-                    # _load_manifest syncs self.n_buckets to the CURRENT
-                    # manifest; this compact is about to replace it with
-                    # n_new, so re-pin after the check
-                    cur = self._load_manifest()
-                    self.n_buckets = n_new
-                    if cur["buckets"] != base:
-                        raise CommitConflict("table changed during compact")
-                    cur["n_buckets"] = n_new
-                    cur["buckets"] = {str(b): f"{gen_rel}/__bucket={b}"
-                                      for b in range(n_new)}
-                    cur["generation"] = m["generation"] + 1
-                    cur["retired"] = cur.get("retired", []) + list(base.values())
-                    cur["updated_utc"] = time.strftime(
-                        "%Y-%m-%dT%H:%M:%SZ", time.gmtime())
-                    self._swap_manifest(cur)
-                    return {"generation": cur["generation"],
-                            "touched_buckets": list(range(n_new))}
-            except CommitConflict:
-                self.n_buckets = m["n_buckets"]  # restore until a retry wins
-                if attempt == max_retries:
-                    raise
+        groups instead of reading whole buckets.  The sort is a
+        repartition-by-bucket + partition-local sort (one shuffle, no
+        global order).  Compaction touches every bucket, so any commit
+        that lands mid-compaction conflicts and the compaction reruns."""
+        def plan(m):
+            return (list(range(m["n_buckets"])), self.read(manifest=m),
+                    target_buckets or m["n_buckets"])
+
+        return self._transact(plan, max_retries, sort_by)
 
     def vacuum(self) -> int:
         """Drop retired generation directories AND orphan staging dirs
@@ -380,19 +373,20 @@ class CowTable:
         Breaks snapshot isolation for still-running readers of OLD
         snapshots AND would sweep a concurrent writer's not-yet-committed
         staging dir as an orphan — call when quiesced, like Iceberg's
-        expire_snapshots.  The manifest update itself is lock-protected so
-        it can never clobber a commit that lands mid-vacuum."""
-        with self._commit_lock():
-            m = self._load_manifest()
-            retired, m["retired"] = m.get("retired", []), []
-            self._swap_manifest(m)
+        expire_snapshots.  The manifest update goes through the locked
+        writer, so it can never clobber a commit that lands mid-vacuum."""
+        retired = []
+
+        def clear(m):
+            retired.extend(m["retired"])
+            m["retired"] = []
+            return m
+
+        live = set(self._write_manifest(clear)["buckets"].values())
         n = 0
-        live = set(m["buckets"].values())
         for rel in retired:
-            if rel in live:
-                continue
             p = os.path.join(self.path, rel)
-            if os.path.exists(p):
+            if rel not in live and os.path.exists(p):
                 shutil.rmtree(p)
                 n += 1
         # orphan sweep: any data/gen=* dir no live bucket points into
@@ -400,8 +394,7 @@ class CowTable:
         data_root = os.path.join(self.path, "data")
         if os.path.isdir(data_root):
             for name in os.listdir(data_root):
-                rel = os.path.join("data", name)
-                if rel not in live_gen_dirs:
+                if os.path.join("data", name) not in live_gen_dirs:
                     shutil.rmtree(os.path.join(data_root, name))
                     n += 1
         return n

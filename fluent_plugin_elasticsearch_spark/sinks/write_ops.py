@@ -3,12 +3,11 @@ write ops `index` / `create` / `update` / `upsert`
 (append_record_to_messages out_elasticsearch.rb:747-765, update_body
 :770-784, op constants elasticsearch_constants.rb:5-8; SURVEY.md K2-K6).
 
-Implemented as MERGE-style dataflows. Without a transactional table format
-in the sandbox (no Iceberg/Delta jar), MERGE is emulated with the standard
-anti-join + union + window plan; on Iceberg these map 1:1 onto
-``MERGE INTO`` clauses (documented per function). All are pure DataFrame
-ops — joins broadcast when the incoming batch is small (the common
-streaming case), so the target table is never shuffled unnecessarily.
+MERGE-style dataflows (anti-join + union + window); on Iceberg each maps 1:1
+onto ``MERGE INTO`` clauses (documented per function). ``sinks/cow_table``
+applies ``MERGE_OPS`` to the touched buckets of its table. Joins broadcast
+when the incoming batch is small (the common streaming case), so the target
+table is never shuffled unnecessarily.
 """
 
 from __future__ import annotations
@@ -57,14 +56,20 @@ def op_create(target: DataFrame, batch: DataFrame, id_col: str,
     """`create` op (K3): insert-only. Records without an id are dropped
     (emit_error_for_missing_id=false path, out_elasticsearch.rb:146,912-916);
     duplicates of existing ids are rejected like ES 409s — counted, not
-    retried (elasticsearch_error_handler.rb:95-96).
-    Returns (new_target, rejected_duplicates)."""
+    retried (elasticsearch_error_handler.rb:95-96). Returns (new_target, rejected_duplicates)."""
+    fresh, dup = create_split(target, batch, id_col, drop_missing_id)
+    return target.unionByName(fresh), dup
+
+
+def create_split(target: DataFrame, batch: DataFrame, id_col: str,
+                 drop_missing_id: bool = True) -> tuple[DataFrame, DataFrame]:
+    """`create`'s (fresh rows to insert, rejected duplicates): one row per
+    id, split on presence in ``target`` — what an append-only sink writes."""
     if drop_missing_id:
         batch = batch.filter(F.col(id_col).isNotNull())
     batch = dedup_latest(batch, id_col)
-    dup = batch.join(target.select(id_col), id_col, "left_semi")
-    fresh = batch.join(target.select(id_col), id_col, "left_anti")
-    return target.unionByName(fresh), dup
+    ids = target.select(id_col)
+    return batch.join(ids, id_col, "left_anti"), batch.join(ids, id_col, "left_semi")
 
 
 def op_update(target: DataFrame, batch: DataFrame, id_col: str,
@@ -106,9 +111,12 @@ def op_upsert(target: DataFrame, batch: DataFrame, id_col: str,
     updated = op_update(target, batch, id_col,
                         remove_keys_on_update=remove_keys_on_update,
                         small_batch=small_batch)
-    fresh = batch.join(target.select(id_col), id_col, "left_anti")
-    fresh = dedup_latest(fresh, id_col).select(*updated.columns)
-    return updated.unionByName(fresh)
+    fresh, _ = create_split(target, batch, id_col, drop_missing_id=False)
+    return updated.unionByName(fresh.select(*updated.columns))
+
+
+MERGE_OPS = {"index": op_index, "update": op_update,
+             "create": lambda target, batch, id_col: op_create(target, batch, id_col)[0]}
 
 
 def affinity_target_index(batch: DataFrame, docs: DataFrame, id_col: str = "doc_id",
@@ -140,6 +148,17 @@ def affinity_target_index(batch: DataFrame, docs: DataFrame, id_col: str = "doc_
 UNRECOVERABLE_TYPES = ("out_of_memory_error", "es_rejected_execution_exception")
 
 
+def _triage_class(status_col: str, error_type_col: str):
+    s = F.col(status_col)
+    return (
+        F.when((s >= 200) & (s < 300), "success")
+        .when(s == 409, "duplicate")
+        .when(F.col(error_type_col).isin(*UNRECOVERABLE_TYPES), "abort")
+        .when(s == 400, "dead_letter")
+        .otherwise("retry")
+    )
+
+
 def triage(batch_with_status: DataFrame, status_col: str = "status",
            error_type_col: str = "error_type") -> dict[str, DataFrame]:
     """K9 — per-record partial-failure triage (handle_error,
@@ -149,16 +168,7 @@ def triage(batch_with_status: DataFrame, status_col: str = "status",
     callers append retry to the next micro-batch (RetryStreamError re-emit,
     out_elasticsearch.rb:1165-1174) and persist dead_letter/duplicates to
     quarantine tables."""
-    s = F.col(status_col)
-    et = F.col(error_type_col)
-    cls = (
-        F.when((s >= 200) & (s < 300), "success")
-        .when(s == 409, "duplicate")
-        .when(et.isin(*UNRECOVERABLE_TYPES), "abort")
-        .when(s == 400, "dead_letter")
-        .otherwise("retry")
-    )
-    tagged = batch_with_status.withColumn("__class", cls)
+    tagged = batch_with_status.withColumn("__class", _triage_class(status_col, error_type_col))
     return {
         name: tagged.filter(F.col("__class") == name).drop("__class")
         for name in ("success", "duplicate", "dead_letter", "retry", "abort")
@@ -169,20 +179,8 @@ def triage_stats(batch_with_status: DataFrame, status_col: str = "status",
                  error_type_col: str = "error_type") -> DataFrame:
     """Error-stat counters (stats = Hash.new(0),
     elasticsearch_error_handler.rb:47,117,134) as a groupBy().count()."""
-    s = F.col(status_col)
-    et = F.col(error_type_col)
-    cls = (
-        F.when((s >= 200) & (s < 300), "success")
-        .when(s == 409, "duplicate")
-        .when(et.isin(*UNRECOVERABLE_TYPES), "abort")
-        .when(s == 400, "dead_letter")
-        .otherwise("retry")
-    )
-    return (
-        batch_with_status.withColumn("class", cls)
-        .groupBy("class")
-        .agg(F.count("*").alias("n"))
-    )
+    return (batch_with_status.groupBy(_triage_class(status_col, error_type_col).alias("class"))
+            .agg(F.count("*").alias("n")))
 
 
 def delete_by_query(target: DataFrame, body: dict) -> DataFrame:

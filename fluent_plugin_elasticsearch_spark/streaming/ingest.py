@@ -13,11 +13,10 @@ import os
 import time
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..functions.genid import add_genid
 from ..functions.transforms import inject_lineage, inject_timestamp, target_index
-from ..sinks.write_ops import op_create, op_index
+from ..sinks.write_ops import create_split
 
 
 class IngestPipeline:
@@ -47,8 +46,8 @@ class IngestPipeline:
         # of bulk_message_request_threshold; Iceberg: write.target-file-size)
         self.max_records_per_file = max_records_per_file
         # table_format="cow": write through the copy-on-write bucketed
-        # table (sinks/cow_table) — write_op index/create become REAL
-        # per-id merges that rewrite only touched buckets, instead of the
+        # table (sinks/cow_table) — write_op becomes CowTable.upsert's op,
+        # a per-id merge that rewrites only touched buckets, instead of the
         # append + full-table anti-join scan. Requires id_keys (merge
         # needs a doc identity).
         if table_format not in ("parquet", "cow"):
@@ -81,24 +80,16 @@ class IngestPipeline:
             if not self._cow.exists():
                 self._cow.create(docs)
                 stats.update(created=True)
-                return stats
-            if self.write_op == "create":
-                # insert-only: effectively-once under at-least-once retries
-                res = self._cow.upsert(
-                    docs.join(self._cow.read().select("doc_id"),
-                              "doc_id", "left_anti"))
-            else:  # index: replace-or-insert merge
-                res = self._cow.upsert(docs)
-            stats.update(res)
+            else:  # the write op's merge rule runs on the pinned touched buckets
+                stats.update(self._cow.upsert(docs, op=self.write_op))
             return stats
-        if self.write_op == "create" and self.id_keys and os.path.exists(path):
-            target = batch.sparkSession.read.parquet(path)
-            merged, dup = op_create(target.select(*docs.columns), docs, "doc_id")
+        if self.write_op == "create" and self.id_keys:
             # insert-only: append just the fresh rows (target untouched)
-            fresh = docs.join(target.select("doc_id"), "doc_id", "left_anti")
-            n_dup = dup.count()
+            ids = (batch.sparkSession.read.parquet(path) if os.path.exists(path)
+                   else docs.limit(0)).select("doc_id")
+            fresh, dup = create_split(ids, docs, "doc_id")
             self._writer(fresh).parquet(path)
-            stats.update(duplicates=n_dup)
+            stats.update(duplicates=dup.count())
         else:
             self._writer(docs).parquet(path)
         return stats

@@ -1,7 +1,12 @@
 """Copy-on-write bucketed table: MERGE correctness vs the full-rewrite
 emulation, touched-bucket-only rewrites, snapshot isolation, vacuum."""
 
+import json
 import os
+import subprocess
+import sys
+import threading
+import time
 
 import pytest
 from pyspark.sql import Row
@@ -9,6 +14,10 @@ from pyspark.sql import functions as F
 
 from fluent_plugin_elasticsearch_spark.sinks.cow_table import CowTable
 from fluent_plugin_elasticsearch_spark.sinks.write_ops import op_upsert
+
+
+class _Crash(Exception):
+    """A simulated process death at an injected point."""
 
 
 def _mk(spark, tmp_path, n=200, n_buckets=8):
@@ -37,7 +46,7 @@ def test_update_only_mode_skips_inserts(spark, tmp_path):
     t, _ = _mk(spark, tmp_path, n=20)
     batch = spark.createDataFrame(
         [Row(doc_id=3, v="U3", n=33), Row(doc_id=777, v="NOPE", n=0)])
-    t.upsert(batch, insert_missing=False)
+    t.upsert(batch, op="update")
     rows = {r["doc_id"]: r["v"] for r in t.read().collect()}
     assert rows[3] == "U3" and 777 not in rows and len(rows) == 20
 
@@ -113,20 +122,22 @@ def test_ingest_pipeline_cow_sink(spark, tmp_path):
         IngestPipeline(str(tmp_path / "x"), table_format="cow")  # no id_keys
 
 
-def test_retry_after_crash_does_not_duplicate(spark, tmp_path):
+def test_retry_after_crash_does_not_duplicate(spark, tmp_path, monkeypatch):
     """ADVICE r4 (medium): a crashed attempt (parquet written, manifest NOT
     swapped) followed by a redelivered retry must not duplicate rows."""
     t, _ = _mk(spark, tmp_path, n=50, n_buckets=4)
     batch = spark.createDataFrame([Row(doc_id=5, v="RETRY", n=55)])
-    # simulate the crash: do the data write exactly as upsert would,
-    # but never swap the manifest
-    m = t._load_manifest()
-    gen_rel = t._new_gen_rel(m["generation"] + 1)
-    touched = t._touched_buckets(batch)
-    current = t.read(buckets=touched)
-    keep = current.join(batch.select("doc_id"), "doc_id", "left_anti")
-    t._write_buckets(keep.unionByName(batch).withColumn("__bucket", t._bucket_col()),
-                     gen_rel)
+
+    # simulate the crash: the real upsert stages its data write, then
+    # dies before the manifest swap
+    def crash(update):
+        raise _Crash("before the manifest swap")
+
+    monkeypatch.setattr(t, "_write_manifest", crash)
+    with pytest.raises(_Crash):
+        t.upsert(batch)
+    monkeypatch.undo()
+    assert len(os.listdir(os.path.join(t.path, "data"))) == 2  # gen 0 + staged orphan
     # redelivery: the real upsert runs; unique staging dir → no collision
     t.upsert(batch)
     rows = t.read().collect()
@@ -180,7 +191,7 @@ def test_compact_coalesces_and_rebuckets(spark, tmp_path):
 
 def _bucket_of(spark, t, doc_id):
     return (spark.createDataFrame([Row(doc_id=doc_id)])
-            .select(t._bucket_col().alias("b")).collect()[0]["b"])
+            .select(t._bucket_col(t.n_buckets).alias("b")).collect()[0]["b"])
 
 
 def test_interleaved_overlapping_upserts_both_land_exactly_once(
@@ -353,3 +364,263 @@ def test_stale_handle_rehashes_after_concurrent_rebucket(spark, tmp_path):
     t2.delete_ids([0, 3, 6])
     left = {r["doc_id"] for r in t2.read().collect()}
     assert left == set(range(40)) - {0, 3, 6}
+
+
+def test_update_op_keeps_stored_value_for_null_cells(spark, tmp_path):
+    """op="update" is ES's partial update (write_ops.op_update): a null
+    cell in the batch keeps the stored value."""
+    t, _ = _mk(spark, tmp_path, n=10, n_buckets=2)
+    t.upsert(spark.createDataFrame([(3, "U3", None)], "doc_id long, v string, n long"),
+             op="update")
+    assert {r["doc_id"]: (r["v"], r["n"]) for r in t.read().collect()}[3] == ("U3", 3)
+    with pytest.raises(ValueError, match="write op"):
+        t.upsert(spark.createDataFrame([Row(doc_id=3, v="U3", n=1)]), op="upsert")
+
+
+def test_read_uses_recorded_schema(spark, tmp_path):
+    """read() types its scan with the schema the manifest records: it
+    starts no Spark job, and an empty table keeps its column types."""
+    t, df = _mk(spark, tmp_path, n=50, n_buckets=4)
+    t.upsert(spark.createDataFrame([Row(doc_id=1, v="x", n=-1)]))
+    sc = spark.sparkContext
+    group = "cow-read"
+    sc.setJobGroup(group, group)
+    try:
+        read = t.read()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert read.dtypes == df.dtypes and read.count() == 50
+    t.delete_where(F.lit(True))
+    empty = t.read()
+    assert empty.dtypes == df.dtypes and empty.count() == 0
+    # a manifest that records no schema is rejected by name
+    mf = os.path.join(t.path, "manifest.json")
+    with open(mf) as f:
+        m = json.load(f)
+    del m["schema"]
+    with open(mf, "w") as f:
+        json.dump(m, f)
+    with pytest.raises(ValueError, match="'schema'"):
+        t.read()
+
+
+def test_ingest_create_op_keeps_concurrent_writers_row(spark, tmp_path, monkeypatch):
+    """write_op="create" on the cow sink: writer B commits id X between
+    the pipeline's plan and its first commit.  The pipeline's retry
+    re-plans on B's snapshot, so X keeps B's row."""
+    import datetime as dt
+
+    from fluent_plugin_elasticsearch_spark.streaming.ingest import IngestPipeline
+
+    out = str(tmp_path / "out")
+
+    def events(*pairs):
+        return spark.createDataFrame([Row(time=dt.datetime(2024, 1, 1, 5), user=u, msg=m)
+                                      for u, m in pairs])
+
+    pipe = IngestPipeline(out, id_keys=["user"], write_op="create",
+                          table_format="cow", n_buckets=4)
+    pipe.run_batch(events(*[(f"u{i}", f"m{i}") for i in range(5)]), 0)
+    other = IngestPipeline(out, id_keys=["user"], write_op="index",
+                           table_format="cow", n_buckets=4)
+    commits = []
+    orig = pipe._cow._commit_buckets
+
+    def interleaved(base_dirs, new_dirs):
+        if not commits:
+            other.run_batch(events(("X", "B")), 1)
+        commits.append(1)
+        return orig(base_dirs, new_dirs)
+
+    monkeypatch.setattr(pipe._cow, "_commit_buckets", interleaved)
+    pipe.run_batch(events(("X", "A"), ("u1", "A1")), 2)
+    assert len(commits) == 2  # the first commit conflicted and was re-planned
+    rows = {r["user"]: r["msg"] for r in pipe._cow.read().collect()}
+    assert rows == {**{f"u{i}": f"m{i}" for i in range(5)}, "X": "B"}
+
+
+# --- crash-point matrix ------------------------------------------------------
+
+_BASE = {i: (f"v{i}", i) for i in range(20)}
+_BATCH = [Row(doc_id=3, v="U3", n=None), Row(doc_id=100, v="N100", n=100)]
+_OPS = {  # op → (run it, the rows it leaves on the table before it)
+    "create": (lambda t, spark: t.exists() or t.create(_base_df(spark)), lambda b: _BASE),
+    "upsert-index": (lambda t, spark: t.upsert(spark.createDataFrame(_BATCH), op="index"),
+                     lambda b: {**b, 3: ("U3", None), 100: ("N100", 100)}),
+    "upsert-create": (lambda t, spark: t.upsert(spark.createDataFrame(_BATCH), op="create"),
+                      lambda b: {**b, 100: ("N100", 100)}),
+    "upsert-update": (lambda t, spark: t.upsert(spark.createDataFrame(_BATCH), op="update"),
+                      lambda b: {**b, 3: ("U3", 3)}),
+    "delete_where": (lambda t, spark: t.delete_where(F.col("doc_id") < 5),
+                     lambda b: {k: v for k, v in b.items() if k >= 5}),
+    "delete_ids": (lambda t, spark: t.delete_ids([1, 2]),
+                   lambda b: {k: v for k, v in b.items() if k not in (1, 2)}),
+    "compact": (lambda t, spark: t.compact(target_buckets=8), lambda b: b),
+    "vacuum": (lambda t, spark: t.vacuum(), lambda b: b),
+}
+
+
+def _base_df(spark):
+    return spark.createDataFrame([Row(doc_id=k, v=v, n=n) for k, (v, n) in _BASE.items()])
+
+
+def _snapshot(t):
+    if not t.exists():
+        return None
+    return sorted((r["doc_id"], r["v"], r["n"]) for r in t.read().collect())
+
+
+def _as_rows(d):
+    return None if d is None else sorted((k, v, n) for k, (v, n) in d.items())
+
+
+@pytest.mark.parametrize("point", ["staged", "temp_written", "swapped"])
+@pytest.mark.parametrize("op", sorted(_OPS))
+def test_crash_point_matrix(spark, tmp_path, monkeypatch, op, point):
+    """A crash after the staging write, between the manifest temp file and
+    its os.replace, or after the swap: a reader sees exactly the old or
+    the new snapshot, a redelivered retry lands its rows once, and vacuum
+    reclaims every orphan dir."""
+    run, after = _OPS[op]
+    t = CowTable(spark, str(tmp_path / "t"), id_col="doc_id", n_buckets=4)
+    old = None
+    if op != "create":
+        t.create(_base_df(spark))
+        t.upsert(spark.createDataFrame([Row(doc_id=7, v="v7", n=7)]))  # retires a dir
+        old = _BASE
+    new = after(old)
+    write = t._write_manifest
+    real_replace = os.replace
+
+    if point == "staged":
+        def crash(update):
+            raise _Crash(point)
+        monkeypatch.setattr(t, "_write_manifest", crash)
+    elif point == "temp_written":
+        def replace(src, dst):
+            if dst.endswith("manifest.json"):
+                assert os.path.exists(src)
+                raise _Crash(point)
+            return real_replace(src, dst)
+        monkeypatch.setattr(os, "replace", replace)
+    else:
+        def crash_after(update):
+            write(update)
+            raise _Crash(point)
+        monkeypatch.setattr(t, "_write_manifest", crash_after)
+    with pytest.raises(_Crash):
+        run(t, spark)
+    monkeypatch.undo()
+
+    reader = CowTable(spark, t.path)
+    assert _snapshot(reader) == _as_rows(new if point == "swapped" else old)
+    run(t, spark)  # redelivery
+    assert _snapshot(t) == _as_rows(new)
+    t.vacuum()
+    m = t._load_manifest()
+    live = {rel.split("/__bucket=")[0] for rel in m["buckets"].values()}
+    assert {os.path.join("data", d) for d in os.listdir(os.path.join(t.path, "data"))} == live
+    assert m["retired"] == [] and _snapshot(t) == _as_rows(new)
+
+
+# --- commit lock -------------------------------------------------------------
+
+def test_stale_lock_breakers_never_both_enter(tmp_path, monkeypatch):
+    """Writers A and B both find a crashed holder's stale lock.  B's
+    staleness check runs before A's create; B then acts on A's live lock.
+    B must wait for A's release, not enter beside it."""
+    t = CowTable(None, str(tmp_path))  # the lock needs no Spark
+    lockp = os.path.join(t.path, "_commit.lock")
+    with open(lockp, "w") as f:
+        f.write("pid=crashed\n")
+    old = time.time() - 10_000
+    os.utime(lockp, (old, old))
+    b_paused, a_inside = threading.Event(), threading.Event()
+    spans = {}
+
+    def gate(real):
+        def first_b_call_waits_for_a(src, *args):
+            if (threading.current_thread().name == "B" and src == lockp
+                    and not b_paused.is_set()):
+                b_paused.set()
+                a_inside.wait(10)
+            return real(src, *args)
+        return first_b_call_waits_for_a
+
+    # B's first move on the lock path (breaking it) waits until A is inside
+    monkeypatch.setattr(os, "unlink", gate(os.unlink))
+    monkeypatch.setattr(os, "rename", gate(os.rename))
+
+    def writer(name):
+        with t._commit_lock(timeout=10):
+            t0 = time.monotonic()
+            if name == "A":
+                a_inside.set()
+                time.sleep(0.3)
+            spans[name] = (t0, time.monotonic())
+
+    b = threading.Thread(target=writer, args=("B",), name="B")
+    b.start()
+    assert b_paused.wait(10)
+    a = threading.Thread(target=writer, args=("A",), name="A")
+    a.start()
+    a.join(20)
+    b.join(20)
+    assert not a.is_alive() and not b.is_alive()
+    assert spans["B"][0] >= spans["A"][1]  # B entered only after A left
+    assert not os.path.exists(lockp)
+
+
+_STRESS_WORKER = """
+import json, os, sys, time
+sys.path.insert(0, sys.argv[1])
+from fluent_plugin_elasticsearch_spark.sinks.cow_table import CowTable
+path, wid, n = sys.argv[2], int(sys.argv[3]), int(sys.argv[4])
+t = CowTable(None, path)
+lockp, inside, log = (os.path.join(path, p) for p in ("_commit.lock", "inside", "log.json"))
+overlaps = 0
+for i in range(n):
+    with t._commit_lock():
+        try:
+            os.close(os.open(inside, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
+            mine = True
+        except FileExistsError:
+            overlaps, mine = overlaps + 1, False
+        with open(log) as f:
+            entries = json.load(f)
+        time.sleep(0.002)
+        with open(log + ".tmp", "w") as f:
+            json.dump(entries + [[wid, i]], f)
+        os.replace(log + ".tmp", log)
+        if mine:
+            os.unlink(inside)
+    try:  # leave a crashed holder's lock behind: created, then aged past stale
+        fd = os.open(lockp, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+        os.write(fd, f"pid=crashed {wid}-{i}\\n".encode())
+        os.close(fd)
+        os.utime(lockp, (time.time() - 1000, time.time() - 1000))
+    except FileExistsError:
+        pass
+print(overlaps)
+"""
+
+
+def test_commit_lock_multiprocess_stress(tmp_path):
+    """N processes x M commits through the commit lock, each commit
+    followed by a crashed holder's stale lock left behind: every commit
+    lands exactly once and no two holders are ever inside together."""
+    n_procs, n_commits = 8, 15
+    with open(tmp_path / "log.json", "w") as f:
+        f.write("[]")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    procs = [subprocess.Popen([sys.executable, "-c", _STRESS_WORKER, repo, str(tmp_path),
+                               str(w), str(n_commits)], stdout=subprocess.PIPE, text=True)
+             for w in range(n_procs)]
+    outs = [p.communicate(timeout=240)[0] for p in procs]
+    assert [p.returncode for p in procs] == [0] * n_procs
+    assert sum(int(o.split()[-1]) for o in outs) == 0  # no overlapping holders
+    with open(tmp_path / "log.json") as f:
+        entries = json.load(f)
+    assert sorted(map(tuple, entries)) == [(w, i) for w in range(n_procs)
+                                           for i in range(n_commits)]

@@ -194,6 +194,18 @@ def test_ingest_pipeline_batch_and_create_dedup(spark, tmp_path):
     assert spark.read.parquet(str(tmp_path / "docs")).count() == 2
 
 
+def test_create_op_stores_one_doc_per_id(spark, tmp_path):
+    """The same event twice in the first batch and again in the next one
+    is stored once under write_op="create" (parquet sink)."""
+    ev = Row(time=dt.datetime(2024, 1, 1, 5), user="u1", msg="a")
+    pipe = IngestPipeline(str(tmp_path), id_keys=["user", "msg"], write_op="create")
+    first = pipe.run_batch(spark.createDataFrame([ev, ev]), 0)
+    assert spark.read.parquet(str(tmp_path / "docs")).count() == 1
+    second = pipe.run_batch(spark.createDataFrame([ev, ev]), 1)
+    assert spark.read.parquet(str(tmp_path / "docs")).count() == 1
+    assert (first["duplicates"], second["duplicates"]) == (0, 1)
+
+
 def test_streaming_ingest(spark, tmp_path):
     src_dir = str(tmp_path / "src")
     events = spark.createDataFrame(

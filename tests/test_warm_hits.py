@@ -5,6 +5,7 @@ DataFrame only when the caller composes them with Spark."""
 
 from __future__ import annotations
 
+import gc
 import sys
 import threading
 from contextlib import contextmanager
@@ -18,12 +19,19 @@ QUERIES = ["the data", "data query", "zzznope"]  # the last is absent
 
 @contextmanager
 def _py4j_commands(spark):
-    """Record every command the Python side sends to the JVM gateway."""
+    """Record every command this thread sends to the JVM gateway (the
+    warm path starts no thread, so that is every command a query sends).
+    Other threads — py4j callback threads left by earlier streaming tests
+    — release their Java proxies at any time, each release a py4j delete
+    command; garbage collected first, a proxy left in a reference cycle
+    cannot send one inside the window either."""
+    gc.collect()
     client = spark.sparkContext._gateway._gateway_client
-    send, sent = client.send_command, []
+    send, sent, caller = client.send_command, [], threading.get_ident()
 
     def counting(command, *args, **kwargs):
-        sent.append(command)
+        if threading.get_ident() == caller:
+            sent.append(command)
         return send(command, *args, **kwargs)
 
     client.send_command = counting
