@@ -4083,13 +4083,14 @@ SELECT doc_id, 'prod' AS env,
        CAST(len(regexp_split_to_array(text, '\\s+')) AS BIGINT) AS n_words
 FROM documents
 """,
+        # post_filter prunes the WHOLE ranking, then size cuts the page
         "post_filter": (lambda sq=__import__(
             "fluent_plugin_elasticsearch_spark.operators.simple_query",
             fromlist=["simple_query_string_sql"]).simple_query_string_sql(
-                "documents", "merge data", k=30): (
+                "documents", "merge data", k=2**62): (
             f"SELECT s.doc_id, s.score_u FROM ({sq}) s "
             "JOIN documents d ON s.doc_id = d.doc_id WHERE d.lang = 'en' "
-            "ORDER BY s.score_u DESC, s.doc_id ASC"))(),
+            "ORDER BY s.score_u DESC, s.doc_id ASC LIMIT 30"))(),
         "reindex": """
 SELECT doc_id, lang, upper(lang) AS lang_uc, 'reindexed' AS env, n_chars
 FROM documents WHERE lang = 'en'

@@ -20,6 +20,10 @@ collect_list → array_sort → aggregate() left fold, DuckDB via
 addition), and the WAND/exhaustive engine paths sum term-asc as well
 (wand.py). With identical addend order the only residual divergence is
 libm ulp (ln), absorbed by the 1e-6 quantum away from floor boundaries.
+
+The one copy of each shared scoring rule lives here: ``quantize_scores``
+(index-served float score → ``score_u``) and ``fuse_scores`` (max/sum
+fusion of per-field or per-clause ``score_u`` frames).
 """
 
 from __future__ import annotations
@@ -29,6 +33,31 @@ from pyspark.sql import functions as F
 
 from .. import BM25_B, BM25_K1
 from ..extraction import simple_tokens_col
+
+
+def quantize_scores(scores: DataFrame) -> DataFrame:
+    """(doc_id, float score) → (doc_id, score_u = floor(score * 1e6))."""
+    return scores.select(
+        "doc_id", F.floor(F.col("score") * 1e6).cast("long").alias("score_u"))
+
+
+def fuse_scores(parts: list[DataFrame], k: int, how: str = "max",
+                tie_breaker: float | None = None) -> DataFrame:
+    """Full outer join of (doc_id, score_u) frames on doc_id, a missing
+    part scoring 0, combined per doc by ``how`` ("max" or "sum") or, with
+    a ``tie_breaker``, by Lucene's dis_max floor(max + tie_breaker *
+    (sum - max)). The top k (doc_id, score_u), score_u desc, doc_id asc."""
+    joined = None
+    for i, p in enumerate(parts):
+        p = p.select("doc_id", F.col("score_u").alias(f"s_{i}"))
+        joined = p if joined is None else joined.join(p, "doc_id", "full_outer")
+    cols = [F.coalesce(F.col(f"s_{i}"), F.lit(0)) for i in range(len(parts))]
+    mx = F.greatest(*cols) if len(cols) > 1 else cols[0]
+    total = sum(cols[1:], cols[0])  # left fold: ((s_0 + s_1) + s_2) ...
+    comb = ((mx if how == "max" else total) if tie_breaker is None
+            else F.floor(mx + tie_breaker * (total - mx)))
+    return (joined.select("doc_id", comb.cast("long").alias("score_u"))
+            .orderBy(F.desc("score_u"), F.asc("doc_id")).limit(k))
 
 
 def corpus_stats_with_dfs(toks: DataFrame, df_conds) -> DataFrame:
@@ -327,33 +356,14 @@ def multi_match_df(docs: DataFrame, query_terms: list[str], fields: list[str],
     the already-quantized per-field integers, so the result is
     order-free-exact and the DuckDB mirror (multi_match_sql) agrees
     bit-for-bit. Returns (doc_id, score_u), tie (score desc, doc_id asc).
-
-    Plan shape: one tokenize+aggregate pipeline per field (k fields = k
-    parallel aggregations over the same scan — Catalyst caches the scan),
-    then a full outer join on doc_id of k tiny (matched docs only) score
-    tables. Reference context: the plugin forwards query bodies verbatim
-    (in_elasticsearch.rb:94-99); this implements the ES-side semantics."""
+    One tokenize+aggregate pipeline per field over the same scan, fused
+    by ``fuse_scores``; the plugin forwards query bodies verbatim
+    (in_elasticsearch.rb:94-99), this implements the ES-side semantics."""
     if match_type not in ("best_fields", "most_fields"):
         raise ValueError(f"unsupported multi_match type: {match_type}")
-    per = []
-    for i, f in enumerate(fields):
-        s = bm25_scores_df(docs, query_terms, id_col, f, k1, b)
-        per.append(s.withColumnRenamed("score_u", f"s_{i}"))
-    joined = per[0]
-    for p in per[1:]:
-        joined = joined.join(p, "doc_id", "full_outer")
-    parts = [F.coalesce(F.col(f"s_{i}"), F.lit(0)) for i in range(len(fields))]
-    if match_type == "best_fields":
-        comb = F.greatest(*parts) if len(parts) > 1 else parts[0]
-    else:
-        comb = parts[0]
-        for p in parts[1:]:
-            comb = comb + p
-    return (
-        joined.select("doc_id", comb.cast("long").alias("score_u"))
-        .orderBy(F.desc("score_u"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return fuse_scores([bm25_scores_df(docs, query_terms, id_col, f, k1, b)
+                        for f in fields], k,
+                       "max" if match_type == "best_fields" else "sum")
 
 
 def multi_match_sql(table: str, query_terms: list[str], fields: list[str],
@@ -551,9 +561,7 @@ def combined_fields_df(docs: DataFrame, query_terms: list[str],
         parts += [F.coalesce(F.col(f).cast("string"), F.lit(""))] * w
     combined = docs.withColumn("__combined", F.concat_ws(" ", *parts))
     scores = bm25_scores_df(combined, query_terms, id_col, "__combined", k1, b)
-    return (
-        scores.orderBy(F.desc("score_u"), F.asc("doc_id")).limit(k)
-    )
+    return scores.orderBy(F.desc("score_u"), F.asc("doc_id")).limit(k)
 
 
 def combined_fields_sql(table: str, query_terms: list[str],
@@ -587,24 +595,15 @@ def match_bool_prefix_df(docs: DataFrame, query_terms: list[str], k: int = 10,
     clause — constant-score 1.0 like Lucene's PrefixQuery inside a bool
     should. A doc matches if ANY clause matches (bool-should semantics);
     score_u = BM25 sum of the full terms + 1e6 iff any token starts with
-    the prefix. One tokens projection feeds both sides. Returns
-    (doc_id, score_u) top-k."""
+    the prefix. Returns (doc_id, score_u) top-k."""
     *full, pref = query_terms
     toks = docs.select(F.col(id_col).alias("doc_id"),
                        simple_tokens_col(F.col(text_col)).alias("tokens"))
     has_pref = F.exists("tokens", lambda t: t.startswith(pref))
-    pside = (toks.filter(has_pref)
-             .select("doc_id", F.lit(int(1e6)).alias("p_u")))
-    if full:
-        scores = bm25_scores_df(docs, full, id_col, text_col, k1, b)
-        combined = (scores.withColumnRenamed("score_u", "b_u")
-                    .join(pside, "doc_id", "full_outer")
-                    .select("doc_id",
-                            (F.coalesce(F.col("b_u"), F.lit(0))
-                             + F.coalesce(F.col("p_u"), F.lit(0))).alias("score_u")))
-    else:
-        combined = pside.select("doc_id", F.col("p_u").alias("score_u"))
-    return combined.orderBy(F.desc("score_u"), F.asc("doc_id")).limit(k)
+    parts = [bm25_scores_df(docs, full, id_col, text_col, k1, b)] if full else []
+    parts.append(toks.filter(has_pref)
+                 .select("doc_id", F.lit(int(1e6)).alias("score_u")))
+    return fuse_scores(parts, k, "sum")
 
 
 def match_bool_prefix_sql(table: str, query_terms: list[str], k: int = 10,

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from .. import BM25_B, BM25_K1
 from ..extraction import simple_tokens_col
-from .bm25 import bm25_scores_df, corpus_stats_with_dfs
+from .bm25 import bm25_scores_df, corpus_stats_with_dfs, fuse_scores
 from .caching import pin
 
 _TOKS_SQL = (
@@ -74,24 +74,9 @@ def dis_max_df(docs: DataFrame, queries: list[tuple[str, list[str]]],
     integers (tie_breaker multiply is one IEEE float op, identical in both
     engines), re-floored to keep the integer contract.
     Returns (doc_id, score_u), tie-break (score desc, doc_id asc)."""
-    per = []
-    for i, (field, terms) in enumerate(queries):
-        s = bm25_scores_df(docs, terms, id_col, field, k1, b)
-        per.append(s.withColumnRenamed("score_u", f"s_{i}"))
-    joined = per[0]
-    for p in per[1:]:
-        joined = joined.join(p, "doc_id", "full_outer")
-    parts = [F.coalesce(F.col(f"s_{i}"), F.lit(0)) for i in range(len(queries))]
-    mx = F.greatest(*parts) if len(parts) > 1 else parts[0]
-    total = parts[0]
-    for p in parts[1:]:
-        total = total + p
-    comb = F.floor(mx + tie_breaker * (total - mx)).cast("long")
-    return (
-        joined.select("doc_id", comb.alias("score_u"))
-        .orderBy(F.desc("score_u"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return fuse_scores([bm25_scores_df(docs, terms, id_col, field, k1, b)
+                        for field, terms in queries], k,
+                       tie_breaker=tie_breaker)
 
 
 def dis_max_sql(table: str, queries: list[tuple[str, list[str]]],
@@ -452,21 +437,8 @@ def multi_match_phrase_df(docs: DataFrame, phrase_terms: list[str],
     from .bm25 import match_phrase_df
 
     scorer = match_phrase_prefix_df if prefix else match_phrase_df
-    per = []
-    for i, f in enumerate(fields):
-        s = scorer(docs, phrase_terms, k=k, id_col=id_col, text_col=f,
-                   k1=k1, b=b)
-        per.append(s.withColumnRenamed("score_u", f"s_{i}"))
-    joined = per[0]
-    for p in per[1:]:
-        joined = joined.join(p, "doc_id", "full_outer")
-    parts = [F.coalesce(F.col(f"s_{i}"), F.lit(0)) for i in range(len(fields))]
-    comb = F.greatest(*parts) if len(parts) > 1 else parts[0]
-    return (
-        joined.select("doc_id", comb.cast("long").alias("score_u"))
-        .orderBy(F.desc("score_u"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return fuse_scores([scorer(docs, phrase_terms, k=k, id_col=id_col,
+                               text_col=f, k1=k1, b=b) for f in fields], k)
 
 
 def multi_match_phrase_sql(table: str, phrase_terms: list[str],

@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 from ..textproc import bm25_idf, tokenize_simple, tokenize_unicode
 from . import positions as _pos
 from . import wand as _wand
+from .bm25 import fuse_scores, quantize_scores
 
 _TOKENIZE = {"unicode": tokenize_unicode, "simple": tokenize_simple, "simple_udf": tokenize_simple}
 
@@ -175,6 +176,11 @@ class InvertedIndex:
         self.path = path
         with open(os.path.join(path, "meta.json")) as f:
             self.meta = json.load(f)
+        # the BM25 corpus statistics, read once; query methods unpack
+        # bm25 into locals, since a shard kernel closing over self would
+        # pickle the session
+        self.n_docs = self.meta["n_docs"]
+        self.bm25 = (self.meta["avgdl"], self.meta["k1"], self.meta["b"])
         self._df_cache: dict[str, int] | None = None
         self._resident: _ResidentPostings | None = None
         if cache_term_stats:
@@ -296,9 +302,8 @@ class InvertedIndex:
         dfs = self._lookup_dfs(terms)
         if not dfs:
             return self._empty()
-        n_docs, avgdl = self.meta["n_docs"], self.meta["avgdl"]
-        k1, b = self.meta["k1"], self.meta["b"]
-        idfs = {t: bm25_idf(df, n_docs) for t, df in dfs.items()}
+        avgdl, k1, b = self.bm25
+        idfs = {t: bm25_idf(df, self.n_docs) for t, df in dfs.items()}
 
         def shard_topk(pdf: pd.DataFrame) -> pd.DataFrame:
             use_wand = msm <= 1 and (mode == "wand" or (
@@ -336,12 +341,11 @@ class InvertedIndex:
         dfs = self._lookup_dfs(terms)
         if not dfs:
             return self._empty()
-        n_docs, avgdl = self.meta["n_docs"], self.meta["avgdl"]
-        k1, b = self.meta["k1"], self.meta["b"]
+        avgdl, k1, b = self.bm25
         if weights is None:
-            idfs = {t: bm25_idf(df, n_docs) for t, df in dfs.items()}
+            idfs = {t: bm25_idf(df, self.n_docs) for t, df in dfs.items()}
         else:  # weighted clauses (fuzzy expansion): idf x clause weight
-            idfs = {t: bm25_idf(df, n_docs) * weights.get(t, 1.0)
+            idfs = {t: bm25_idf(df, self.n_docs) * weights.get(t, 1.0)
                     for t, df in dfs.items()}
 
         def shard_all(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -387,28 +391,6 @@ class InvertedIndex:
                 f"terms; raise max_expansions or use a longer prefix")
         return sorted(r["term"] for r in rows)
 
-    def fuzzy_expansions(self, term: str, fuzziness: int = 2,
-                         max_expansions: int = 50) -> list[tuple[str, int]]:
-        """Dictionary expansion for a fuzzy clause: index terms within
-        ``fuzziness`` Levenshtein edits of ``term``, ranked ES-style
-        (distance asc, df desc, term asc) and capped at
-        ``max_expansions`` (the ES default cap is 50 — FuzzyQuery keeps
-        the best-weight terms, this deterministic ranking is the
-        engine-independent analogue). A length band prunes the
-        dictionary scan before the levenshtein (same trick as
-        suggest_term); work is dictionary-sized, never the corpus.
-        Returns [(term, distance)], bounded driver-side collect."""
-        t = F.lit(term)
-        cand = self.term_stats().filter(
-            (F.length("term") >= F.length(t) - fuzziness)
-            & (F.length("term") <= F.length(t) + fuzziness))
-        rows = (cand.withColumn("distance", F.levenshtein(F.col("term"), t))
-                .filter(F.col("distance") <= fuzziness)
-                .orderBy(F.asc("distance"), F.desc("df"), F.asc("term"))
-                .limit(max_expansions)
-                .select("term", "distance").collect())
-        return [(r["term"], r["distance"]) for r in rows]
-
     def matched_doc_ids(self, terms: list[str]) -> DataFrame:
         """(doc_id) of every doc containing >= 1 of ``terms`` — postings
         membership only (one row per doc: a doc lives in exactly one
@@ -431,10 +413,9 @@ class InvertedIndex:
         dfs = self._lookup_dfs(all_terms)
         if not dfs:
             return self._empty()
-        n_docs, avgdl = self.meta["n_docs"], self.meta["avgdl"]
-        k1, b = self.meta["k1"], self.meta["b"]
+        avgdl, k1, b = self.bm25
         subquery_idfs = [
-            {t: bm25_idf(dfs[t], n_docs) for t in ts if t in dfs}
+            {t: bm25_idf(dfs[t], self.n_docs) for t in ts if t in dfs}
             for ts in per_q_terms
         ]
         subquery_idfs = [m for m in subquery_idfs if m]
@@ -460,10 +441,9 @@ class InvertedIndex:
         dfs = self._lookup_dfs(all_terms)
         if not dfs:
             return self._empty("query_id long, doc_id long, score double, rank int")
-        n_docs, avgdl = self.meta["n_docs"], self.meta["avgdl"]
-        k1, b = self.meta["k1"], self.meta["b"]
+        avgdl, k1, b = self.bm25
         query_idfs = {
-            qid: {t: bm25_idf(dfs[t], n_docs) for t in ts if t in dfs}
+            qid: {t: bm25_idf(dfs[t], self.n_docs) for t in ts if t in dfs}
             for qid, ts in per_query_terms.items()
         }
         query_idfs = {qid: m for qid, m in query_idfs.items() if m}
@@ -491,10 +471,9 @@ class InvertedIndex:
         dfs = self._lookup_dfs(uniq)
         if len(dfs) < len(set(terms)):
             return self._empty()  # a phrase term absent from the corpus ⇒ no match
-        n_docs, avgdl = self.meta["n_docs"], self.meta["avgdl"]
-        k1, b = self.meta["k1"], self.meta["b"]
+        avgdl, k1, b = self.bm25
         # idf sum in PHRASE order (duplicates counted), matching match_phrase_df
-        idf_sum = sum(bm25_idf(dfs[t], n_docs) for t in terms)
+        idf_sum = sum(bm25_idf(dfs[t], self.n_docs) for t in terms)
 
         def shard_phrase(pdf: pd.DataFrame) -> pd.DataFrame:
             return _pos.score_shard_phrase(pdf, terms, idf_sum, k, avgdl, k1, b)
@@ -525,16 +504,15 @@ class InvertedIndex:
         dfs = self._lookup_dfs(uniq_exact)
         if len(dfs) < len(uniq_exact):
             return self._empty()  # an exact term absent from the corpus ⇒ no match
-        n_docs, avgdl = self.meta["n_docs"], self.meta["avgdl"]
-        k1, b = self.meta["k1"], self.meta["b"]
+        avgdl, k1, b = self.bm25
         # prefix-clause df = docs containing ANY expansion term (one
         # match_scores row per doc, a postings-bounded count), matching
         # the DF scorer's df
         df_prefix = self.match_scores(expansion).count()
         if df_prefix == 0:
             return self._empty()
-        idf_sum = sum(bm25_idf(dfs[t], n_docs) for t in exact) \
-            + bm25_idf(df_prefix, n_docs)
+        idf_sum = sum(bm25_idf(dfs[t], self.n_docs) for t in exact) \
+            + bm25_idf(df_prefix, self.n_docs)
 
         def shard_phrase(pdf: pd.DataFrame) -> pd.DataFrame:
             return _pos.score_shard_phrase(pdf, exact, idf_sum, k, avgdl, k1, b,
@@ -556,10 +534,9 @@ class InvertedIndex:
         dfs = self._lookup_dfs(sorted({first, second}))
         if len(dfs) < len({first, second}):
             return self._empty()  # a clause term absent from the corpus ⇒ no span
-        n_docs, avgdl = self.meta["n_docs"], self.meta["avgdl"]
-        k1, b = self.meta["k1"], self.meta["b"]
+        avgdl, k1, b = self.bm25
         # idf sum in CLAUSE order (first + second), matching span_near_df
-        idf_sum = bm25_idf(dfs[first], n_docs) + bm25_idf(dfs[second], n_docs)
+        idf_sum = bm25_idf(dfs[first], self.n_docs) + bm25_idf(dfs[second], self.n_docs)
 
         def shard_span(pdf: pd.DataFrame) -> pd.DataFrame:
             return _pos.score_shard_span_near(pdf, first, second, int(slop),
@@ -578,9 +555,8 @@ class InvertedIndex:
         dfs = self._lookup_dfs([term])
         if not dfs:
             return self._empty()
-        n_docs, avgdl = self.meta["n_docs"], self.meta["avgdl"]
-        k1, b = self.meta["k1"], self.meta["b"]
-        idf = bm25_idf(dfs[term], n_docs)
+        avgdl, k1, b = self.bm25
+        idf = bm25_idf(dfs[term], self.n_docs)
 
         def shard(pdf: pd.DataFrame) -> pd.DataFrame:
             return _pos.score_shard_span_first(pdf, term, int(end), idf, k,
@@ -598,11 +574,10 @@ class InvertedIndex:
         dfs = self._lookup_dfs(uniq)
         if not dfs:
             return self._empty()
-        n_docs, avgdl = self.meta["n_docs"], self.meta["avgdl"]
-        k1, b = self.meta["k1"], self.meta["b"]
+        avgdl, k1, b = self.bm25
         # idf sum in CLAUSE order over every clause term (absent terms
         # contribute df=0 idf like the DF scorer's corpus pass)
-        idf_sum = sum(bm25_idf(dfs.get(t, 0), n_docs) for t in terms)
+        idf_sum = sum(bm25_idf(dfs.get(t, 0), self.n_docs) for t in terms)
 
         def shard(pdf: pd.DataFrame) -> pd.DataFrame:
             return _wand.score_shard_span_or(pdf, idf_sum, k, avgdl, k1, b)
@@ -620,9 +595,8 @@ class InvertedIndex:
         dfs = self._lookup_dfs(sorted({include, exclude}))
         if include not in dfs:
             return self._empty()
-        n_docs, avgdl = self.meta["n_docs"], self.meta["avgdl"]
-        k1, b = self.meta["k1"], self.meta["b"]
-        idf = bm25_idf(dfs[include], n_docs)
+        avgdl, k1, b = self.bm25
+        idf = bm25_idf(dfs[include], self.n_docs)
 
         def shard(pdf: pd.DataFrame) -> pd.DataFrame:
             return _pos.score_shard_span_not(pdf, include, exclude, int(pre),
@@ -648,9 +622,8 @@ class InvertedIndex:
                     .limit(int(max_expansions)).collect())
         if not exp_rows:
             return self._empty()
-        n_docs, avgdl = self.meta["n_docs"], self.meta["avgdl"]
-        k1, b = self.meta["k1"], self.meta["b"]
-        idf_u = sum(math.floor(bm25_idf(r["df"], n_docs) * 1e6)
+        avgdl, k1, b = self.bm25
+        idf_u = sum(math.floor(bm25_idf(r["df"], self.n_docs) * 1e6)
                     for r in exp_rows)
         idf_sum = idf_u / 1e6
         terms = [r["term"] for r in exp_rows]
@@ -677,11 +650,10 @@ class InvertedIndex:
         dfs = self._lookup_dfs(wanted)
         if any(t not in dfs for t in (first, second, little)):
             return self._empty()  # a clause term absent ⇒ no span anywhere
-        n_docs, avgdl = self.meta["n_docs"], self.meta["avgdl"]
-        k1, b = self.meta["k1"], self.meta["b"]
-        idf_sum = (bm25_idf(dfs[little], n_docs) if within
-                   else bm25_idf(dfs[first], n_docs)
-                   + bm25_idf(dfs[second], n_docs))
+        avgdl, k1, b = self.bm25
+        idf_sum = (bm25_idf(dfs[little], self.n_docs) if within
+                   else bm25_idf(dfs[first], self.n_docs)
+                   + bm25_idf(dfs[second], self.n_docs))
 
         def shard(pdf: pd.DataFrame) -> pd.DataFrame:
             return _pos.score_shard_span_contain(pdf, first, second, little,
@@ -715,9 +687,8 @@ class InvertedIndex:
         dfs = self._lookup_dfs(uniq)
         if len(dfs) < len(uniq):
             return self._empty()  # a clause term absent ⇒ no interval
-        n_docs, avgdl = self.meta["n_docs"], self.meta["avgdl"]
-        k1, b = self.meta["k1"], self.meta["b"]
-        idf_sum = sum(bm25_idf(dfs[t], n_docs) for t in terms)
+        avgdl, k1, b = self.bm25
+        idf_sum = sum(bm25_idf(dfs[t], self.n_docs) for t in terms)
 
         def shard(pdf: pd.DataFrame) -> pd.DataFrame:
             return _pos.score_shard_intervals(pdf, terms, int(max_gaps),
@@ -793,12 +764,7 @@ def _quantized_topk(scores: DataFrame, k: int) -> DataFrame:
     (score_u desc, doc_id asc) tie-break — must happen after quantization
     or float-distinct-but-floor-equal docs tie-break differently than the
     DataFrame scorers."""
-    return (
-        scores.select("doc_id",
-                      F.floor(F.col("score") * 1e6).cast("long").alias("score_u"))
-        .orderBy(F.desc("score_u"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return quantize_scores(scores).orderBy(F.desc("score_u"), F.asc("doc_id")).limit(k)
 
 
 def multi_match_topk(field_indexes: dict[str, "InvertedIndex"],
@@ -817,27 +783,9 @@ def multi_match_topk(field_indexes: dict[str, "InvertedIndex"],
     TakeOrderedAndProject for the top-k."""
     if match_type not in ("best_fields", "most_fields"):
         raise ValueError(f"unsupported multi_match type: {match_type}")
-    items = list(field_indexes.items())
-    per = []
-    for i, (_field, idx) in enumerate(items):
-        s = idx.match_scores(query_terms)
-        per.append(s.select(
-            "doc_id", F.floor(F.col("score") * 1e6).cast("long").alias(f"s_{i}")))
-    joined = per[0]
-    for p in per[1:]:
-        joined = joined.join(p, "doc_id", "full_outer")
-    parts = [F.coalesce(F.col(f"s_{i}"), F.lit(0)) for i in range(len(items))]
-    if match_type == "best_fields":
-        comb = F.greatest(*parts) if len(parts) > 1 else parts[0]
-    else:
-        comb = parts[0]
-        for p in parts[1:]:
-            comb = comb + p
-    return (
-        joined.select("doc_id", comb.cast("long").alias("score_u"))
-        .orderBy(F.desc("score_u"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return fuse_scores([quantize_scores(idx.match_scores(query_terms))
+                        for idx in field_indexes.values()], k,
+                       "max" if match_type == "best_fields" else "sum")
 
 
 def more_like_this_topk(index: "InvertedIndex", docs: DataFrame,
@@ -855,24 +803,22 @@ def more_like_this_topk(index: "InvertedIndex", docs: DataFrame,
     fallback."""
     from collections import Counter
 
-    spark = index.spark
     row = docs.filter(F.col(id_col) == like_id).select(text_col).collect()
     if not row or row[0][0] is None:
-        return empty_topk_df(spark, "doc_id long, score_u long")
+        return index._empty("doc_id long, score_u long")
     tokens = [t for t in _TOKENIZE[index.meta["tokenizer"]](row[0][0])
               if len(t) >= min_term_len]
     if not tokens:
-        return empty_topk_df(spark, "doc_id long, score_u long")
+        return index._empty("doc_id long, score_u long")
     tfc = Counter(tokens)
     dfs = index._lookup_dfs(sorted(tfc))
-    n_docs = index.meta["n_docs"]
     ranked = sorted(
-        (-math.floor(tf * bm25_idf(dfs[t], n_docs) * 1e6), t)
+        (-math.floor(tf * bm25_idf(dfs[t], index.n_docs) * 1e6), t)
         for t, tf in tfc.items() if t in dfs
     )
     sel = [t for _, t in ranked[:max_query_terms]]
     if not sel:
-        return empty_topk_df(spark, "doc_id long, score_u long")
+        return index._empty("doc_id long, score_u long")
     scores = index.match_scores(sel).filter(F.col("doc_id") != like_id)
     return _quantized_topk(scores, k)
 
@@ -888,8 +834,8 @@ def fuzzy_match_topk(index: "InvertedIndex", text: str,
                      fuzziness: int | str = "AUTO",
                      max_expansions: int = 50, k: int = 10) -> DataFrame:
     """Index-backed ES `match` with `fuzziness`: each query token expands
-    through the TERM DICTIONARY within its edit budget
-    (`fuzzy_expansions` — distance asc, df desc, term asc, capped), and
+    through the TERM DICTIONARY within its edit budget (ranked distance
+    asc, df desc, term asc, capped at max_expansions), and
     each expanded term scores its BM25 contribution times the classic
     Lucene fuzzy weight 1 - distance/len(token), quantized to integer
     millionths BEFORE summing so the contract is order- and
@@ -907,11 +853,10 @@ def fuzzy_match_topk(index: "InvertedIndex", text: str,
     spark = index.spark
     uniq = sorted(set(terms))
     if not uniq:
-        return empty_topk_df(spark, "doc_id long, score_u long")
+        return index._empty("doc_id long, score_u long")
     # ONE dictionary scan expands every query token (broadcast token
     # frame x term_stats under the length band) instead of a job per
-    # token — the multi-token serving latency win; ranking/cap identical
-    # to fuzzy_expansions
+    # token — the multi-token serving latency win
     q = spark.createDataFrame(
         [(t, auto_fuzziness(t) if fuzziness == "AUTO" else int(fuzziness))
          for t in uniq],
@@ -933,7 +878,7 @@ def fuzzy_match_topk(index: "InvertedIndex", text: str,
         if w_u > 0:
             tw[r["term"]] = tw.get(r["term"], 0) + w_u
     if not tw:
-        return empty_topk_df(spark, "doc_id long, score_u long")
+        return index._empty("doc_id long, score_u long")
     weights = {t: wu / 1e6 for t, wu in tw.items()}
     scores = index.match_scores(list(tw), weights=weights, quantize=True)
     return (
@@ -954,23 +899,10 @@ def multi_match_phrase_topk(field_indexes: dict[str, "InvertedIndex"],
     MAX combine is exact — see relevance.multi_match_phrase_df, whose
     ranks and scores this reproduces when each index was built over that
     field with the same tokenizer."""
-    items = list(field_indexes.items())
-    per = []
-    for i, (_field, idx) in enumerate(items):
-        s = (idx.match_phrase_prefix(phrase, k=k, max_expansions=max_expansions)
-             if prefix else idx.match_phrase(phrase, k=k))
-        per.append(s.select(
-            "doc_id", F.floor(F.col("score") * 1e6).cast("long").alias(f"s_{i}")))
-    joined = per[0]
-    for p in per[1:]:
-        joined = joined.join(p, "doc_id", "full_outer")
-    parts = [F.coalesce(F.col(f"s_{i}"), F.lit(0)) for i in range(len(items))]
-    comb = F.greatest(*parts) if len(parts) > 1 else parts[0]
-    return (
-        joined.select("doc_id", comb.cast("long").alias("score_u"))
-        .orderBy(F.desc("score_u"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return fuse_scores([quantize_scores(
+        idx.match_phrase_prefix(phrase, k=k, max_expansions=max_expansions)
+        if prefix else idx.match_phrase(phrase, k=k))
+        for idx in field_indexes.values()], k)
 
 
 def query_string_topk(index: "InvertedIndex", query: str, k: int = 10) -> DataFrame:
@@ -1008,19 +940,10 @@ def match_bool_prefix_topk(index: "InvertedIndex", query_terms: list[str],
     shares the field's tokenizer. Work is dictionary scan + the matched
     terms' postings — never the corpus."""
     *full, pref = query_terms
-    pside = (index.matched_doc_ids(index.expand_prefix(pref, max_expansions))
-             .withColumn("p_u", F.lit(int(1e6))))
-    if full:
-        b_side = index.match_scores(full).select(
-            "doc_id", F.floor(F.col("score") * 1e6).cast("long").alias("b_u"))
-        combined = (b_side.join(pside, "doc_id", "full_outer")
-                    .select("doc_id",
-                            (F.coalesce(F.col("b_u"), F.lit(0))
-                             + F.coalesce(F.col("p_u"), F.lit(0)))
-                            .cast("long").alias("score_u")))
-    else:
-        combined = pside.select("doc_id", F.col("p_u").cast("long").alias("score_u"))
-    return combined.orderBy(F.desc("score_u"), F.asc("doc_id")).limit(k)
+    parts = [quantize_scores(index.match_scores(full))] if full else []
+    parts.append(index.matched_doc_ids(index.expand_prefix(pref, max_expansions))
+                 .withColumn("score_u", F.lit(int(1e6))))
+    return fuse_scores(parts, k, "sum")
 
 
 def to_es_response(topk: DataFrame | Hits, index_name: str = "docs",

@@ -1,21 +1,21 @@
-"""Minimal ES-query-body AST → DataFrame compiler (SURVEY.md Q4).
+"""ES-query-body AST → DataFrame compiler (SURVEY.md Q4).
 
 The reference passes an arbitrary ES query body (`config_param :query`,
 default ``{"sort": ["_doc"]}``, in_elasticsearch.rb:33) straight to the
-cluster. We support the subset the plugin actually exercises plus `match`:
+cluster. ``compile_query`` is the one front door from such a body to the
+engine:
 
-    {"query": {"ids": {"values": [...]}}}                (Q1)
-    {"query": {"match": {"<field>": "text"}}}            (Q5 → BM25 top-k)
-    {"query": {"term": {"<field>": v}} / {"range": ...}} (filter pushdown)
-    {"query": {"terms": {"<field>": [v...]}}}            (membership)
-    {"query": {"prefix"/"wildcard": {"<field>": v}}}     (string patterns)
-    {"query": {"bool": {"must"/"filter"/"must_not"/"should": [...]}}}
-    {"sort": ["_doc"] | [{"field": {"order": "desc"}}]}  (Q2/S4)
-    {"size": n, "_source": false | [cols]}               (Q3)
+    {"query": {"ids"/"term"/"range"/"terms"/"bool"/...}}  (filter pushdown)
+    {"sort": ["_doc"] | [{"field": {"order": "desc"}}]}   (Q2/S4)
+    {"size": n, "from": m, "_source": false | [cols]}     (Q3)
+    {"query": {"match"/"multi_match"/"span_near"/...}}    (scored hits)
+    {"retriever": {"rrf"/"linear": ...}}, {"knn": ...}    (fusion, vectors)
 
-`match` routes to the inverted index (rank-ordered); everything else
-compiles to scan + filter + sort + limit on the docs table — Catalyst
-pushes the filters into the parquet/Iceberg scan.
+Filter queries compile to scan + filter + sort + limit on the docs table —
+Catalyst pushes the filters into the parquet/Iceberg scan. Scored queries
+compile to a top-k (doc_id, score) frame, served from the inverted index
+where one covers the field, and share one tail for min_score, the join
+back onto the docs, _source and from/size.
 """
 
 from __future__ import annotations
@@ -24,6 +24,8 @@ from typing import Any
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..operators.bm25 import fuse_scores, quantize_scores
 
 
 class UnsupportedQuery(ValueError):
@@ -429,34 +431,68 @@ def _compile_sub_retriever(docs: DataFrame, r: dict[str, Any], window: int,
     """One node of an ES 8.16 retriever TREE: a standard retriever
     (compiled through the query compiler) or a nested rrf/linear
     retriever (compiled recursively — ES retriever trees compose, e.g.
-    rrf over a linear over standards). Returns a scored frame carrying
-    doc_id + score_u (the engine-wide quantized long, score desc /
-    doc_id asc deterministic), bounded by the caller's
-    rank_window_size."""
+    rrf over a linear over standards). Returns the node's top `window`
+    (doc_id, score_u): the engine-wide quantized long, score desc /
+    doc_id asc deterministic."""
     if "standard" in r:
-        sub = compile_query(docs, {"query": r["standard"]["query"],
-                                   "size": window}, index=index)
+        body = {"query": r["standard"]["query"]}
     elif "rrf" in r or "linear" in r:
-        sub = compile_query(docs, {"retriever": r, "size": window},
-                            index=index)
-        for c in ("rrf_u", "linear_u"):
-            if c in sub.columns:
-                sub = sub.withColumnRenamed(c, "score_u")
+        body = {"retriever": r}
     else:
         raise UnsupportedQuery(
             "retriever nodes must be standard, rrf, or linear")
-    if "score_u" not in sub.columns:
-        if "score" in sub.columns:  # index-served float form
-            sub = sub.withColumn(
-                "score_u", F.floor(F.col("score") * 1e6).cast("long"))
-        else:
-            raise UnsupportedQuery(
-                "retrievers must produce scored results")
-    return sub
+    if not _is_scored(body):  # a filter query: only constant_score scores
+        sub = compile_query(docs, {**body, "size": window}, index=index)
+        if "score_u" not in sub.columns:
+            raise UnsupportedQuery("retrievers must produce scored results")
+        return sub.select("doc_id", "score_u")
+    topk, score = _scored_hits(docs, docs, body, window, index)
+    if score == "score":  # index-served float form
+        return quantize_scores(topk)
+    return topk.select("doc_id", F.col(score).alias("score_u"))
+
+
+def _compile_rrf_retriever(docs: DataFrame, rrf: dict[str, Any], k: int,
+                           *, index=None) -> DataFrame:
+    """ES 8.x retriever tree, rrf form: reciprocal rank fusion over N
+    sub-retrievers — score(d) = Σᵢ 1/(rank_constant + rankᵢ(d)) over the
+    retrievers that returned d in their top rank_window_size. Each
+    standard retriever compiles through this same compiler; ranks are
+    deterministic (score desc, doc_id asc — the engine-wide tie-break),
+    so the fused score is engine-independent: contributions are added
+    in retriever order and quantized once (floor ×1e9 for resolution —
+    the raw values are O(1/rank_constant)). Returns the top k
+    (doc_id, rrf_u)."""
+    from pyspark.sql import Window as _W
+
+    retrievers = rrf.get("retrievers") or []
+    if len(retrievers) < 2:
+        raise UnsupportedQuery("rrf needs >= 2 retrievers")
+    rk = int(rrf.get("rank_constant", 60))
+    window = int(rrf.get("rank_window_size", 100))
+    w = _W.partitionBy(F.lit(0)).orderBy(F.desc("score_u"), F.asc("doc_id"))
+    fused = None
+    for i, r in enumerate(retrievers):
+        if not isinstance(r, dict):
+            raise UnsupportedQuery("rrf retriever entries must be dicts")
+        sub = _compile_sub_retriever(docs, r, window, index=index)
+        ranked = (sub.select("doc_id", "score_u").limit(window)
+                  .withColumn(f"r{i}", F.row_number().over(w))
+                  .select("doc_id", f"r{i}"))
+        fused = ranked if fused is None else fused.join(
+            ranked, "doc_id", "full_outer")
+    contrib = None
+    for i in range(len(retrievers)):
+        c = F.when(F.col(f"r{i}").isNotNull(),
+                   1.0 / (rk + F.col(f"r{i}"))).otherwise(F.lit(0.0))
+        contrib = c if contrib is None else contrib + c
+    return (fused.select("doc_id",
+                         F.floor(contrib * 1e9).cast("long").alias("rrf_u"))
+            .orderBy(F.desc("rrf_u"), F.asc("doc_id")).limit(k))
 
 
 def _compile_linear_retriever(docs: DataFrame, lin: dict[str, Any],
-                              size, *, index=None) -> DataFrame:
+                              k: int, *, index=None) -> DataFrame:
     """ES 8.16 linear retriever: score(d) = Σᵢ wᵢ · normᵢ(sᵢ(d)) over the
     sub-retrievers whose top rank_window_size contains d (absent → 0
     contribution). Normalizers per ES's ScoreNormalizer set: "minmax"
@@ -467,7 +503,8 @@ def _compile_linear_retriever(docs: DataFrame, lin: dict[str, Any],
     rows), so the per-retriever min/max/‖·‖ single-partition window agg
     is bounded the same way as the pipeline aggs — never corpus-sized.
     The fused sum is quantized once (floor ×1e9, column linear_u) so
-    Spark and the DuckDB mirror compare bit-exactly.
+    Spark and the DuckDB mirror compare bit-exactly. Returns the top k
+    (doc_id, linear_u).
     Reference: the plugin delegates search bodies verbatim
     (out_elasticsearch.rb:957 client.search); the retriever tree is the
     ES 8.x server-side surface for that body."""
@@ -511,21 +548,622 @@ def _compile_linear_retriever(docs: DataFrame, lin: dict[str, Any],
     for i, w in enumerate(weights):
         c = F.coalesce(F.col(f"n{i}"), F.lit(0.0)) * F.lit(w)
         contrib = c if contrib is None else contrib + c
-    out = (fused.select("doc_id",
-                        F.floor(contrib * 1e9).cast("long")
-                        .alias("linear_u"))
-           .orderBy(F.desc("linear_u"), F.asc("doc_id")))
-    if size:
-        out = out.limit(int(size))
-    return docs.join(F.broadcast(out), "doc_id").orderBy(
-        F.desc("linear_u"), F.asc("doc_id"))
+    return (fused.select("doc_id",
+                         F.floor(contrib * 1e9).cast("long").alias("linear_u"))
+            .orderBy(F.desc("linear_u"), F.asc("doc_id")).limit(k))
+
+
+def _knn_top(docs: DataFrame, spec: dict[str, Any], size) -> tuple:
+    """ES 8 kNN search body: {"knn": {"field": f, "query_vector": [...],
+    "k": n, "filter": {...}}} → brute-force cosine top-k
+    (similarity.cosine_topk plans TakeOrderedAndProject for the single
+    query); at scale swap in the LSH/IVF variants behind the same
+    contract. The knn-level "filter" is ES's PRE-filter: compiled and
+    applied to the candidate set before the top-k, so k survivors are
+    returned. Returns (candidates, top (vec_id, cosine, rank))."""
+    from ..operators.similarity import cosine_topk
+
+    field, qv = spec["field"], [float(x) for x in spec["query_vector"]]
+    k = int(spec.get("k", size or 10))
+    cand = docs.filter(F.col(field).isNotNull())  # only docs with a vector
+    if spec.get("filter"):
+        cand = cand.filter(_compile_clause(spec["filter"]))
+    spark = docs.sparkSession
+    qdf = spark.createDataFrame([(0, qv)], f"query_id long, {field} array<double>")
+    emb = cand.withColumn(field, F.transform(field, lambda x: x.cast("double")))
+    # single literal query vector: n_queries=1 skips the probe job
+    top = cosine_topk(emb, qdf, k=k, id_col="doc_id", vec_col=field,
+                      n_queries=1)
+    if spec.get("similarity") is not None:
+        # ES 8.8 knn `similarity` cutoff: hits below the minimum cosine
+        # are dropped from the k nearest (fewer than k rows may return —
+        # the ES contract)
+        top = top.filter(F.col("cosine") >= float(spec["similarity"]))
+    return cand, top
+
+
+# Query kinds that rank: each compiles to a top-k (doc_id, score column)
+# frame and takes compile_query's one hits tail.
+_SPAN_KINDS = ("span_near", "span_first", "span_or", "span_not", "span_term",
+               "span_containing", "span_within", "span_multi", "intervals")
+_SCORED_KINDS = frozenset(_SPAN_KINDS + (
+    "match", "multi_match", "combined_fields", "query_string",
+    "sparse_vector", "text_expansion", "simple_query_string",
+    "more_like_this", "match_phrase", "match_phrase_prefix",
+    "match_bool_prefix", "script_score", "distance_feature"))
+# min_score is given on the float scale; each score column's own scale
+_SCORE_SCALE = {"score": 1, "score_u": 1e6, "rrf_u": 1e9, "linear_u": 1e9}
+
+
+def _is_scored(body: dict[str, Any]) -> bool:
+    query = body.get("query")
+    return ("retriever" in body or ("knn" in body and bool(query))
+            or bool(query) and not _SCORED_KINDS.isdisjoint(query))
+
+
+def _scored_hits(docs: DataFrame, out: DataFrame, body: dict[str, Any],
+                 k: int, index) -> tuple[DataFrame, str]:
+    """The top k of a scored body (``_is_scored``) as (frame, score
+    column), the frame holding doc_id and that column. ``docs`` feeds
+    the DataFrame scorers, ``out`` (docs plus any runtime fields) the
+    row-script scorers."""
+    query = body.get("query")
+    if "retriever" in body:
+        ret = body["retriever"]
+        if "linear" in ret:
+            return _compile_linear_retriever(docs, ret["linear"], k,
+                                             index=index), "linear_u"
+        if "rrf" not in ret:
+            raise UnsupportedQuery("retriever supports rrf and linear forms")
+        return _compile_rrf_retriever(docs, ret["rrf"], k,
+                                      index=index), "rrf_u"
+    if "knn" in body:
+        # Hybrid knn+query (ES 8.4+ additive score combination) is
+        # supported when the query section is a SELF-CONTAINED scorer
+        # (multi_match / combined_fields / query_string — each returns a
+        # quantized score_u with a DuckDB-mirrorable formula); other
+        # query kinds raise instead of silently dropping the query.
+        # score = query score_u + floor(cosine·boost·1e6) over the UNION
+        # of the two top-k hit sets (both bounded, broadcast-sized).
+        _HYBRID_OK = {"multi_match", "combined_fields", "query_string"}
+        if not set(query) <= _HYBRID_OK:
+            raise UnsupportedQuery(
+                "hybrid knn+query supports only self-contained scorers"
+                f" {sorted(_HYBRID_OK)}; got {sorted(query)} — use"
+                " knn.filter for pre-filtering")
+        spec = body["knn"]
+        _, top = _knn_top(docs, spec, body.get("size"))
+        knn_boost = float(spec.get("boost", 1.0))
+        knn_scores = top.select(
+            F.col("vec_id").alias("doc_id"),
+            F.floor(F.col("cosine") * 1e6 * knn_boost).cast("long").alias("score_u"))
+        q_scores, _ = _scored_hits(docs, docs, {"query": query}, k, index)
+        return fuse_scores([q_scores, knn_scores], k, "sum"), "score_u"
+    if any(kq in query for kq in _SPAN_KINDS):
+        return _span_hits(docs, query, k, index), "score_u"
+
+    if "match" in query:
+        ((_field, text),) = query["match"].items()
+        f_index = _resolve_index(index, _field)
+        if isinstance(text, dict) and text.get("fuzziness") not in (None, 0, "0"):
+            # match with fuzziness: dictionary-expanded weighted BM25 —
+            # postings-served when the field has an index, else the
+            # vocabulary-expansion DataFrame scorer (identical contract)
+            from ..textproc import tokenize_simple
+
+            if (text.get("operator", "or") != "or"
+                    or int(text.get("minimum_should_match", 1)) != 1):
+                # fuzzy scoring is bool-should (OR); an AND/msm gate over
+                # expanded clauses is not implemented — raise rather than
+                # silently ignore the option
+                raise UnsupportedQuery(
+                    "match fuzziness supports operator=or, "
+                    "minimum_should_match=1 only")
+            fz = text["fuzziness"]
+            if fz != "AUTO":
+                fz = int(fz)
+            mx = int(text.get("max_expansions", 50))
+            if f_index is not None:
+                from ..operators.search import fuzzy_match_topk
+
+                return fuzzy_match_topk(f_index, text["query"], fuzziness=fz,
+                                        max_expansions=mx, k=k), "score_u"
+            from ..operators.relevance import fuzzy_match_df
+
+            return fuzzy_match_df(docs, tokenize_simple(text["query"]),
+                                  fuzziness=fz, max_expansions=mx, k=k,
+                                  text_col=_field), "score_u"
+        if f_index is None:
+            raise UnsupportedQuery("match query needs an InvertedIndex")
+        if isinstance(text, dict):
+            # ES match options: {"query": ..., "operator": "and"|"or",
+            # "minimum_should_match": m} — forwarded to the index path
+            return f_index.search(
+                text["query"], k=k,
+                operator=text.get("operator", "or"),
+                minimum_should_match=int(text.get("minimum_should_match", 1))), "score"
+        return f_index.search(text, k=k), "score"
+
+    if "multi_match" in query:
+        from ..operators.bm25 import multi_match_df
+        from ..textproc import tokenize_simple
+
+        spec = query["multi_match"]
+        terms = tokenize_simple(spec["query"])
+        fields = list(spec["fields"])
+        per_field = {f: _resolve_index(index if isinstance(index, dict) else None, f)
+                     for f in fields}
+        mtype = spec.get("type", "best_fields")
+        if mtype in ("phrase", "phrase_prefix"):
+            # phrase types: per-field phrase scorer, best_fields MAX
+            # combine — served from POSITIONAL per-field indexes when
+            # every field has one, else the DataFrame composition
+            from ..operators.relevance import multi_match_phrase_df
+
+            is_pref = mtype == "phrase_prefix"
+            if all(ix is not None and ix.meta.get("with_positions")
+                   for ix in per_field.values()):
+                from ..operators.search import multi_match_phrase_topk
+
+                return multi_match_phrase_topk(
+                    per_field, spec["query"], k=k, prefix=is_pref,
+                    max_expansions=int(spec.get("max_expansions", 1024))), "score_u"
+            return multi_match_phrase_df(docs, terms, fields, k=k,
+                                         prefix=is_pref), "score_u"
+        if all(per_field.values()):
+            # every requested field has its own index → serve from
+            # postings only (ES shape: one Lucene index per field);
+            # rank/score-identical to multi_match_df
+            from ..operators.search import multi_match_topk
+
+            return multi_match_topk(per_field, terms, k=k,
+                                    match_type=mtype), "score_u"
+        # DataFrame fallback (per-field BM25 statistics, full scan)
+        return multi_match_df(docs, terms, fields, k=k,
+                              match_type=mtype), "score_u"
+
+    if "combined_fields" in query:
+        # ES combined_fields: fields blended into ONE BM25 field (shared
+        # statistics) — see operators/bm25.combined_fields_df
+        from ..operators.bm25 import combined_fields_df
+        from ..operators.index_build import combined_index_key
+        from ..textproc import tokenize_simple
+
+        spec = query["combined_fields"]
+        fields = []
+        weights = {}
+        for f in spec["fields"]:
+            if "^" in f:
+                name, w = f.split("^", 1)
+                fields.append(name)
+                weights[name] = int(float(w))
+            else:
+                fields.append(f)
+        ck = combined_index_key(fields, weights)
+        c_idx = index.get(ck) if isinstance(index, dict) else None
+        if c_idx is not None:
+            # an index over this exact weighted concatenation exists →
+            # postings-only serving, bit-identical to the DF scorer
+            from ..operators.search import combined_fields_topk
+
+            return combined_fields_topk(
+                c_idx, tokenize_simple(spec["query"]), k=k), "score_u"
+        return combined_fields_df(docs, tokenize_simple(spec["query"]),
+                                  fields, k=k, weights=weights), "score_u"
+
+    if "query_string" in query:
+        from ..operators.bm25 import query_string_df
+
+        spec = query["query_string"]
+        field = spec.get("default_field", "text")
+        qs_idx = index.get(field) if isinstance(index, dict) else None
+        if qs_idx is not None:
+            # boolean gate + scoring inside the shard kernel over the
+            # query terms' postings only — no corpus scan
+            from ..operators.search import query_string_topk
+
+            return query_string_topk(qs_idx, spec["query"], k=k), "score_u"
+        return query_string_df(docs, spec["query"], k=k,
+                               text_col=field), "score_u"
+
+    if "sparse_vector" in query or "text_expansion" in query:
+        # ES 8.15 sparse_vector (legacy text_expansion): weighted-token
+        # dot product against a rank_features doc field or a BoW-tf
+        # featurized text field (operators/relevance.py). Only the
+        # pre-computed query_vector form is servable here — model
+        # inference (inference_id / model_id expansion) needs an ML node
+        # and raises loudly, like every other environment-blocked path.
+        from ..operators.relevance import sparse_vector_df
+
+        if "text_expansion" in query:
+            raise UnsupportedQuery(
+                "text_expansion needs model inference; precompute the "
+                "expansion and use sparse_vector with query_vector")
+        spec = query["sparse_vector"]
+        if "inference_id" in spec or "query_vector" not in spec:
+            raise UnsupportedQuery(
+                "sparse_vector supports the pre-computed query_vector "
+                "form (inference is not available in this engine)")
+        fld = spec.get("field", "text")
+        f_index = _resolve_index(index, fld)
+        if f_index is not None:
+            # postings-bounded serving: same integer contract as the
+            # DataFrame scorer, work proportional to the query terms'
+            # posting data (search.InvertedIndex.sparse_vector_scores)
+            return (f_index.sparse_vector_scores(spec["query_vector"])
+                    .orderBy(F.desc("score_u"), F.asc("doc_id"))
+                    .limit(int(k))), "score_u"
+        return sparse_vector_df(docs, spec["query_vector"], k=k,
+                                field=fld), "score_u"
+
+    if "simple_query_string" in query:
+        # ES simple_query_string: the lenient end-user grammar, compiled
+        # to a flat bool of term/phrase/prefix clauses and scored in two
+        # corpus passes (operators/simple_query.py). Reference contract:
+        # the plugin ships the body verbatim to ES (out_elasticsearch.rb
+        # client.search); ES's SimpleQueryParser is this grammar.
+        from ..operators.simple_query import simple_query_string_df
+
+        spec = query["simple_query_string"]
+        if "flags" in spec:
+            raise UnsupportedQuery("simple_query_string flags")
+        fields = spec.get("fields", ["text"])
+        if len(fields) != 1:
+            raise UnsupportedQuery(
+                "simple_query_string supports one field (use multi_match "
+                "for cross-field scoring)")
+        return simple_query_string_df(
+            docs, spec["query"], k=k,
+            default_operator=spec.get("default_operator", "or").lower(),
+            text_col=fields[0].split("^")[0]), "score_u"
+
+    if "more_like_this" in query:
+        # ES more_like_this (single liked doc by _id): seed-term
+        # selection + BM25 over the selected terms — postings-served
+        # when the field has an index (seed lookup is a one-row
+        # pushdown filter), else the two-pass DataFrame scorer
+        spec = query["more_like_this"]
+        fields = list(spec.get("fields", ["text"]))
+        if len(fields) != 1:
+            raise UnsupportedQuery("more_like_this supports exactly one field")
+        like = spec.get("like")
+        if isinstance(like, list):
+            if len(like) != 1:
+                raise UnsupportedQuery("more_like_this supports one liked doc")
+            like = like[0]
+        if not isinstance(like, dict) or "_id" not in like:
+            raise UnsupportedQuery('more_like_this needs like {"_id": ...}')
+        like_id = int(like["_id"])
+        mqt = int(spec.get("max_query_terms", 10))
+        mwl = int(spec.get("min_word_length", 3))
+        mlt_index = _resolve_index(index, fields[0])
+        if mlt_index is not None:
+            from ..operators.search import more_like_this_topk
+
+            return more_like_this_topk(mlt_index, docs, like_id,
+                                       max_query_terms=mqt, k=k,
+                                       text_col=fields[0],
+                                       min_term_len=mwl), "score_u"
+        from ..operators.relevance import more_like_this_df
+
+        return more_like_this_df(docs, like_id, max_query_terms=mqt, k=k,
+                                 text_col=fields[0],
+                                 min_term_len=mwl), "score_u"
+
+    if "match_phrase" in query:
+        ((_field, text),) = query["match_phrase"].items()
+        if isinstance(text, dict) and int(text.get("slop", 0)) != 0:
+            # sloppy phrase matching (Lucene SloppyPhraseScorer) is not
+            # implemented — raise rather than silently score slop as 0
+            raise UnsupportedQuery("match_phrase slop != 0 is not supported")
+        p_index = _resolve_index(index, _field)
+        if p_index is None:
+            raise UnsupportedQuery("match_phrase query needs an InvertedIndex")
+        return p_index.match_phrase(
+            text if isinstance(text, str) else text["query"], k=k), "score"
+
+    if "match_phrase_prefix" in query:
+        # ES match_phrase_prefix: served from a POSITIONAL index when one
+        # is registered for the field (dictionary expansion of the last
+        # term + the same adjacency kernel as match_phrase), else the
+        # DataFrame scorer. Quantized either way so both paths emit the
+        # same (doc_id, score_u) shape.
+        from ..operators.relevance import match_phrase_prefix_df
+        from ..textproc import tokenize_simple
+
+        ((_field, spec),) = query["match_phrase_prefix"].items()
+        if isinstance(spec, dict) and int(spec.get("slop", 0)) != 0:
+            raise UnsupportedQuery(
+                "match_phrase_prefix slop != 0 is not supported")
+        text = spec if isinstance(spec, str) else spec["query"]
+        max_exp = (spec.get("max_expansions", 1024)
+                   if isinstance(spec, dict) else 1024)
+        pp_index = _resolve_index(index, _field)
+        if pp_index is not None and pp_index.meta.get("with_positions"):
+            return quantize_scores(pp_index.match_phrase_prefix(
+                text, k=k, max_expansions=max_exp)), "score_u"
+        return match_phrase_prefix_df(docs, tokenize_simple(text), k=k,
+                                      text_col=_field), "score_u"
+
+    if "match_bool_prefix" in query:
+        # ES match_bool_prefix (search-as-you-type): served from the
+        # field's index when one is registered (dictionary expansion +
+        # postings), else the DataFrame scorer
+        from ..operators.bm25 import match_bool_prefix_df
+        from ..textproc import tokenize_simple
+
+        ((_field, text),) = query["match_bool_prefix"].items()
+        terms = tokenize_simple(text if isinstance(text, str) else text["query"])
+        bp_index = _resolve_index(index, _field)
+        if bp_index is not None:
+            from ..operators.search import match_bool_prefix_topk
+
+            return match_bool_prefix_topk(bp_index, terms, k=k), "score_u"
+        return match_bool_prefix_df(docs, terms, k=k,
+                                    text_col=_field), "score_u"
+
+    if "script_score" in query:
+        # ES script_score: filter by the inner query, score = script over
+        # the row's fields — the SAFE ast-parsed arithmetic grammar (same
+        # parser as runtime_mappings/bucket_script; per-row painless is
+        # the reference's T13 anti-pattern). Quantized like every score.
+        from .aggs import _script_expr
+
+        spec = query["script_score"]
+        script = spec["script"]
+        if isinstance(script, dict):
+            script = script.get("source")
+        inner_q = spec.get("query", {"match_all": {}})
+        matched = out.filter(F.coalesce(_compile_clause(inner_q), F.lit(False)))
+        score = _script_expr(str(script), {c: c for c in matched.columns})
+    else:
+        # ES distance_feature: boost by closeness to an origin —
+        # score = boost * pivot / (pivot + |field - origin|), for date or
+        # numeric origins (geo origins route through haversine_m_col).
+        spec = query["distance_feature"]
+        field, boost = spec["field"], float(spec.get("boost", 1.0))
+        origin, pivot = spec["origin"], spec["pivot"]
+        if isinstance(origin, dict):  # geo point origin
+            dist = haversine_m_col(F.col(field), float(origin["lat"]),
+                                   float(origin["lon"]))
+            pivot_v = parse_distance(pivot)
+        elif isinstance(origin, str):  # date origin; pivot like "7d"
+            import datetime as _dt
+
+            o = _dt.datetime.fromisoformat(origin)
+            if o.tzinfo is None:  # anchor naive origins in UTC — the field
+                # side (cast('timestamp').cast('double')) and the DuckDB
+                # oracle are UTC epoch; a local-tz .timestamp() would shift
+                # every score by the driver's offset (ADVICE r4)
+                o = o.replace(tzinfo=_dt.timezone.utc)
+            dist = F.abs(F.col(field).cast("timestamp").cast("double")
+                         - F.lit(o.timestamp()))
+            unit_s = {"s": 1, "m": 60, "h": 3600, "d": 86400}
+            pivot_v = float(pivot[:-1]) * unit_s[pivot[-1]]
+        else:
+            dist = F.abs(F.col(field) - F.lit(float(origin)))
+            pivot_v = float(pivot)
+        matched = out
+        score = F.lit(boost) * F.lit(pivot_v) / (F.lit(pivot_v) + dist)
+    return (matched.select("doc_id", F.floor(score * 1e6).cast("long").alias("score_u"))
+            .orderBy(F.desc("score_u"), F.asc("doc_id")).limit(int(k))), "score_u"
+
+
+def _span_hits(docs: DataFrame, query: dict[str, Any], k: int,
+               index) -> DataFrame:
+    """ES span/intervals queries (Lucene span family): single-term
+    clauses, served from a POSITIONAL index when one is registered for
+    the field (span_or needs only tf postings), else the DataFrame span
+    scorers. Both paths emit the top k (doc_id, score_u)."""
+    from ..operators import relevance as _rel
+
+    def _span_term(clause):
+        if not isinstance(clause, dict) or "span_term" not in clause:
+            raise UnsupportedQuery("span clauses must be span_term")
+        ((f_, v),) = clause["span_term"].items()
+        return f_, (v["value"] if isinstance(v, dict) else v)
+
+    kq = next(iter(set(query) & set(_SPAN_KINDS)))
+    spec = query[kq]
+    if kq == "span_multi":
+        # ES span_multi: a prefix/wildcard inner query wrapped as a
+        # span clause — dictionary expansion (term-asc, capped), then
+        # the span_or contract with an order-free integer-quantized
+        # idf sum. Postings-served from the tf index when present.
+        m = spec.get("match")
+        inner_kinds = set(m or ()) & {"prefix", "wildcard"}
+        if not isinstance(m, dict) or not inner_kinds:
+            raise UnsupportedQuery(
+                "span_multi supports a prefix or wildcard match")
+        ik = next(iter(inner_kinds))
+        ((f_, v),) = m[ik].items()
+        val = v["value"] if isinstance(v, dict) else v
+        mx = int(v.get("max_expansions", 50)) if isinstance(v, dict) else 50
+        sm_index = _resolve_index(index, f_)
+        if sm_index is not None:
+            return quantize_scores(sm_index.span_multi(
+                val, kind=ik, max_expansions=mx, k=k))
+        return _rel.span_multi_df(docs, val, kind=ik, max_expansions=mx,
+                                  k=k, text_col=f_)
+    if kq == "intervals":
+        ((_field, ispec),) = spec.items()
+        from ..textproc import tokenize_simple
+
+        def _single_terms(subs, rule):
+            # any_of/all_of combinators over SINGLE-TERM match
+            # sub-rules lower onto existing kernels; richer nesting
+            # (prefix/wildcard/fuzzy sub-rules, recursive combos)
+            # raises rather than approximating
+            out_ = []
+            for s_ in subs:
+                if set(s_) != {"match"}:
+                    raise UnsupportedQuery(
+                        f"intervals {rule} supports match sub-rules")
+                ts = tokenize_simple(s_["match"]["query"])
+                if len(ts) != 1:
+                    raise UnsupportedQuery(
+                        f"intervals {rule} sub-rules must be one term")
+                out_.append(ts[0])
+            return out_
+
+        sp_index = _resolve_index(index, _field)
+        if "any_of" in ispec:
+            # union of single-term intervals: interval freq = summed
+            # occurrences — exactly the span_or contract
+            aterms = _single_terms(
+                ispec["any_of"].get("intervals", []), "any_of")
+            if not aterms:
+                raise UnsupportedQuery("intervals any_of needs intervals")
+            if sp_index is not None:
+                return quantize_scores(sp_index.span_or(aterms, k=k))
+            return _rel.span_or_df(docs, terms=aterms, k=k, text_col=_field)
+        if "all_of" in ispec:
+            # conjunction of single-term intervals under the
+            # combinator's own ordered/max_gaps — the match chain
+            aspec = ispec["all_of"]
+            iterms = _single_terms(aspec.get("intervals", []), "all_of")
+            if len(iterms) < 2:
+                raise UnsupportedQuery(
+                    "intervals all_of needs >= 2 intervals")
+            mg = int(aspec.get("max_gaps", -1))
+            ordered = bool(aspec.get("ordered", False))
+        elif "match" in ispec:
+            m = ispec["match"]
+            iterms = tokenize_simple(m["query"])
+            mg = int(m.get("max_gaps", -1))
+            ordered = bool(m.get("ordered", False))
+        else:
+            raise UnsupportedQuery(
+                "intervals supports the match/any_of/all_of rules")
+        return _intervals_hits(docs, sp_index, _field, iterms, mg, ordered, k)
+    if kq == "span_near":
+        pairs = [_span_term(c) for c in spec["clauses"]]
+        if len(pairs) < 2:
+            raise UnsupportedQuery("span_near needs >= 2 clauses")
+        if len({f_ for f_, _t in pairs}) != 1:
+            raise UnsupportedQuery("span clauses must share a field")
+        _field = pairs[0][0]
+        sn_terms = [t for _f, t in pairs]
+        sn_slop = int(spec.get("slop", 0))
+        # ES SpanNearQueryBuilder.DEFAULT_IN_ORDER = true
+        in_order = bool(spec.get("in_order", True))
+        if not in_order and len(sn_terms) > 2:
+            raise UnsupportedQuery(
+                "unordered span_near supports exactly 2 clauses")
+        if not (in_order and len(sn_terms) == 2):
+            # n-clause ordered / 2-clause unordered lower to the
+            # intervals chain: span_near's slop IS the intervals
+            # max_gaps bound ((span width - n) <= slop), so the
+            # positional kernel and DF scorer serve both shapes
+            return _intervals_hits(docs, _resolve_index(index, _field),
+                                   _field, sn_terms, sn_slop, in_order, k)
+        args = dict(first=sn_terms[0], second=sn_terms[1], slop=sn_slop)
+    elif kq == "span_first":
+        _field, t = _span_term(spec["match"])
+        args = dict(term=t, end=int(spec["end"]))
+    elif kq in ("span_or", "span_term"):
+        pairs = ([_span_term(c) for c in spec["clauses"]]
+                 if kq == "span_or"
+                 else [_span_term({"span_term": spec})])
+        if len({f_ for f_, _t in pairs}) != 1:
+            raise UnsupportedQuery("span clauses must share a field")
+        _field = pairs[0][0]
+        args = dict(terms=[t for _f, t in pairs])
+    elif kq in ("span_containing", "span_within"):
+        # supported shape: big = ordered two-clause span_near,
+        # little = one span_term (all on one field)
+        big, little = spec.get("big"), spec.get("little")
+        if not isinstance(big, dict) or "span_near" not in big:
+            raise UnsupportedQuery(f"{kq} big must be a span_near")
+        bn = big["span_near"]
+        pairs = [_span_term(c) for c in bn.get("clauses", [])]
+        if len(pairs) != 2:
+            raise UnsupportedQuery(f"{kq} big supports two clauses")
+        if not bn.get("in_order", True):
+            raise UnsupportedQuery(f"{kq} big supports in_order=true")
+        fl, tl = _span_term(little)
+        if {pairs[0][0], pairs[1][0], fl} != {fl}:
+            raise UnsupportedQuery("span clauses must share a field")
+        _field = fl
+        args = dict(first=pairs[0][1], second=pairs[1][1],
+                    little=tl, slop=int(bn.get("slop", 0)))
+    else:  # span_not
+        fi, ti = _span_term(spec["include"])
+        fx, tx = _span_term(spec["exclude"])
+        if fi != fx:
+            raise UnsupportedQuery("span_not clauses must share a field")
+        _field = fi
+        args = dict(include=ti, exclude=tx,
+                    pre=int(spec.get("pre", 0)),
+                    post=int(spec.get("post", 0)))
+    sp_index = _resolve_index(index, _field)
+    needs_pos = kq in ("span_near", "span_first", "span_not",
+                       "span_containing", "span_within")
+    if sp_index is not None and (
+            not needs_pos or sp_index.meta.get("with_positions")):
+        fn = {"span_near": sp_index.span_near,
+              "span_first": sp_index.span_first,
+              "span_or": sp_index.span_or,
+              "span_term": sp_index.span_or,
+              "span_not": sp_index.span_not,
+              "span_containing": sp_index.span_containing,
+              "span_within": sp_index.span_within}[kq]
+        return quantize_scores(fn(**args, k=k))
+    dfn = {"span_near": _rel.span_near_df,
+           "span_first": _rel.span_first_df,
+           "span_or": _rel.span_or_df,
+           "span_term": _rel.span_or_df,
+           "span_not": _rel.span_not_df,
+           "span_containing": _rel.span_containing_df,
+           "span_within": _rel.span_within_df}[kq]
+    return dfn(docs, **args, k=k, text_col=_field)
+
+
+def _intervals_hits(docs, sp_index, field, terms, max_gaps, ordered, k):
+    """The intervals match chain (and span_near shapes lowered onto it):
+    the positional kernel when the field's index has positions, else
+    relevance.intervals_match_df."""
+    if sp_index is not None and sp_index.meta.get("with_positions"):
+        return quantize_scores(sp_index.intervals_match(
+            terms, max_gaps=max_gaps, ordered=ordered, k=k))
+    from ..operators import relevance as _rel
+
+    return _rel.intervals_match_df(docs, terms, max_gaps=max_gaps,
+                                   ordered=ordered, k=k, text_col=field)
 
 
 def compile_query(docs: DataFrame, body: dict[str, Any], *,
                   index=None) -> DataFrame:
-    """Compile an ES-style query body over the docs DataFrame. If the body
-    is a `match` full-text query and an InvertedIndex is provided, route to
-    BM25 top-k (scores joined back onto the docs)."""
+    """Compile an ES-style search body over the docs DataFrame.
+
+    Filter queries (ids, term(s), range, exists, prefix, wildcard, fuzzy,
+    regexp, terms_set, bool, nested, geo_*, match_all) compile to scan +
+    filter + sort + from/size on the docs table; Catalyst pushes the
+    filters into the scan. ``constant_score`` is a filter with a literal
+    ``score_u``; ``percolate`` matches a stored-query registry; a pure
+    ``knn`` body joins its k nearest candidates back, in its own order.
+
+    Scored queries — match (fuzzy too), multi_match (phrase types too),
+    combined_fields, query_string, sparse_vector, simple_query_string,
+    the span family and intervals, more_like_this, match_phrase,
+    match_phrase_prefix, match_bool_prefix, script_score,
+    distance_feature, the rrf/linear retrievers and hybrid knn+query —
+    each compile to their top ``from + size`` hits (size defaults to 10)
+    as (doc_id, score column): served from ``index`` (an InvertedIndex,
+    or a {field: InvertedIndex} registry) when it covers the field, else
+    from a DataFrame scorer. The column is float ``score`` for
+    index-served match/match_phrase, ``rrf_u``/``linear_u`` (×1e9) for
+    the retrievers and ``score_u`` (×1e6) otherwise. Then one tail:
+
+    * ``min_score`` (on the float scale) drops hits below it, compared
+      at the column's scale;
+    * the hits join back onto the docs, ordered (score desc, doc_id asc);
+    * ``_source`` projects them as on the filter path, keeping the score;
+    * ``from`` skips that many hits, then ``size`` cuts the page.
+
+    Scored hits are score-ordered: ``sort`` or ``search_after`` on a
+    scored query raises UnsupportedQuery. ``post_filter`` filters the
+    whole ranking, then pages it."""
     body = dict(body or {})
     if "post_filter" in body:
         # ES post_filter: filters the HITS after scoring, before from/size
@@ -542,57 +1180,8 @@ def compile_query(docs: DataFrame, body: dict[str, Any], *,
         return out.limit(10 if size is None else int(size))  # ES default size
     query = body.get("query")
     size = body.get("size")
+    frm = int(body.get("from") or 0)
     out = docs
-
-    if "retriever" in body:
-        # ES 8.x retriever tree, rrf form: reciprocal rank fusion over
-        # N sub-retrievers — score(d) = Σᵢ 1/(rank_constant + rankᵢ(d))
-        # over the retrievers that returned d in their top
-        # rank_window_size. Each standard retriever compiles through
-        # this same compiler; ranks are deterministic (score desc,
-        # doc_id asc — the engine-wide tie-break), so the fused score
-        # is engine-independent: contributions are added in retriever
-        # order and quantized once (floor ×1e9 for resolution — the
-        # raw values are O(1/rank_constant)).
-        ret = body["retriever"]
-        if "linear" in ret:
-            return _compile_linear_retriever(docs, ret["linear"], size,
-                                             index=index)
-        if "rrf" not in ret:
-            raise UnsupportedQuery("retriever supports rrf and linear forms")
-        rrf = ret["rrf"]
-        retrievers = rrf.get("retrievers") or []
-        if len(retrievers) < 2:
-            raise UnsupportedQuery("rrf needs >= 2 retrievers")
-        rk = int(rrf.get("rank_constant", 60))
-        window = int(rrf.get("rank_window_size", 100))
-        from pyspark.sql import Window as _W
-
-        w = _W.partitionBy(F.lit(0)).orderBy(F.desc("score_u"),
-                                             F.asc("doc_id"))
-        fused = None
-        for i, r in enumerate(retrievers):
-            if not isinstance(r, dict):
-                raise UnsupportedQuery("rrf retriever entries must be dicts")
-            sub = _compile_sub_retriever(docs, r, window, index=index)
-            ranked = (sub.select("doc_id", "score_u").limit(window)
-                      .withColumn(f"r{i}", F.row_number().over(w))
-                      .select("doc_id", f"r{i}"))
-            fused = ranked if fused is None else fused.join(
-                ranked, "doc_id", "full_outer")
-        contrib = None
-        for i in range(len(retrievers)):
-            c = F.when(F.col(f"r{i}").isNotNull(),
-                       1.0 / (rk + F.col(f"r{i}"))).otherwise(F.lit(0.0))
-            contrib = c if contrib is None else contrib + c
-        out = (fused.select("doc_id",
-                            F.floor(contrib * 1e9).cast("long")
-                            .alias("rrf_u"))
-               .orderBy(F.desc("rrf_u"), F.asc("doc_id")))
-        if size:
-            out = out.limit(int(size))
-        return docs.join(F.broadcast(out), "doc_id").orderBy(
-            F.desc("rrf_u"), F.asc("doc_id"))
 
     rt = body.get("runtime_mappings")
     if rt:
@@ -618,70 +1207,12 @@ def compile_query(docs: DataFrame, body: dict[str, Any], *,
                 expr = expr.cast(casts[rtype])
             out = out.withColumn(rname, expr)
 
-    if "knn" in body:
-        # ES 8 kNN search body: {"knn": {"field": f, "query_vector": [...],
-        # "k": n, "filter": {...}}} → brute-force cosine top-k
-        # (similarity.cosine_topk plans TakeOrderedAndProject for the single
-        # query); at scale swap in the LSH/IVF variants behind the same
-        # contract. The knn-level "filter" is ES's PRE-filter: compiled and
-        # applied to the candidate set before the top-k, so k survivors are
-        # returned. Hybrid knn+query (ES 8.4+ additive score combination)
-        # is supported when the query section is a SELF-CONTAINED scorer
-        # (multi_match / combined_fields / query_string — each returns a
-        # quantized score_u with a DuckDB-mirrorable formula); other query
-        # kinds raise instead of silently dropping the query section.
-        if query:
-            _HYBRID_OK = {"multi_match", "combined_fields", "query_string"}
-            if not set(query) <= _HYBRID_OK:
-                raise UnsupportedQuery(
-                    "hybrid knn+query supports only self-contained scorers"
-                    f" {sorted(_HYBRID_OK)}; got {sorted(query)} — use"
-                    " knn.filter for pre-filtering")
-        if body.get("sort") and query:
-            raise UnsupportedQuery(
-                "hybrid knn+query is score-ordered; explicit sort unsupported")
-        from ..operators.similarity import cosine_topk
-
-        spec = body["knn"]
-        field, qv = spec["field"], [float(x) for x in spec["query_vector"]]
-        k = int(spec.get("k", size or 10))
-        cand = docs.filter(F.col(field).isNotNull())  # only docs with a vector
-        if spec.get("filter"):
-            cand = cand.filter(_compile_clause(spec["filter"]))
-        spark = docs.sparkSession
-        qdf = spark.createDataFrame([(0, qv)], f"query_id long, {field} array<double>")
-        emb = cand.withColumn(field, F.transform(field, lambda x: x.cast("double")))
-        # single literal query vector: n_queries=1 skips the probe job
-        top = cosine_topk(emb, qdf, k=k, id_col="doc_id", vec_col=field,
-                          n_queries=1)
-        if spec.get("similarity") is not None:
-            # ES 8.8 knn `similarity` cutoff: hits below the minimum
-            # cosine are dropped from the k nearest (fewer than k rows
-            # may return — the ES contract)
-            top = top.filter(F.col("cosine") >= float(spec["similarity"]))
-        if query:
-            # additive hybrid: score = query score_u + floor(cosine·boost·1e6)
-            # over the UNION of the two top-k hit sets (both bounded,
-            # broadcast-sized frames), final `size` cut after combination
-            n = int(size or 10)
-            knn_boost = float(spec.get("boost", 1.0))
-            knn_scores = top.select(
-                F.col("vec_id").alias("doc_id"),
-                F.floor(F.col("cosine") * 1e6 * knn_boost).cast("long").alias("knn_u"))
-            q_scores = (compile_query(docs, {"query": query, "size": n}, index=index)
-                        .select("doc_id", F.col("score_u").alias("q_u")))
-            combined = (
-                q_scores.join(knn_scores, "doc_id", "full_outer")
-                .select("doc_id",
-                        (F.coalesce(F.col("q_u"), F.lit(0))
-                         + F.coalesce(F.col("knn_u"), F.lit(0))).alias("score_u"))
-                .orderBy(F.desc("score_u"), F.asc("doc_id")).limit(n))
-            return docs.join(F.broadcast(combined), "doc_id").orderBy(
-                F.desc("score_u"), F.asc("doc_id"))
+    if "knn" in body and not query and "retriever" not in body:
         # explicit sort on pure-knn results (ES 8: the k NEAREST hits are
         # retrieved by similarity, then presented in the requested order —
         # sort changes presentation, never the candidate set); `rank`
         # stays as the similarity rank and breaks ties deterministically
+        cand, top = _knn_top(docs, body["knn"], size)
         sort_exprs = []
         for s in body.get("sort") or []:
             if s == "_doc":
@@ -705,454 +1236,21 @@ def compile_query(docs: DataFrame, body: dict[str, Any], *,
             out = out.select("doc_id", *[c for c in src if c != "doc_id"], "cosine", "rank")
         return out
 
-    min_score = body.get("min_score")
-
-    if query and "match" in query:
-        ((_field, text),) = query["match"].items()
-        f_index = _resolve_index(index, _field)
-        if isinstance(text, dict) and text.get("fuzziness") not in (None, 0, "0"):
-            # match with fuzziness: dictionary-expanded weighted BM25 —
-            # postings-served when the field has an index, else the
-            # vocabulary-expansion DataFrame scorer (identical contract)
-            from ..textproc import tokenize_simple
-
-            if (text.get("operator", "or") != "or"
-                    or int(text.get("minimum_should_match", 1)) != 1):
-                # fuzzy scoring is bool-should (OR); an AND/msm gate over
-                # expanded clauses is not implemented — raise rather than
-                # silently ignore the option
-                raise UnsupportedQuery(
-                    "match fuzziness supports operator=or, "
-                    "minimum_should_match=1 only")
-            fz = text["fuzziness"]
-            if fz != "AUTO":
-                fz = int(fz)
-            mx = int(text.get("max_expansions", 50))
-            k = size or 10
-            if f_index is not None:
-                from ..operators.search import fuzzy_match_topk
-
-                topk = fuzzy_match_topk(f_index, text["query"], fuzziness=fz,
-                                        max_expansions=mx, k=k)
-            else:
-                from ..operators.relevance import fuzzy_match_df
-
-                topk = fuzzy_match_df(docs, tokenize_simple(text["query"]),
-                                      fuzziness=fz, max_expansions=mx, k=k,
-                                      text_col=_field)
-            if min_score is not None:
-                topk = topk.filter(
-                    F.col("score_u") >= int(float(min_score) * 1e6))
-            return docs.join(F.broadcast(topk), "doc_id").orderBy(
-                F.desc("score_u"), F.asc("doc_id")
-            )
-        if f_index is None:
-            raise UnsupportedQuery("match query needs an InvertedIndex")
-        index = f_index
-        k = size or 10
-        if isinstance(text, dict):
-            # ES match options: {"query": ..., "operator": "and"|"or",
-            # "minimum_should_match": m} — forwarded to the index path
-            topk = index.search(
-                text["query"], k=k,
-                operator=text.get("operator", "or"),
-                minimum_should_match=int(text.get("minimum_should_match", 1)))
-        else:
-            topk = index.search(text, k=k)
+    score = None  # the score column of a scored query's hits
+    if _is_scored(body):
+        if body.get("sort") or body.get("search_after") is not None:
+            raise UnsupportedQuery(
+                "scored queries are score-ordered; explicit sort and "
+                "search_after are unsupported")
+        topk, score = _scored_hits(docs, out, body, frm + int(size or 10), index)
+        min_score = body.get("min_score")
         if min_score is not None:  # ES min_score: drop hits below the bar
-            topk = topk.filter(F.col("score") >= float(min_score))
-        return docs.join(F.broadcast(topk), "doc_id").orderBy(
-            F.desc("score"), F.asc("doc_id")
-        )
+            bar = float(min_score) * _SCORE_SCALE[score]
+            topk = topk.filter(F.col(score) >= (bar if score == "score" else int(bar)))
+        out = out.join(F.broadcast(topk), "doc_id").orderBy(
+            F.desc(score), F.asc("doc_id"))
 
-    if query and "multi_match" in query:
-        from ..operators.bm25 import multi_match_df
-        from ..textproc import tokenize_simple
-
-        spec = query["multi_match"]
-        terms = tokenize_simple(spec["query"])
-        fields = list(spec["fields"])
-        per_field = {f: _resolve_index(index if isinstance(index, dict) else None, f)
-                     for f in fields}
-        mtype = spec.get("type", "best_fields")
-        if mtype in ("phrase", "phrase_prefix"):
-            # phrase types: per-field phrase scorer, best_fields MAX
-            # combine — served from POSITIONAL per-field indexes when
-            # every field has one, else the DataFrame composition
-            from ..operators.relevance import multi_match_phrase_df
-
-            is_pref = mtype == "phrase_prefix"
-            if all(ix is not None and ix.meta.get("with_positions")
-                   for ix in per_field.values()):
-                from ..operators.search import multi_match_phrase_topk
-
-                topk = multi_match_phrase_topk(
-                    per_field, spec["query"], k=size or 10, prefix=is_pref,
-                    max_expansions=int(spec.get("max_expansions", 1024)))
-            else:
-                topk = multi_match_phrase_df(docs, terms, fields,
-                                             k=size or 10, prefix=is_pref)
-            if min_score is not None:
-                topk = topk.filter(
-                    F.col("score_u") >= int(float(min_score) * 1e6))
-            return docs.join(F.broadcast(topk), "doc_id").orderBy(
-                F.desc("score_u"), F.asc("doc_id")
-            )
-        if all(per_field.values()):
-            # every requested field has its own index → serve from
-            # postings only (ES shape: one Lucene index per field);
-            # rank/score-identical to multi_match_df
-            from ..operators.search import multi_match_topk
-
-            topk = multi_match_topk(per_field, terms, k=size or 10,
-                                    match_type=spec.get("type", "best_fields"))
-        else:
-            # DataFrame fallback (per-field BM25 statistics, full scan)
-            topk = multi_match_df(docs, terms, fields, k=size or 10,
-                                  match_type=spec.get("type", "best_fields"))
-        if min_score is not None:  # quantized contract: floor(x * 1e6)
-            topk = topk.filter(F.col("score_u") >= int(float(min_score) * 1e6))
-        return docs.join(F.broadcast(topk), "doc_id").orderBy(
-            F.desc("score_u"), F.asc("doc_id")
-        )
-
-    if query and "combined_fields" in query:
-        # ES combined_fields: fields blended into ONE BM25 field (shared
-        # statistics) — see operators/bm25.combined_fields_df
-        from ..operators.bm25 import combined_fields_df
-        from ..textproc import tokenize_simple
-
-        spec = query["combined_fields"]
-        fields = []
-        weights = {}
-        for f in spec["fields"]:
-            if "^" in f:
-                name, w = f.split("^", 1)
-                fields.append(name)
-                weights[name] = int(float(w))
-            else:
-                fields.append(f)
-        from ..operators.index_build import combined_index_key
-
-        ck = combined_index_key(fields, weights)
-        c_idx = index.get(ck) if isinstance(index, dict) else None
-        if c_idx is not None:
-            # an index over this exact weighted concatenation exists →
-            # postings-only serving, bit-identical to the DF scorer
-            from ..operators.search import combined_fields_topk
-
-            topk = combined_fields_topk(
-                c_idx, tokenize_simple(spec["query"]), k=size or 10)
-        else:
-            topk = combined_fields_df(docs, tokenize_simple(spec["query"]),
-                                      fields, k=size or 10, weights=weights)
-        if min_score is not None:
-            topk = topk.filter(F.col("score_u") >= int(float(min_score) * 1e6))
-        return docs.join(F.broadcast(topk), "doc_id").orderBy(
-            F.desc("score_u"), F.asc("doc_id")
-        )
-
-    if query and "query_string" in query:
-        from ..operators.bm25 import query_string_df
-
-        spec = query["query_string"]
-        field = spec.get("default_field", "text")
-        qs_idx = index.get(field) if isinstance(index, dict) else None
-        if qs_idx is not None:
-            # boolean gate + scoring inside the shard kernel over the
-            # query terms' postings only — no corpus scan
-            from ..operators.search import query_string_topk
-
-            topk = query_string_topk(qs_idx, spec["query"], k=size or 10)
-        else:
-            topk = query_string_df(docs, spec["query"], k=size or 10, text_col=field)
-        return docs.join(F.broadcast(topk), "doc_id").orderBy(
-            F.desc("score_u"), F.asc("doc_id")
-        )
-
-    if query and ("sparse_vector" in query or "text_expansion" in query):
-        # ES 8.15 sparse_vector (legacy text_expansion): weighted-token
-        # dot product against a rank_features doc field or a BoW-tf
-        # featurized text field (operators/relevance.py). Only the
-        # pre-computed query_vector form is servable here — model
-        # inference (inference_id / model_id expansion) needs an ML node
-        # and raises loudly, like every other environment-blocked path.
-        from ..operators.relevance import sparse_vector_df
-
-        if "text_expansion" in query:
-            raise UnsupportedQuery(
-                "text_expansion needs model inference; precompute the "
-                "expansion and use sparse_vector with query_vector")
-        spec = query["sparse_vector"]
-        if "inference_id" in spec or "query_vector" not in spec:
-            raise UnsupportedQuery(
-                "sparse_vector supports the pre-computed query_vector "
-                "form (inference is not available in this engine)")
-        fld = spec.get("field", "text")
-        f_index = _resolve_index(index, fld)
-        if f_index is not None:
-            # postings-bounded serving: same integer contract as the
-            # DataFrame scorer, work proportional to the query terms'
-            # posting data (search.InvertedIndex.sparse_vector_scores)
-            topk = (f_index.sparse_vector_scores(spec["query_vector"])
-                    .orderBy(F.desc("score_u"), F.asc("doc_id"))
-                    .limit(int(size or 10)))
-        else:
-            topk = sparse_vector_df(docs, spec["query_vector"],
-                                    k=size or 10, field=fld)
-        if min_score is not None:
-            topk = topk.filter(
-                F.col("score_u") >= int(float(min_score) * 1e6))
-        return docs.join(F.broadcast(topk), "doc_id").orderBy(
-            F.desc("score_u"), F.asc("doc_id")
-        )
-
-    if query and "simple_query_string" in query:
-        # ES simple_query_string: the lenient end-user grammar, compiled
-        # to a flat bool of term/phrase/prefix clauses and scored in two
-        # corpus passes (operators/simple_query.py). Reference contract:
-        # the plugin ships the body verbatim to ES (out_elasticsearch.rb
-        # client.search); ES's SimpleQueryParser is this grammar.
-        from ..operators.simple_query import simple_query_string_df
-
-        spec = query["simple_query_string"]
-        if "flags" in spec:
-            raise UnsupportedQuery("simple_query_string flags")
-        fields = spec.get("fields", ["text"])
-        if len(fields) != 1:
-            raise UnsupportedQuery(
-                "simple_query_string supports one field (use multi_match "
-                "for cross-field scoring)")
-        topk = simple_query_string_df(
-            docs, spec["query"], k=size or 10,
-            default_operator=spec.get("default_operator", "or").lower(),
-            text_col=fields[0].split("^")[0])
-        if min_score is not None:
-            topk = topk.filter(F.col("score_u") >= int(float(min_score) * 1e6))
-        return docs.join(F.broadcast(topk), "doc_id").orderBy(
-            F.desc("score_u"), F.asc("doc_id")
-        )
-
-    if query and any(kq in query for kq in
-                     ("span_near", "span_first", "span_or", "span_not",
-                      "span_term", "span_containing", "span_within",
-                      "span_multi", "intervals")):
-        # ES span/intervals queries (Lucene span family): single-term
-        # clauses, served from a POSITIONAL index when one is registered
-        # for the field (span_or needs only tf postings), else the
-        # DataFrame span scorers. Both paths emit (doc_id, score_u).
-        from ..operators import relevance as _rel
-
-        def _span_term(clause):
-            if not isinstance(clause, dict) or "span_term" not in clause:
-                raise UnsupportedQuery("span clauses must be span_term")
-            ((f_, v),) = clause["span_term"].items()
-            return f_, (v["value"] if isinstance(v, dict) else v)
-
-        k = size or 10
-        kq = next(iter(set(query) & {"span_near", "span_first", "span_or",
-                                     "span_not", "span_term",
-                                     "span_containing", "span_within",
-                                     "span_multi", "intervals"}))
-        spec = query[kq]
-        if kq == "span_multi":
-            # ES span_multi: a prefix/wildcard inner query wrapped as a
-            # span clause — dictionary expansion (term-asc, capped), then
-            # the span_or contract with an order-free integer-quantized
-            # idf sum. Postings-served from the tf index when present.
-            m = spec.get("match")
-            inner_kinds = set(m or ()) & {"prefix", "wildcard"}
-            if not isinstance(m, dict) or not inner_kinds:
-                raise UnsupportedQuery(
-                    "span_multi supports a prefix or wildcard match")
-            ik = next(iter(inner_kinds))
-            ((f_, v),) = m[ik].items()
-            val = v["value"] if isinstance(v, dict) else v
-            mx = int(v.get("max_expansions", 50)) if isinstance(v, dict) else 50
-            sm_index = _resolve_index(index, f_)
-            if sm_index is not None:
-                topk = sm_index.span_multi(
-                    val, kind=ik, max_expansions=mx, k=k).select(
-                    "doc_id", F.floor(F.col("score") * 1e6)
-                    .cast("long").alias("score_u"))
-            else:
-                topk = _rel.span_multi_df(docs, val, kind=ik,
-                                          max_expansions=mx, k=k,
-                                          text_col=f_)
-            return docs.join(F.broadcast(topk), "doc_id").orderBy(
-                F.desc("score_u"), F.asc("doc_id")
-            )
-        if kq == "intervals":
-            ((_field, ispec),) = spec.items()
-            from ..textproc import tokenize_simple
-
-            def _single_terms(subs, rule):
-                # any_of/all_of combinators over SINGLE-TERM match
-                # sub-rules lower onto existing kernels; richer nesting
-                # (prefix/wildcard/fuzzy sub-rules, recursive combos)
-                # raises rather than approximating
-                out_ = []
-                for s_ in subs:
-                    if set(s_) != {"match"}:
-                        raise UnsupportedQuery(
-                            f"intervals {rule} supports match sub-rules")
-                    ts = tokenize_simple(s_["match"]["query"])
-                    if len(ts) != 1:
-                        raise UnsupportedQuery(
-                            f"intervals {rule} sub-rules must be one term")
-                    out_.append(ts[0])
-                return out_
-
-            sp_index = _resolve_index(index, _field)
-            has_pos = (sp_index is not None
-                       and sp_index.meta.get("with_positions"))
-            if "any_of" in ispec:
-                # union of single-term intervals: interval freq = summed
-                # occurrences — exactly the span_or contract
-                aterms = _single_terms(
-                    ispec["any_of"].get("intervals", []), "any_of")
-                if not aterms:
-                    raise UnsupportedQuery("intervals any_of needs intervals")
-                if sp_index is not None:
-                    topk = sp_index.span_or(aterms, k=k).select(
-                        "doc_id", F.floor(F.col("score") * 1e6)
-                        .cast("long").alias("score_u"))
-                else:
-                    topk = _rel.span_or_df(docs, terms=aterms, k=k,
-                                           text_col=_field)
-                return docs.join(F.broadcast(topk), "doc_id").orderBy(
-                    F.desc("score_u"), F.asc("doc_id"))
-            if "all_of" in ispec:
-                # conjunction of single-term intervals under the
-                # combinator's own ordered/max_gaps — the match chain
-                aspec = ispec["all_of"]
-                iterms = _single_terms(aspec.get("intervals", []), "all_of")
-                if len(iterms) < 2:
-                    raise UnsupportedQuery(
-                        "intervals all_of needs >= 2 intervals")
-                mg = int(aspec.get("max_gaps", -1))
-                ordered = bool(aspec.get("ordered", False))
-            elif "match" in ispec:
-                m = ispec["match"]
-                iterms = tokenize_simple(m["query"])
-                mg = int(m.get("max_gaps", -1))
-                ordered = bool(m.get("ordered", False))
-            else:
-                raise UnsupportedQuery(
-                    "intervals supports the match/any_of/all_of rules")
-            if has_pos:
-                topk = sp_index.intervals_match(
-                    iterms, max_gaps=mg, ordered=ordered, k=k)
-                topk = topk.select("doc_id", F.floor(F.col("score") * 1e6)
-                                   .cast("long").alias("score_u"))
-            else:
-                topk = _rel.intervals_match_df(docs, iterms, max_gaps=mg,
-                                               ordered=ordered, k=k,
-                                               text_col=_field)
-        else:
-            if kq == "span_near":
-                pairs = [_span_term(c) for c in spec["clauses"]]
-                if len(pairs) < 2:
-                    raise UnsupportedQuery("span_near needs >= 2 clauses")
-                if len({f_ for f_, _t in pairs}) != 1:
-                    raise UnsupportedQuery("span clauses must share a field")
-                _field = pairs[0][0]
-                sn_terms = [t for _f, t in pairs]
-                sn_slop = int(spec.get("slop", 0))
-                # ES SpanNearQueryBuilder.DEFAULT_IN_ORDER = true
-                in_order = bool(spec.get("in_order", True))
-                if not in_order and len(sn_terms) > 2:
-                    raise UnsupportedQuery(
-                        "unordered span_near supports exactly 2 clauses")
-                if in_order and len(sn_terms) == 2:
-                    args = dict(first=sn_terms[0], second=sn_terms[1],
-                                slop=sn_slop)
-                else:
-                    # n-clause ordered / 2-clause unordered lower to the
-                    # intervals chain: span_near's slop IS the intervals
-                    # max_gaps bound ((span width - n) <= slop), so the
-                    # positional kernel and DF scorer serve both shapes
-                    sn_index = _resolve_index(index, _field)
-                    if (sn_index is not None
-                            and sn_index.meta.get("with_positions")):
-                        topk = sn_index.intervals_match(
-                            sn_terms, max_gaps=sn_slop, ordered=in_order,
-                            k=k).select(
-                            "doc_id", F.floor(F.col("score") * 1e6)
-                            .cast("long").alias("score_u"))
-                    else:
-                        topk = _rel.intervals_match_df(
-                            docs, sn_terms, max_gaps=sn_slop,
-                            ordered=in_order, k=k, text_col=_field)
-                    return docs.join(F.broadcast(topk), "doc_id").orderBy(
-                        F.desc("score_u"), F.asc("doc_id"))
-            elif kq == "span_first":
-                _field, t = _span_term(spec["match"])
-                args = dict(term=t, end=int(spec["end"]))
-            elif kq in ("span_or", "span_term"):
-                pairs = ([_span_term(c) for c in spec["clauses"]]
-                         if kq == "span_or"
-                         else [_span_term({"span_term": spec})])
-                if len({f_ for f_, _t in pairs}) != 1:
-                    raise UnsupportedQuery("span clauses must share a field")
-                _field = pairs[0][0]
-                args = dict(terms=[t for _f, t in pairs])
-            elif kq in ("span_containing", "span_within"):
-                # supported shape: big = ordered two-clause span_near,
-                # little = one span_term (all on one field)
-                big, little = spec.get("big"), spec.get("little")
-                if not isinstance(big, dict) or "span_near" not in big:
-                    raise UnsupportedQuery(f"{kq} big must be a span_near")
-                bn = big["span_near"]
-                pairs = [_span_term(c) for c in bn.get("clauses", [])]
-                if len(pairs) != 2:
-                    raise UnsupportedQuery(f"{kq} big supports two clauses")
-                if not bn.get("in_order", True):
-                    raise UnsupportedQuery(f"{kq} big supports in_order=true")
-                fl, tl = _span_term(little)
-                if {pairs[0][0], pairs[1][0], fl} != {fl}:
-                    raise UnsupportedQuery("span clauses must share a field")
-                _field = fl
-                args = dict(first=pairs[0][1], second=pairs[1][1],
-                            little=tl, slop=int(bn.get("slop", 0)))
-            else:  # span_not
-                fi, ti = _span_term(spec["include"])
-                fx, tx = _span_term(spec["exclude"])
-                if fi != fx:
-                    raise UnsupportedQuery("span_not clauses must share a field")
-                _field = fi
-                args = dict(include=ti, exclude=tx,
-                            pre=int(spec.get("pre", 0)),
-                            post=int(spec.get("post", 0)))
-            sp_index = _resolve_index(index, _field)
-            needs_pos = kq in ("span_near", "span_first", "span_not",
-                               "span_containing", "span_within")
-            if sp_index is not None and (
-                    not needs_pos or sp_index.meta.get("with_positions")):
-                fn = {"span_near": sp_index.span_near,
-                      "span_first": sp_index.span_first,
-                      "span_or": sp_index.span_or,
-                      "span_term": sp_index.span_or,
-                      "span_not": sp_index.span_not,
-                      "span_containing": sp_index.span_containing,
-                      "span_within": sp_index.span_within}[kq]
-                topk = fn(**args, k=k).select(
-                    "doc_id", F.floor(F.col("score") * 1e6)
-                    .cast("long").alias("score_u"))
-            else:
-                dfn = {"span_near": _rel.span_near_df,
-                       "span_first": _rel.span_first_df,
-                       "span_or": _rel.span_or_df,
-                       "span_term": _rel.span_or_df,
-                       "span_not": _rel.span_not_df,
-                       "span_containing": _rel.span_containing_df,
-                       "span_within": _rel.span_within_df}[kq]
-                topk = dfn(docs, **args, k=k, text_col=_field)
-        return docs.join(F.broadcast(topk), "doc_id").orderBy(
-            F.desc("score_u"), F.asc("doc_id")
-        )
-
-    if query and "percolate" in query:
+    elif query and "percolate" in query:
         # ES percolate query — REVERSE search: `docs` is the REGISTRY of
         # stored queries (query_id, terms, msm — operators/percolate.py's
         # model) and the body carries ONE inline document; matching
@@ -1188,162 +1286,7 @@ def compile_query(docs: DataFrame, body: dict[str, Any], *,
             out = out.limit(int(size))
         return out
 
-    if query and "more_like_this" in query:
-        # ES more_like_this (single liked doc by _id): seed-term
-        # selection + BM25 over the selected terms — postings-served
-        # when the field has an index (seed lookup is a one-row
-        # pushdown filter), else the two-pass DataFrame scorer
-        spec = query["more_like_this"]
-        fields = list(spec.get("fields", ["text"]))
-        if len(fields) != 1:
-            raise UnsupportedQuery("more_like_this supports exactly one field")
-        like = spec.get("like")
-        if isinstance(like, list):
-            if len(like) != 1:
-                raise UnsupportedQuery("more_like_this supports one liked doc")
-            like = like[0]
-        if not isinstance(like, dict) or "_id" not in like:
-            raise UnsupportedQuery('more_like_this needs like {"_id": ...}')
-        like_id = int(like["_id"])
-        mqt = int(spec.get("max_query_terms", 10))
-        mwl = int(spec.get("min_word_length", 3))
-        k = size or 10
-        mlt_index = _resolve_index(index, fields[0])
-        if mlt_index is not None:
-            from ..operators.search import more_like_this_topk
-
-            topk = more_like_this_topk(mlt_index, docs, like_id,
-                                       max_query_terms=mqt, k=k,
-                                       text_col=fields[0], min_term_len=mwl)
-        else:
-            from ..operators.relevance import more_like_this_df
-
-            topk = more_like_this_df(docs, like_id, max_query_terms=mqt,
-                                     k=k, text_col=fields[0],
-                                     min_term_len=mwl)
-        return docs.join(F.broadcast(topk), "doc_id").orderBy(
-            F.desc("score_u"), F.asc("doc_id")
-        )
-
-    if query and "match_phrase" in query:
-        ((_field, text),) = query["match_phrase"].items()
-        if isinstance(text, dict) and int(text.get("slop", 0)) != 0:
-            # sloppy phrase matching (Lucene SloppyPhraseScorer) is not
-            # implemented — raise rather than silently score slop as 0
-            raise UnsupportedQuery("match_phrase slop != 0 is not supported")
-        p_index = _resolve_index(index, _field)
-        if p_index is None:
-            raise UnsupportedQuery("match_phrase query needs an InvertedIndex")
-        k = size or 10
-        topk = p_index.match_phrase(text if isinstance(text, str) else text["query"], k=k)
-        return docs.join(F.broadcast(topk), "doc_id").orderBy(
-            F.desc("score"), F.asc("doc_id")
-        )
-
-    if query and "match_phrase_prefix" in query:
-        # ES match_phrase_prefix: served from a POSITIONAL index when one
-        # is registered for the field (dictionary expansion of the last
-        # term + the same adjacency kernel as match_phrase), else the
-        # DataFrame scorer. Quantized either way so both paths emit the
-        # same (doc_id, score_u) shape.
-        from ..operators.relevance import match_phrase_prefix_df
-        from ..textproc import tokenize_simple
-
-        ((_field, spec),) = query["match_phrase_prefix"].items()
-        if isinstance(spec, dict) and int(spec.get("slop", 0)) != 0:
-            raise UnsupportedQuery(
-                "match_phrase_prefix slop != 0 is not supported")
-        text = spec if isinstance(spec, str) else spec["query"]
-        max_exp = (spec.get("max_expansions", 1024)
-                   if isinstance(spec, dict) else 1024)
-        pp_index = _resolve_index(index, _field)
-        k = size or 10
-        if pp_index is not None and pp_index.meta.get("with_positions"):
-            topk = pp_index.match_phrase_prefix(
-                text, k=k, max_expansions=max_exp
-            ).select("doc_id", F.floor(F.col("score") * 1e6)
-                     .cast("long").alias("score_u"))
-        else:
-            topk = match_phrase_prefix_df(docs, tokenize_simple(text), k=k,
-                                          text_col=_field)
-        return docs.join(F.broadcast(topk), "doc_id").orderBy(
-            F.desc("score_u"), F.asc("doc_id")
-        )
-
-    if query and "match_bool_prefix" in query:
-        # ES match_bool_prefix (search-as-you-type): served from the
-        # field's index when one is registered (dictionary expansion +
-        # postings), else the DataFrame scorer
-        from ..operators.bm25 import match_bool_prefix_df
-        from ..textproc import tokenize_simple
-
-        ((_field, text),) = query["match_bool_prefix"].items()
-        terms = tokenize_simple(text if isinstance(text, str) else text["query"])
-        bp_index = _resolve_index(index, _field)
-        if bp_index is not None:
-            from ..operators.search import match_bool_prefix_topk
-
-            topk = match_bool_prefix_topk(bp_index, terms, k=size or 10)
-        else:
-            topk = match_bool_prefix_df(docs, terms, k=size or 10,
-                                        text_col=_field)
-        return docs.join(F.broadcast(topk), "doc_id").orderBy(
-            F.desc("score_u"), F.asc("doc_id")
-        )
-
-    if query and "script_score" in query:
-        # ES script_score: filter by the inner query, score = script over
-        # the row's fields — the SAFE ast-parsed arithmetic grammar (same
-        # parser as runtime_mappings/bucket_script; per-row painless is
-        # the reference's T13 anti-pattern). Quantized like every score.
-        from .aggs import _script_expr
-
-        spec = query["script_score"]
-        script = spec["script"]
-        if isinstance(script, dict):
-            script = script.get("source")
-        inner_q = spec.get("query", {"match_all": {}})
-        out = out.filter(F.coalesce(_compile_clause(inner_q), F.lit(False)))
-        paths = {c: c for c in out.columns}
-        out = out.withColumn(
-            "score_u",
-            F.floor(_script_expr(str(script), paths) * 1e6).cast("long"))
-        k = size or 10
-        return out.orderBy(F.desc("score_u"), F.asc("doc_id")).limit(int(k))
-
-    if query and "distance_feature" in query:
-        # ES distance_feature: boost by closeness to an origin —
-        # score = boost * pivot / (pivot + |field - origin|), for date or
-        # numeric origins (geo origins route through haversine_m_col).
-        spec = query["distance_feature"]
-        field, boost = spec["field"], float(spec.get("boost", 1.0))
-        origin, pivot = spec["origin"], spec["pivot"]
-        if isinstance(origin, dict):  # geo point origin
-            dist = haversine_m_col(F.col(field), float(origin["lat"]),
-                                   float(origin["lon"]))
-            pivot_v = parse_distance(pivot)
-        elif isinstance(origin, str):  # date origin; pivot like "7d"
-            import datetime as _dt
-
-            o = _dt.datetime.fromisoformat(origin)
-            if o.tzinfo is None:  # anchor naive origins in UTC — the field
-                # side (cast('timestamp').cast('double')) and the DuckDB
-                # oracle are UTC epoch; a local-tz .timestamp() would shift
-                # every score by the driver's offset (ADVICE r4)
-                o = o.replace(tzinfo=_dt.timezone.utc)
-            dist = F.abs(F.col(field).cast("timestamp").cast("double")
-                         - F.lit(o.timestamp()))
-            unit_s = {"s": 1, "m": 60, "h": 3600, "d": 86400}
-            pivot_v = float(pivot[:-1]) * unit_s[pivot[-1]]
-        else:
-            dist = F.abs(F.col(field) - F.lit(float(origin)))
-            pivot_v = float(pivot)
-        score = F.lit(boost) * F.lit(pivot_v) / (F.lit(pivot_v) + dist)
-        out = out.withColumn("score_u", F.floor(score * 1e6).cast("long"))
-        k = size or 10
-        return out.orderBy(F.desc("score_u"), F.asc("doc_id")).limit(int(k))
-
-    if query and "constant_score" in query:
+    elif query and "constant_score" in query:
         # ES constant_score: the wrapped filter selects, scoring is a
         # constant boost (no BM25 statistics touched — pure filter plan
         # with a literal column; quantized like every score here)
@@ -1351,21 +1294,22 @@ def compile_query(docs: DataFrame, body: dict[str, Any], *,
         out = out.filter(_compile_clause(spec["filter"])).withColumn(
             "score_u",
             F.lit(int(float(spec.get("boost", 1.0)) * 1e6)).cast("long"))
-        query = None
 
-    if query:
+    elif query:
         out = out.filter(_compile_clause(query))
 
     src = body.get("_source")
     # the _id lead column only when the table has one (events-style tables
-    # address rows by their own keys)
+    # address rows by their own keys); a scored query's score column stays
     id_lead = ["doc_id"] if "doc_id" in out.columns else []
+    keep = [score] if score else []
+    skip = {"doc_id", *keep}
     if src is False:
         if not id_lead:
             raise UnsupportedQuery("_source: false needs a doc_id column")
-        out = out.select(*id_lead)
+        out = out.select(*id_lead, *keep)
     elif isinstance(src, list):
-        out = out.select(*id_lead, *[c for c in src if c != "doc_id"])
+        out = out.select(*id_lead, *[c for c in src if c not in skip], *keep)
     elif isinstance(src, dict):
         # ES object form: {"includes": [...], "excludes": [...]} with
         # * / ? wildcards per pattern
@@ -1383,7 +1327,7 @@ def compile_query(docs: DataFrame, body: dict[str, Any], *,
         exc = src.get("excludes") or []
         cols = [c for c in out.columns
                 if (inc is None or match(c, inc)) and not match(c, exc)]
-        out = out.select(*id_lead, *[c for c in cols if c != "doc_id"])
+        out = out.select(*id_lead, *[c for c in cols if c not in skip], *keep)
 
     sort_cols = []
     sort_keys: list[tuple[str, bool]] = []  # (field, ascending) for search_after
@@ -1421,7 +1365,6 @@ def compile_query(docs: DataFrame, body: dict[str, Any], *,
     if sort_cols:  # one orderBy — chained orderBy calls would replace each other
         out = out.orderBy(*sort_cols)
 
-    frm = int(body.get("from") or 0)
     if frm:
         # ES from/size offset pagination. Spark plans Offset under the sort
         # (GlobalLimit-style merge of from+size rows from the partition

@@ -360,3 +360,119 @@ def test_sparse_vector_index_identity_and_plan(spark, docs, field_registry,
     assert served == fallback
     # absent-everywhere query vector → empty result, not an error
     assert idx.sparse_vector_scores({"zzznope": 1.0}).count() == 0
+
+
+_SPAN_OR = {"span_or": {"clauses": [{"span_term": {"text": "merge"}},
+                                    {"span_term": {"text": "window"}}]}}
+_SPAN_NEAR = {"span_near": {"clauses": [{"span_term": {"text": "merge"}},
+                                        {"span_term": {"text": "data"}}],
+                            "slop": 2}}
+_BIG = {"span_near": {"clauses": [{"span_term": {"text": "the"}},
+                                  {"span_term": {"text": "data"}}],
+                      "slop": 5}}
+_STANDARDS = [{"standard": {"query": _SPAN_OR}},
+              {"standard": {"query": {"span_or": {"clauses": [
+                  {"span_term": {"text": "fast"}}]}}}}]
+# (scored kind, body, registry serving it: "tf", "positional" or None for
+# the DataFrame scorer only). Kinds with both serving paths run on both.
+_SCORED = [
+    ("match", {"query": {"match": {"text": "merge window"}}}, "tf"),
+    ("match_fuzzy", {"query": {"match": {"text": {
+        "query": "mergee windw", "fuzziness": 1}}}}, "tf"),
+    ("multi_match", {"query": {"multi_match": {
+        "query": "fast table src1", "fields": ["text", "source"]}}}, "tf"),
+    ("multi_match_phrase", {"query": {"multi_match": {
+        "query": "the data", "type": "phrase",
+        "fields": ["text", "source"]}}}, "positional"),
+    ("combined_fields", {"query": {"combined_fields": {
+        "query": "fast table src1", "fields": ["text", "source^2"]}}}, "tf"),
+    ("query_string", {"query": {"query_string": {
+        "query": "fast AND table OR window", "default_field": "text"}}},
+     "tf"),
+    ("sparse_vector", {"query": {"sparse_vector": {
+        "field": "text", "query_vector": {"fast": 1.5, "table": 0.7}}}},
+     "tf"),
+    ("simple_query_string", {"query": {"simple_query_string": {
+        "query": "merge + data | scan*"}}}, None),
+    ("span_or", {"query": _SPAN_OR}, "tf"),
+    ("span_term", {"query": {"span_term": {"text": "merge"}}}, "tf"),
+    ("span_near", {"query": _SPAN_NEAR}, "positional"),
+    ("span_first", {"query": {"span_first": {
+        "match": {"span_term": {"text": "scan"}}, "end": 5}}}, "positional"),
+    ("span_not", {"query": {"span_not": {
+        "include": {"span_term": {"text": "scan"}},
+        "exclude": {"span_term": {"text": "merge"}},
+        "pre": 1, "post": 1}}}, "positional"),
+    ("span_containing", {"query": {"span_containing": {
+        "big": _BIG, "little": {"span_term": {"text": "merge"}}}}},
+     "positional"),
+    ("span_within", {"query": {"span_within": {
+        "big": _BIG, "little": {"span_term": {"text": "merge"}}}}},
+     "positional"),
+    ("span_multi", {"query": {"span_multi": {"match": {
+        "prefix": {"text": {"value": "sp"}}}}}}, "tf"),
+    ("intervals", {"query": {"intervals": {"text": {"match": {
+        "query": "merge data", "max_gaps": 2, "ordered": True}}}}},
+     "positional"),
+    ("more_like_this", {"query": {"more_like_this": {
+        "fields": ["text"], "like": [{"_id": 3}], "max_query_terms": 8}}},
+     "tf"),
+    ("match_phrase", {"query": {"match_phrase": {"text": "the data"}}},
+     "positional"),
+    ("match_phrase_prefix", {"query": {"match_phrase_prefix": {
+        "text": "the da"}}}, "positional"),
+    ("match_bool_prefix", {"query": {"match_bool_prefix": {
+        "text": "merge ta"}}}, "tf"),
+    ("script_score", {"query": {"script_score": {
+        "query": {"term": {"lang": "en"}},
+        "script": {"source": "n_chars * 2 + doc_id / 100"}}}}, None),
+    ("distance_feature", {"query": {"distance_feature": {
+        "field": "n_chars", "origin": 300, "pivot": 50}}}, None),
+    ("rrf", {"retriever": {"rrf": {"retrievers": _STANDARDS,
+                                   "rank_window_size": 20}}}, "tf"),
+    ("linear", {"retriever": {"linear": {"retrievers": [
+        {"retriever": r, "normalizer": "minmax"} for r in _STANDARDS],
+        "rank_window_size": 20}}}, "tf"),
+    ("hybrid_knn", {"knn": {"field": "vec", "query_vector": [1.0, 0.5],
+                            "k": 8},
+                    "query": {"multi_match": {"query": "fast table",
+                                              "fields": ["text"]}}}, "tf"),
+]
+_PAGED = [pytest.param(body, reg if served else None, id=f"{kind}-{served}")
+          for kind, body, reg in _SCORED
+          for served in ([True, False] if reg else [False])
+          if served or kind not in ("match", "match_phrase")]
+_SCALE = {"score": 1, "score_u": 1e6, "rrf_u": 1e9, "linear_u": 1e9}
+
+
+@pytest.mark.parametrize("body,registry", _PAGED)
+def test_scored_query_from_min_score_and_sort(spark, docs, field_registry,
+                                              pos_field_registry, body,
+                                              registry):
+    """Every scored query kind, index-served and DataFrame-scored, pages
+    with from/size, cuts at min_score and refuses an explicit sort."""
+    from fluent_plugin_elasticsearch_spark.plans.query_ast import (
+        UnsupportedQuery,
+        compile_query,
+    )
+
+    index = {"tf": field_registry, "positional": pos_field_registry,
+             None: None}[registry]
+    d = docs.withColumn("vec", F.array(F.col("n_chars").cast("double"),
+                                       (F.col("doc_id") % 7).cast("double")))
+    full = compile_query(d, {**body, "size": 5}, index=index)
+    (score,) = [c for c in full.columns if c in _SCALE]
+    hits = [(r["doc_id"], r[score]) for r in full.collect()]
+    assert len(hits) == 5
+
+    page = compile_query(d, {**body, "from": 2, "size": 3}, index=index)
+    assert [(r["doc_id"], r[score]) for r in page.collect()] == hits[2:5]
+
+    bar = hits[2][1]
+    cut = compile_query(d, {**body, "size": 5,
+                            "min_score": bar / _SCALE[score]}, index=index)
+    assert ([(r["doc_id"], r[score]) for r in cut.collect()]
+            == [h for h in hits if h[1] >= bar])
+
+    with pytest.raises(UnsupportedQuery, match="sort"):
+        compile_query(d, {**body, "sort": [{"doc_id": "asc"}]}, index=index)
