@@ -21,18 +21,40 @@ addition), and the WAND/exhaustive engine paths sum term-asc as well
 (wand.py). With identical addend order the only residual divergence is
 libm ulp (ln), absorbed by the 1e-6 quantum away from floor boundaries.
 
-The one copy of each shared scoring rule lives here: ``quantize_scores``
-(index-served float score → ``score_u``) and ``fuse_scores`` (max/sum
-fusion of per-field or per-clause ``score_u`` frames).
+The one copy of each shared scoring rule lives here, and every DataFrame
+scorer (here, in relevance.py and in simple_query.py) calls it:
+
+- ``tokens_frame``: the (doc_id, tokens) frame of the simple analyzer;
+- ``corpus_stats_with_dfs``: the one (n, avgdl, df0..) corpus aggregate;
+- ``idf``: ``ln(1 + (n - df + 0.5) / (df + 0.5))``;
+- ``bm25_tf``: the tf-factor, the Column twin of ``wand._tfn``;
+- ``term_contribs`` + ``sum_term_asc``: the explode → tf → df → contrib
+  pipeline and the one term-ascending fold;
+- ``frequency_topk``: BM25 with tf = a per-doc phrase/span frequency and
+  the summed clause idfs (phrases, spans, intervals);
+- ``phrase_freq`` and ``positions_of``: the adjacent-phrase walk and the
+  guarded 1-based position list over the token array;
+- ``quantize_scores`` (index-served float score → ``score_u``) and
+  ``fuse_scores`` (max/sum fusion of per-field or per-clause ``score_u``
+  frames);
+- ``_TOKS_SQL`` and ``_scores_cte``: the DuckDB tokenizer and the
+  per-subquery mirror of ``bm25_scores_df``.
+
+Each rule fixes one association order, the one its DuckDB mirrors spell
+out, so both engines compute the same float64 score.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .. import BM25_B, BM25_K1
 from ..extraction import simple_tokens_col
+
+_TOKS_SQL = (
+    "list_filter(regexp_split_to_array(lower({col}), '[^a-z0-9]+'), t -> t <> '')"
+)
 
 
 def quantize_scores(scores: DataFrame) -> DataFrame:
@@ -60,6 +82,13 @@ def fuse_scores(parts: list[DataFrame], k: int, how: str = "max",
             .orderBy(F.desc("score_u"), F.asc("doc_id")).limit(k))
 
 
+def tokens_frame(docs: DataFrame, id_col: str = "doc_id",
+                 text_col: str = "text") -> DataFrame:
+    """(doc_id, tokens): ``text_col`` through the simple analyzer."""
+    return docs.select(F.col(id_col).alias("doc_id"),
+                       simple_tokens_col(F.col(text_col)).alias("tokens"))
+
+
 def corpus_stats_with_dfs(toks: DataFrame, df_conds) -> DataFrame:
     """ONE corpus aggregate producing the single broadcastable stats row
     ``(n, avgdl, df0..df{k-1})``.
@@ -78,6 +107,138 @@ def corpus_stats_with_dfs(toks: DataFrame, df_conds) -> DataFrame:
         for i, c in enumerate(df_conds)
     ]
     return toks.agg(*aggs)
+
+
+def _col(c) -> Column:
+    return F.col(c) if isinstance(c, str) else c
+
+
+def idf(df) -> Column:
+    """BM25 idf ``ln(1 + (n - df + 0.5) / (df + 0.5))`` of a document
+    frequency Column (or column name), beside the stats row's ``n``."""
+    df = _col(df)
+    return F.log(1.0 + (F.col("n") - df + 0.5) / (df + 0.5))
+
+
+def bm25_tf(freq, k1: float, b: float, weight=1.0) -> Column:
+    """``weight · (k1+1) · freq / (freq + k1 · (1 - b + b · dl/avgdl))``
+    over the ``dl`` and ``avgdl`` columns — the Column twin of
+    ``wand._tfn``. A Column ``weight`` (an idf, or an idf sum) multiplies
+    first, the ``idf * (k1+1) * tf / (...)`` order of the SQL mirrors;
+    with ``weight=1.0`` the Python product folds, leaving the bare
+    tf-factor a caller multiplies an idf onto."""
+    freq = _col(freq)
+    return (weight * (k1 + 1.0) * freq
+            / (freq + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))))
+
+
+def term_rows(toks: DataFrame) -> DataFrame:
+    """(doc_id, dl, term): one row per token occurrence."""
+    return toks.select("doc_id", F.size("tokens").alias("dl"),
+                       F.explode("tokens").alias("term"))
+
+
+def term_contribs(toks: DataFrame, terms, k1: float = BM25_K1,
+                  b: float = BM25_B, gate: DataFrame | None = None) -> DataFrame:
+    """Per-(doc, term) BM25 contributions of the query ``terms`` — a list,
+    or a one-column (term) frame joined in by broadcast. tf and df count
+    over the whole corpus ``toks``; a ``gate`` (doc_id) frame then keeps
+    only its docs. Returns (term, doc_id, dl, tf, df, n, avgdl, contrib)."""
+    rows = term_rows(toks)
+    if isinstance(terms, DataFrame):
+        rows = rows.join(F.broadcast(terms), "term")
+    else:
+        rows = rows.filter(F.col("term").isin(terms))
+    tfq = rows.groupBy("doc_id", "dl", "term").agg(F.count("*").alias("tf"))
+    dfq = tfq.groupBy("term").agg(F.count("*").alias("df"))
+    if gate is not None:
+        tfq = tfq.join(gate, "doc_id", "left_semi")
+    return (tfq.join(F.broadcast(dfq), "term")
+            .crossJoin(F.broadcast(corpus_stats_with_dfs(toks, [])))
+            .withColumn("contrib", bm25_tf("tf", k1, b, weight=idf("df"))))
+
+
+def sum_term_asc(contribs: DataFrame) -> DataFrame:
+    """(doc_id, score_u): each doc's contribs summed in term-ascending
+    order (the module doc's quantization contract), floored at ×1e6."""
+    return (
+        contribs.groupBy("doc_id")
+        .agg(F.array_sort(F.collect_list(F.struct("term", "contrib"))).alias("cs"))
+        .select(
+            "doc_id",
+            F.floor(
+                F.aggregate(F.col("cs"), F.lit(0.0), lambda acc, x: acc + x["contrib"]) * 1e6
+            ).cast("long").alias("score_u"),
+        )
+    )
+
+
+def positions_of(term: str) -> Column:
+    """The 1-based positions of ``term`` in ``tokens``. Guarded: on an
+    empty token array Spark's sequence(1, 0) counts DOWN to [1, 0] and
+    element_at(tokens, 1) then throws INVALID_ARRAY_INDEX_IN_ELEMENT_AT,
+    so an empty doc gets an empty position list."""
+    idx_seq = F.when(
+        F.size("tokens") >= 1, F.sequence(F.lit(1), F.size("tokens"))
+    ).otherwise(F.array().cast("array<int>"))
+    return F.filter(idx_seq, lambda i: F.element_at(F.col("tokens"), i) == F.lit(term))
+
+
+def phrase_freq(tokens: Column, terms, prefix: str | None = None) -> Column:
+    """Phrase frequency: the number of start positions where ``terms``
+    occur adjacently, followed, when ``prefix`` is given, by a token starting
+    with it (match_phrase_prefix). An element_at walk inside one
+    aggregate — whole-stage codegen, no Python."""
+    n_terms = len(terms) + (prefix is not None)
+
+    def occurs_at(i):
+        cond = F.lit(True)
+        for j, t in enumerate(terms):
+            cond = cond & (F.element_at(tokens, i + j) == F.lit(t))
+        if prefix is not None:
+            cond = cond & F.element_at(tokens, i + n_terms - 1).startswith(prefix)
+        return cond
+
+    # guard: Spark's sequence(1, 0) yields a DESCENDING [1, 0], so gate the
+    # aggregate on there being at least one candidate start position
+    upper = F.size(tokens) - n_terms + 1
+    return F.when(
+        upper >= 1,
+        F.aggregate(
+            F.sequence(F.lit(1), upper),
+            F.lit(0),
+            lambda acc, i: acc + F.when(occurs_at(i), F.lit(1)).otherwise(F.lit(0)),
+        ),
+    ).otherwise(F.lit(0))
+
+
+def frequency_topk(frame: DataFrame, sf: Column, toks: DataFrame, df_conds,
+                   k: int, k1: float, b: float,
+                   idf_weight: Column | None = None) -> DataFrame:
+    """The one frequency scorer (phrases, spans, intervals): BM25 with tf
+    = ``sf``, a per-doc frequency Column over ``frame`` (``toks`` or a
+    subset of it, with any helper columns), and the idfs of the clause
+    conditions ``df_conds`` summed in order — the Lucene PhraseQuery /
+    span contract. A condition is a term (``array_contains(tokens, t)``)
+    or a per-doc boolean Column. ``idf_weight`` replaces that sum.
+    Statistics come from all of ``toks``; docs with sf > 0 are scored.
+    Returns the top k (doc_id, score_u), score desc, doc_id asc."""
+    matched = (frame.withColumn("sf", sf).filter(F.col("sf") > 0)
+               .select("doc_id", F.size("tokens").alias("dl"), "sf"))
+    # ONE corpus pass for n/avgdl + every clause df
+    stats = corpus_stats_with_dfs(
+        toks, [F.array_contains("tokens", c) if isinstance(c, str) else c
+               for c in df_conds])
+    if idf_weight is None:
+        idfs = [idf(f"df{i}") for i in range(len(df_conds))]
+        idf_weight = sum(idfs[1:], idfs[0])  # left fold, clause order
+    score = bm25_tf("sf", k1, b, weight=idf_weight)
+    return (
+        matched.crossJoin(F.broadcast(stats))
+        .select("doc_id", F.floor(score * 1e6).cast("long").alias("score_u"))
+        .orderBy(F.desc("score_u"), F.asc("doc_id"))
+        .limit(k)
+    )
 
 
 def bm25_topk_df(docs: DataFrame, query_terms: list[str], k: int = 10,
@@ -139,12 +300,7 @@ def bm25_topk_df(docs: DataFrame, query_terms: list[str], k: int = 10,
     # sorted), matching the old fold's addend order exactly
     score = None
     for i in range(len(terms)):
-        contrib = (
-            F.log(1.0 + (F.col("n") - F.col(f"df{i}") + 0.5) / (F.col(f"df{i}") + 0.5))
-            * (k1 + 1.0)
-            * F.col(f"tf{i}")
-            / (F.col(f"tf{i}") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl")))
-        )
+        contrib = bm25_tf(f"tf{i}", k1, b, weight=idf(f"df{i}"))
         score = contrib if score is None else score + contrib
     matched = None
     for i in range(len(terms)):
@@ -175,52 +331,13 @@ def match_phrase_df(docs: DataFrame, phrase_terms: list[str], k: int = 10,
     corpus-level — scores for the candidate docs are identical to a full
     run. This is the rescore two-phase contract: the phrase scorer
     touches window_size rows, not the corpus."""
-    n_terms = len(phrase_terms)
-    if n_terms == 0:
+    if not phrase_terms:
         raise ValueError("empty phrase")
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"), simple_tokens_col(F.col(text_col)).alias("tokens")
-    )
-    # ONE corpus pass for n/avgdl AND every per-term df (was n+1 scans)
-    stats = corpus_stats_with_dfs(
-        toks, [F.array_contains("tokens", t) for t in phrase_terms])
-    base = toks.select("doc_id", F.size("tokens").alias("dl"), "tokens")
-    if candidates is not None:
-        base = base.join(F.broadcast(candidates.select("doc_id")), "doc_id", "left_semi")
-
-    def occurs_at(i):
-        cond = F.lit(True)
-        for j, t in enumerate(phrase_terms):
-            cond = cond & (F.element_at(F.col("tokens"), i + j) == F.lit(t))
-        return cond
-
-    # guard: Spark's sequence(1, 0) yields a DESCENDING [1, 0], so gate the
-    # aggregate on there being at least one candidate start position
-    upper = F.size("tokens") - n_terms + 1
-    pf = F.when(
-        upper >= 1,
-        F.aggregate(
-            F.sequence(F.lit(1), upper),
-            F.lit(0),
-            lambda acc, i: acc + F.when(occurs_at(i), F.lit(1)).otherwise(F.lit(0)),
-        ),
-    ).otherwise(F.lit(0))
-    matched = base.withColumn("pf", pf).filter(F.col("pf") > 0)
-    scored = matched.crossJoin(F.broadcast(stats))
-    # idf sum in FIXED phrase order — identical expression order in the SQL
-    idf_sum = None
-    for i in range(n_terms):
-        idf_i = F.log(1.0 + (F.col("n") - F.col(f"df{i}") + 0.5) / (F.col(f"df{i}") + 0.5))
-        idf_sum = idf_i if idf_sum is None else idf_sum + idf_i
-    score = (
-        idf_sum * (k1 + 1.0) * F.col("pf")
-        / (F.col("pf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl")))
-    )
-    return (
-        scored.select("doc_id", F.floor(score * 1e6).cast("long").alias("score_u"))
-        .orderBy(F.desc("score_u"), F.asc("doc_id"))
-        .limit(k)
-    )
+    toks = tokens_frame(docs, id_col, text_col)
+    base = toks if candidates is None else toks.join(
+        F.broadcast(candidates.select("doc_id")), "doc_id", "left_semi")
+    return frequency_topk(base, phrase_freq(F.col("tokens"), phrase_terms),
+                          toks, phrase_terms, k, k1, b)
 
 
 def match_phrase_sql(table: str, phrase_terms: list[str], k: int = 10,
@@ -310,39 +427,40 @@ def bm25_scores_df(docs: DataFrame, query_terms: list[str],
     """All matching docs' quantized BM25 scores (doc_id, score_u) for one
     field — the un-truncated core of bm25_topk_df, reused by multi_match.
     Same order-deterministic term-asc fold and floor(×1e6) quantization."""
-    terms = sorted(set(query_terms))
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"), simple_tokens_col(F.col(text_col)).alias("tokens")
-    )
-    stats = toks.agg(F.count("*").alias("n"), F.avg(F.size("tokens")).alias("avgdl"))
-    base = toks.select("doc_id", F.size("tokens").alias("dl"), F.explode("tokens").alias("term"))
-    tfq = (
-        base.filter(F.col("term").isin(terms))
-        .groupBy("doc_id", "dl", "term")
-        .agg(F.count("*").alias("tf"))
-    )
-    dfq = tfq.groupBy("term").agg(F.count("*").alias("df"))
-    scored = (
-        tfq.join(F.broadcast(dfq), "term")
-        .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "contrib",
-            F.log(1.0 + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-            * (k1 + 1.0)
-            * F.col("tf")
-            / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))),
-        )
-    )
-    return (
-        scored.groupBy("doc_id")
-        .agg(F.array_sort(F.collect_list(F.struct("term", "contrib"))).alias("cs"))
-        .select(
-            "doc_id",
-            F.floor(
-                F.aggregate(F.col("cs"), F.lit(0.0), lambda acc, x: acc + x["contrib"]) * 1e6
-            ).cast("long").alias("score_u"),
-        )
-    )
+    return sum_term_asc(term_contribs(tokens_frame(docs, id_col, text_col),
+                                      sorted(set(query_terms)), k1, b))
+
+
+def _scores_cte(i: int, table: str, field: str, terms: list[str],
+                id_col: str = "doc_id",
+                k1: float = BM25_K1, b: float = BM25_B) -> str:
+    """One per-subquery quantized-score CTE chain (DuckDB), mirroring
+    bm25_scores_df on `field` with `terms`: yields q{i}_scores(doc_id, s_{i})."""
+    uniq = sorted(set(terms))
+    in_list = ", ".join("'" + t.replace("'", "''") + "'" for t in uniq)
+    toks = _TOKS_SQL.format(col=field)
+    return f"""
+q{i}_toks AS (
+  SELECT {id_col} AS doc_id, {toks} AS tokens FROM {table}
+),
+q{i}_stats AS (SELECT count(*) AS n, avg(len(tokens)) AS avgdl FROM q{i}_toks),
+q{i}_tfq AS (
+  SELECT doc_id, dl, term, count(*) AS tf FROM (
+    SELECT doc_id, len(tokens) AS dl, unnest(tokens) AS term FROM q{i}_toks
+  ) WHERE term IN ({in_list}) GROUP BY doc_id, dl, term
+),
+q{i}_dfq AS (SELECT term, count(*) AS df FROM q{i}_tfq GROUP BY term),
+q{i}_scores AS (
+  SELECT doc_id,
+         CAST(floor(list_sum(list(contrib ORDER BY term)) * 1e6) AS BIGINT) AS s_{i}
+  FROM (
+    SELECT t.doc_id, t.term,
+           ln(1.0 + (s.n - d.df + 0.5) / (d.df + 0.5))
+             * {k1 + 1.0} * t.tf
+             / (t.tf + {k1} * (1.0 - {b} + {b} * t.dl / s.avgdl)) AS contrib
+    FROM q{i}_tfq t JOIN q{i}_dfq d USING (term) CROSS JOIN q{i}_stats s
+  ) GROUP BY doc_id
+)"""
 
 
 def multi_match_df(docs: DataFrame, query_terms: list[str], fields: list[str],
@@ -447,49 +565,16 @@ def query_string_df(docs: DataFrame, query: str, k: int = 10,
     groups = parse_query_string(query)
     if not groups:
         raise ValueError("empty query_string")
-    uniq = sorted({t for g in groups for t in g})
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"), simple_tokens_col(F.col(text_col)).alias("tokens")
-    )
+    toks = tokens_frame(docs, id_col, text_col)
     cond = F.lit(False)
     for g in groups:
         gc = F.lit(True)
         for t in g:
             gc = gc & F.array_contains("tokens", t)
         cond = cond | gc
-    matched = toks.filter(cond).select("doc_id")
-    stats = toks.agg(F.count("*").alias("n"), F.avg(F.size("tokens")).alias("avgdl"))
-    base = toks.select("doc_id", F.size("tokens").alias("dl"), F.explode("tokens").alias("term"))
-    tfq = (
-        base.filter(F.col("term").isin(uniq))
-        .groupBy("doc_id", "dl", "term")
-        .agg(F.count("*").alias("tf"))
-    )
-    dfq = tfq.groupBy("term").agg(F.count("*").alias("df"))
-    scored = (
-        tfq.join(matched, "doc_id", "left_semi")
-        .join(F.broadcast(dfq), "term")
-        .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "contrib",
-            F.log(1.0 + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-            * (k1 + 1.0)
-            * F.col("tf")
-            / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))),
-        )
-    )
-    return (
-        scored.groupBy("doc_id")
-        .agg(F.array_sort(F.collect_list(F.struct("term", "contrib"))).alias("cs"))
-        .select(
-            "doc_id",
-            F.floor(
-                F.aggregate(F.col("cs"), F.lit(0.0), lambda acc, x: acc + x["contrib"]) * 1e6
-            ).cast("long").alias("score_u"),
-        )
-        .orderBy(F.desc("score_u"), F.asc("doc_id"))
-        .limit(k)
-    )
+    contribs = term_contribs(toks, sorted({t for g in groups for t in g}), k1, b,
+                             gate=toks.filter(cond).select("doc_id"))
+    return sum_term_asc(contribs).orderBy(F.desc("score_u"), F.asc("doc_id")).limit(k)
 
 
 def query_string_sql(table: str, query: str, k: int = 10,
@@ -571,14 +656,12 @@ def combined_fields_sql(table: str, query_terms: list[str],
                         k1: float = BM25_K1, b: float = BM25_B) -> str:
     """DuckDB mirror of combined_fields_df (same weighted concatenation
     into the single-field quantized-score pipeline)."""
-    from .relevance_sql_shim import scores_cte  # local import, see shim
-
     parts: list[str] = []
     for f in fields:
         w = int((weights or {}).get(f, 1))
         parts += [f"coalesce(CAST({f} AS VARCHAR), '')"] * w
     combined = "concat_ws(' ', " + ", ".join(parts) + ")"
-    cte = scores_cte(0, table, combined, query_terms, id_col, k1, b)
+    cte = _scores_cte(0, table, combined, query_terms, id_col, k1, b)
     return f"""
 WITH {cte}
 SELECT doc_id, s_0 AS score_u FROM q0_scores
@@ -597,8 +680,7 @@ def match_bool_prefix_df(docs: DataFrame, query_terms: list[str], k: int = 10,
     score_u = BM25 sum of the full terms + 1e6 iff any token starts with
     the prefix. Returns (doc_id, score_u) top-k."""
     *full, pref = query_terms
-    toks = docs.select(F.col(id_col).alias("doc_id"),
-                       simple_tokens_col(F.col(text_col)).alias("tokens"))
+    toks = tokens_frame(docs, id_col, text_col)
     has_pref = F.exists("tokens", lambda t: t.startswith(pref))
     parts = [bm25_scores_df(docs, full, id_col, text_col, k1, b)] if full else []
     parts.append(toks.filter(has_pref)
@@ -610,8 +692,6 @@ def match_bool_prefix_sql(table: str, query_terms: list[str], k: int = 10,
                           id_col: str = "doc_id", text_col: str = "text",
                           k1: float = BM25_K1, b: float = BM25_B) -> str:
     """DuckDB mirror of match_bool_prefix_df."""
-    from .relevance import _TOKS_SQL, _scores_cte  # lazy: relevance imports bm25
-
     *full, pref = query_terms
     plit = "'" + pref.replace("'", "''") + "'"
     toks = _TOKS_SQL.format(col=text_col)
@@ -646,24 +726,12 @@ def explain_df(docs: DataFrame, query_terms: list[str], doc_id: int,
     same corpus-wide pass the scorer uses — filtering to the one doc
     happens AFTER tf extraction, so the explanation is faithful to what
     the search actually computed."""
-    terms = sorted(set(query_terms))
-    toks = docs.select(F.col(id_col).alias("doc_id"),
-                       simple_tokens_col(F.col(text_col)).alias("tokens"))
-    stats = toks.agg(F.count("*").alias("n"), F.avg(F.size("tokens")).alias("avgdl"))
-    base = toks.select("doc_id", F.size("tokens").alias("dl"),
-                       F.explode("tokens").alias("term"))
-    tfq = (base.filter(F.col("term").isin(terms))
-           .groupBy("doc_id", "dl", "term").agg(F.count("*").alias("tf")))
-    dfq = tfq.groupBy("term").agg(F.count("*").alias("df"))
-    one = (tfq.filter(F.col("doc_id") == int(doc_id))
-           .join(F.broadcast(dfq), "term")
-           .crossJoin(F.broadcast(stats)))
-    idf = F.log(1.0 + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    contrib = (idf * (k1 + 1.0) * F.col("tf")
-               / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))))
-    return (one.select("term", "tf", "df", "n", "dl",
-                       F.floor(idf * 1e6).cast("long").alias("idf_u"),
-                       F.floor(contrib * 1e6).cast("long").alias("contrib_u"))
+    contribs = term_contribs(tokens_frame(docs, id_col, text_col),
+                             sorted(set(query_terms)), k1, b)
+    return (contribs.filter(F.col("doc_id") == int(doc_id))
+            .select("term", "tf", "df", "n", "dl",
+                    F.floor(idf("df") * 1e6).cast("long").alias("idf_u"),
+                    F.floor(F.col("contrib") * 1e6).cast("long").alias("contrib_u"))
             .orderBy(F.asc("term")))
 
 
@@ -671,8 +739,6 @@ def explain_sql(table: str, query_terms: list[str], doc_id: int,
                 id_col: str = "doc_id", text_col: str = "text",
                 k1: float = BM25_K1, b: float = BM25_B) -> str:
     """DuckDB mirror of explain_df."""
-    from .relevance import _TOKS_SQL  # lazy: relevance imports bm25
-
     terms = sorted(set(query_terms))
     in_list = ", ".join("'" + t.replace("'", "''") + "'" for t in terms)
     toks = _TOKS_SQL.format(col=text_col)

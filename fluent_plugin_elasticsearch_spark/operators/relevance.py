@@ -14,6 +14,12 @@ Scale shape: every operator here composes the bm25_scores_df pipeline
 broadcast df join) with per-doc integer arithmetic — no new shuffle
 beyond the score aggregation itself; combination/collapse windows run on
 the already-tiny matched-doc set or are keyed by the collapse field.
+
+The scoring rules — the token frame, idf, the tf-factor, the term-score
+pipeline and its term-ascending fold, the phrase/span frequency scorer,
+the phrase-frequency walk, the position lists and the DuckDB tokenizer
+and score CTE — are each defined once in operators/bm25.py; the scorers
+here call those copies.
 """
 
 from __future__ import annotations
@@ -23,45 +29,25 @@ from pyspark.sql import functions as F
 
 from .. import BM25_B, BM25_K1
 from ..extraction import simple_tokens_col
-from .bm25 import bm25_scores_df, corpus_stats_with_dfs, fuse_scores
-from .caching import pin
-
-_TOKS_SQL = (
-    "list_filter(regexp_split_to_array(lower({col}), '[^a-z0-9]+'), t -> t <> '')"
+from .bm25 import (
+    _TOKS_SQL,
+    _scores_cte,
+    bm25_scores_df,
+    bm25_tf,
+    corpus_stats_with_dfs,
+    frequency_topk,
+    fuse_scores,
+    idf,
+    match_phrase_df,
+    match_phrase_sql,
+    phrase_freq,
+    positions_of,
+    sum_term_asc,
+    term_contribs,
+    term_rows,
+    tokens_frame,
 )
-
-
-def _scores_cte(i: int, table: str, field: str, terms: list[str],
-                id_col: str = "doc_id",
-                k1: float = BM25_K1, b: float = BM25_B) -> str:
-    """One per-subquery quantized-score CTE chain (DuckDB), mirroring
-    bm25_scores_df on `field` with `terms`: yields q{i}_scores(doc_id, s_{i})."""
-    uniq = sorted(set(terms))
-    in_list = ", ".join("'" + t.replace("'", "''") + "'" for t in uniq)
-    toks = _TOKS_SQL.format(col=field)
-    return f"""
-q{i}_toks AS (
-  SELECT {id_col} AS doc_id, {toks} AS tokens FROM {table}
-),
-q{i}_stats AS (SELECT count(*) AS n, avg(len(tokens)) AS avgdl FROM q{i}_toks),
-q{i}_tfq AS (
-  SELECT doc_id, dl, term, count(*) AS tf FROM (
-    SELECT doc_id, len(tokens) AS dl, unnest(tokens) AS term FROM q{i}_toks
-  ) WHERE term IN ({in_list}) GROUP BY doc_id, dl, term
-),
-q{i}_dfq AS (SELECT term, count(*) AS df FROM q{i}_tfq GROUP BY term),
-q{i}_scores AS (
-  SELECT doc_id,
-         CAST(floor(list_sum(list(contrib ORDER BY term)) * 1e6) AS BIGINT) AS s_{i}
-  FROM (
-    SELECT t.doc_id, t.term,
-           ln(1.0 + (s.n - d.df + 0.5) / (d.df + 0.5))
-             * {k1 + 1.0} * t.tf
-             / (t.tf + {k1} * (1.0 - {b} + {b} * t.dl / s.avgdl)) AS contrib
-    FROM q{i}_tfq t JOIN q{i}_dfq d USING (term) CROSS JOIN q{i}_stats s
-  ) GROUP BY doc_id
-)"""
-
+from .caching import pin
 
 def dis_max_df(docs: DataFrame, queries: list[tuple[str, list[str]]],
                tie_breaker: float = 0.0, k: int = 10,
@@ -326,51 +312,14 @@ def match_phrase_prefix_df(docs: DataFrame, phrase_terms: list[str],
     bm25.match_phrase_df. Adjacency stays JVM-side (element_at +
     startswith inside an aggregate — whole-stage codegen, no Python).
     Returns (doc_id, score_u)."""
-    n_terms = len(phrase_terms)
-    if n_terms == 0:
+    if not phrase_terms:
         raise ValueError("empty phrase")
     exact, prefix = phrase_terms[:-1], phrase_terms[-1]
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"), simple_tokens_col(F.col(text_col)).alias("tokens")
-    )
-    # ONE corpus pass for n/avgdl + exact-term dfs + prefix df (was n+1 scans)
-    stats = corpus_stats_with_dfs(
-        toks,
-        [F.array_contains("tokens", t) for t in exact]
-        + [F.exists("tokens", lambda x: x.startswith(prefix))],
-    )
-    base = toks.select("doc_id", F.size("tokens").alias("dl"), "tokens")
-
-    def occurs_at(i):
-        cond = F.lit(True)
-        for j, t in enumerate(exact):
-            cond = cond & (F.element_at(F.col("tokens"), i + j) == F.lit(t))
-        return cond & F.element_at(F.col("tokens"), i + n_terms - 1).startswith(prefix)
-
-    upper = F.size("tokens") - n_terms + 1
-    pf = F.when(
-        upper >= 1,
-        F.aggregate(
-            F.sequence(F.lit(1), upper),
-            F.lit(0),
-            lambda acc, i: acc + F.when(occurs_at(i), F.lit(1)).otherwise(F.lit(0)),
-        ),
-    ).otherwise(F.lit(0))
-    matched = base.withColumn("pf", pf).filter(F.col("pf") > 0)
-    scored = matched.crossJoin(F.broadcast(stats))
-    idf_sum = None
-    for i in range(n_terms):
-        idf_i = F.log(1.0 + (F.col("n") - F.col(f"df{i}") + 0.5) / (F.col(f"df{i}") + 0.5))
-        idf_sum = idf_i if idf_sum is None else idf_sum + idf_i
-    score = (
-        idf_sum * (k1 + 1.0) * F.col("pf")
-        / (F.col("pf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl")))
-    )
-    return (
-        scored.select("doc_id", F.floor(score * 1e6).cast("long").alias("score_u"))
-        .orderBy(F.desc("score_u"), F.asc("doc_id"))
-        .limit(k)
-    )
+    toks = tokens_frame(docs, id_col, text_col)
+    # the last clause's df counts docs with ANY token carrying the prefix
+    return frequency_topk(
+        toks, phrase_freq(F.col("tokens"), exact, prefix), toks,
+        [*exact, F.exists("tokens", lambda x: x.startswith(prefix))], k, k1, b)
 
 
 def match_phrase_prefix_sql(table: str, phrase_terms: list[str], k: int = 10,
@@ -434,8 +383,6 @@ def multi_match_phrase_df(docs: DataFrame, phrase_terms: list[str],
     score >= its score in that field >= the doc's combined score (ties
     break doc_id asc both places). So the union of per-field top-k
     contains the combined top-k. Returns (doc_id, score_u)."""
-    from .bm25 import match_phrase_df
-
     scorer = match_phrase_prefix_df if prefix else match_phrase_df
     return fuse_scores([scorer(docs, phrase_terms, k=k, id_col=id_col,
                                text_col=f, k1=k1, b=b) for f in fields], k)
@@ -448,8 +395,6 @@ def multi_match_phrase_sql(table: str, phrase_terms: list[str],
     """DuckDB mirror of multi_match_phrase_df: the SAME per-field top-k
     subqueries (match_phrase_sql / match_phrase_prefix_sql), full-outer
     joined on doc_id, MAX of coalesced quantized scores."""
-    from .bm25 import match_phrase_sql
-
     gen = match_phrase_prefix_sql if prefix else match_phrase_sql
     subs = [gen(table, phrase_terms, k=k, id_col=id_col, text_col=f,
                 k1=k1, b=b) for f in fields]
@@ -491,10 +436,7 @@ def fuzzy_match_df(docs: DataFrame, query_terms: list[str],
     uniq = sorted(set(query_terms))
     if not uniq:
         raise ValueError("empty fuzzy match query")
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"), simple_tokens_col(F.col(text_col)).alias("tokens")
-    )
-    stats = toks.agg(F.count("*").alias("n"), F.avg(F.size("tokens")).alias("avgdl"))
+    toks = tokens_frame(docs, id_col, text_col)
     vocab = (toks.select(F.explode(F.array_distinct("tokens")).alias("term"))
              .groupBy("term").agg(F.count(F.lit(1)).alias("df")))
     if fuzziness == "AUTO":
@@ -525,21 +467,15 @@ def fuzzy_match_df(docs: DataFrame, query_terms: list[str],
         .filter(F.col("w_u") > 0)
     )
     tw = weighted.groupBy("term", "df").agg(F.sum("w_u").alias("w_u"))
-    base = toks.select(
-        "doc_id", F.size("tokens").alias("dl"), F.explode("tokens").alias("term"))
-    tfq = (base.join(F.broadcast(tw), "term")
+    tfq = (term_rows(toks).join(F.broadcast(tw), "term")
            .groupBy("doc_id", "dl", "term", "df", "w_u")
            .agg(F.count(F.lit(1)).alias("tf")))
-    scored = tfq.crossJoin(F.broadcast(stats))
+    scored = tfq.crossJoin(F.broadcast(corpus_stats_with_dfs(toks, [])))
     # op order mirrors wand.score_shard_matched with quantize=True:
     # iw = idf * (w_u/1e6); contrib = iw * ((k1+1)*tf / (tf + k1*(1-b+b*dl/avgdl)));
     # floor(contrib * 1e6) per (doc, term), then EXACT integer sum
-    iw = (F.log(1.0 + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-          * (F.col("w_u") / F.lit(1e6)))
-    tfn = ((k1 + 1.0) * F.col("tf")
-           / (F.col("tf") + k1 * (F.lit(1.0 - b)
-                                  + (F.lit(b) * F.col("dl")) / F.col("avgdl"))))
-    contrib_u = F.floor((iw * tfn) * 1e6).cast("long")
+    iw = idf("df") * (F.col("w_u") / F.lit(1e6))
+    contrib_u = F.floor((iw * bm25_tf("tf", k1, b)) * 1e6).cast("long")
     return (
         scored.select("doc_id", contrib_u.alias("c"))
         .groupBy("doc_id").agg(F.sum("c").cast("long").alias("score_u"))
@@ -634,57 +570,27 @@ def more_like_this_df(docs: DataFrame, like_id: int,
     broadcast-joined into the scoring pipeline as the term filter, so the
     whole operator is two passes over the corpus (selection df + scoring)
     with only tiny shuffles. Returns (doc_id, score_u)."""
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"), simple_tokens_col(F.col(text_col)).alias("tokens")
-    )
-    stats = toks.agg(F.count("*").alias("n"), F.avg(F.size("tokens")).alias("avgdl"))
-    base = toks.select("doc_id", F.size("tokens").alias("dl"), F.explode("tokens").alias("term"))
+    toks = tokens_frame(docs, id_col, text_col)
+    rows = term_rows(toks)
     seed_tf = (
-        base.filter((F.col("doc_id") == like_id) & (F.length("term") >= min_term_len))
+        rows.filter((F.col("doc_id") == like_id) & (F.length("term") >= min_term_len))
         .groupBy("term").agg(F.count("*").alias("tf"))
     )
-    term_df = base.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
+    term_df = rows.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
     sel = (
         seed_tf.join(term_df, "term")
-        .crossJoin(F.broadcast(stats.select("n")))
+        .crossJoin(F.broadcast(corpus_stats_with_dfs(toks, []).select("n")))
         .select(
             "term",
-            F.floor(
-                F.col("tf") * F.log(1.0 + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-                * 1e6
-            ).cast("long").alias("interest_u"),
+            F.floor(F.col("tf") * idf("df") * 1e6).cast("long").alias("interest_u"),
         )
         .orderBy(F.desc("interest_u"), F.asc("term"))
         .limit(max_query_terms)
         .select("term")
     )
-    tfq = (
-        base.join(F.broadcast(sel), "term")
-        .groupBy("doc_id", "dl", "term")
-        .agg(F.count("*").alias("tf"))
-    )
-    dfq = tfq.groupBy("term").agg(F.count("*").alias("df"))
-    scored = (
-        tfq.join(F.broadcast(dfq), "term")
-        .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "contrib",
-            F.log(1.0 + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-            * (k1 + 1.0)
-            * F.col("tf")
-            / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))),
-        )
-    )
     return (
-        scored.filter(F.col("doc_id") != like_id)
-        .groupBy("doc_id")
-        .agg(F.array_sort(F.collect_list(F.struct("term", "contrib"))).alias("cs"))
-        .select(
-            "doc_id",
-            F.floor(
-                F.aggregate(F.col("cs"), F.lit(0.0), lambda acc, x: acc + x["contrib"]) * 1e6
-            ).cast("long").alias("score_u"),
-        )
+        sum_term_asc(term_contribs(toks, sel, k1, b)
+                     .filter(F.col("doc_id") != like_id))
         .orderBy(F.desc("score_u"), F.asc("doc_id"))
         .limit(k)
     )
@@ -756,8 +662,6 @@ def rescore_df(docs: DataFrame, query_terms: list[str],
     scorer touches window_size rows, not the corpus. Here the phrase
     scores come from the same corpus pass and are broadcast-joined onto
     the (tiny) window. Returns (doc_id, score_u)."""
-    from .bm25 import match_phrase_df
-
     base = bm25_scores_df(docs, query_terms, id_col, text_col, k1, b)
     window = base.orderBy(F.desc("score_u"), F.asc("doc_id")).limit(window_size)
     # the expensive phrase position aggregate runs ONLY on the window
@@ -789,8 +693,6 @@ def rescore_sql(table: str, query_terms: list[str], phrase_terms: list[str],
                 k1: float = BM25_K1, b: float = BM25_B) -> str:
     """DuckDB mirror of rescore_df (embeds the match_phrase pipeline as a
     subquery with the same unbounded k)."""
-    from .bm25 import match_phrase_sql
-
     cte = _scores_cte(0, table, text_col, query_terms, id_col, k1, b)
     phrase = match_phrase_sql(table, phrase_terms, k=1_000_000_000,
                               id_col=id_col, text_col=text_col, k1=k1, b=b)
@@ -888,47 +790,16 @@ def span_near_df(docs: DataFrame, first: str, second: str, slop: int = 0,
     phrase. Position extraction and the existence scan are JVM
     higher-order functions over the token array — whole-stage codegen, no
     Python. Returns (doc_id, score_u)."""
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"), simple_tokens_col(F.col(text_col)).alias("tokens")
-    )
-    # ONE corpus pass for n/avgdl + both clause dfs (was 3 scans)
-    stats = corpus_stats_with_dfs(
-        toks, [F.array_contains("tokens", t) for t in (first, second)])
-    # guard: sequence(1, 0) on an empty token array yields the DESCENDING
-    # [1, 0] (step -1) and element_at(tokens, 1) then throws
-    # INVALID_ARRAY_INDEX_IN_ELEMENT_AT — a single punctuation-only doc
-    # would crash the whole job. Empty docs get an empty index sequence
-    # (they can never contribute a span match anyway).
-    idx_seq = F.when(
-        F.size("tokens") >= 1, F.sequence(F.lit(1), F.size("tokens"))
-    ).otherwise(F.array().cast("array<int>"))
-    pos1 = F.filter(idx_seq, lambda i: F.element_at(F.col("tokens"), i) == F.lit(first))
-    pos2 = F.filter(idx_seq, lambda i: F.element_at(F.col("tokens"), i) == F.lit(second))
-    base = toks.withColumn("p1", pos1).withColumn("p2", pos2)
+    toks = tokens_frame(docs, id_col, text_col)
+    base = (toks.withColumn("p1", positions_of(first))
+            .withColumn("p2", positions_of(second)))
     sf = F.size(F.filter(
         F.col("p2"),
         lambda b2: F.exists(F.col("p1"),
                             lambda a: (b2 - a >= 1) & (b2 - a <= slop + 1)),
     ))
-    matched = (
-        base.withColumn("sf", F.when(F.size("p2") > 0, sf).otherwise(F.lit(0)))
-        .filter(F.col("sf") > 0)
-        .select("doc_id", F.size("tokens").alias("dl"), "sf")
-    )
-    scored = matched.crossJoin(F.broadcast(stats))
-    idf_sum = None
-    for i in range(2):
-        idf_i = F.log(1.0 + (F.col("n") - F.col(f"df{i}") + 0.5) / (F.col(f"df{i}") + 0.5))
-        idf_sum = idf_i if idf_sum is None else idf_sum + idf_i
-    score = (
-        idf_sum * (k1 + 1.0) * F.col("sf")
-        / (F.col("sf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl")))
-    )
-    return (
-        scored.select("doc_id", F.floor(score * 1e6).cast("long").alias("score_u"))
-        .orderBy(F.desc("score_u"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return frequency_topk(base, F.when(F.size("p2") > 0, sf).otherwise(F.lit(0)),
+                          toks, [first, second], k, k1, b)
 
 
 def span_near_sql(table: str, first: str, second: str, slop: int = 0,
@@ -980,30 +851,11 @@ def span_first_df(docs: DataFrame, term: str, end: int, k: int = 10,
     formula with tf = span freq — same contract as span_near. JVM
     higher-order filter over the token array, no Python, no explode.
     Returns (doc_id, score_u)."""
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"), simple_tokens_col(F.col(text_col)).alias("tokens")
-    )
-    # ONE corpus pass for n/avgdl + the term df (was 2 scans)
-    stats = corpus_stats_with_dfs(toks, [F.array_contains("tokens", term)])
+    toks = tokens_frame(docs, id_col, text_col)
     # occurrences within the first `end` positions only: slice + filter
     head = F.slice(F.col("tokens"), 1, end)
     sf = F.size(F.filter(head, lambda t: t == F.lit(term)))
-    matched = (
-        toks.withColumn("sf", sf)
-        .filter(F.col("sf") > 0)
-        .select("doc_id", F.size("tokens").alias("dl"), "sf")
-    )
-    scored = matched.crossJoin(F.broadcast(stats))
-    idf = F.log(1.0 + (F.col("n") - F.col("df0") + 0.5) / (F.col("df0") + 0.5))
-    score = (
-        idf * (k1 + 1.0) * F.col("sf")
-        / (F.col("sf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl")))
-    )
-    return (
-        scored.select("doc_id", F.floor(score * 1e6).cast("long").alias("score_u"))
-        .orderBy(F.desc("score_u"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return frequency_topk(toks, sf, toks, [term], k, k1, b)
 
 
 def span_first_sql(table: str, term: str, end: int, k: int = 10,
@@ -1106,30 +958,6 @@ WHERE r = 1 ORDER BY pos
 """
 
 
-def _span_score(matched: DataFrame, toks: DataFrame, terms: list[str],
-                k: int, k1: float, b: float) -> DataFrame:
-    """Shared span scorer: BM25 with tf = span freq and idf summed over
-    the clause terms (the span_near/match_phrase contract). `matched` is
-    (doc_id, dl, sf) with sf > 0."""
-    # ONE corpus pass for n/avgdl + every clause-term df (was n+1 scans)
-    stats = corpus_stats_with_dfs(
-        toks, [F.array_contains("tokens", t) for t in terms])
-    scored = matched.crossJoin(F.broadcast(stats))
-    idf_sum = None
-    for i in range(len(terms)):
-        idf_i = F.log(1.0 + (F.col("n") - F.col(f"df{i}") + 0.5) / (F.col(f"df{i}") + 0.5))
-        idf_sum = idf_i if idf_sum is None else idf_sum + idf_i
-    score = (
-        idf_sum * (k1 + 1.0) * F.col("sf")
-        / (F.col("sf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl")))
-    )
-    return (
-        scored.select("doc_id", F.floor(score * 1e6).cast("long").alias("score_u"))
-        .orderBy(F.desc("score_u"), F.asc("doc_id"))
-        .limit(k)
-    )
-
-
 def _span_idf_sql(terms: list[str], k1: float, b: float, k: int) -> str:
     """Shared SQL tail for the span scorers: dfs CTE + final SELECT.
     Expects CTEs `toks`, `stats`, `matched(doc_id, dl, sf)`."""
@@ -1157,22 +985,15 @@ def span_or_df(docs: DataFrame, terms: list[str], k: int = 10,
                k1: float = BM25_K1, b: float = BM25_B) -> DataFrame:
     """ES span_or over single-term clauses (Lucene SpanOrQuery): matches
     any occurrence of any clause term. Span frequency = total occurrences
-    of ANY of the terms; scoring = the span contract (_span_score: tf =
-    span freq, idf summed over clause terms). Reference forwards span
+    of ANY of the terms; scoring = the span contract (bm25.frequency_topk:
+    tf = span freq, idf summed over clause terms). Reference forwards span
     bodies verbatim (in_elasticsearch.rb query passthrough); the whole
     match is JVM higher-order functions, no Python. Returns
     (doc_id, score_u)."""
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"), simple_tokens_col(F.col(text_col)).alias("tokens")
-    )
+    toks = tokens_frame(docs, id_col, text_col)
     term_arr = F.array(*[F.lit(t) for t in terms])
     sf = F.size(F.filter(F.col("tokens"), lambda t: F.array_contains(term_arr, t)))
-    matched = (
-        toks.withColumn("sf", sf)
-        .filter(F.col("sf") > 0)
-        .select("doc_id", F.size("tokens").alias("dl"), "sf")
-    )
-    return _span_score(matched, toks, terms, k, k1, b)
+    return frequency_topk(toks, sf, toks, terms, k, k1, b)
 
 
 def span_or_sql(table: str, terms: list[str], k: int = 10,
@@ -1206,26 +1027,16 @@ def span_not_df(docs: DataFrame, include: str, exclude: str,
     position p when an exclude position q satisfies p-pre <= q <= p+post.
     Span frequency = surviving positions; span-contract scoring on the
     include term. Returns (doc_id, score_u)."""
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"), simple_tokens_col(F.col(text_col)).alias("tokens")
-    )
-    idx_seq = F.when(
-        F.size("tokens") >= 1, F.sequence(F.lit(1), F.size("tokens"))
-    ).otherwise(F.array().cast("array<int>"))
-    pos_i = F.filter(idx_seq, lambda i: F.element_at(F.col("tokens"), i) == F.lit(include))
-    pos_x = F.filter(idx_seq, lambda i: F.element_at(F.col("tokens"), i) == F.lit(exclude))
-    base = toks.withColumn("pi", pos_i).withColumn("px", pos_x)
+    toks = tokens_frame(docs, id_col, text_col)
+    base = (toks.withColumn("pi", positions_of(include))
+            .withColumn("px", positions_of(exclude)))
     sf = F.size(F.filter(
         F.col("pi"),
         lambda p: ~F.exists(F.col("px"),
                             lambda q: (q >= p - pre) & (q <= p + post)),
     ))
-    matched = (
-        base.withColumn("sf", F.when(F.size("pi") > 0, sf).otherwise(F.lit(0)))
-        .filter(F.col("sf") > 0)
-        .select("doc_id", F.size("tokens").alias("dl"), "sf")
-    )
-    return _span_score(matched, toks, [include], k, k1, b)
+    return frequency_topk(base, F.when(F.size("pi") > 0, sf).otherwise(F.lit(0)),
+                          toks, [include], k, k1, b)
 
 
 def span_not_sql(table: str, include: str, exclude: str,
@@ -1261,20 +1072,10 @@ def _span_pair_positions(docs: DataFrame, first: str, second: str,
     """Shared position extraction for span_containing / span_within:
     (doc_id, tokens, p1, p2, pq) with 1-based position arrays of the
     big's two clause terms and the little term."""
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        simple_tokens_col(F.col(text_col)).alias("tokens"))
-    idx_seq = F.when(
-        F.size("tokens") >= 1, F.sequence(F.lit(1), F.size("tokens"))
-    ).otherwise(F.array().cast("array<int>"))
-
-    def pos_of(t):
-        return F.filter(idx_seq,
-                        lambda i: F.element_at(F.col("tokens"), i) == F.lit(t))
-
-    return (toks.withColumn("p1", pos_of(first))
-            .withColumn("p2", pos_of(second))
-            .withColumn("pq", pos_of(little)), toks)
+    toks = tokens_frame(docs, id_col, text_col)
+    return (toks.withColumn("p1", positions_of(first))
+            .withColumn("p2", positions_of(second))
+            .withColumn("pq", positions_of(little)), toks)
 
 
 def span_containing_df(docs: DataFrame, first: str, second: str,
@@ -1298,12 +1099,8 @@ def span_containing_df(docs: DataFrame, first: str, second: str,
             lambda a: (b2 - a >= 1) & (b2 - a <= slop + 1)
             & F.exists(F.col("pq"), lambda q: (q >= a) & (q <= b2))),
     ))
-    matched = (
-        base.withColumn("sf", F.when(F.size("p2") > 0, sf).otherwise(F.lit(0)))
-        .filter(F.col("sf") > 0)
-        .select("doc_id", F.size("tokens").alias("dl"), "sf")
-    )
-    return _span_score(matched, toks, [first, second], k, k1, b)
+    return frequency_topk(base, F.when(F.size("p2") > 0, sf).otherwise(F.lit(0)),
+                          toks, [first, second], k, k1, b)
 
 
 def span_within_df(docs: DataFrame, first: str, second: str,
@@ -1329,12 +1126,8 @@ def span_within_df(docs: DataFrame, first: str, second: str,
                        lambda a: (b2 - a >= 1) & (b2 - a <= slop + 1)
                        & (a <= q))),
     ))
-    matched = (
-        base.withColumn("sf", F.when(F.size("pq") > 0, sf).otherwise(F.lit(0)))
-        .filter(F.col("sf") > 0)
-        .select("doc_id", F.size("tokens").alias("dl"), "sf")
-    )
-    return _span_score(matched, toks, [little], k, k1, b)
+    return frequency_topk(base, F.when(F.size("pq") > 0, sf).otherwise(F.lit(0)),
+                          toks, [little], k, k1, b)
 
 
 def _span_pair_pos_sql(table: str, first: str, second: str, little: str,
@@ -1424,8 +1217,7 @@ def span_multi_df(docs: DataFrame, value: str, kind: str = "prefix",
     kernel, and DuckDB all add the same integers. Returns (doc_id,
     score_u), tie (score desc, doc_id asc)."""
     like = _span_multi_like(value, kind)
-    toks = docs.select(F.col(id_col).alias("doc_id"),
-                       simple_tokens_col(F.col(text_col)).alias("tokens"))
+    toks = tokens_frame(docs, id_col, text_col)
     expansion = [r["term"] for r in
                  (toks.select(F.explode(F.array_distinct("tokens"))
                               .alias("term"))
@@ -1436,25 +1228,13 @@ def span_multi_df(docs: DataFrame, value: str, kind: str = "prefix",
     if not expansion:
         from .search import empty_topk_df
         return empty_topk_df(spark, "doc_id long, score_u long")
-    stats = corpus_stats_with_dfs(
-        toks, [F.array_contains("tokens", t) for t in expansion])
-    idf_u = None
-    for i in range(len(expansion)):
-        u = F.floor(F.log(1.0 + (F.col("n") - F.col(f"df{i}") + 0.5)
-                          / (F.col(f"df{i}") + 0.5)) * 1e6).cast("long")
-        idf_u = u if idf_u is None else idf_u + u
+    idf_us = [F.floor(idf(f"df{i}") * 1e6).cast("long")
+              for i in range(len(expansion))]
     term_arr = F.array(*[F.lit(t) for t in expansion])
     sf = F.size(F.filter(F.col("tokens"),
                          lambda t: F.array_contains(term_arr, t)))
-    matched = (toks.withColumn("sf", sf).filter(F.col("sf") > 0)
-               .select("doc_id", F.size("tokens").alias("dl"), "sf"))
-    scored = matched.crossJoin(F.broadcast(stats))
-    score = ((idf_u / 1e6) * (k1 + 1.0) * F.col("sf")
-             / (F.col("sf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))))
-    return (scored.select("doc_id",
-                          F.floor(score * 1e6).cast("long").alias("score_u"))
-            .orderBy(F.desc("score_u"), F.asc("doc_id"))
-            .limit(k))
+    return frequency_topk(toks, sf, toks, expansion, k, k1, b,
+                          idf_weight=sum(idf_us[1:], idf_us[0]) / 1e6)
 
 
 def span_multi_sql(table: str, value: str, kind: str = "prefix",
@@ -1526,21 +1306,10 @@ def intervals_match_df(docs: DataFrame, terms: list[str], max_gaps: int = -1,
     if not ordered and n > 2:
         raise UnsupportedQuery("unordered intervals support exactly 2 terms")
     mg = int(max_gaps)
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"), simple_tokens_col(F.col(text_col)).alias("tokens")
-    )
-    idx_seq = F.when(
-        F.size("tokens") >= 1, F.sequence(F.lit(1), F.size("tokens"))
-    ).otherwise(F.array().cast("array<int>"))
+    toks = tokens_frame(docs, id_col, text_col)
     base = toks
-
-    def _pos_pred(term):
-        # factory, NOT a default-arg lambda: a 2-parameter function would
-        # be treated by F.filter as its (element, index) form
-        return lambda j: F.element_at(F.col("tokens"), j) == F.lit(term)
-
     for i, t in enumerate(terms):
-        base = base.withColumn(f"p{i}", F.filter(idx_seq, _pos_pred(t)))
+        base = base.withColumn(f"p{i}", positions_of(t))
     if not ordered:
         sf = F.size(F.filter(
             F.col("p1"),
@@ -1562,12 +1331,9 @@ def intervals_match_df(docs: DataFrame, terms: list[str], max_gaps: int = -1,
 
         sf = F.size(F.filter(F.col(f"p{n - 1}"),
                              lambda a: chain(n - 2, a, a)))
-    matched = (
-        base.withColumn("sf", F.when(F.size(f"p{n - 1}") > 0, sf).otherwise(F.lit(0)))
-        .filter(F.col("sf") > 0)
-        .select("doc_id", F.size("tokens").alias("dl"), "sf")
-    )
-    return _span_score(matched, toks, terms, k, k1, b)
+    return frequency_topk(
+        base, F.when(F.size(f"p{n - 1}") > 0, sf).otherwise(F.lit(0)),
+        toks, terms, k, k1, b)
 
 
 def intervals_match_sql(table: str, terms: list[str], max_gaps: int = -1,
@@ -1812,7 +1578,6 @@ def sparse_vector_df(docs: DataFrame, query_vector: dict, k: int = 10,
     The scorer is one codegen projection over the corpus (per-token tf
     via a bounded array filter — no explode, no shuffle before top-k),
     exactly the WAND no-index fallback shape."""
-    from ..extraction import simple_tokens_col
     from ..plans.query_ast import UnsupportedQuery
 
     qus = _sparse_query_units(query_vector)

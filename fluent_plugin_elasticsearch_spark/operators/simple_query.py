@@ -35,7 +35,9 @@ Semantics implemented (documented subset, loud raises elsewhere):
 Quantization contract: both engines accumulate the per-clause parts in
 the SAME fixed left-associative order (unique terms ascending, then
 phrases in parse order, then prefixes ascending) and floor(×1e6) once —
-see bm25.py module doc for why that hashes identically.
+see bm25.py module doc for why that hashes identically. The token frame,
+corpus statistics, idf, tf-factor and phrase-frequency walk are the one
+copies in bm25.py.
 """
 
 from __future__ import annotations
@@ -46,9 +48,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .. import BM25_B, BM25_K1
-from ..extraction import simple_tokens_col
 from ..textproc import tokenize_simple
-from .bm25 import corpus_stats_with_dfs
+from .bm25 import bm25_tf, corpus_stats_with_dfs, idf, phrase_freq, tokens_frame
 
 
 def _raise(msg: str):
@@ -139,27 +140,7 @@ def _present_col(clause: tuple, tokens: Column) -> Column:
         return F.array_contains(tokens, v)
     if kind == "prefix":
         return F.exists(tokens, lambda x: F.startswith(x, F.lit(v)))
-    return _pf_col(v, tokens) > 0
-
-
-def _pf_col(phrase: tuple, tokens: Column) -> Column:
-    """Exact adjacent phrase frequency — same expression as
-    bm25.match_phrase_df (element_at walk, descending-sequence guard)."""
-    n_terms = len(phrase)
-
-    def occurs_at(i):
-        cond = F.lit(True)
-        for j, t in enumerate(phrase):
-            cond = cond & (F.element_at(tokens, i + j) == F.lit(t))
-        return cond
-
-    upper = F.size(tokens) - n_terms + 1
-    return F.when(
-        upper >= 1,
-        F.aggregate(F.sequence(F.lit(1), upper), F.lit(0),
-                    lambda acc, i: acc + F.when(occurs_at(i), F.lit(1))
-                    .otherwise(F.lit(0))),
-    ).otherwise(F.lit(0))
+    return phrase_freq(tokens, v) > 0
 
 
 def _clause_sets(parsed: dict):
@@ -188,8 +169,7 @@ def simple_query_string_df(docs: DataFrame, query: str, k: int = 10,
     terms, phrases, prefixes, df_tokens = _clause_sets(parsed)
     if not parsed["groups"] and not parsed["negated"]:
         raise ValueError("empty simple_query_string")
-    toks = docs.select(F.col(id_col).alias("doc_id"),
-                       simple_tokens_col(F.col(text_col)).alias("tokens"))
+    toks = tokens_frame(docs, id_col, text_col)
     tcol = F.col("tokens")
 
     # gate: some alternative fully present, no negated clause present
@@ -207,14 +187,6 @@ def simple_query_string_df(docs: DataFrame, query: str, k: int = 10,
     stats = corpus_stats_with_dfs(
         toks, [F.array_contains("tokens", t) for t in df_tokens])
 
-    def idf(tok: str) -> Column:
-        d = F.col(f"df{slot[tok]}")
-        return F.log(1.0 + (F.col("n") - d + 0.5) / (d + 0.5))
-
-    def sat(freq: Column) -> Column:
-        return (k1 + 1.0) * freq / (
-            freq + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl")))
-
     def eq_fn(t: str):  # single-arg lambda factory: a 2-arg lambda would
         return lambda x: x == F.lit(t)  # be treated as (element, index)
 
@@ -224,13 +196,13 @@ def simple_query_string_df(docs: DataFrame, query: str, k: int = 10,
     score = F.lit(0.0)
     for t in terms:  # unique terms, ascending
         tf = F.size(F.filter(tcol, eq_fn(t)))
-        score = score + F.when(tf > 0, idf(t) * sat(tf)).otherwise(F.lit(0.0))
+        score = score + F.when(tf > 0, idf(f"df{slot[t]}") * bm25_tf(tf, k1, b)
+                               ).otherwise(F.lit(0.0))
     for p in phrases:  # parse order
-        idf_sum = None
-        for t in p:  # constituent idfs in phrase order
-            idf_sum = idf(t) if idf_sum is None else idf_sum + idf(t)
-        pf = _pf_col(p, tcol)
-        score = score + F.when(pf > 0, idf_sum * sat(pf)).otherwise(F.lit(0.0))
+        idfs = [idf(f"df{slot[t]}") for t in p]  # constituent idfs in phrase order
+        pf = phrase_freq(tcol, p)
+        score = score + F.when(pf > 0, sum(idfs[1:], idfs[0]) * bm25_tf(pf, k1, b)
+                               ).otherwise(F.lit(0.0))
     for p in prefixes:  # ascending; constant-score rewrite
         score = score + F.when(F.exists(tcol, pref_fn(p)),
                                F.lit(1.0)).otherwise(F.lit(0.0))

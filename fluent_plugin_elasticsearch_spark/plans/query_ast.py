@@ -1140,8 +1140,13 @@ def compile_query(docs: DataFrame, body: dict[str, Any], *,
     regexp, terms_set, bool, nested, geo_*, match_all) compile to scan +
     filter + sort + from/size on the docs table; Catalyst pushes the
     filters into the scan. ``constant_score`` is a filter with a literal
-    ``score_u``; ``percolate`` matches a stored-query registry; a pure
-    ``knn`` body joins its k nearest candidates back, in its own order.
+    ``score_u``, which ``min_score`` (on the float scale) compares
+    against; ``min_score`` on any other filter body raises
+    UnsupportedQuery, as there is no score to cut. ``percolate`` matches
+    a stored-query registry. A pure ``knn`` body joins its k nearest
+    candidates back, in its own order (or ``sort``'s); ``from``/``size``,
+    when given, page those k. ``min_score`` on it raises: it reports
+    cosine, not a ``_score``, so ``knn.similarity`` is its cutoff.
 
     Scored queries — match (fuzzy too), multi_match (phrase types too),
     combined_fields, query_string, sparse_vector, simple_query_string,
@@ -1181,6 +1186,7 @@ def compile_query(docs: DataFrame, body: dict[str, Any], *,
     query = body.get("query")
     size = body.get("size")
     frm = int(body.get("from") or 0)
+    min_score = body.get("min_score")
     out = docs
 
     rt = body.get("runtime_mappings")
@@ -1212,6 +1218,10 @@ def compile_query(docs: DataFrame, body: dict[str, Any], *,
         # retrieved by similarity, then presented in the requested order —
         # sort changes presentation, never the candidate set); `rank`
         # stays as the similarity rank and breaks ties deterministically
+        if min_score is not None:
+            raise UnsupportedQuery(
+                "min_score on a pure knn body: its hits carry cosine, not "
+                "a _score; cut them with knn.similarity")
         cand, top = _knn_top(docs, body["knn"], size)
         sort_exprs = []
         for s in body.get("sort") or []:
@@ -1229,6 +1239,10 @@ def compile_query(docs: DataFrame, body: dict[str, Any], *,
             cand.join(F.broadcast(top.select(F.col("vec_id").alias("doc_id"), "cosine", "rank")), "doc_id")
             .orderBy(*sort_exprs, F.asc("rank"))
         )
+        if frm:
+            out = out.offset(frm)
+        if size is not None:
+            out = out.limit(int(size))
         src = body.get("_source")
         if src is False:
             out = out.select("doc_id", "cosine", "rank")
@@ -1243,12 +1257,16 @@ def compile_query(docs: DataFrame, body: dict[str, Any], *,
                 "scored queries are score-ordered; explicit sort and "
                 "search_after are unsupported")
         topk, score = _scored_hits(docs, out, body, frm + int(size or 10), index)
-        min_score = body.get("min_score")
         if min_score is not None:  # ES min_score: drop hits below the bar
             bar = float(min_score) * _SCORE_SCALE[score]
             topk = topk.filter(F.col(score) >= (bar if score == "score" else int(bar)))
         out = out.join(F.broadcast(topk), "doc_id").orderBy(
             F.desc(score), F.asc("doc_id"))
+
+    elif min_score is not None and not (query and "constant_score" in query):
+        raise UnsupportedQuery(
+            "min_score needs a scored query or constant_score; a filter "
+            "body has no score to cut")
 
     elif query and "percolate" in query:
         # ES percolate query — REVERSE search: `docs` is the REGISTRY of
@@ -1294,6 +1312,9 @@ def compile_query(docs: DataFrame, body: dict[str, Any], *,
         out = out.filter(_compile_clause(spec["filter"])).withColumn(
             "score_u",
             F.lit(int(float(spec.get("boost", 1.0)) * 1e6)).cast("long"))
+        if min_score is not None:
+            bar = int(float(min_score) * _SCORE_SCALE["score_u"])
+            out = out.filter(F.col("score_u") >= bar)
 
     elif query:
         out = out.filter(_compile_clause(query))

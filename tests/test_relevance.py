@@ -9,7 +9,9 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from fluent_plugin_elasticsearch_spark.operators import bm25
 from fluent_plugin_elasticsearch_spark.operators import relevance as rel
+from fluent_plugin_elasticsearch_spark.operators import simple_query as sq
 from fluent_plugin_elasticsearch_spark.plans.query_ast import (
     UnsupportedQuery,
     _compile_clause,
@@ -222,6 +224,19 @@ def test_constant_score(docs):
     assert all(r["score_u"] == 1500000 for r in rows)
 
 
+def test_constant_score_min_score(docs):
+    """min_score compares against constant_score's score_u at its ×1e6
+    scale; a filter body has no score, so min_score on it raises."""
+    body = {"query": {"constant_score": {"filter": {"term": {"lang": "en"}},
+                                         "boost": 1.5}}}
+    assert compile_query(docs, {**body, "min_score": 1.5}).count() == 4
+    assert compile_query(docs, {**body, "min_score": 2.0}).count() == 0
+    with pytest.raises(UnsupportedQuery, match="min_score"):
+        compile_query(docs, {"query": {"term": {"lang": "en"}}, "min_score": 1.0})
+    with pytest.raises(UnsupportedQuery, match="min_score"):
+        compile_query(docs, {"min_score": 1.0})
+
+
 def test_span_near_slop_semantics(docs, duck):
     # slop=0 ≡ adjacency: "lazy dog" docs 0,3
     ids0 = {r["doc_id"] for r in rel.span_near_df(docs, "lazy", "dog", slop=0, k=8).collect()}
@@ -379,6 +394,26 @@ def test_knn_candidates_need_a_vector(spark):
     d = spark.createDataFrame(rows, "doc_id long, embedding array<double>")
     body = {"knn": {"field": "embedding", "query_vector": [1.0, 0.0], "k": 4}}
     assert [r["doc_id"] for r in compile_query(d, body).collect()] == [0, 1]
+
+
+def test_knn_pages_with_from_size(spark):
+    """A pure knn body pages its k nearest (in sort order) by from/size;
+    without them it returns all k. min_score raises: knn hits carry
+    cosine, and knn.similarity is their cutoff."""
+    rows = [(i, [1.0, float(i)]) for i in range(8)]
+    d = spark.createDataFrame(rows, "doc_id long, embedding array<double>")
+    knn = {"field": "embedding", "query_vector": [1.0, 0.0], "k": 5}
+    nearest = [r["doc_id"] for r in compile_query(d, {"knn": knn}).collect()]
+    assert nearest == [0, 1, 2, 3, 4]
+    page = compile_query(d, {"knn": knn, "from": 2, "size": 2}).collect()
+    assert [r["doc_id"] for r in page] == [2, 3]
+    assert [r["doc_id"] for r in compile_query(
+        d, {"knn": knn, "from": 3}).collect()] == [3, 4]
+    by_id = compile_query(d, {"knn": knn, "sort": [{"doc_id": "desc"}],
+                              "size": 2}).collect()
+    assert [r["doc_id"] for r in by_id] == [4, 3]
+    with pytest.raises(UnsupportedQuery, match="knn.similarity"):
+        compile_query(d, {"knn": knn, "min_score": 0.5})
 
 
 def test_hybrid_knn_query(spark):
@@ -932,3 +967,107 @@ def test_collapse_inner_hits(docs, duck):
         assert len(hits) <= 2
         scores = [(-s, d) for _, s, d in hits]
         assert scores == sorted(scores)
+
+
+# Edge rows for the DataFrame scorers: an empty text, a punctuation-only
+# text, a null text, an upper-case text and a repeated-term text beside
+# ordinary ones.
+EDGE_ROWS = [
+    (0, "the quick brown fox jumps over the lazy dog", "quick fox"),
+    (1, "", "brown fox"),
+    (2, "... !!! ---", None),
+    (3, None, "lazy dog"),
+    (4, "THE QUICK Brown FOX Jumps", "QUICK"),
+    (5, "fox fox fox quick fox quick brown fox", "fox fox"),
+    (6, "a lazy dog and a quick brown cat", ""),
+    (7, "brown fox brown fox brown quack", "the brown fox"),
+]
+
+# name -> (DataFrame scorer over `d`, its DuckDB mirror over table `t`)
+EDGE_SCORERS = {
+    "bm25_topk": (lambda d: bm25.bm25_topk_df(d, ["quick", "fox"]),
+                  lambda t: bm25.bm25_topk_sql(t, ["quick", "fox"])),
+    "multi_match": (
+        lambda d: bm25.multi_match_df(d, ["quick", "fox"], ["text", "title"]),
+        lambda t: bm25.multi_match_sql(t, ["quick", "fox"], ["text", "title"])),
+    "multi_match_most_fields": (
+        lambda d: bm25.multi_match_df(d, ["brown", "fox"], ["text", "title"],
+                                      match_type="most_fields"),
+        lambda t: bm25.multi_match_sql(t, ["brown", "fox"], ["text", "title"],
+                                       match_type="most_fields")),
+    "query_string": (lambda d: bm25.query_string_df(d, "quick AND fox OR lazy"),
+                     lambda t: bm25.query_string_sql(t, "quick AND fox OR lazy")),
+    "combined_fields": (
+        lambda d: bm25.combined_fields_df(d, ["quick", "fox"], ["text", "title"]),
+        lambda t: bm25.combined_fields_sql(t, ["quick", "fox"], ["text", "title"])),
+    "match_bool_prefix": (lambda d: bm25.match_bool_prefix_df(d, ["quick", "fo"]),
+                          lambda t: bm25.match_bool_prefix_sql(t, ["quick", "fo"])),
+    "explain": (lambda d: bm25.explain_df(d, ["quick", "fox", "brown"], 5),
+                lambda t: bm25.explain_sql(t, ["quick", "fox", "brown"], 5)),
+    "match_phrase": (lambda d: bm25.match_phrase_df(d, ["brown", "fox"]),
+                     lambda t: bm25.match_phrase_sql(t, ["brown", "fox"])),
+    "match_phrase_prefix": (
+        lambda d: rel.match_phrase_prefix_df(d, ["brown", "fo"]),
+        lambda t: rel.match_phrase_prefix_sql(t, ["brown", "fo"])),
+    "multi_match_phrase": (
+        lambda d: rel.multi_match_phrase_df(d, ["brown", "fox"], ["text", "title"]),
+        lambda t: rel.multi_match_phrase_sql(t, ["brown", "fox"], ["text", "title"])),
+    "multi_match_phrase_prefix": (
+        lambda d: rel.multi_match_phrase_df(d, ["quick", "fo"], ["text", "title"],
+                                            prefix=True),
+        lambda t: rel.multi_match_phrase_sql(t, ["quick", "fo"], ["text", "title"],
+                                             prefix=True)),
+    "fuzzy_match": (lambda d: rel.fuzzy_match_df(d, ["quack", "fix"]),
+                    lambda t: rel.fuzzy_match_sql(t, ["quack", "fix"])),
+    "more_like_this": (lambda d: rel.more_like_this_df(d, 0),
+                       lambda t: rel.more_like_this_sql(t, 0)),
+    "span_near": (lambda d: rel.span_near_df(d, "brown", "fox", slop=1),
+                  lambda t: rel.span_near_sql(t, "brown", "fox", slop=1)),
+    "span_first": (lambda d: rel.span_first_df(d, "fox", 3),
+                   lambda t: rel.span_first_sql(t, "fox", 3)),
+    "span_or": (lambda d: rel.span_or_df(d, ["fox", "lazy"]),
+                lambda t: rel.span_or_sql(t, ["fox", "lazy"])),
+    "span_not": (lambda d: rel.span_not_df(d, "fox", "brown", pre=1),
+                 lambda t: rel.span_not_sql(t, "fox", "brown", pre=1)),
+    "span_containing": (
+        lambda d: rel.span_containing_df(d, "quick", "fox", "brown", slop=2),
+        lambda t: rel.span_containing_sql(t, "quick", "fox", "brown", slop=2)),
+    "span_within": (
+        lambda d: rel.span_within_df(d, "quick", "fox", "brown", slop=2),
+        lambda t: rel.span_within_sql(t, "quick", "fox", "brown", slop=2)),
+    "span_multi": (lambda d: rel.span_multi_df(d, "fo", "prefix"),
+                   lambda t: rel.span_multi_sql(t, "fo", "prefix")),
+    "intervals": (
+        lambda d: rel.intervals_match_df(d, ["brown", "fox"], max_gaps=1,
+                                         ordered=True),
+        lambda t: rel.intervals_match_sql(t, ["brown", "fox"], max_gaps=1,
+                                          ordered=True)),
+    "simple_query_string": (
+        lambda d: sq.simple_query_string_df(d, '"brown fox" quick laz* -cat'),
+        lambda t: sq.simple_query_string_sql(t, '"brown fox" quick laz* -cat')),
+    "dis_max": (
+        lambda d: rel.dis_max_df(d, [("text", ["quick"]), ("title", ["fox"])],
+                                 tie_breaker=0.3),
+        lambda t: rel.dis_max_sql(t, [("text", ["quick"]), ("title", ["fox"])],
+                                  tie_breaker=0.3)),
+}
+
+
+@pytest.fixture(scope="module")
+def edge(spark):
+    d = spark.createDataFrame(EDGE_ROWS, "doc_id long, text string, title string")
+    con = duckdb.connect()
+    con.register("edge", d.toPandas())
+    return d, con
+
+
+@pytest.mark.parametrize("name", sorted(EDGE_SCORERS))
+def test_scorer_matches_sql_mirror_on_edge_rows(edge, name):
+    """Each DataFrame term or frequency scorer returns exactly the rows
+    of its DuckDB mirror on empty, punctuation-only, null, upper-case
+    and repeated-term texts."""
+    d, con = edge
+    scorer, mirror = EDGE_SCORERS[name]
+    got = [tuple(r) for r in scorer(d).collect()]
+    assert got == con.sql(mirror("edge")).fetchall()
+    assert got, "an edge case that scores nothing checks nothing"
