@@ -1,15 +1,24 @@
 """ES aggregations-body compiler (the `aggs` half of the search API the
 reference forwards to the cluster) → Catalyst group-bys.
 
-Supported (the shapes log/analytics users actually send through the
-plugin):
+`compile_aggs` dispatches each agg kind — bucket, multi-bucket, metric,
+pipeline and sibling-pipeline aggs, one branch each — onto a few rules,
+each defined once here:
 
-    {"terms": {"field": f, "size": n}}                     bucket by value
-    {"date_histogram": {"field": ts, "calendar_interval": u}}  u ∈ second…year
-    {"histogram": {"field": v, "interval": w}}             numeric buckets
-    {"stats"|"avg"|"min"|"max"|"sum"|"value_count": {"field": v}}  metrics
-    + ONE nesting level: a bucket agg may carry "aggs" of metric aggs
-      (ES sub-aggregations), compiled into the same groupBy.
+  * `_bucket_agg`: the bucket aggregate, groupBy(keys) → doc_count plus
+    the metric sub-aggs' columns (`_metric_cols`); no keys, one bucket.
+  * `_filtered_buckets`: buckets that are independent filters (a doc may
+    land in several) — one filtered bucket aggregate each, unioned:
+    `filters`, `adjacency_matrix` and the range family (`_range_buckets`,
+    with the one `{from}-{to}` key rule).
+  * `_split_subs`: a bucket agg's sub-aggs split into plain metrics
+    (inside the groupBy), pipelines and cumulative_cardinality (over the
+    bucket frame, gap-filled or not).
+  * `_compile_bucket_path`: nested bucket levels (terms in date_histogram
+    in terms, …) as ONE multi-key groupBy, windows for parent doc_counts,
+    per-level `size` and order.
+  * `_level_options`: the terms options (include regex or partition,
+    exclude, order) of any bucket level, single or nested.
 
 Buckets are ordered ES-style: doc_count desc, key asc; `size` applies
 LIMIT. Everything compiles to scan → filter (the body's `query` via
@@ -20,12 +29,16 @@ corpus size.
 
 from __future__ import annotations
 
+import datetime as dt
+import math
+from functools import reduce
 from typing import Any
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.window import WindowSpec
 
-from .query_ast import UnsupportedQuery, _compile_clause
+from .query_ast import _DIST_UNITS_M, UnsupportedQuery, _compile_clause, haversine_m_col
 
 _CAL = {
     "second": "second", "minute": "minute", "hour": "hour", "day": "day",
@@ -60,8 +73,6 @@ def _bucket_key(kind: str, spec: dict[str, Any]) -> Column:
         # ES geotile_grid: web-mercator tile key "z/x/y" at `precision`
         # zoom — pure column math (radians/tan/log), one groupBy like any
         # bucket agg. Poles clamped to the valid tile range like ES.
-        import math as _math
-
         z = int(spec.get("precision", 7))
         n = 2 ** z
         lat = F.col(field).getField("lat")
@@ -69,7 +80,7 @@ def _bucket_key(kind: str, spec: dict[str, Any]) -> Column:
         lat_r = F.radians(lat)
         x = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(n)).cast("long")
         y = F.floor(
-            (F.lit(1.0) - F.log(F.tan(lat_r) + F.lit(1.0) / F.cos(lat_r)) / F.lit(_math.pi))
+            (F.lit(1.0) - F.log(F.tan(lat_r) + F.lit(1.0) / F.cos(lat_r)) / F.lit(math.pi))
             / F.lit(2.0) * F.lit(n)).cast("long")
         x = F.least(F.greatest(x, F.lit(0)), F.lit(n - 1))
         y = F.least(F.greatest(y, F.lit(0)), F.lit(n - 1))
@@ -152,10 +163,38 @@ ORDER BY doc_count DESC, key ASC LIMIT {size}
 ES_DEFAULT_PERCENTS = [1.0, 5.0, 25.0, 50.0, 75.0, 95.0, 99.0]
 
 
+def _kind_of(spec: dict[str, Any]) -> tuple[str, Any]:
+    """An agg spec's (kind, body): its one key besides `aggs`."""
+    ((kind, inner),) = ((k, v) for k, v in spec.items() if k != "aggs")
+    return kind, inner
+
+
+def _pct_label(v) -> str:
+    """Column-name label of a percent or value: 50 → '50', 99.9 → '99_9',
+    -1.5 → 'm1_5'."""
+    return f"{float(v):g}".replace(".", "_").replace("-", "m")
+
+
+def _stats_cols(name: str, field: str) -> list[Column]:
+    """ES stats members of `field`: count, min, max, sum, avg."""
+    return [F.count(field).alias(f"{name}_count"),
+            F.min(field).alias(f"{name}_min"),
+            F.max(field).alias(f"{name}_max"),
+            F.sum(field).alias(f"{name}_sum"),
+            F.avg(field).alias(f"{name}_avg")]
+
+
+def _sample_cov(s_i: Column, s_j: Column, q_ij: Column, n: Column) -> Column:
+    """Sample covariance from EXACT decimal moments (Σxᵢ, Σxⱼ, Σxᵢxⱼ, n):
+    the product Σxᵢ·Σxⱼ is exact in decimal and converts to double ONCE,
+    then a fixed float op order — the DuckDB mirrors' arithmetic."""
+    return (q_ij.cast("double") - (s_i * s_j).cast("double") / n) / (n - 1)
+
+
 def _metric_cols(aggs: dict[str, Any]) -> list[Column]:
     cols: list[Column] = []
     for name, spec in aggs.items():
-        ((kind, body),) = spec.items()
+        kind, body = _kind_of(spec)
         if kind == "weighted_avg":
             # ES weighted_avg: {"value": {"field": v}, "weight": {"field": w}}
             # → sum(v*w)/sum(w), one partial-aggregated pass
@@ -174,10 +213,8 @@ def _metric_cols(aggs: dict[str, Any]) -> list[Column]:
             fn = "percentile_approx" if body.get("approximate") else "percentile"
             extra = ", 10000" if body.get("approximate") else ""
             for p in percents:
-                label = f"{float(p):g}".replace(".", "_")  # 50 → '50', 99.9 → '99_9'
-                cols.append(
-                    F.expr(f"{fn}({field}, {float(p) / 100.0}{extra})").alias(f"{name}_p{label}")
-                )
+                cols.append(F.expr(f"{fn}({field}, {float(p) / 100.0}{extra})")
+                            .alias(f"{name}_p{_pct_label(p)}"))
         elif kind == "cardinality":
             # ES cardinality is an HLL approximation; approximate=True maps
             # to approx_count_distinct (HLL++), default is exact countDistinct
@@ -186,22 +223,11 @@ def _metric_cols(aggs: dict[str, Any]) -> list[Column]:
             else:
                 cols.append(F.countDistinct(field).alias(name))
         elif kind == "stats":
-            cols += [
-                F.count(field).alias(f"{name}_count"),
-                F.min(field).alias(f"{name}_min"),
-                F.max(field).alias(f"{name}_max"),
-                F.sum(field).alias(f"{name}_sum"),
-                F.avg(field).alias(f"{name}_avg"),
-            ]
+            cols += _stats_cols(name, field)
         elif kind == "extended_stats":
             # ES extended_stats: stats + sum_of_squares + POPULATION
             # variance/std_deviation (ES divides by N, not N-1)
-            cols += [
-                F.count(field).alias(f"{name}_count"),
-                F.min(field).alias(f"{name}_min"),
-                F.max(field).alias(f"{name}_max"),
-                F.sum(field).alias(f"{name}_sum"),
-                F.avg(field).alias(f"{name}_avg"),
+            cols += _stats_cols(name, field) + [
                 F.sum(F.col(field) * F.col(field)).alias(f"{name}_sum_of_squares"),
                 F.var_pop(field).alias(f"{name}_variance"),
                 F.stddev_pop(field).alias(f"{name}_std_deviation"),
@@ -262,11 +288,10 @@ def _metric_cols(aggs: dict[str, Any]) -> list[Column]:
             # 1e-4 % so the cross-engine hash is stable:
             # {name}_rank_u columns are floor(pct · 1e4) per value.
             for v in body["values"]:
-                label = f"{float(v):g}".replace(".", "_").replace("-", "m")
                 cols.append(
                     F.floor(F.avg(F.when(F.col(field) <= float(v), 1.0)
                                   .otherwise(0.0)) * 1e6).cast("long")
-                    .alias(f"{name}_rank_{label}_u"))
+                    .alias(f"{name}_rank_{_pct_label(v)}_u"))
         elif kind == "geo_centroid":
             # ES geo_centroid: arithmetic mean of lat/lon over the bucket
             cols += [
@@ -276,135 +301,220 @@ def _metric_cols(aggs: dict[str, Any]) -> list[Column]:
         elif kind in _METRICS:
             cols.append(_METRICS[kind](field).alias(name))
         else:
-            raise UnsupportedQuery(f"unsupported sub-agg: {kind}")
+            raise UnsupportedQuery(f"unsupported agg kind: {kind}")
     return cols
+
+
+def _bucket_agg(df: DataFrame, sub: dict[str, Any] | None, *keys) -> DataFrame:
+    """The bucket aggregate: one row per distinct `keys` (no keys: one
+    row for all of `df`) with its doc_count and the metric sub-aggs'
+    columns."""
+    return df.groupBy(*keys).agg(F.count(F.lit(1)).alias("doc_count"),
+                                 *_metric_cols(sub or {}))
+
+
+def _filtered_buckets(base: DataFrame, kind: str,
+                      parts: list[tuple[list[Column], Column]],
+                      sub: dict[str, Any] | None, order: str) -> DataFrame:
+    """Buckets that are independent filters (they may overlap, so a doc
+    can count in several): a union of small filtered aggregates, not a
+    groupBy. Each part is (its leading literal columns, its filter);
+    buckets come back ordered by the `order` column ascending."""
+    if not parts:
+        raise UnsupportedQuery(f"{kind} agg: empty list of ranges or filters")
+    return reduce(DataFrame.unionByName, [
+        _bucket_agg(base.filter(cond), sub).select(*lead, "*")
+        for lead, cond in parts]).orderBy(F.asc(order))
+
+
+def _range_buckets(base: DataFrame, kind: str, x: Column,
+                   ranges: list[dict[str, Any]], bound,
+                   sub: dict[str, Any] | None) -> DataFrame:
+    """ES range-family buckets (range, date_range, ip_range,
+    geo_distance): each range an independent [from, to) filter on `x`,
+    `bound` mapping a from/to value to the Column `x` compares with.
+    Buckets come back in the given order (`bucket_idx`), keyed by the
+    range's `key` or ES-style `{from}-{to}` with `*` for an open end."""
+    parts = []
+    for idx, r in enumerate(ranges):
+        frm, to = r.get("from"), r.get("to")
+        cond = F.lit(True)
+        if frm is not None:
+            cond = cond & (x >= bound(frm))
+        if to is not None:
+            cond = cond & (x < bound(to))
+        key = r.get("key") or (
+            f"{'*' if frm is None else frm}-{'*' if to is None else to}")
+        parts.append(([F.lit(idx).alias("bucket_idx"),
+                       F.lit(str(key)).alias("key")], cond))
+    return _filtered_buckets(base, kind, parts, sub, "bucket_idx")
+
+
+def _split_subs(sub: dict[str, Any] | None):
+    """A bucket agg's sub-aggs → (plain, pipelines, cumulative_cardinality):
+    plain ones compile into the bucket aggregate, the others run over its
+    bucket frame."""
+    plain: dict[str, Any] = {}
+    pipes: dict[str, Any] = {}
+    cc: dict[str, Any] = {}
+    for n, s in (sub or {}).items():
+        k = _kind_of(s)[0]
+        (cc if k == "cumulative_cardinality"
+         else pipes if k in _PIPELINE_KINDS else plain)[n] = s
+    return plain, pipes, cc
+
+
+def _sort_spec(spec) -> list[tuple[str, Column]]:
+    """ES sort spec — a field name, {field: "asc"|"desc"}, {field:
+    {"order": …}}, or a list of them — as (field, order Column) pairs."""
+    out = []
+    for s in spec if isinstance(spec, list) else [spec]:
+        if isinstance(s, str):
+            out.append((s, F.col(s).asc()))
+            continue
+        ((field, o),) = s.items()
+        d = o.get("order", "asc") if isinstance(o, dict) else o
+        out.append((field, F.col(field).desc() if d == "desc" else F.col(field).asc()))
+    return out
+
+
+def _series() -> WindowSpec:
+    """The window over a REDUCED bucket series: one partition, as ES's
+    coordinating-node reduce phase is one sequence (bucket count ≪ doc
+    count, so this is the operator's design, not a corpus funnel).
+    partitionBy(lit(0)) plans like an unpartitioned window but keeps
+    Spark's "No Partition Defined" warning out of the logs, so a real
+    accidental unpartitioned window elsewhere stays visible."""
+    return Window.partitionBy(F.lit(0))
+
+
+def _key_series() -> WindowSpec:
+    """`_series` in bucket key order."""
+    return _series().orderBy(F.asc("key"))
 
 
 _BUCKET_KINDS = ("terms", "date_histogram", "histogram", "geotile_grid",
                  "geohash_grid")
 
 
-def _compile_bucket_path(base: DataFrame, name: str, spec: dict[str, Any]) -> DataFrame:
+def _level_options(df: DataFrame, inner: dict[str, Any], key: str, count: str,
+                   leaf: bool) -> tuple[DataFrame, list[Column]]:
+    """ES terms options of ONE bucket level, whose buckets are the rows of
+    `df` keyed by column `key`, doc counts in `count`: `include` (an
+    anchored regex, or a key partition) and `exclude` drop the level's
+    buckets; returns the filtered frame and the level's ES order — by
+    `order` (_key, _count, or on the `leaf` level a metric sub-agg),
+    default doc count desc — with the key ascending as the tie-break."""
+    k = F.col(key)
+    inc = inner.get("include")
+    if isinstance(inc, dict):
+        # ES key partitioning for huge-cardinality terms paging:
+        # {"include": {"partition": p, "num_partitions": n}} — each
+        # request sees the keys whose hash lands in its partition.
+        # The engine-independent hash contract is the first 8 hex
+        # chars of md5(key) mod n (ES's own hash is Lucene-internal;
+        # md5 is the documented cross-engine contract, mirrored in
+        # the DuckDB oracle).
+        p, np_ = int(inc["partition"]), int(inc["num_partitions"])
+        if not 0 <= p < np_:
+            raise UnsupportedQuery("terms include.partition out of range")
+        bucket = F.conv(F.substring(F.md5(k.cast("string")), 1, 8),
+                        16, 10).cast("long") % np_
+        df = df.filter(bucket == p)
+    elif inc:
+        df = df.filter(k.cast("string").rlike(f"^(?:{inc})$"))
+    exc = inner.get("exclude")
+    if exc:
+        df = df.filter(~k.cast("string").rlike(f"^(?:{exc})$"))
+    lead = F.col(count).desc()
+    if inner.get("order"):
+        ((ocol, odir),) = inner["order"].items()
+        ocol = key if ocol == "_key" else (count if ocol == "_count" else ocol)
+        if ocol not in (key, count):
+            if not leaf:  # metrics are computed on the leaf level only
+                raise UnsupportedQuery(
+                    f"order by a metric ({ocol}) is supported on the leaf "
+                    "bucket level only")
+            if ocol not in df.columns:
+                raise UnsupportedQuery(f"order references unknown agg: {ocol}")
+        lead = F.col(ocol).desc() if odir == "desc" else F.col(ocol).asc()
+    return df, [lead, k.asc()]
+
+
+def _compile_bucket_path(base: DataFrame, name: str, kind: str,
+                         inner: dict[str, Any],
+                         sub: dict[str, Any] | None) -> DataFrame:
     """Compile one bucket agg, possibly with NESTED bucket sub-aggs
     (terms inside date_histogram inside terms, …), to ONE multi-key
     groupBy over the leaf path — the flattened-bucket-tree plan: a single
     shuffle on the composite bucket key regardless of depth, then window
     functions over the (already tiny) aggregated bucket rows for parent
-    doc_counts, per-level `size` and ES bucket ordering.
+    doc_counts, per-level options, `size` and ES bucket ordering.
 
     Output columns: `<level>_key` per bucket level, `doc_count` (leaf),
     `<level>_doc_count` per NON-leaf level, plus leaf metric columns.
-    Rows are ordered ES-style — each level by (its doc_count desc, key
-    asc) within its parent — and each level's `size` keeps its top-N
-    buckets (dense_rank over bucket totals: every row of a bucket shares
-    the rank, so whole subtrees survive or drop together; parent counts
-    are computed before any size cut, matching ES which counts ALL docs in
-    a bucket regardless of how many child buckets are returned)."""
-    from pyspark.sql import Window
-
-    levels: list[tuple[str, Column, int | None]] = []
-    metrics: dict[str, Any] = {}
-    cur_name, cur_spec = name, spec
+    Rows are ordered ES-style — each level by its order (default doc_count
+    desc), then key asc, within its parent — and each level's `size`
+    keeps its top-N buckets (dense_rank over bucket totals: every row of
+    a bucket shares the rank, so whole subtrees survive or drop
+    together). Each level's include/exclude drops its own buckets after
+    the shallower levels' counts are taken, and a size cut comes after
+    the level's own count: ES counts ALL docs in a bucket regardless of
+    which child buckets are returned. (A parent whose child buckets are
+    all dropped has no row left in the flattened frame.)"""
+    levels: list[tuple[str, Column, dict[str, Any]]] = []
     while True:
-        sub = cur_spec.get("aggs")
-        ((kind, inner),) = ((k, v) for k, v in cur_spec.items() if k != "aggs")
         if kind not in _BUCKET_KINDS:
             raise UnsupportedQuery(f"unsupported bucket agg: {kind}")
-        key_name = f"{cur_name}_key"
-        size = inner.get("size")
-        levels.append((cur_name, _bucket_key(kind, inner).alias(key_name),
-                       int(size) if size else None))
-        if not sub:
-            break
-        bucket_subs = {
-            n: s for n, s in sub.items()
-            if next(iter(k for k in s if k != "aggs")) in _BUCKET_KINDS
-        }
-        metric_subs = {n: s for n, s in sub.items() if n not in bucket_subs}
+        levels.append((name, _bucket_key(kind, inner).alias(f"{name}_key"), inner))
+        bucket_subs = {n: s for n, s in (sub or {}).items()
+                       if _kind_of(s)[0] in _BUCKET_KINDS}
+        metrics = {n: s for n, s in (sub or {}).items() if n not in bucket_subs}
         if len(bucket_subs) > 1:
             raise UnsupportedQuery(
                 "at most one nested bucket agg per level (issue sibling"
                 " buckets as separate top-level aggs)")
-        if bucket_subs:
-            if metric_subs:
-                raise UnsupportedQuery(
-                    "metrics alongside a nested bucket are unsupported —"
-                    " attach metrics to the leaf or issue a separate agg")
-            ((cur_name, cur_spec),) = bucket_subs.items()
-            continue
-        metrics = metric_subs
-        break
+        if not bucket_subs:
+            break
+        if metrics:
+            raise UnsupportedQuery(
+                "metrics alongside a nested bucket are unsupported —"
+                " attach metrics to the leaf or issue a separate agg")
+        ((name, spec),) = bucket_subs.items()
+        kind, inner = _kind_of(spec)
+        sub = spec.get("aggs")
 
-    keys = [lv[1] for lv in levels]
     key_names = [f"{lv[0]}_key" for lv in levels]
-    df = base.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias("doc_count"), *_metric_cols(metrics)
-    )
+    df = _bucket_agg(base, metrics, *[lv[1] for lv in levels])
     if len(levels) == 1:  # historical single-level shape: key/doc_count,
         # TakeOrderedAndProject instead of a single-partition window
-        df = df.withColumnRenamed(key_names[0], "key")
-        inner0 = next(v for k, v in spec.items() if k != "aggs")
-        # ES terms options: include (anchored regex on keys), order by a
-        # metric sub-agg ({"order": {"<metric>": "asc"|"desc"}} or _key)
-        inc = inner0.get("include")
-        if isinstance(inc, dict):
-            # ES key partitioning for huge-cardinality terms paging:
-            # {"include": {"partition": p, "num_partitions": n}} — each
-            # request sees the keys whose hash lands in its partition.
-            # The engine-independent hash contract is the first 8 hex
-            # chars of md5(key) mod n (ES's own hash is Lucene-internal;
-            # md5 is the documented cross-engine contract, mirrored in
-            # the DuckDB oracle).
-            p, np_ = int(inc["partition"]), int(inc["num_partitions"])
-            if not 0 <= p < np_:
-                raise UnsupportedQuery(
-                    "terms include.partition out of range")
-            bucket = F.conv(F.substring(F.md5(F.col("key").cast("string")),
-                                        1, 8), 16, 10).cast("long") % np_
-            df = df.filter(bucket == p)
-        elif inc:
-            df = df.filter(F.col("key").cast("string").rlike(f"^(?:{inc})$"))
-        exc = inner0.get("exclude")
-        if exc:
-            df = df.filter(~F.col("key").cast("string").rlike(f"^(?:{exc})$"))
-        order_spec = inner0.get("order")
-        if order_spec:
-            ((ocol, odir),) = order_spec.items()
-            ocol = "key" if ocol == "_key" else (
-                "doc_count" if ocol == "_count" else ocol)
-            if ocol not in df.columns:
-                raise UnsupportedQuery(f"order references unknown agg: {ocol}")
-            lead = F.col(ocol).desc() if odir == "desc" else F.col(ocol).asc()
-            df = df.orderBy(lead, F.asc("key"))
-        else:
-            df = df.orderBy(F.desc("doc_count"), F.asc("key"))
-        if levels[0][2]:
-            df = df.limit(levels[0][2])
-        return df
-    # parent doc_counts + per-level size, shallow → deep (a size cut drops
-    # whole subtrees, so deeper counts computed later are unaffected)
-    for depth, (lname, _, size) in enumerate(levels):
+        inner = levels[0][2]
+        df, order = _level_options(df.withColumnRenamed(key_names[0], "key"),
+                                   inner, "key", "doc_count", True)
+        df = df.orderBy(*order)
+        return df.limit(int(inner["size"])) if inner.get("size") else df
+    # per level, shallow → deep: its options, its doc_count, its size cut
+    # (a filter or size cut drops whole subtrees, so deeper counts
+    # computed later are unaffected)
+    order: list[Column] = []
+    for depth, (lname, _, linner) in enumerate(levels):
         prefix = key_names[:depth]
-        if depth < len(levels) - 1:
-            cnt_col = f"{lname}_doc_count"
+        leaf = depth == len(levels) - 1
+        cnt_col = "doc_count" if leaf else f"{lname}_doc_count"
+        df, lorder = _level_options(df, linner, key_names[depth], cnt_col, leaf)
+        if not leaf:
             df = df.withColumn(
                 cnt_col,
                 F.sum("doc_count").over(Window.partitionBy(*prefix, key_names[depth])),
             )
-        else:
-            cnt_col = "doc_count"
-        if size:
-            rw = Window.partitionBy(*prefix).orderBy(
-                F.col(cnt_col).desc(), F.col(key_names[depth]).asc())
+        if linner.get("size"):
+            rw = Window.partitionBy(*prefix).orderBy(*lorder)
             df = (
                 df.withColumn("__rank", F.dense_rank().over(rw))
-                .filter(F.col("__rank") <= size)
+                .filter(F.col("__rank") <= int(linner["size"]))
                 .drop("__rank")
             )
-    order: list[Column] = []
-    for depth, (lname, _, _) in enumerate(levels):
-        cnt = "doc_count" if depth == len(levels) - 1 else f"{lname}_doc_count"
-        order += [F.col(cnt).desc(), F.col(key_names[depth]).asc()]
+        order += lorder
     return df.orderBy(*order)
 
 
@@ -433,7 +543,7 @@ def _auto_date_histogram(base: DataFrame, inner: dict[str, Any],
     row = base.agg(F.min(field).alias("lo"), F.max(field).alias("hi")).collect()[0]
     lo, hi = row["lo"], row["hi"]
     if lo is None:
-        return base.agg(F.count(F.lit(1)).alias("doc_count")).limit(0).select(
+        return _bucket_agg(base, None).limit(0).select(
             F.lit(None).cast("timestamp").alias("key"),
             F.lit(0).alias("doc_count"), F.lit("day").alias("interval"))
     span_s = max((hi - lo).total_seconds(), 1.0)
@@ -461,9 +571,7 @@ def _gap_filled_histogram(base: DataFrame, kind: str, inner: dict[str, Any],
     ES); the dense key axis is a generated sequence joined LEFT against
     the buckets. Metrics on empty buckets are null (ES renders null/0
     per metric kind — the envelope layer's concern)."""
-    key = _bucket_key(kind, inner)
-    agg = base.groupBy(key.alias("key")).agg(
-        F.count(F.lit(1)).alias("doc_count"), *_metric_cols(sub or {}))
+    agg = _bucket_agg(base, sub, _bucket_key(kind, inner).alias("key"))
     spark = base.sparkSession
     eb = inner.get("extended_bounds") or {}
     row = agg.agg(F.min("key").alias("lo"), F.max("key").alias("hi")).collect()[0]
@@ -471,21 +579,22 @@ def _gap_filled_histogram(base: DataFrame, kind: str, inner: dict[str, Any],
     if lo is None and not eb:
         return agg.orderBy(F.asc("key"))  # no data, no bounds → empty
     if kind == "histogram":
+        # bucket indexes: the data's keys are index·w already (round
+        # recovers the index), extended_bounds are raw values (floor).
+        # The axis key is `_bucket_key`'s own index·w from the integer
+        # index — a key built another way (lo + i·w) can miss a real
+        # bucket's key by an ulp and drop its docs in the LEFT join.
         w = float(inner["interval"])
-        lo = min(x for x in (lo, eb.get("min")) if x is not None)
-        hi = max(x for x in (hi, eb.get("max")) if x is not None)
-        import math
-
-        lo_k = math.floor(lo / w) * w
-        n = int(math.floor(hi / w) - math.floor(lo / w)) + 1
-        axis = spark.range(n).select(
-            (F.lit(lo_k) + F.col("id") * F.lit(w)).alias("key"))
+        idx = ([round(k / w) for k in (lo, hi) if k is not None]
+               + [math.floor(float(eb[b]) / w) for b in ("min", "max")
+                  if eb.get(b) is not None])
+        axis = spark.range(max(idx) - min(idx) + 1).select(
+            ((F.lit(min(idx)) + F.col("id")) * w).alias("key"))
     else:
         unit = _CAL[inner.get("calendar_interval") or inner.get("fixed_interval")]
-        import datetime as _dt
 
         def as_dt(v):
-            return _dt.datetime.fromisoformat(v) if isinstance(v, str) else v
+            return dt.datetime.fromisoformat(v) if isinstance(v, str) else v
 
         cands_lo = [x for x in (lo, as_dt(eb.get("min"))) if x is not None]
         cands_hi = [x for x in (hi, as_dt(eb.get("max"))) if x is not None]
@@ -516,138 +625,86 @@ def compile_aggs(docs: DataFrame, body: dict[str, Any]) -> dict[str, DataFrame]:
     specs = body.get("aggs") or {}
     # sibling pipeline aggs (avg_bucket & co.) read a SIBLING bucket
     # agg's compiled frame — defer them past the main pass
-    siblings = {n: s for n, s in specs.items()
-                if next(iter(k for k in s if k != "aggs")) in _SIBLING_KINDS}
+    siblings = {n: s for n, s in specs.items() if _kind_of(s)[0] in _SIBLING_KINDS}
     for name, spec in specs.items():
         if name in siblings:
             continue
         sub = spec.get("aggs")
-        ((kind, inner),) = ((k, v) for k, v in spec.items() if k != "aggs")
-        if (kind in ("date_histogram", "histogram")
-                and inner.get("min_doc_count", 1) == 0
-                and not any(next(iter(k for k in s if k != "aggs"))
-                            in _BUCKET_KINDS for s in (sub or {}).values())):
-            # pipeline subs (derivative over a gap-filled series is THE
-            # canonical ES pairing with min_doc_count:0) run over the
-            # filled bucket frame, not inside the groupBy (ADVICE r4)
-            gf_pipes = {n: s for n, s in (sub or {}).items()
-                        if next(iter(s)) in _PIPELINE_KINDS}
-            gf_plain = {n: s for n, s in (sub or {}).items() if n not in gf_pipes}
-            cc = {n: s for n, s in gf_pipes.items()
-                  if next(iter(s)) == "cumulative_cardinality"}
-            gf_pipes = {n: s for n, s in gf_pipes.items() if n not in cc}
-            filled = _gap_filled_histogram(base, kind, inner, gf_plain)
-            if cc:  # first: later pipes may reference the cc column
-                filled = _apply_cumulative_cardinality(
-                    filled, base, kind, _bucket_key(kind, inner), cc, gf_plain)
-            out[name] = (_apply_pipeline_aggs(filled, gf_pipes)
-                         if gf_pipes else filled)
-            continue
+        kind, inner = _kind_of(spec)
         if kind in _BUCKET_KINDS:
-            th = {n: s for n, s in (sub or {}).items() if next(iter(s)) == "top_hits"}
-            if th:
-                ((th_name, th_spec),) = th.items()
+            plain, pipes, cc = _split_subs(sub)
+            if (kind in ("date_histogram", "histogram")
+                    and inner.get("min_doc_count", 1) == 0
+                    and not any(_kind_of(s)[0] in _BUCKET_KINDS for s in plain.values())):
+                # pipeline subs (derivative over a gap-filled series is THE
+                # canonical ES pairing with min_doc_count:0) run over the
+                # filled bucket frame, not inside the groupBy
+                frame = _gap_filled_histogram(base, kind, inner, plain)
+            elif any(_kind_of(s)[0] == "top_hits" for s in plain.values()):
                 if len(sub) > 1:
                     raise UnsupportedQuery(
                         "top_hits cannot be mixed with sibling sub-aggs")
+                ((_, th_spec),) = plain.items()
                 out[name] = _top_hits(base, kind, inner, th_spec["top_hits"])
                 continue
-            pipes = {
-                n: s for n, s in (sub or {}).items()
-                if next(iter(s)) in _PIPELINE_KINDS
-            }
-            if pipes:
-                plain = {n: s for n, s in sub.items() if n not in pipes}
-                cc = {n: s for n, s in pipes.items()
-                      if next(iter(s)) == "cumulative_cardinality"}
-                pipes = {n: s for n, s in pipes.items() if n not in cc}
-                spec2: dict[str, Any] = {kind: inner}
-                if plain:
-                    spec2["aggs"] = plain
-                bf = _compile_bucket_path(base, name, spec2)
-                if cc:  # first: later pipes may reference the cc column
-                    bf = _apply_cumulative_cardinality(
-                        bf, base, kind, _bucket_key(kind, inner), cc, plain)
-                out[name] = _apply_pipeline_aggs(bf, pipes) if pipes else bf
             else:
-                out[name] = _compile_bucket_path(base, name, spec)
+                frame = _compile_bucket_path(base, name, kind, inner, plain)
+            if cc:  # first: later pipes may reference the cc column
+                frame = _apply_cumulative_cardinality(
+                    frame, base, kind, _bucket_key(kind, inner), cc, plain)
+            out[name] = _apply_pipeline_aggs(frame, pipes) if pipes else frame
         elif kind == "multi_terms":
             # ES multi_terms: bucket on a TUPLE of fields — one multi-key
             # groupBy (single shuffle), ES order doc_count desc then keys
             # asc, `size` cut. Key rendered as the ES-style joined string
             # alongside the per-field columns.
             fields = [t["field"] for t in inner["terms"]]
-            msize = int(inner.get("size", 10))
-            df = (
-                base.groupBy(*[F.col(f) for f in fields])
-                .agg(F.count(F.lit(1)).alias("doc_count"), *_metric_cols(sub or {}))
-                .withColumn("key", F.concat_ws("|", *[F.col(f).cast("string")
-                                                      for f in fields]))
-            )
+            df = (_bucket_agg(base, sub, *[F.col(f) for f in fields])
+                  .withColumn("key", F.concat_ws("|", *[F.col(f).cast("string")
+                                                        for f in fields])))
             out[name] = df.orderBy(
                 F.desc("doc_count"), *[F.asc(f) for f in fields]
-            ).limit(msize).select("key", *fields, "doc_count",
-                                  *[c for c in df.columns
-                                    if c not in fields + ["key", "doc_count"]])
+            ).limit(int(inner.get("size", 10))).select(
+                "key", *fields, "doc_count",
+                *[c for c in df.columns if c not in fields + ["key", "doc_count"]])
         elif kind == "rare_terms":
             # ES rare_terms: the LONG TAIL — buckets with doc_count <=
             # max_doc_count (default 1), ordered doc_count asc then key asc
             # (no size cut in ES; bounded by the cap instead)
-            field = inner["field"]
-            cap = int(inner.get("max_doc_count", 1))
             out[name] = (
-                base.groupBy(F.col(field).alias("key"))
-                .agg(F.count(F.lit(1)).alias("doc_count"), *_metric_cols(sub or {}))
-                .filter(F.col("doc_count") <= cap)
+                _bucket_agg(base, sub, F.col(inner["field"]).alias("key"))
+                .filter(F.col("doc_count") <= int(inner.get("max_doc_count", 1)))
                 .orderBy(F.asc("doc_count"), F.asc("key"))
             )
         elif kind == "global":
             # ES global agg: escape the query filter — metrics over the
             # WHOLE index regardless of the body's query
-            out[name] = docs.agg(
-                F.count(F.lit(1)).alias("doc_count"), *_metric_cols(sub or {}))
+            out[name] = _bucket_agg(docs, sub)
         elif kind == "filter":
             # ES single-filter agg: one bucket for the clause's matches
-            out[name] = base.filter(_compile_clause(inner)).agg(
-                F.count(F.lit(1)).alias("doc_count"), *_metric_cols(sub or {}))
+            out[name] = _bucket_agg(base.filter(_compile_clause(inner)), sub)
         elif kind == "filters":
             # ES filters agg: {"filters": {"filters": {name: clause, ...}}}
-            # — a doc may land in SEVERAL buckets (each filter counts
-            # independently), so this is a union of small aggregates, not a
-            # groupBy. Deterministic bucket order: key asc.
-            parts = []
-            for fname in sorted(inner["filters"]):
-                clause = inner["filters"][fname]
-                agg = base.filter(_compile_clause(clause)).agg(
-                    F.count(F.lit(1)).alias("doc_count"), *_metric_cols(sub or {})
-                )
-                parts.append(agg.select(F.lit(fname).alias("key"), "*"))
-            df = parts[0]
-            for p in parts[1:]:
-                df = df.unionByName(p)
-            out[name] = df.orderBy(F.asc("key"))
+            # — each filter counts independently. Bucket order: key asc.
+            fs = inner["filters"]
+            out[name] = _filtered_buckets(
+                base, kind, [([F.lit(f).alias("key")], _compile_clause(fs[f]))
+                             for f in sorted(fs)], sub, "key")
         elif kind == "adjacency_matrix":
             # ES adjacency_matrix: one bucket per named filter plus one per
             # pair intersection (key "a&b", names sorted) — like the
-            # filters agg, a union of independent filtered aggregates;
-            # empty intersections are kept with doc_count 0 (ES drops
-            # them, but a stable row set hashes deterministically).
-            specs = inner["filters"]
-            names_sorted = sorted(specs)
-            combos: list[tuple[str, Any]] = [(n, _compile_clause(specs[n])) for n in names_sorted]
+            # filters agg; empty intersections are kept with doc_count 0
+            # (ES drops them, but a stable row set hashes deterministically).
+            fs = inner["filters"]
+            names_sorted = sorted(fs)
+            combos: list[tuple[str, Any]] = [(n, _compile_clause(fs[n])) for n in names_sorted]
             for i, na in enumerate(names_sorted):
                 for nb in names_sorted[i + 1:]:
                     combos.append((f"{na}&{nb}",
-                                   _compile_clause(specs[na]) & _compile_clause(specs[nb])))
-            parts = []
-            for cname, clause in combos:
-                agg = base.filter(clause).agg(
-                    F.count(F.lit(1)).alias("doc_count"), *_metric_cols(sub or {}))
-                parts.append(agg.select(F.lit(cname).alias("key"), "*"))
-            df = parts[0]
-            for p in parts[1:]:
-                df = df.unionByName(p)
-            out[name] = df.orderBy(F.asc("key"))
+                                   _compile_clause(fs[na]) & _compile_clause(fs[nb])))
+            out[name] = _filtered_buckets(
+                base, kind, [([F.lit(c).alias("key")], clause) for c, clause in combos],
+                sub, "key")
         elif kind == "categorize_text":
             # ES categorize_text: cluster semi-structured log messages by
             # token pattern. Documented contract (ES's own algorithm is a
@@ -655,52 +712,34 @@ def compile_aggs(docs: DataFrame, body: dict[str, Any]) -> dict[str, DataFrame]:
             # replaced by '*', first `similarity_threshold`-independent K
             # tokens (`max_matched_tokens`, default 5) joined as the
             # category key — one projection + one groupBy, ES bucket order.
-            fld = inner["field"]
-            kk = int(inner.get("max_matched_tokens", 5))
-            sz = int(inner.get("size", 10))
-            toks = F.split(F.lower(F.col(fld)), r"[^a-z0-9]+")
+            toks = F.split(F.lower(F.col(inner["field"])), r"[^a-z0-9]+")
             toks = F.filter(toks, lambda t: t != F.lit(""))
             patt = F.transform(
                 toks, lambda t: F.when(t.rlike("^[0-9]+$"), F.lit("*")).otherwise(t))
-            key = F.concat_ws(" ", F.slice(patt, 1, kk))
-            out[name] = (
-                base.groupBy(key.alias("key"))
-                .agg(F.count(F.lit(1)).alias("doc_count"), *_metric_cols(sub or {}))
-                .orderBy(F.desc("doc_count"), F.asc("key")).limit(sz))
-        elif kind == "sampler":
+            key = F.concat_ws(" ", F.slice(patt, 1, int(inner.get("max_matched_tokens", 5))))
+            out[name] = (_bucket_agg(base, sub, key.alias("key"))
+                         .orderBy(F.desc("doc_count"), F.asc("key"))
+                         .limit(int(inner.get("size", 10))))
+        elif kind in ("sampler", "diversified_sampler"):
             # ES sampler agg (deterministic variant): the `shard_size` docs
             # with the smallest md5(doc_id) — an engine-independent uniform
             # sample (same stratified_sample trick), then the sub-aggs over
             # just the sample. ES samples per-shard by score; a hash-keyed
             # global cut is the deterministic, cluster-invariant analogue.
-            n = int(inner.get("shard_size", 100))
+            # diversified_sampler adds a DIVERSITY cap: at most
+            # max_docs_per_value docs sharing `field` enter the sample,
+            # ranked per value by the same md5 — a window partitioned by
+            # the diversity field (bounded per-value state), never the
+            # whole corpus.
             id_c = inner.get("id_field", "doc_id")
-            sampled = (base.withColumn("__smp", F.md5(F.col(id_c).cast("string")))
-                       .orderBy(F.asc("__smp")).limit(n).drop("__smp"))
-            out[name] = sampled.agg(
-                F.count(F.lit(1)).alias("doc_count"), *_metric_cols(sub or {}))
-        elif kind == "diversified_sampler":
-            # ES diversified_sampler (deterministic variant): the sampler
-            # cut with a DIVERSITY cap — at most max_docs_per_value docs
-            # sharing `field` may enter the sample. Both the per-value
-            # ranking and the global shard_size cut key on md5(id), so
-            # the sample is engine- and partitioning-independent. The
-            # window partitions by the diversity field (bounded per-value
-            # state — the collapse scale shape), never the whole corpus.
-            from pyspark.sql import Window
-
-            n = int(inner.get("shard_size", 100))
-            cap = int(inner.get("max_docs_per_value", 1))
-            id_c = inner.get("id_field", "doc_id")
-            fld = inner["field"]
-            wd = Window.partitionBy(fld).orderBy(F.asc("__smp"))
-            sampled = (
-                base.withColumn("__smp", F.md5(F.col(id_c).cast("string")))
-                .withColumn("__rank", F.row_number().over(wd))
-                .filter(F.col("__rank") <= cap)
-                .orderBy(F.asc("__smp")).limit(n).drop("__smp", "__rank"))
-            out[name] = sampled.agg(
-                F.count(F.lit(1)).alias("doc_count"), *_metric_cols(sub or {}))
+            sampled = base.withColumn("__smp", F.md5(F.col(id_c).cast("string")))
+            if kind == "diversified_sampler":
+                wd = Window.partitionBy(inner["field"]).orderBy(F.asc("__smp"))
+                sampled = (sampled.withColumn("__rank", F.row_number().over(wd))
+                           .filter(F.col("__rank") <= int(inner.get("max_docs_per_value", 1))))
+            sampled = (sampled.orderBy(F.asc("__smp"))
+                       .limit(int(inner.get("shard_size", 100))).drop("__smp", "__rank"))
+            out[name] = _bucket_agg(sampled, sub)
         elif kind == "random_sampler":
             # ES random_sampler agg (8.2, x-pack): probabilistic sample of
             # the corpus with results scaled back — the speed-vs-accuracy
@@ -735,11 +774,35 @@ def compile_aggs(docs: DataFrame, body: dict[str, Any]) -> dict[str, DataFrame]:
                 F.floor(F.count(F.lit(1)) / F.lit(p)).cast("long")
                 .alias("doc_count"), *_metric_cols(sub or {}))
         elif kind in ("range", "date_range"):
-            out[name] = _range_agg(base, kind, inner, sub)
+            conv = ((lambda v: F.to_timestamp(F.lit(v))) if kind == "date_range"
+                    else (lambda v: F.lit(float(v))))
+            out[name] = _range_buckets(base, kind, F.col(inner["field"]),
+                                       inner["ranges"], conv, sub)
         elif kind == "geo_distance":
-            out[name] = _geo_distance_agg(base, inner, sub)
+            # ES geo_distance agg: range buckets over the haversine distance
+            # from `origin` in `unit`, the fixed-op-order haversine of the
+            # geo_distance query, so a SQL mirror stays value-exact
+            origin, unit_m = inner["origin"], _DIST_UNITS_M[inner.get("unit", "m")]
+            dist = haversine_m_col(F.col(inner["field"]),
+                                   float(origin["lat"]), float(origin["lon"]))
+            out[name] = _range_buckets(base, kind, dist, inner["ranges"],
+                                       lambda v: F.lit(float(v) * unit_m), sub)
         elif kind == "ip_range":
-            out[name] = _ip_range_agg(base, inner, sub)
+            # ES ip_range agg: [from, to) buckets and CIDR masks over an IPv4
+            # string column — bounds parsed driver-side to uint32 (a mask
+            # becomes its [network, network + block) range), the row side
+            # one split/cast projection
+            ranges = []
+            for r in inner["ranges"]:
+                if "mask" in r:
+                    net, bits = r["mask"].split("/")
+                    block = 1 << (32 - int(bits))
+                    lo = ip_to_long(net) & (~(block - 1) & 0xFFFFFFFF)
+                    r = {"key": r["mask"], "from": lo, "to": lo + block}
+                ranges.append(r)
+            out[name] = _range_buckets(
+                base, kind, ip_col_to_long(F.col(inner["field"])), ranges,
+                lambda v: F.lit(ip_to_long(v) if isinstance(v, str) else v), sub)
         elif kind == "ip_prefix":
             out[name] = _ip_prefix_agg(base, inner, sub)
         elif kind == "auto_date_histogram":
@@ -751,10 +814,8 @@ def compile_aggs(docs: DataFrame, body: dict[str, Any]) -> dict[str, DataFrame]:
                 F.sum(F.when(F.col(inner["field"]).isNull(), 1).otherwise(0))
                 .cast("long").alias("doc_count")
             )
-        elif kind == "significant_terms":
-            out[name] = _significant_terms(docs, base, inner)
-        elif kind == "significant_text":
-            out[name] = _significant_text(docs, base, inner)
+        elif kind in ("significant_terms", "significant_text"):
+            out[name] = _significant(docs, base, kind, inner)
         elif kind == "composite":
             out[name] = _composite(base, inner, sub)
         elif kind == "variable_width_histogram":
@@ -782,19 +843,14 @@ def compile_aggs(docs: DataFrame, body: dict[str, Any]) -> dict[str, DataFrame]:
 
             mom = base.agg(*side(ca, "1"), *side(cb, "2"))
             # exact integer moments → fixed-op-order FLOAT formula (both
-            # engines share it from here).  s·s multiplies in decimal
-            # (exact to 38 digits, past the mirror's int64 raise bound)
-            # and converts to double ONCE — the same exact-product-then-
-            # one-rounding the DuckDB mirror performs.
-            sq1 = (F.col("s1") * F.col("s1")).cast("double")
-            sq2 = (F.col("s2") * F.col("s2")).cast("double")
-            s1, q1 = F.col("s1").cast("double"), F.col("q1").cast("double")
-            s2, q2 = F.col("s2").cast("double"), F.col("q2").cast("double")
-            m1 = s1 / F.col("n1")
-            m2 = s2 / F.col("n2")
-            v1 = (q1 - sq1 / F.col("n1")) / (F.col("n1") - 1)
-            v2 = (q2 - sq2 / F.col("n2")) / (F.col("n2") - 1)
-            t = (m1 - m2) / F.sqrt(v1 / F.col("n1") + v2 / F.col("n2"))
+            # engines share it from here; s·s exact to 38 digits, past the
+            # mirror's int64 raise bound)
+            n1, n2 = F.col("n1"), F.col("n2")
+            m1 = F.col("s1").cast("double") / n1
+            m2 = F.col("s2").cast("double") / n2
+            v1 = _sample_cov(F.col("s1"), F.col("s1"), F.col("q1"), n1)
+            v2 = _sample_cov(F.col("s2"), F.col("s2"), F.col("q2"), n2)
+            t = (m1 - m2) / F.sqrt(v1 / n1 + v2 / n2)
             out[name] = mom.select(
                 F.col("n1"), F.col("n2"),
                 F.floor(t * 1e6).cast("long").alias(f"{name}_t_u"))
@@ -842,8 +898,6 @@ def compile_aggs(docs: DataFrame, body: dict[str, Any]) -> dict[str, DataFrame]:
             # doc), each a partial-aggregated groupBy on the itemset —
             # the word-count shape, no apriori candidate loop needed at
             # max size 2.
-            import math as _m
-
             fi_fields = [f["field"] for f in inner["fields"]]
             min_sup = float(inner.get("minimum_support", 0.1))
             min_size = int(inner.get("minimum_set_size", 1))
@@ -876,17 +930,14 @@ def compile_aggs(docs: DataFrame, body: dict[str, Any]) -> dict[str, DataFrame]:
             if not parts:
                 raise UnsupportedQuery(
                     "frequent_item_sets minimum_set_size exceeds maximum")
-            allsets = parts[0]
-            for p in parts[1:]:
-                allsets = allsets.unionByName(p)
-            counted = (allsets.groupBy("itemset", "set_size")
-                       .agg(F.count(F.lit(1)).alias("doc_count"))
+            counted = (_bucket_agg(reduce(DataFrame.unionByName, parts), None,
+                                   "itemset", "set_size")
                        .crossJoin(F.broadcast(n_tx)))
             sup = F.floor(F.col("doc_count") / F.col("n") * 1e6).cast("long")
             out[name] = (
                 counted.select("itemset", "set_size", "doc_count",
                                sup.alias("support_u"))
-                .filter(F.col("support_u") >= int(_m.floor(min_sup * 1e6)))
+                .filter(F.col("support_u") >= int(math.floor(min_sup * 1e6)))
                 .orderBy(F.desc("doc_count"), F.asc("itemset"))
                 .limit(fi_size))
         elif kind == "nested":
@@ -915,7 +966,7 @@ def compile_aggs(docs: DataFrame, body: dict[str, Any]) -> dict[str, DataFrame]:
             ex = (base.select("doc_id", F.explode(path).alias("__e"))
                   .select("doc_id", "__e.*"))
             if not sub:
-                out[name] = ex.agg(F.count(F.lit(1)).alias("doc_count"))
+                out[name] = _bucket_agg(ex, None)
                 continue
             if len(sub) != 1 or "terms" not in next(iter(sub.values())):
                 raise UnsupportedQuery(
@@ -925,7 +976,7 @@ def compile_aggs(docs: DataFrame, body: dict[str, Any]) -> dict[str, DataFrame]:
             tsub = tspec.get("aggs") or {}
             aggs = [F.count(F.lit(1)).alias("doc_count")]
             for mname, mspec in tsub.items():
-                ((mk, mi),) = mspec.items()
+                mk, mi = _kind_of(mspec)
                 if mk == "reverse_nested":
                     if isinstance(mi, dict) and mi.get("path"):
                         raise UnsupportedQuery(
@@ -969,10 +1020,8 @@ def compile_aggs(docs: DataFrame, body: dict[str, Any]) -> dict[str, DataFrame]:
             n = F.col("n")
 
             def cov(i, j):
-                ii, jj = min(i, j), max(i, j)
-                sq = (F.col(f"s{i}") * F.col(f"s{j}")).cast("double")
-                q = F.col(f"q{ii}_{jj}").cast("double")
-                return (q - sq / n) / (n - 1)
+                return _sample_cov(F.col(f"s{i}"), F.col(f"s{j}"),
+                                   F.col(f"q{min(i, j)}_{max(i, j)}"), n)
 
             cols = [n.alias(f"{name}_count")]
             for i, fi in enumerate(flds):
@@ -1004,16 +1053,10 @@ def compile_aggs(docs: DataFrame, body: dict[str, Any]) -> dict[str, DataFrame]:
             # sort key. Deterministic tie-break: after the sort key, order
             # by every metric column ascending (documented contract; ES
             # itself is shard-order-dependent on ties).
-            sort = inner["sort"]
-            if isinstance(sort, list):
-                sort = sort[0]
-            ((sf_, sdir),) = sort.items()
-            if isinstance(sdir, dict):
-                sdir = sdir.get("order", "asc")
+            sf_, lead = _sort_spec(inner["sort"])[0]
             ms = inner["metrics"]
             metrics = [m["field"] for m in (ms if isinstance(ms, list) else [ms])]
             sz = int(inner.get("size", 1))
-            lead = F.desc(sf_) if sdir == "desc" else F.asc(sf_)
             out[name] = (
                 base.select(F.col(sf_).alias("sort_value"),
                             *[F.col(m) for m in metrics])
@@ -1039,16 +1082,10 @@ def compile_aggs(docs: DataFrame, body: dict[str, Any]) -> dict[str, DataFrame]:
                                  - F.col("clnc_u") / 1e6 / F.col("n")) * 1e6)
                         .cast("long").alias(f"{name}_entropy_u")))
             out[name] = lens.crossJoin(F.broadcast(ent))
-        elif (kind in ("stats", "extended_stats", "percentiles", "cardinality",
-                       "weighted_avg", "percentile_ranks", "geo_centroid",
-                       "boxplot", "geo_bounds", "rate")
-              or kind in _METRICS):
+        else:  # a metric agg (_metric_cols raises on any other kind)
             out[name] = base.agg(*_metric_cols({name: {kind: inner}}))
-        else:
-            raise UnsupportedQuery(f"unsupported agg kind: {kind}")
     for name, spec in siblings.items():
-        ((kind, inner),) = ((k, v) for k, v in spec.items() if k != "aggs")
-        out[name] = _sibling_bucket(out, name, kind, inner)
+        out[name] = _sibling_bucket(out, name, *_kind_of(spec))
     return out
 
 
@@ -1079,27 +1116,14 @@ def _sibling_bucket(compiled: dict[str, DataFrame], name: str, kind: str,
     if col not in src.columns:
         raise UnsupportedQuery(
             f"{kind} buckets_path metric not in sibling frame: {metric}")
-    if kind == "avg_bucket":
-        return src.agg(F.avg(col).alias(f"{name}_value"))
-    if kind == "sum_bucket":
-        return src.agg(F.sum(col).alias(f"{name}_value"))
-    if kind == "min_bucket":
-        return src.agg(F.min(col).alias(f"{name}_value"))
-    if kind == "max_bucket":
-        return src.agg(F.max(col).alias(f"{name}_value"))
+    if kind in ("avg_bucket", "sum_bucket", "min_bucket", "max_bucket"):
+        return src.agg(_METRICS[kind[:-len("_bucket")]](col).alias(f"{name}_value"))
     if kind == "stats_bucket":
-        return src.agg(
-            F.count(col).alias(f"{name}_count"),
-            F.min(col).alias(f"{name}_min"),
-            F.max(col).alias(f"{name}_max"),
-            F.sum(col).alias(f"{name}_sum"),
-            F.avg(col).alias(f"{name}_avg"),
-        )
+        return src.agg(*_stats_cols(name, col))
     if kind == "percentiles_bucket":
         percents = inner.get("percents", ES_DEFAULT_PERCENTS)
         return src.agg(*[
-            F.expr(f"percentile({col}, {float(p) / 100.0})").alias(
-                f"{name}_p" + f"{float(p):g}".replace(".", "_"))
+            F.expr(f"percentile({col}, {float(p) / 100.0})").alias(f"{name}_p{_pct_label(p)}")
             for p in percents
         ])
     if kind == "bucket_correlation":
@@ -1110,8 +1134,6 @@ def _sibling_bucket(compiled: dict[str, DataFrame], name: str, kind: str,
         # (coordinator-sized — see the module scale note); pairing is a
         # row_number over the key order, the correlation one aggregate
         # with the textbook moment formula, quantized ×1e6.
-        from pyspark.sql import Window
-
         fn = (inner.get("function") or {}).get("count_correlation") or {}
         exp = (fn.get("indicator") or {}).get("expectations")
         if not exp:
@@ -1119,10 +1141,9 @@ def _sibling_bucket(compiled: dict[str, DataFrame], name: str, kind: str,
                 "bucket_correlation needs function.count_correlation."
                 "indicator.expectations")
         exp = [float(x) for x in exp]
-        w = Window.partitionBy(F.lit(0)).orderBy(F.asc("key"))
         ycol = F.element_at(
             F.array(*[F.lit(v) for v in exp]),
-            F.row_number().over(w))
+            F.row_number().over(_key_series()))
         paired = (src.select(F.col(col).cast("double").alias("x"),
                              ycol.alias("y"))
                   .filter(F.col("y").isNotNull()))  # buckets beyond the
@@ -1151,8 +1172,6 @@ def _sibling_bucket(compiled: dict[str, DataFrame], name: str, kind: str,
         # engine-exact core, so that is what this emits. Non-two_sided
         # alternatives and sampling methods raise rather than silently
         # approximate.
-        from pyspark.sql import Window
-
         alts = inner.get("alternatives", ["two_sided"])
         if alts != ["two_sided"]:
             raise UnsupportedQuery(
@@ -1160,8 +1179,7 @@ def _sibling_bucket(compiled: dict[str, DataFrame], name: str, kind: str,
         if inner.get("sampling_method"):
             raise UnsupportedQuery("bucket_count_ks_test sampling_method")
         fracs = inner.get("fractions")
-        w = Window.partitionBy(F.lit(0)).orderBy(F.asc("key"))
-        wall = Window.partitionBy(F.lit(0))
+        w, wall = _key_series(), _series()
         x = F.col(col).cast("double")
         pre = (src.select(F.col("key"), x.alias("x"))
                .select(F.row_number().over(w).alias("k"),
@@ -1198,10 +1216,7 @@ def _sibling_bucket(compiled: dict[str, DataFrame], name: str, kind: str,
         # 'stationary' with NULL key, mirroring ES's stationary verdict.
         # Output: ({name}_key = first bucket of the changed regime,
         # {name}_type, {name}_t_u = t ×1e6 floor-quantized).
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(F.lit(0)).orderBy(F.asc("key"))
-        wall = Window.partitionBy(F.lit(0))
+        w, wall = _key_series(), _series()
         x = F.col(col).cast("double")
         pre = (src.select(F.col("key"), x.alias("x"))
                .select("key",
@@ -1249,8 +1264,6 @@ def _variable_width_histogram(base: DataFrame, inner: dict[str, Any]) -> DataFra
     identical on any engine/partitioning. Returns
     (min, key_u, max, doc_count) per non-empty bucket in key order;
     `key_u` is the centroid in micro-units."""
-    from pyspark.sql import Window
-
     f = inner["field"]
     k = int(inner.get("buckets", 10))
     # collapse to weighted (value, count) pairs: the cluster assignment of
@@ -1350,13 +1363,10 @@ def _apply_cumulative_cardinality(df: DataFrame, base: DataFrame,
     FIRST bucket, so: groupBy(value).min(bucket) → per-bucket new-value
     counts → running sum over the reduced series. Two corpus-keyed
     shuffles (value, then bucket), no sketch approximation."""
-    from pyspark.sql import Window
-
     if kind not in ("date_histogram", "histogram"):
         raise UnsupportedQuery(
             "cumulative_cardinality needs an ordered histogram parent")
-    w = (Window.partitionBy(F.lit(0)).orderBy(F.asc("key"))
-         .rowsBetween(Window.unboundedPreceding, 0))
+    w = _key_series().rowsBetween(Window.unboundedPreceding, 0)
     for pname, spec in cc_pipes.items():
         ps = spec["cumulative_cardinality"]
         path = ps.get("buckets_path")
@@ -1448,19 +1458,9 @@ def _apply_pipeline_aggs(df: DataFrame, pipes: dict[str, Any]) -> DataFrame:
     bucket_selector, bucket_sort), applied in given order, buckets in key
     order (ES histogram semantics).
 
-    Scale note: these windows run over the REDUCED bucket series — the
-    same single-sequence pass ES does in the coordinating node's reduce
-    phase. The input is post-aggregation (bucket count ≪ doc count), so
-    the partitionless window is a design property of the operator, not a
-    corpus funnel; the corpus-sized work happened in the partial-agg
-    groupBy upstream."""
-    from pyspark.sql import Window
-
-    # partitionBy(lit(0)) is semantically identical to an unpartitioned
-    # window here (ONE series by design — see scale note above) but keeps
-    # Spark's "WindowExec: No Partition Defined" warning out of the logs,
-    # so a REAL accidental unpartitioned window elsewhere stays visible.
-    w = Window.partitionBy(F.lit(0)).orderBy(F.asc("key"))
+    These windows run over the REDUCED bucket series (`_series`); the
+    corpus-sized work happened in the partial-agg groupBy upstream."""
+    w = _key_series()
     sorted_out = False
     for pname, spec in pipes.items():
         ((pk, ps),) = spec.items()
@@ -1491,9 +1491,8 @@ def _apply_pipeline_aggs(df: DataFrame, pipes: dict[str, Any]) -> DataFrame:
             # engine-independent contract, same as the percentiles metric
             win = w.rowsBetween(-(int(ps["window"]) - 1), 0)
             for p_ in ps.get("percents", ES_DEFAULT_PERCENTS):
-                label = f"{float(p_):g}".replace(".", "_")
                 df = df.withColumn(
-                    f"{pname}_p{label}",
+                    f"{pname}_p{_pct_label(p_)}",
                     F.expr(f"percentile({path}, {float(p_) / 100.0})").over(win))
         elif pk == "normalize":
             # ES normalize pipeline agg: rescale the metric across the
@@ -1526,11 +1525,7 @@ def _apply_pipeline_aggs(df: DataFrame, pipes: dict[str, Any]) -> DataFrame:
         elif pk == "bucket_selector":
             df = df.filter(_script_expr(ps["script"], ps["buckets_path"]))
         elif pk == "bucket_sort":
-            order = []
-            for s in ps.get("sort", []):
-                ((f_, o),) = s.items()
-                d = o.get("order", "asc") if isinstance(o, dict) else o
-                order.append(F.col(f_).desc() if d == "desc" else F.col(f_).asc())
+            order = [c for _, c in _sort_spec(ps.get("sort", []))]
             df = df.orderBy(*(order or [F.asc("key")]))
             if ps.get("size"):
                 df = df.limit(int(ps["size"]))
@@ -1554,20 +1549,15 @@ def _top_hits(base: DataFrame, kind: str, inner: dict[str, Any],
     for per-bucket hit ranks — both shuffles are keyed by the bucket key,
     so this is two hash-partitioned passes, never a global window.
     Output: one row per hit (key, doc_count, rank, <_source cols...>),
-    ordered (doc_count desc, key asc, rank asc)."""
-    from pyspark.sql import Window
-
+    ordered (bucket order — the terms options' — then rank asc)."""
     key = _bucket_key(kind, inner)
     n_hits = int(th.get("size", 3))
-    buckets = base.groupBy(key.alias("key")).agg(F.count(F.lit(1)).alias("doc_count"))
+    buckets, order = _level_options(_bucket_agg(base, None, key.alias("key")),
+                                    inner, "key", "doc_count", True)
     b_size = inner.get("size")
     if b_size:
-        buckets = buckets.orderBy(F.desc("doc_count"), F.asc("key")).limit(int(b_size))
-    sort_cols = []
-    for s in th.get("sort", []):
-        ((f_, o),) = s.items()
-        d = o.get("order", "asc") if isinstance(o, dict) else o
-        sort_cols.append(F.col(f_).desc() if d == "desc" else F.col(f_).asc())
+        buckets = buckets.orderBy(*order).limit(int(b_size))
+    sort_cols = [c for _, c in _sort_spec(th.get("sort", []))]
     src = th.get("_source")
     src_cols = list(src) if isinstance(src, list) else [
         c for c in base.columns]
@@ -1589,40 +1579,7 @@ def _top_hits(base: DataFrame, kind: str, inner: dict[str, Any],
         .filter(F.col("rank") <= n_hits)
     )
     return hits.select("key", "doc_count", "rank", *src_cols).orderBy(
-        F.desc("doc_count"), F.asc("key"), F.asc("rank"))
-
-
-def _range_agg(base: DataFrame, kind: str, inner: dict[str, Any],
-               sub: dict[str, Any] | None) -> DataFrame:
-    """ES range / date_range agg: each range is an INDEPENDENT
-    [from, to) filter (ranges may overlap — a doc can count in several),
-    so like the filters agg this is a union of small filtered aggregates,
-    not a groupBy. Buckets come back in the given order (`bucket_idx`),
-    keyed ES-style `{from}-{to}` with `*` for an open end."""
-    field = inner["field"]
-    parts = []
-    for idx, r in enumerate(inner["ranges"]):
-        frm, to = r.get("from"), r.get("to")
-        cond = F.lit(True)
-        if frm is not None:
-            fc = F.to_timestamp(F.lit(frm)) if kind == "date_range" else F.lit(float(frm))
-            cond = cond & (F.col(field) >= fc)
-        if to is not None:
-            tc = F.to_timestamp(F.lit(to)) if kind == "date_range" else F.lit(float(to))
-            cond = cond & (F.col(field) < tc)
-        key = r.get("key") or (
-            f"{'*' if frm is None else frm}-{'*' if to is None else to}"
-        )
-        agg = base.filter(cond).agg(
-            F.count(F.lit(1)).alias("doc_count"), *_metric_cols(sub or {})
-        )
-        parts.append(agg.select(
-            F.lit(idx).alias("bucket_idx"), F.lit(str(key)).alias("key"), "*"
-        ))
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
-    return df.orderBy(F.asc("bucket_idx"))
+        *order, F.asc("rank"))
 
 
 def ip_to_long(ip: str) -> int:
@@ -1641,42 +1598,6 @@ def ip_col_to_long(col: Column) -> Column:
         + F.element_at(p, 3).cast("long") * 256
         + F.element_at(p, 4).cast("long")
     )
-
-
-def _ip_range_agg(base: DataFrame, inner: dict[str, Any],
-                  sub: dict[str, Any] | None) -> DataFrame:
-    """ES ip_range agg: [from, to) buckets and CIDR masks over an IPv4
-    string column — bounds parsed driver-side to uint32, the row side is
-    one split/cast projection, then the range agg's union-of-filtered-
-    aggregates shape (ranges may overlap)."""
-    field = inner["field"]
-    ipl = ip_col_to_long(F.col(field))
-    parts = []
-    for idx, r in enumerate(inner["ranges"]):
-        if "mask" in r:
-            bits_base, bits = r["mask"].split("/")
-            nbits = int(bits)
-            lo = ip_to_long(bits_base) & (~((1 << (32 - nbits)) - 1) & 0xFFFFFFFF)
-            hi = lo + (1 << (32 - nbits))
-            cond = (ipl >= F.lit(lo)) & (ipl < F.lit(hi))
-            key = r["mask"]
-        else:
-            frm, to = r.get("from"), r.get("to")
-            cond = F.lit(True)
-            if frm is not None:
-                cond = cond & (ipl >= F.lit(ip_to_long(frm)))
-            if to is not None:
-                cond = cond & (ipl < F.lit(ip_to_long(to)))
-            key = r.get("key") or (
-                f"{'*' if frm is None else frm}-{'*' if to is None else to}")
-        agg = base.filter(cond).agg(
-            F.count(F.lit(1)).alias("doc_count"), *_metric_cols(sub or {}))
-        parts.append(agg.select(
-            F.lit(idx).alias("bucket_idx"), F.lit(str(key)).alias("key"), "*"))
-    df = parts[0]
-    for p_ in parts[1:]:
-        df = df.unionByName(p_)
-    return df.orderBy(F.asc("bucket_idx"))
 
 
 def _ip_prefix_agg(base: DataFrame, inner: dict[str, Any],
@@ -1706,9 +1627,7 @@ def _ip_prefix_agg(base: DataFrame, inner: dict[str, Any],
         (F.col("__net") % 256).cast("string"))
     key = F.concat(quad, F.lit(f"/{nbits}")) if inner.get(
         "append_prefix_length") else quad
-    out = (base.select(net, "*")
-           .groupBy("__net")
-           .agg(F.count(F.lit(1)).alias("doc_count"), *_metric_cols(sub or {}))
+    out = (_bucket_agg(base.select(net, "*"), sub, "__net")
            .filter(F.col("doc_count") >= int(inner.get("min_doc_count", 1)))
            .orderBy(F.asc("__net"))
            .select(key.alias("key"), "*")
@@ -1716,102 +1635,36 @@ def _ip_prefix_agg(base: DataFrame, inner: dict[str, Any],
     return out
 
 
-def _geo_distance_agg(base: DataFrame, inner: dict[str, Any],
-                      sub: dict[str, Any] | None) -> DataFrame:
-    """ES geo_distance agg: range buckets over haversine distance from an
-    origin ({"field": f, "origin": {lat,lon}, "ranges": [{from,to}...],
-    "unit": "km"|...}). Same union-of-filtered-aggregates shape as the
-    range agg (ranges may overlap); the distance expression is computed
-    once per part and reuses the fixed-op-order haversine of the
-    geo_distance query, so a SQL mirror stays value-exact."""
-    from .query_ast import _DIST_UNITS_M, haversine_m_col
+def _significant(bg_docs: DataFrame, fg_docs: DataFrame, kind: str,
+                 spec: dict[str, Any]) -> DataFrame:
+    """ES significant_terms / significant_text: terms over-represented in
+    the FOREGROUND (query-filtered) set vs the BACKGROUND (whole index),
+    scored with the default JLH: (fg_rate - bg_rate) * (fg_rate /
+    bg_rate); only terms with fg_rate > bg_rate qualify (ES drops the
+    rest). significant_text's terms are the tokens of a FREE-TEXT field,
+    each doc counted once per term (array_distinct before explode), and
+    min_doc_count (ES default 3) prunes the long tail BEFORE the join;
+    rates are per DOC either way.
 
-    origin = inner["origin"]
-    unit_m = _DIST_UNITS_M[inner.get("unit", "m")]
-    dist = haversine_m_col(F.col(inner["field"]),
-                           float(origin["lat"]), float(origin["lon"]))
-    parts = []
-    for idx, r in enumerate(inner["ranges"]):
-        frm, to = r.get("from"), r.get("to")
-        cond = F.lit(True)
-        if frm is not None:
-            cond = cond & (dist >= F.lit(float(frm) * unit_m))
-        if to is not None:
-            cond = cond & (dist < F.lit(float(to) * unit_m))
-        key = r.get("key") or (
-            f"{'*' if frm is None else frm}-{'*' if to is None else to}"
-        )
-        agg = base.filter(cond).agg(
-            F.count(F.lit(1)).alias("doc_count"), *_metric_cols(sub or {})
-        )
-        parts.append(agg.select(
-            F.lit(idx).alias("bucket_idx"), F.lit(str(key)).alias("key"), "*"
-        ))
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
-    return df.orderBy(F.asc("bucket_idx"))
-
-
-def _significant_terms(bg_docs: DataFrame, fg_docs: DataFrame,
-                       spec: dict[str, Any]) -> DataFrame:
-    """ES significant_terms: terms over-represented in the FOREGROUND
-    (query-filtered) set vs the BACKGROUND (whole index), scored with the
-    default JLH: (fg_rate - bg_rate) * (fg_rate / bg_rate); only terms
-    with fg_rate > bg_rate qualify (ES drops the rest).
-
-    Plan: two partial-aggregated groupBys on the term field (fg is a
-    filtered subset of the same scan), joined on the term — the join key
-    is the agg key so AQE turns it into a broadcast of the (tiny) fg side;
-    totals ride in as broadcast single-row crossJoins. Scores are
-    quantized (floor x 1e6) so ordering is integer-deterministic
-    cross-engine."""
-    field = spec["field"]
-    size = int(spec.get("size", 10))
-    fg = fg_docs.groupBy(F.col(field).alias("key")).agg(F.count(F.lit(1)).alias("doc_count"))
-    bg = bg_docs.groupBy(F.col(field).alias("key")).agg(F.count(F.lit(1)).alias("bg_count"))
-    fgt = fg_docs.agg(F.count(F.lit(1)).alias("fg_total"))
-    bgt = bg_docs.agg(F.count(F.lit(1)).alias("bg_total"))
-    fr = F.col("doc_count") / F.col("fg_total")
-    br = F.col("bg_count") / F.col("bg_total")
-    return (
-        fg.join(bg, "key")
-        .crossJoin(F.broadcast(fgt))
-        .crossJoin(F.broadcast(bgt))
-        .filter(fr > br)
-        .select(
-            "key", "doc_count", "bg_count",
-            F.floor((fr - br) * (fr / br) * 1e6).cast("long").alias("score_u"),
-        )
-        .orderBy(F.desc("score_u"), F.asc("key"))
-        .limit(size)
-    )
-
-
-def _significant_text(bg_docs: DataFrame, fg_docs: DataFrame,
-                      spec: dict[str, Any]) -> DataFrame:
-    """ES significant_text: significant_terms over a FREE-TEXT field —
-    terms are tokens, term doc-frequency counts each doc once
-    (array_distinct before explode), rates are per-DOC (fg_total/bg_total
-    are doc counts, not token counts). Default JLH scoring, quantized.
-
-    Plan: explode-distinct → two partial-aggregated term groupBys (fg is
-    the filtered subset) joined on the term; min_doc_count prunes the
-    long tail BEFORE the join (ES default 3 for significant_text)."""
+    Plan: two partial-aggregated term groupBys (fg is a filtered subset of
+    the same scan), joined on the term — the join key is the agg key so
+    AQE turns it into a broadcast of the (tiny) fg side; totals ride in as
+    broadcast single-row crossJoins. Scores are quantized (floor x 1e6) so
+    ordering is integer-deterministic cross-engine."""
     from ..extraction import simple_tokens_col
 
     field = spec["field"]
-    size = int(spec.get("size", 10))
-    min_dc = int(spec.get("min_doc_count", 3))
 
     def term_counts(docs: DataFrame, cnt: str) -> DataFrame:
-        return (
-            docs.select(F.explode(F.array_distinct(
+        if kind == "significant_text":
+            docs = docs.select(F.explode(F.array_distinct(
                 simple_tokens_col(F.col(field)))).alias("key"))
-            .groupBy("key").agg(F.count(F.lit(1)).alias(cnt))
-        )
+            return docs.groupBy("key").agg(F.count(F.lit(1)).alias(cnt))
+        return docs.groupBy(F.col(field).alias("key")).agg(F.count(F.lit(1)).alias(cnt))
 
-    fg = term_counts(fg_docs, "doc_count").filter(F.col("doc_count") >= min_dc)
+    fg = term_counts(fg_docs, "doc_count")
+    if kind == "significant_text":
+        fg = fg.filter(F.col("doc_count") >= int(spec.get("min_doc_count", 3)))
     bg = term_counts(bg_docs, "bg_count")
     fgt = fg_docs.agg(F.count(F.lit(1)).alias("fg_total"))
     bgt = bg_docs.agg(F.count(F.lit(1)).alias("bg_total"))
@@ -1827,7 +1680,7 @@ def _significant_text(bg_docs: DataFrame, fg_docs: DataFrame,
             F.floor((fr - br) * (fr / br) * 1e6).cast("long").alias("score_u"),
         )
         .orderBy(F.desc("score_u"), F.asc("key"))
-        .limit(size)
+        .limit(int(spec.get("size", 10)))
     )
 
 
@@ -1850,9 +1703,7 @@ def _composite(base: DataFrame, spec: dict[str, Any],
         names.append(sname)
     for k in keys:
         base = base.filter(k.isNotNull())
-    df = base.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias("doc_count"), *_metric_cols(sub or {})
-    )
+    df = _bucket_agg(base, sub, *keys)
     after = spec.get("after")
     if after:
         cond = F.lit(False)
@@ -1870,19 +1721,10 @@ def top_hits(docs: DataFrame, bucket_field: str, size: int,
     """ES top_hits sub-aggregation: the top `size` docs per bucket, by the
     given ES-style sort spec (default: doc_id asc). Window partitioned by
     the REAL bucket key — scales with bucket count, no global funnel."""
-    from pyspark.sql import Window
-
     base = docs
     if query:
         base = base.filter(_compile_clause(query))
-    order = []
-    for s in sort or [{"doc_id": {"order": "asc"}}]:
-        if isinstance(s, str):
-            order.append(F.col(s).asc())
-        else:
-            ((field, spec),) = s.items()
-            o = spec.get("order", "asc") if isinstance(spec, dict) else spec
-            order.append(F.col(field).desc() if o == "desc" else F.col(field).asc())
+    order = [c for _, c in _sort_spec(sort or [{"doc_id": {"order": "asc"}}])]
     w = Window.partitionBy(bucket_field).orderBy(*order)
     return (
         base.withColumn("__rank", F.row_number().over(w))

@@ -33,18 +33,17 @@ of an attempt that never committed is an orphan ``vacuum`` removes.
 **One manifest writer.** Every manifest write (``create``, each commit,
 ``vacuum``) goes through :meth:`_write_manifest`: under the commit lock
 it loads the current manifest, applies the change, writes a temp file
-and ``os.replace``-s it.  The lock is a file created with
-``os.link`` (create-if-absent, atomic on POSIX) holding its owner's
-unique token.  A lock older than ``stale_secs`` is a crashed holder's:
-a waiter moves it aside with ``os.rename`` to a unique name and keeps it
-broken only if the moved file is the one it judged stale; otherwise it
-links it back.  A holder releases the lock only while it holds its own
-token.
+and ``os.replace``-s it.  The lock is an exclusive ``fcntl.flock`` on
+``_commit.lock``, a file that is never unlinked.  ``flock`` belongs to
+the open file description, so it excludes other processes and other
+threads that open the file alike, and the kernel releases it when its
+holder exits, killed or not: a crashed writer leaves no lock behind.
 """
 
 from __future__ import annotations
 
 import contextlib
+import fcntl
 import json
 import os
 import shutil
@@ -71,49 +70,6 @@ class CommitConflict(RuntimeError):
 def _result(generation: int, touched) -> dict:
     return {"generation": generation,
             "touched_buckets": sorted(int(b) for b in touched)}
-
-
-def _try_create_lock(lockp: str, token: str) -> bool:
-    """Create the lock file already holding ``token``: write a private
-    temp file, then ``os.link`` it to the lock path (fails if present)."""
-    tmp = f"{lockp}.{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        f.write(token)
-    try:
-        os.link(tmp, lockp)
-        return True
-    except FileExistsError:
-        return False
-    finally:
-        os.unlink(tmp)
-
-
-def _break_if_stale(lockp: str, stale_secs: float) -> bool:
-    """True when the caller should retry creating the lock at once (the
-    lock is gone, or was stale and is now broken)."""
-    try:
-        with open(lockp) as f:
-            seen = f.read()
-            age = time.time() - os.fstat(f.fileno()).st_mtime
-    except FileNotFoundError:
-        return True
-    if age <= stale_secs:
-        return False
-    grave = f"{lockp}.stale-{uuid.uuid4().hex}"
-    try:
-        os.rename(lockp, grave)
-    except FileNotFoundError:
-        return True  # another waiter broke it first
-    with open(grave) as f:
-        if f.read() != seen:
-            # a live holder's lock replaced the stale one after it was
-            # read here: put it back rather than enter beside its holder
-            # (if a third lock was created in this one-rename window, the
-            # displaced holder's release still leaves that lock alone)
-            with contextlib.suppress(FileExistsError):
-                os.link(grave, lockp)
-    os.unlink(grave)
-    return True
 
 
 class CowTable:
@@ -153,24 +109,25 @@ class CowTable:
         return m
 
     @contextlib.contextmanager
-    def _commit_lock(self, timeout: float = 60.0, stale_secs: float = 300.0):
+    def _commit_lock(self, timeout: float = 60.0):
         """Advisory commit lock (protocol in the module docstring).  Held
         only for a manifest write — never across a Spark job."""
         lockp = os.path.join(self.path, _LOCK)
-        token = f"pid={os.getpid()} {uuid.uuid4().hex}\n"
-        deadline = time.monotonic() + timeout
-        while not _try_create_lock(lockp, token):
-            if _break_if_stale(lockp, stale_secs):
-                continue
-            if time.monotonic() > deadline:
-                raise TimeoutError(f"commit lock at {lockp} not released in {timeout}s")
-            time.sleep(0.02)
+        fd = os.open(lockp, os.O_RDWR | os.O_CREAT, 0o644)
         try:
+            deadline = time.monotonic() + timeout
+            while True:
+                try:
+                    fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+                    break
+                except BlockingIOError:
+                    if time.monotonic() > deadline:
+                        raise TimeoutError(
+                            f"commit lock at {lockp} not released in {timeout}s") from None
+                    time.sleep(0.02)
             yield
         finally:
-            with contextlib.suppress(FileNotFoundError), open(lockp) as f:
-                if f.read() == token:
-                    os.unlink(lockp)
+            os.close(fd)  # closing the descriptor releases the lock
 
     def _write_manifest(self, update) -> dict:
         """The one manifest writer: under the commit lock, ``update`` maps

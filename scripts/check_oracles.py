@@ -3,6 +3,10 @@
 compares row count, column names, and an order-insensitive value hash.
 
 Usage: python scripts/check_oracles.py [sf_dir] [name ...]
+
+Each ``ok`` line carries the Spark side's ``value_hash`` and
+``row_order_hash``: run it in two checkouts and ``diff`` the output to
+check that a change leaves every entry's rows and row order as they were.
 """
 
 from __future__ import annotations
@@ -85,7 +89,9 @@ def main() -> int:
             failures += 1
             continue
         if name not in oracles:
-            print(f"weak  {name}: rows={len(srows)} (no oracle — rows-only check)")
+            print(f"weak  {name}: rows={len(srows)} (no oracle — rows-only check) "
+                  f"value_hash={value_hash(srows, scols)} "
+                  f"row_order_hash={row_order_hash(srows, scols)}")
             continue
         try:
             odf = con.execute(oracles[name]).df()
@@ -121,7 +127,8 @@ def main() -> int:
                 print(f"      spark[0]={srows[0]}  oracle[0]={orows[0]}")
             failures += 1
         else:
-            print(f"ok    {name}: rows={len(srows)}")
+            print(f"ok    {name}: rows={len(srows)} value_hash={sh} "
+                  f"row_order_hash={sh2}")
     spark.stop()
     print(f"\n{'ALL OK' if failures == 0 else f'{failures} FAILURES'}")
     return 1 if failures else 0

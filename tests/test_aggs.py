@@ -526,7 +526,7 @@ def test_multi_terms_rare_terms_global_filter(events):
     assert out["f"].first()["doc_count"] == 50
 
 
-def test_histogram_gap_filling(events):
+def test_histogram_gap_filling(events, spark):
     # sparse filter → missing days must appear with doc_count 0
     body = {"query": {"term": {"event_type": "error"}},
             "aggs": {"d": {"date_histogram": {
@@ -545,6 +545,25 @@ def test_histogram_gap_filling(events):
     assert rows2[-1]["key"] >= 40.0
     ks = [r["key"] for r in rows2]
     assert ks == sorted(ks) and all(b - a == 20.0 for a, b in zip(ks, ks[1:]))
+    # a fractional interval: the axis keys are the bucket keys exactly
+    # (6 * 0.1 = 0.6000000000000001, not 0.1 + 5 * 0.1), so no doc is lost
+    frac = spark.createDataFrame([Row(v=0.15), Row(v=0.35), Row(v=0.65)])
+    rows3 = compile_aggs(frac, {"aggs": {"h": {"histogram": {
+        "field": "v", "interval": 0.1, "min_doc_count": 0}}}})["h"].collect()
+    assert [r["doc_count"] for r in rows3] == [1, 0, 1, 0, 0, 1]
+
+
+@pytest.mark.parametrize("kind,inner", [
+    ("range", {"field": "value", "ranges": []}),
+    ("date_range", {"field": "ts", "ranges": []}),
+    ("ip_range", {"field": "ip", "ranges": []}),
+    ("geo_distance", {"field": "loc", "origin": {"lat": 0.0, "lon": 0.0}, "ranges": []}),
+    ("filters", {"filters": {}}),
+    ("adjacency_matrix", {"filters": {}}),
+])
+def test_empty_ranges_or_filters_raise(events, kind, inner):
+    with pytest.raises(UnsupportedQuery, match=kind):
+        compile_aggs(events, {"aggs": {"x": {kind: inner}}})
 
 
 def test_ip_range_agg(spark):
@@ -603,6 +622,40 @@ def test_terms_order_missing_include(events, spark):
     # exclude regex drops matching keys
     body4 = {"aggs": {"t": {"terms": {"field": "event_type", "exclude": "c.*|v.*"}}}}
     assert [r["key"] for r in compile_aggs(events, body4)["t"].collect()] == ["error"]
+
+    # the same options on every level of a nested (terms > terms) path
+    ev2 = events.withColumn("grp", F.concat(F.lit("g"), (F.col("event_id") % 4).cast("string")))
+
+    def nested(top, child, leaf_aggs=None):
+        child_spec = {"terms": {"field": "grp", **child}}
+        if leaf_aggs:
+            child_spec["aggs"] = leaf_aggs
+        return compile_aggs(ev2, {"aggs": {"t": {"terms": {"field": "event_type", **top},
+                                                 "aggs": {"g": child_spec}}}})["t"].collect()
+
+    assert {r["t_key"] for r in nested({"include": "click|view"}, {})} == {"click", "view"}
+    assert {r["t_key"] for r in nested({"exclude": "c.*|v.*"}, {})} == {"error"}
+    # include/exclude drop buckets before the level's size cut
+    assert {r["t_key"] for r in nested({"exclude": "click", "size": 1}, {})} == {"error"}
+    # a child level's include/exclude leaves every parent's doc_count whole
+    rows = nested({}, {"include": "g0|g1"})
+    assert {r["g_key"] for r in rows} == {"g0", "g1"}
+    assert all(r["t_doc_count"] == 100 for r in rows) and len(rows) == 6
+    assert {r["g_key"] for r in nested({}, {"exclude": "g3"})} == {"g0", "g1", "g2"}
+    # order by _key on both levels (all counts tie at 25 per leaf)
+    rows = nested({"order": {"_key": "desc"}}, {"order": {"_key": "asc"}})
+    assert [(r["t_key"], r["g_key"]) for r in rows] == [
+        (t, g) for t in ("view", "error", "click") for g in ("g0", "g1", "g2", "g3")]
+    # the leaf level may order by its metric; a parent level may not
+    rows = nested({}, {"order": {"m": "desc"}, "size": 1},
+                  {"m": {"max": {"field": "value"}}})
+    assert len(rows) == 3
+    for r in rows:
+        top = max(e["value"] for e in events.filter(F.col("event_type") == r["t_key"])
+                  .select("value").collect())
+        assert r["m"] == top
+    with pytest.raises(UnsupportedQuery, match="leaf"):
+        nested({"order": {"m": "desc"}}, {}, {"m": {"max": {"field": "value"}}})
 
 
 def test_gap_filled_histogram_with_pipeline_sub(events):

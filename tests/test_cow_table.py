@@ -3,6 +3,7 @@ emulation, touched-bucket-only rewrites, snapshot isolation, vacuum."""
 
 import json
 import os
+import signal
 import subprocess
 import sys
 import threading
@@ -285,25 +286,38 @@ def test_conflict_retries_exhausted_raises(spark, tmp_path, monkeypatch):
         t.upsert(batch_a, max_retries=1)
 
 
-def test_stale_lock_is_broken(spark, tmp_path):
+def test_killed_lock_holder_never_blocks_upsert(spark, tmp_path):
+    """A writer SIGKILLed inside the commit lock leaves no lock behind:
+    the kernel drops its flock, so the next upsert commits at once."""
     t, _ = _mk(spark, tmp_path, n=20, n_buckets=2)
-    lockp = os.path.join(t.path, "_commit.lock")
-    open(lockp, "w").write("pid=dead\n")
-    old = os.path.getmtime(lockp) - 10_000
-    os.utime(lockp, (old, old))
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    holder = subprocess.Popen([sys.executable, "-c", _HOLDER, repo, t.path],
+                              stdout=subprocess.PIPE, text=True)
+    try:
+        assert holder.stdout.readline().strip() == "inside"
+        with pytest.raises(TimeoutError):  # the holder is alive and inside
+            with t._commit_lock(timeout=0.2):
+                pass
+    finally:
+        holder.send_signal(signal.SIGKILL)
+        holder.wait(30)
+    assert holder.returncode == -signal.SIGKILL
     t.upsert(spark.createDataFrame([Row(doc_id=3, v="X", n=0)]))
     assert {r["v"] for r in t.read().filter(F.col("doc_id") == 3).collect()} == {"X"}
-    assert not os.path.exists(lockp)
 
 
-def test_fresh_lock_times_out(spark, tmp_path):
-    t, _ = _mk(spark, tmp_path, n=10, n_buckets=2)
-    lockp = os.path.join(t.path, "_commit.lock")
-    open(lockp, "w").write("pid=alive\n")
-    with pytest.raises(TimeoutError):
-        with t._commit_lock(timeout=0.2):
-            pass
-    os.unlink(lockp)
+def test_fresh_lock_times_out(tmp_path):
+    """A waiter gives up with TimeoutError while a live holder is inside
+    (here the same thread, through a second open of the lock file)."""
+    t = CowTable(None, str(tmp_path))  # the lock needs no Spark
+    with t._commit_lock():
+        t0 = time.monotonic()
+        with pytest.raises(TimeoutError):
+            with t._commit_lock(timeout=0.2):
+                pass
+        assert time.monotonic() - t0 >= 0.2
+    with t._commit_lock(timeout=0.2):  # released on exit
+        pass
 
 
 def test_delete_ids_large_int64_ids_match(spark, tmp_path):
@@ -526,33 +540,16 @@ def test_crash_point_matrix(spark, tmp_path, monkeypatch, op, point):
 
 # --- commit lock -------------------------------------------------------------
 
-def test_stale_lock_breakers_never_both_enter(tmp_path, monkeypatch):
-    """Writers A and B both find a crashed holder's stale lock.  B's
-    staleness check runs before A's create; B then acts on A's live lock.
-    B must wait for A's release, not enter beside it."""
+def test_commit_lock_excludes_threads(tmp_path):
+    """Two threads of one process: B asks for the lock while A holds it
+    and must enter only after A has left."""
     t = CowTable(None, str(tmp_path))  # the lock needs no Spark
-    lockp = os.path.join(t.path, "_commit.lock")
-    with open(lockp, "w") as f:
-        f.write("pid=crashed\n")
-    old = time.time() - 10_000
-    os.utime(lockp, (old, old))
-    b_paused, a_inside = threading.Event(), threading.Event()
+    a_inside = threading.Event()
     spans = {}
 
-    def gate(real):
-        def first_b_call_waits_for_a(src, *args):
-            if (threading.current_thread().name == "B" and src == lockp
-                    and not b_paused.is_set()):
-                b_paused.set()
-                a_inside.wait(10)
-            return real(src, *args)
-        return first_b_call_waits_for_a
-
-    # B's first move on the lock path (breaking it) waits until A is inside
-    monkeypatch.setattr(os, "unlink", gate(os.unlink))
-    monkeypatch.setattr(os, "rename", gate(os.rename))
-
     def writer(name):
+        if name == "B":
+            assert a_inside.wait(10)
         with t._commit_lock(timeout=10):
             t0 = time.monotonic()
             if name == "A":
@@ -560,17 +557,23 @@ def test_stale_lock_breakers_never_both_enter(tmp_path, monkeypatch):
                 time.sleep(0.3)
             spans[name] = (t0, time.monotonic())
 
-    b = threading.Thread(target=writer, args=("B",), name="B")
-    b.start()
-    assert b_paused.wait(10)
-    a = threading.Thread(target=writer, args=("A",), name="A")
-    a.start()
-    a.join(20)
-    b.join(20)
-    assert not a.is_alive() and not b.is_alive()
+    threads = [threading.Thread(target=writer, args=(n,), name=n) for n in "AB"]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(20)
+    assert not any(th.is_alive() for th in threads)
     assert spans["B"][0] >= spans["A"][1]  # B entered only after A left
-    assert not os.path.exists(lockp)
 
+
+_HOLDER = """
+import sys, time
+sys.path.insert(0, sys.argv[1])
+from fluent_plugin_elasticsearch_spark.sinks.cow_table import CowTable
+with CowTable(None, sys.argv[2])._commit_lock():
+    print("inside", flush=True)
+    time.sleep(120)
+"""
 
 _STRESS_WORKER = """
 import json, os, sys, time
@@ -578,7 +581,7 @@ sys.path.insert(0, sys.argv[1])
 from fluent_plugin_elasticsearch_spark.sinks.cow_table import CowTable
 path, wid, n = sys.argv[2], int(sys.argv[3]), int(sys.argv[4])
 t = CowTable(None, path)
-lockp, inside, log = (os.path.join(path, p) for p in ("_commit.lock", "inside", "log.json"))
+inside, log = (os.path.join(path, p) for p in ("inside", "log.json"))
 overlaps = 0
 for i in range(n):
     with t._commit_lock():
@@ -595,20 +598,12 @@ for i in range(n):
         os.replace(log + ".tmp", log)
         if mine:
             os.unlink(inside)
-    try:  # leave a crashed holder's lock behind: created, then aged past stale
-        fd = os.open(lockp, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        os.write(fd, f"pid=crashed {wid}-{i}\\n".encode())
-        os.close(fd)
-        os.utime(lockp, (time.time() - 1000, time.time() - 1000))
-    except FileExistsError:
-        pass
 print(overlaps)
 """
 
 
 def test_commit_lock_multiprocess_stress(tmp_path):
-    """N processes x M commits through the commit lock, each commit
-    followed by a crashed holder's stale lock left behind: every commit
+    """N processes x M commits through the commit lock: every commit
     lands exactly once and no two holders are ever inside together."""
     n_procs, n_commits = 8, 15
     with open(tmp_path / "log.json", "w") as f:
