@@ -10,6 +10,13 @@ allows (no table-format jar ships here):
 
   * rows are hash-bucketed on the id (``pmod(xxhash64(id), n_buckets)``);
     each bucket's current data lives in one immutable directory
+  * each commit writes ONE parquet file per touched bucket: the staged
+    rows are repartitioned by bucket before the partitioned write, so
+    one task writes each bucket (Iceberg's ``write.distribution-mode=
+    hash``) and the next merge and every read open one file per bucket.
+    The trade-off: a commit's write parallelism is its number of touched
+    buckets — widen the table with ``compact(target_buckets=…)`` as it
+    grows
   * a JSON **manifest** names the current directory per bucket, the
     bucket count and the table schema — the table state IS the manifest
     (Iceberg's snapshot file list); ``read()`` unions the named
@@ -177,15 +184,17 @@ class CowTable:
     def _stage(self, rows: DataFrame, n_buckets: int, gen: int,
                sort_by: list[str] | None = None) -> str:
         """Write ``rows`` partitioned by bucket into a fresh directory and
-        return its table-relative path.  The directory is unique per write
-        ATTEMPT (uuid), so a redelivered batch after a crash between this
-        write and the manifest swap never appends into the crashed
-        attempt's files."""
+        return its table-relative path.  The rows are hash-distributed by
+        bucket first, so one task writes each touched bucket: one parquet
+        file per bucket per commit (``sort_by`` then only orders rows
+        within it).  The directory is unique per write ATTEMPT (uuid), so
+        a redelivered batch after a crash between this write and the
+        manifest swap never appends into the crashed attempt's files."""
         rel = os.path.join("data", f"gen={gen}-{uuid.uuid4().hex[:12]}")
-        tagged = rows.withColumn("__bucket", self._bucket_col(n_buckets))
+        tagged = (rows.withColumn("__bucket", self._bucket_col(n_buckets))
+                  .repartition("__bucket"))
         if sort_by:
-            tagged = (tagged.repartition("__bucket")
-                      .sortWithinPartitions("__bucket", *sort_by))
+            tagged = tagged.sortWithinPartitions("__bucket", *sort_by)
         tagged.write.partitionBy("__bucket").parquet(os.path.join(self.path, rel))
         return rel
 
@@ -214,7 +223,8 @@ class CowTable:
 
     def create(self, df: DataFrame) -> dict:
         """Initialize the table from a DataFrame (generation 0), recording
-        its schema (every field nullable) in the manifest."""
+        its schema (every field nullable) in the manifest.  An id repeated
+        in ``df`` keeps its last row, as ``index`` would."""
         if self.exists():
             raise ValueError(f"table already exists at {self.path}")
         os.makedirs(self.path, exist_ok=True)
@@ -306,18 +316,21 @@ class CowTable:
     def compact(self, target_buckets: int | None = None,
                 max_retries: int = 3,
                 sort_by: list[str] | None = None) -> dict:
-        """Rewrite EVERY bucket into one fresh generation — coalesces the
-        per-generation file fragments that accrue under many small
-        upserts (Iceberg's rewrite_data_files).  ``target_buckets``
-        re-buckets the table (e.g. widen 16 → 512 as it grows).
+        """Rewrite EVERY bucket into one fresh generation (Iceberg's
+        rewrite_data_files).  Every commit already writes one file per
+        bucket, so this re-buckets, sorts, or brings a table written
+        before that rule to one file per bucket.  ``target_buckets``
+        re-buckets the table (e.g. widen 16 → 512 as it grows: a
+        commit's write parallelism is its number of touched buckets).
         ``sort_by`` additionally sorts rows WITHIN each rewritten bucket
         (ES index sorting / Iceberg's sort-order rewrite): parquet
         row-group min/max stats on the sort columns become tight ranges,
         so subsequent range/equality scans on those columns prune row
         groups instead of reading whole buckets.  The sort is a
-        repartition-by-bucket + partition-local sort (one shuffle, no
-        global order).  Compaction touches every bucket, so any commit
-        that lands mid-compaction conflicts and the compaction reruns."""
+        partition-local sort after the staging write's bucket
+        repartition (one shuffle, no global order).  Compaction touches
+        every bucket, so any commit that lands mid-compaction conflicts
+        and the compaction reruns."""
         def plan(m):
             return (list(range(m["n_buckets"])), self.read(manifest=m),
                     target_buckets or m["n_buckets"])

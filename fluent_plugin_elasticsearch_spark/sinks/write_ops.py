@@ -3,7 +3,7 @@ write ops `index` / `create` / `update` / `upsert`
 (append_record_to_messages out_elasticsearch.rb:747-765, update_body
 :770-784, op constants elasticsearch_constants.rb:5-8; SURVEY.md K2-K6).
 
-MERGE-style dataflows (anti-join + union + window); on Iceberg each maps 1:1
+MERGE-style dataflows (dedup aggregate + anti-join + union); on Iceberg each maps 1:1
 onto ``MERGE INTO`` clauses (documented per function). ``sinks/cow_table``
 applies ``MERGE_OPS`` to the touched buckets of its table. Joins broadcast
 when the incoming batch is small (the common streaming case), so the target
@@ -12,7 +12,7 @@ table is never shuffled unnecessarily.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -29,15 +29,36 @@ def _hint_small(df: DataFrame, small: bool) -> DataFrame:
     return F.broadcast(df) if small else df
 
 
-def dedup_latest(batch: DataFrame, id_col: str, order_col: str | None = None) -> DataFrame:
-    """Keep one row per id within a batch (last-writer-wins, like repeated
-    bulk actions for the same _id within one chunk)."""
-    if order_col is None:
+def dedup_latest(batch: DataFrame, id_col: str, order_col: str | None = None,
+                 keep: str = "last") -> DataFrame:
+    """One row per id within a batch, as ES applies a chunk's bulk actions
+    for one _id in order (out_elasticsearch.rb:747-784):
+
+      * ``keep="last"`` — the id's last row (``index``: each action
+        replaces the doc);
+      * ``keep="first"`` — its first row (``create``: the later rows are
+        409 duplicates);
+      * ``keep="merge"`` — each column's last non-null value (``update``:
+        each partial doc applies in turn); a column no row sets stays
+        null, which ``op_update`` reads as "keep the stored value".
+
+    Batch order is the order ``collect()`` returns — partition, then
+    position — read by ``monotonically_increasing_id()`` before the
+    grouping shuffle; ``order_col``, when given, orders first and batch
+    order breaks its ties.  One ``groupBy`` of ``max_by``/``min_by``
+    aggregates: one shuffle."""
+    if keep not in ("last", "first", "merge"):
+        raise ValueError(f"unknown keep {keep!r}; expected 'last', 'first' or 'merge'")
+    cols = [c for c in batch.columns if c != id_col]
+    if not cols:  # an id-only batch: its rows are indistinguishable
         return batch.dropDuplicates([id_col])
-    w = Window.partitionBy(id_col).orderBy(F.desc(order_col))
-    return (
-        batch.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
-    )
+    seq = F.monotonically_increasing_id()
+    if order_col is not None:
+        seq = F.struct(F.col(order_col), seq)
+    pick = F.min_by if keep == "first" else F.max_by
+    aggs = [pick(c, F.when(F.col(c).isNotNull(), F.col("__seq")) if keep == "merge"
+                 else F.col("__seq")).alias(c) for c in cols]
+    return batch.withColumn("__seq", seq).groupBy(id_col).agg(*aggs).select(*batch.columns)
 
 
 def op_index(target: DataFrame, batch: DataFrame, id_col: str,
@@ -67,7 +88,7 @@ def create_split(target: DataFrame, batch: DataFrame, id_col: str,
     id, split on presence in ``target`` — what an append-only sink writes."""
     if drop_missing_id:
         batch = batch.filter(F.col(id_col).isNotNull())
-    batch = dedup_latest(batch, id_col)
+    batch = dedup_latest(batch, id_col, keep="first")
     ids = target.select(id_col)
     return batch.join(ids, id_col, "left_anti"), batch.join(ids, id_col, "left_semi")
 
@@ -80,7 +101,7 @@ def op_update(target: DataFrame, batch: DataFrame, id_col: str,
     `remove_keys_on_update` strips keys from the update doc only (K6,
     remove_keys out_elasticsearch.rb:786-793). Iceberg: MERGE INTO … WHEN
     MATCHED UPDATE SET (no insert clause)."""
-    batch = dedup_latest(batch, id_col)
+    batch = dedup_latest(batch, id_col, keep="merge")
     cols = update_cols or [c for c in batch.columns if c != id_col]
     if remove_keys_on_update:
         cols = [c for c in cols if c not in set(remove_keys_on_update)]
@@ -111,7 +132,9 @@ def op_upsert(target: DataFrame, batch: DataFrame, id_col: str,
     updated = op_update(target, batch, id_col,
                         remove_keys_on_update=remove_keys_on_update,
                         small_batch=small_batch)
-    fresh, _ = create_split(target, batch, id_col, drop_missing_id=False)
+    # a fresh id's actions insert its first row, then update it in turn
+    fresh = dedup_latest(batch, id_col, keep="merge").join(
+        target.select(id_col), id_col, "left_anti")
     return updated.unionByName(fresh.select(*updated.columns))
 
 

@@ -188,6 +188,68 @@ def test_compact_coalesces_and_rebuckets(spark, tmp_path):
     assert {r["v"] for r in t2.read().filter(F.col("doc_id") == 0).collect()} == {"after"}
 
 
+def test_duplicate_ids_in_one_batch_follow_bulk_order(spark, tmp_path):
+    """Repeated ids within one batch resolve as ES applies the bulk actions
+    in order (batch order = the order collect() returns): index keeps the
+    last row, update each column's last non-null value, create the first
+    row; create() initialises like index."""
+    schema = "doc_id long, v string, n long"
+    t, _ = _mk(spark, tmp_path, n=20, n_buckets=2)
+    t.upsert(spark.createDataFrame([(3, "first", 1), (3, "second", 2)], schema))
+    t.upsert(spark.createDataFrame([(5, "u1", 51), (5, None, 52), (5, "u3", None),
+                                    (6, None, None)], schema), op="update")
+    t.upsert(spark.createDataFrame([(3, "dup", 0), (50, "c1", 1), (50, "c2", 2)], schema),
+             op="create")
+    many = [(7, f"v{i}", i) for i in range(200)]
+    t.upsert(spark.createDataFrame(spark.sparkContext.parallelize(many, 4), schema))
+    got = {r["doc_id"]: (r["v"], r["n"]) for r in t.read().collect()}
+    assert (got[3], got[5], got[6], got[50], got[7]) == (
+        ("second", 2), ("u3", 52), ("v6", 6), ("c1", 1), ("v199", 199))
+    t2 = CowTable(spark, str(tmp_path / "t2"), id_col="doc_id", n_buckets=2)
+    t2.create(spark.createDataFrame(spark.sparkContext.parallelize(many, 4), schema))
+    assert [(r["v"], r["n"]) for r in t2.read().collect()] == [("v199", 199)]
+
+
+def test_one_parquet_file_per_bucket_after_every_write(spark, tmp_path):
+    """Every write hash-distributes its rows by bucket: from a
+    multi-partition input, each bucket directory the manifest names
+    holds exactly one parquet file after each kind of commit."""
+    t = CowTable(spark, str(tmp_path / "t"), id_col="doc_id", n_buckets=4)
+    want = {i: (f"v{i}", i) for i in range(200)}
+
+    def frame(rows):
+        return spark.createDataFrame([Row(doc_id=k, v=v, n=n) for k, (v, n) in rows.items()],
+                                     "doc_id long, v string, n long").repartition(4)
+
+    def files_per_bucket():
+        m = t._load_manifest()
+        return [len([f for f in os.listdir(os.path.join(t.path, rel)) if f.endswith(".parquet")])
+                for rel in m["buckets"].values()]
+
+    writes = [
+        ("create", lambda: t.create(frame(want))),
+        ("upsert index", lambda: t.upsert(frame({i: (f"i{i}", -i) for i in range(0, 240, 3)}))),
+        ("upsert create", lambda: t.upsert(frame({i: ("c", i) for i in range(190, 260)}),
+                                           op="create")),
+        ("upsert update", lambda: t.upsert(frame({i: (None, 7 * i) for i in range(1, 300, 5)}),
+                                           op="update")),
+        ("delete_ids", lambda: t.delete_ids(list(range(0, 260, 11)))),
+        ("delete_where", lambda: t.delete_where(F.col("doc_id") % 13 == 1)),
+        ("compact", lambda: t.compact()),
+        ("compact(sort_by)", lambda: t.compact(sort_by=["n"])),
+        ("compact(target_buckets)", lambda: t.compact(target_buckets=8)),
+    ]
+    for name, write in writes:
+        write()
+        counts = files_per_bucket()
+        assert counts == [1] * t.n_buckets, (name, counts)
+    want.update({i: (f"i{i}", -i) for i in range(0, 240, 3)})
+    want.update({i: ("c", i) for i in range(190, 260) if i not in want})
+    want.update({i: (want[i][0], 7 * i) for i in range(1, 300, 5) if i in want})
+    want = {i: r for i, r in want.items() if i % 11 and i % 13 != 1}
+    assert {r["doc_id"]: (r["v"], r["n"]) for r in t.read().collect()} == want
+
+
 # --- concurrent-writer CAS (VERDICT r5 item #3) ----------------------------
 
 def _bucket_of(spark, t, doc_id):

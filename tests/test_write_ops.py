@@ -77,6 +77,33 @@ def test_op_index_last_writer_wins_within_batch(spark, target):
     assert len(out) == 1 and out[0]["name"] == "v2"
 
 
+def test_dedup_latest_follows_batch_order(spark, target):
+    """Without an order column, batch order (partition, then position)
+    decides: last row, first row, or each column's last non-null value;
+    an order column ties broken by batch order; op_upsert inserts a fresh
+    id as its actions merged in turn."""
+    from fluent_plugin_elasticsearch_spark.sinks.write_ops import dedup_latest
+
+    rows = [("x", "n1", 1, 0), ("y", "y1", None, 0), ("x", None, 2, 1), ("x", "n3", None, 1)]
+    batch = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3),
+                                  "id string, name string, v long, seq long")
+
+    def kept(**kw):
+        return {r["id"]: (r["name"], r["v"]) for r in dedup_latest(batch, "id", **kw).collect()}
+
+    assert kept() == {"x": ("n3", None), "y": ("y1", None)}
+    assert kept(keep="first") == {"x": ("n1", 1), "y": ("y1", None)}
+    assert kept(keep="merge") == {"x": ("n3", 2), "y": ("y1", None)}
+    assert kept(order_col="seq", keep="first") == {"x": ("n1", 1), "y": ("y1", None)}
+    assert kept(order_col="seq") == {"x": ("n3", None), "y": ("y1", None)}
+    with pytest.raises(ValueError, match="keep"):
+        dedup_latest(batch, "id", keep="newest")
+    up = spark.createDataFrame([Row(id="c", name="C1", v=None), Row(id="c", name=None, v=3),
+                                Row(id="a", name=None, v=10)], "id string, name string, v long")
+    assert as_map(op_upsert(target, up, "id")) == {
+        "a": ("Alice", 10), "b": ("Bob", 2), "c": ("C1", 3)}
+
+
 def test_triage_routing(spark):
     rows = [
         Row(id=1, status=201, error_type=None),
