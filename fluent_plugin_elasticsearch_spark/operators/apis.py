@@ -317,7 +317,8 @@ def reindex(source: DataFrame, dest, body: dict | None = None) -> dict:
     "create" (only ids absent from dest land; conflicts are skipped,
     ES's conflicts=proceed). `dest` is a sinks.cow_table.CowTable; the
     op_type is its upsert op, whose write_ops rule runs on the touched
-    buckets of the snapshot it commits against. `script` raises —
+    buckets of the snapshot it commits against (an absent dest is
+    created with what the rule stores on an empty table). `script` raises —
     per-record painless is the reference's T13 anti-pattern; use
     `pipeline`. Returns {"total", "created", "updated"}: `created` is
     the growth of dest's row count across the write (exact when no
@@ -349,10 +350,7 @@ def reindex(source: DataFrame, dest, body: dict | None = None) -> dict:
     if op_type not in ("index", "create"):
         raise UnsupportedQuery(f"reindex dest.op_type {op_type!r}")
     total = df.count()
-    if not dest.exists():
-        dest.create(df)
-        return {"total": total, "created": total, "updated": 0}
-    before = dest.read().count()
+    before = dest.read().count() if dest.exists() else 0
     dest.upsert(df, op=op_type)
     created = dest.read().count() - before
     return {"total": total, "created": created,

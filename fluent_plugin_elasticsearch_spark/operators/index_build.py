@@ -37,6 +37,10 @@ Design (Spark-first, sized for 10^12 docs / 1000 executors):
     checkpoint depends on (input columns, tokenizer, shards, salts, block
     size, BM25 k1/b, positions) are recorded next to it, and a resume
     with other settings raises instead of mixing two builds.
+  * **One writer**: :func:`write_index` writes every table below for
+    ``build_index`` (salted partials, one call per shard group) and
+    ``operators.merge.merge_indexes`` (existing blocks); ``meta.json``
+    comes last and marks the index complete.
 
 Storage layout under ``out_dir`` (parquet; Iceberg DDL is the cluster
 path — the sandbox image has no Iceberg runtime jar, the layout maps 1:1
@@ -59,6 +63,7 @@ from __future__ import annotations
 import json
 import math
 import os
+import shutil
 import time
 
 import numpy as np
@@ -85,12 +90,6 @@ def _schemas(positions: bool) -> tuple[str, str]:
     return (f"shard int, term string, salt int, n_docs int, {enc}{pos}",
             f"shard int, term string, block_id int, n_docs int, first_doc long, "
             f"last_doc long, {enc}, max_tfn double{pos}")
-
-
-def _bucket_col() -> F.Column:
-    """Phase-2 group of a term within its shard: JVM-side crc32, so the
-    build and merge_indexes put a term's rows in the same group."""
-    return F.pmod(F.crc32(F.encode(F.col("term"), "utf-8")), F.lit(N_TERM_BUCKETS)).cast("int")
 
 
 def with_doc_id(docs: DataFrame, url_col: str = "url", out_col: str = "doc_id") -> DataFrame:
@@ -197,22 +196,26 @@ def _tokenize(spark: SparkSession, docs: DataFrame, *, id_col: str, text_col: st
     )
 
 
-def _posting_blocks(spark: SparkSession, toks: DataFrame, n_group_shards: int, avgdl: float,
+def _partials(toks: DataFrame, positions: bool) -> DataFrame:
+    """Phase 1: tokenized doc rows → salted, compressed, sorted partials.
+    It shuffles COMPACT per-doc rows (term lists), not exploded (doc,
+    term, tf) rows — ~20x less shuffle; the explosion happens numpy-side
+    inside each (shard, salt) group."""
+    return (toks.select("shard", "salt", "doc_id", "doc_len", "terms", "tfs",
+                        *(["poss"] if positions else []))
+            .groupBy("shard", "salt")
+            .applyInPandas(_encode_partials, _schemas(positions)[0]))
+
+
+def _posting_blocks(spark: SparkSession, rows: DataFrame, n_group_shards: int, avgdl: float,
                     k1: float, b: float, block_size: int,
                     positions: bool) -> tuple[DataFrame, bool]:
-    """Phase 1 (salted partials) → phase 2 (merged, re-blocked postings)
-    over tokenized doc rows. Returns (blocks, shard-clustered?)."""
-    partial_schema, block_schema = _schemas(positions)
-    # phase 1 shuffles COMPACT per-doc rows (term lists), not exploded
-    # (doc, term, tf) rows — ~20x less shuffle; the explosion happens
-    # numpy-side inside each (shard, salt) group
-    partials = (
-        toks.select("shard", "salt", "doc_id", "doc_len", "terms", "tfs",
-                    *(["poss"] if positions else []))
-        .groupBy("shard", "salt")
-        .applyInPandas(_encode_partials, partial_schema)
-        .withColumn("term_bucket", _bucket_col())
-    )
+    """Phase 2 over posting rows — a build's salted partials or an index's
+    blocks: merge each term's rows per (shard, term_bucket) group and
+    re-block. Returns (blocks, shard-clustered?). The term bucket is a
+    JVM-side crc32, so every input puts a term's rows in one group."""
+    rows = rows.withColumn("term_bucket", F.pmod(
+        F.crc32(F.encode(F.col("term"), "utf-8")), F.lit(N_TERM_BUCKETS)).cast("int"))
     # Exchange fusion (guide §2.4), scale-adaptive: when the shard
     # count dwarfs the core count (any real cluster build), hash-
     # partition the COMPACT partials by shard once —
@@ -228,9 +231,9 @@ def _posting_blocks(spark: SparkSession, toks: DataFrame, n_group_shards: int, a
     # at write. Both paths produce identical files.
     fused = n_group_shards >= 2 * spark.sparkContext.defaultParallelism
     if fused:
-        partials = partials.repartition(2 * n_group_shards, "shard")
-    blocks = partials.groupBy("shard", "term_bucket").applyInPandas(
-        _make_merge_fn(avgdl, k1, b, block_size, positions), block_schema)
+        rows = rows.repartition(2 * n_group_shards, "shard")
+    blocks = rows.groupBy("shard", "term_bucket").applyInPandas(
+        _make_merge_fn(avgdl, k1, b, block_size, positions), _schemas(positions)[1])
     return blocks, fused
 
 
@@ -262,7 +265,8 @@ def build_compute_only(
                      url_col=None, tokenizer=tokenizer, n_shards=n_shards, n_salts=n_salts,
                      positions=False, input_partitions=input_partitions)
     # no write here, so the non-fused path needs no block exchange either
-    blocks, _ = _posting_blocks(spark, toks, n_shards, avgdl, k1, b, block_size, False)
+    blocks, _ = _posting_blocks(spark, _partials(toks, False), n_shards, avgdl, k1, b,
+                                block_size, False)
     from pyspark.sql import Observation
 
     obs = Observation("compute_only")
@@ -288,10 +292,17 @@ def _shard_metrics(shards, positions: bool) -> list[F.Column]:
     return exprs
 
 
-def _manifest_rows(spark: SparkSession, got: dict, shards, run_id: str,
-                   wall: float) -> list[dict]:
-    """'done' manifest rows, with lineage, of the shards that got blocks."""
-    return [
+def _write_manifest_rows(spark: SparkSession, out_dir: str, got: dict, shards, run_id: str,
+                         wall: float, file_tag: str) -> list[dict]:
+    """Write and return the 'done' manifest rows, with lineage, of the
+    shards that got blocks. They are driver data (one per shard) —
+    written with pyarrow directly instead of spending a Spark job per
+    checkpoint. The directory stays a normal parquet table for
+    spark.read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rows = [
         {
             "shard": int(s), "status": "done", "run_id": run_id,
             "app_id": spark.sparkContext.applicationId,
@@ -304,6 +315,117 @@ def _manifest_rows(spark: SparkSession, got: dict, shards, run_id: str,
         for s in shards
         if int(got[f"blk_{s}"] or 0) > 0
     ]
+    if rows:
+        schema = pa.schema([("shard", pa.int64()), ("status", pa.string()),
+                            ("run_id", pa.string()), ("app_id", pa.string()),
+                            ("ts", pa.string()), ("n_blocks", pa.int64()),
+                            ("n_postings", pa.int64()), ("enc_bytes", pa.int64()),
+                            ("wall_s", pa.float64())])
+        path = os.path.join(out_dir, "_manifest")
+        os.makedirs(path, exist_ok=True)
+        pq.write_table(pa.Table.from_pylist(rows, schema=schema),
+                       os.path.join(path, f"manifest-{file_tag}.parquet"))
+    return rows
+
+
+def write_index(spark: SparkSession, out_dir: str, meta: dict, groups: list,
+                on_batch_done=None) -> list[dict]:
+    """The one writer of an index's tables (layout in the module docstring),
+    for ``build_index`` and ``operators.merge.merge_indexes``.
+
+    ``meta`` is the index's ``meta.json`` (its avgdl, k1, b, block_size,
+    with_positions, n_shards and run_id drive the write). ``groups`` lists
+    ``(shards, posting rows, doc rows)``: posting rows are phase-2 input —
+    a build's salted partials or existing blocks — and doc rows are
+    (shard, doc_id, doc_len[, url]). Per group: phase 2, the postings
+    write (sorted by shard, term, first_doc) with the doc_stats write
+    running concurrently, then the group's manifest rows (its checkpoint)
+    and ``on_batch_done(shards)``. Then term_stats from the written
+    postings, and ``meta.json`` last: it marks the index complete, so it
+    is removed first and an index without it is unfinished. Returns the
+    manifest rows written."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.sql import Observation
+
+    positions, run_id = bool(meta.get("with_positions")), meta["run_id"]
+    meta_path = os.path.join(out_dir, "meta.json")
+    os.makedirs(out_dir, exist_ok=True)
+    if os.path.exists(meta_path):
+        os.remove(meta_path)
+    metrics = []
+    for gi, (shards, rows, docs) in enumerate(groups):
+        t0 = time.time()
+        # Crash safety: postings/doc_stats are APPENDED before the manifest
+        # row marks a shard 'done', so a shard partition on disk that the
+        # caller is writing again is a torn write from a crashed attempt —
+        # appending to it would silently double its tfs and BM25 scores.
+        # Delete it first. (On Iceberg this is a transactional REPLACE
+        # PARTITION; this is the filesystem equivalent.)
+        for table in ("postings", "doc_stats"):
+            for s in shards:
+                pdir = os.path.join(out_dir, table, f"shard={s}")
+                if os.path.exists(pdir):
+                    shutil.rmtree(pdir)
+        blocks, fused = _posting_blocks(spark, rows, len(shards), meta["avgdl"], meta["k1"],
+                                        meta["b"], meta["block_size"], positions)
+        if not fused:
+            blocks = blocks.repartition("shard")
+        obs = Observation(f"shard_metrics_{gi}")
+        blocks = blocks.observe(obs, *_shard_metrics(shards, positions))
+
+        # doc_stats is written CONCURRENTLY with the postings job from a
+        # second thread: its small tasks fill scheduler gaps (e.g. the
+        # phase-2 skew tail) instead of appending a serial job.
+        def write_doc_stats(docs=docs) -> None:
+            docs.repartition("shard").write.mode("append").partitionBy(
+                "shard").parquet(os.path.join(out_dir, "doc_stats"))
+
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            fut = pool.submit(write_doc_stats)
+            # Sort leads with `shard` so the writer's required ordering
+            # (partition columns first) is ALREADY satisfied: a
+            # sortWithinPartitions("term", ...) is silently re-sorted by
+            # the writer's own (shard)-only sort, which leaves files
+            # term-UNsorted. This way files come out (term, first_doc)-
+            # sorted, so parquet min/max row-group pruning on `term` works
+            # at scale (guide §6).
+            (
+                blocks.sortWithinPartitions("shard", "term", "first_doc")
+                .write.mode("append")
+                .partitionBy("shard")
+                .parquet(os.path.join(out_dir, "postings"))
+            )
+            fut.result()
+        metrics += _write_manifest_rows(spark, out_dir, obs.get, shards, run_id,
+                                        time.time() - t0, f"{run_id}-g{gi}")
+        if on_batch_done is not None:  # test hook: simulate crash mid-build
+            on_batch_done(shards)
+
+    # term stats: global df per term, derived from the written postings
+    # (per-shard posting count per term sums to exact df) — no second
+    # tokenize/explode pass over the corpus.
+    ts = (
+        spark.read.parquet(os.path.join(out_dir, "postings"))
+        .groupBy("term")
+        .agg(F.sum("n_docs").alias("df"))
+    )
+    # Range partitioning gives term-range file pruning for the per-query
+    # pruned lookup mode, but its sampling pass executes the aggregation
+    # subtree twice — worth it only at cluster-scale vocabularies. Small
+    # indexes get ONE term-sorted file: row-group min/max stats give the
+    # same pruning granularity there, minus a whole job (A/B: 0.96 ->
+    # 0.63 s at the 100k-doc bench index).
+    if meta["n_shards"] >= 2 * spark.sparkContext.defaultParallelism:
+        ts = ts.repartitionByRange(max(1, meta["n_shards"] // 2), "term")
+    else:
+        ts = ts.repartition(1)
+    ts.sortWithinPartitions("term").write.mode("overwrite").parquet(
+        os.path.join(out_dir, "term_stats"))
+    with open(meta_path + ".tmp", "w") as f:
+        json.dump(meta, f)
+    os.replace(meta_path + ".tmp", meta_path)
+    return metrics
 
 
 def _check_resume_params(out_dir: str, params: dict) -> None:
@@ -325,31 +447,6 @@ def _check_resume_params(out_dir: str, params: dict) -> None:
                              f"({'; '.join(changed)}); build into a new directory or delete it")
     with open(path, "w") as f:
         json.dump(params, f)
-
-
-def _write_manifest_rows(manifest_path: str, rows: list[dict], file_tag: str) -> None:
-    """Manifest rows are driver data (one per shard) — write them with
-    pyarrow directly instead of spending a Spark job per checkpoint. The
-    directory stays a normal parquet table for spark.read."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    schema = pa.schema(
-        [
-            ("shard", pa.int64()),
-            ("status", pa.string()),
-            ("run_id", pa.string()),
-            ("app_id", pa.string()),
-            ("ts", pa.string()),
-            ("n_blocks", pa.int64()),
-            ("n_postings", pa.int64()),
-            ("enc_bytes", pa.int64()),
-            ("wall_s", pa.float64()),
-        ]
-    )
-    os.makedirs(manifest_path, exist_ok=True)
-    table = pa.Table.from_pylist(rows, schema=schema)
-    pq.write_table(table, os.path.join(manifest_path, f"manifest-{file_tag}.parquet"))
 
 
 def build_index(
@@ -376,7 +473,8 @@ def build_index(
 ) -> dict:
     """Build the full index at ``out_dir``. ``shard_batches>1`` splits the
     build into resumable per-shard-group jobs (manifest-checkpointed); a
-    re-run with the same out_dir skips completed shards.
+    re-run with the same out_dir skips completed shards, and a re-run of
+    a completed build (``meta.json`` present) writes nothing.
     ``with_positions=True`` stores per-posting token positions (pos_enc)
     enabling exact phrase queries (operators/positions.py)."""
     run_id = run_id or f"run-{int(time.time())}"
@@ -400,27 +498,16 @@ def build_index(
     from pyspark.sql import Observation
 
     tokenized_path = os.path.join(out_dir, "_tokenized")
+    corpus_stats = [F.count(F.lit(1)).alias("n"), F.avg("doc_len").alias("avgdl"),
+                    F.sum("doc_len").alias("total_tokens"), F.min("doc_id").alias("min_id")]
     stats = None
     if not os.path.exists(os.path.join(tokenized_path, "_SUCCESS")):
         obs = Observation("corpus_stats")
-        toks = toks.observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.avg("doc_len").alias("avgdl"),
-            F.sum("doc_len").alias("total_tokens"),
-            F.min("doc_id").alias("min_id"),
-        )
-        toks.write.mode("overwrite").parquet(tokenized_path)
+        toks.observe(obs, *corpus_stats).write.mode("overwrite").parquet(tokenized_path)
         stats = obs.get
     toks = spark.read.parquet(tokenized_path)
     if stats is None:  # resuming over an existing staging table
-        stats = toks.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.avg("doc_len").alias("avgdl"),
-            F.sum("doc_len").alias("total_tokens"),
-            F.min("doc_id").alias("min_id"),
-        ).collect()[0].asDict()
-    n_docs, avgdl = int(stats["n"]), float(stats["avgdl"])
+        stats = toks.agg(*corpus_stats).collect()[0].asDict()
     # --- phase-1 group-memory guard -------------------------------------
     # Phase 1 materializes one (shard, salt) group per applyInPandas task:
     # ~corpus/(n_shards·n_salts) of per-doc term-list entries live in that
@@ -462,100 +549,20 @@ def build_index(
         except Exception:  # crashed mid-manifest-write: treat as no checkpoint
             done = set()
 
-    all_shards = [s for s in range(n_shards) if s not in done]
-    # Crash safety: postings/doc_stats are APPENDED before the manifest row
-    # marks a shard 'done', so a crash between the writes would make a
-    # re-run double-append those shards (silently doubling tf and BM25
-    # scores). Any shard partition on disk that is NOT in the manifest is
-    # therefore a torn write from a crashed attempt — delete it before
-    # rebuilding. (On Iceberg this whole dance is a transactional
-    # REPLACE PARTITION; this is the filesystem equivalent.)
-    import shutil
-
-    for table in ("postings", "doc_stats"):
-        for s in all_shards:
-            pdir = os.path.join(out_dir, table, f"shard={s}")
-            if os.path.exists(pdir):
-                shutil.rmtree(pdir)
-    groups = [all_shards[i::shard_batches] for i in range(shard_batches)] if shard_batches > 1 else [all_shards]
-    groups = [g for g in groups if g]
-
-    metrics = []
-    for gi, group in enumerate(groups):
-        t0 = time.time()
-        part = toks.filter(F.col("shard").isin(group)) if len(group) < n_shards else toks
-        blocks, fused = _posting_blocks(spark, part, len(group), avgdl, k1, b, block_size,
-                                        with_positions)
-        if not fused:
-            blocks = blocks.repartition("shard")
-        obs = Observation(f"shard_metrics_{gi}")
-        blocks = blocks.observe(obs, *_shard_metrics(group, with_positions))
-
-        # doc-side table (doc_len + url) written CONCURRENTLY with the
-        # postings job from a second thread: both read the same staging
-        # parquet, and the small doc_stats tasks fill scheduler gaps (e.g.
-        # the phase-2 skew tail) instead of appending a serial job.
-        doc_cols = ["shard", "doc_id", "doc_len"] + (["url"] if url_col else [])
-        from concurrent.futures import ThreadPoolExecutor
-
-        def write_doc_stats() -> None:
-            part.select(*doc_cols).repartition("shard").write.mode("append").partitionBy(
-                "shard"
-            ).parquet(os.path.join(out_dir, "doc_stats"))
-
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            fut = pool.submit(write_doc_stats)
-            # Sort leads with `shard` so the writer's required ordering
-            # (partition columns first) is ALREADY satisfied: the previous
-            # sortWithinPartitions("term", ...) was silently re-sorted by
-            # the writer's own (shard)-only sort, which left files
-            # term-UNsorted (verified on round-6 output). Now files come
-            # out genuinely (term, first_doc)-sorted, so parquet min/max
-            # row-group pruning on `term` works at scale (guide §6).
-            (
-                blocks.sortWithinPartitions("shard", "term", "first_doc")
-                .write.mode("append")
-                .partitionBy("shard")
-                .parquet(os.path.join(out_dir, "postings"))
-            )
-            fut.result()
-
-        wall = time.time() - t0
-        rows = _manifest_rows(spark, obs.get, group, run_id, wall)
-        if rows:
-            _write_manifest_rows(manifest_path, rows, f"{run_id}-g{gi}")
-            metrics.extend(rows)
-        if on_batch_done is not None:  # test hook: simulate crash mid-build
-            on_batch_done(group)
-
-    # term stats: global df per term, derived from the written postings
-    # (per-shard posting count per term sums to exact df) — no second
-    # tokenize/explode pass over the corpus.
-    if all_shards:
-        ts = (
-            spark.read.parquet(os.path.join(out_dir, "postings"))
-            .groupBy("term")
-            .agg(F.sum("n_docs").alias("df"))
-        )
-        # Range partitioning gives term-range file pruning for the
-        # per-query pruned lookup mode, but its sampling pass executes
-        # the aggregation subtree twice — worth it only at cluster-scale
-        # vocabularies. Small builds write ONE term-sorted file: row-group
-        # min/max stats give the same pruning granularity there, minus a
-        # whole job (A/B: 0.96 -> 0.63 s at the 100k-doc bench index).
-        if n_shards >= 2 * spark.sparkContext.defaultParallelism:
-            ts = ts.repartitionByRange(max(1, n_shards // 2), "term")
-        else:
-            ts = ts.repartition(1)
-        (
-            ts.sortWithinPartitions("term")
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_dir, "term_stats"))
-        )
-
+    todo = [s for s in range(n_shards) if s not in done]
+    meta_path = os.path.join(out_dir, "meta.json")
+    if not todo and os.path.exists(meta_path):  # a finished build: nothing to redo
+        with open(meta_path) as f:
+            return {"meta": json.load(f), "shard_metrics": []}
+    doc_cols = ["shard", "doc_id", "doc_len"] + (["url"] if url_col else [])
+    groups = []
+    for group in (todo[i::shard_batches] for i in range(shard_batches)):
+        if group:
+            part = toks.filter(F.col("shard").isin(group)) if len(group) < n_shards else toks
+            groups.append((group, _partials(part, with_positions), part.select(*doc_cols)))
     meta = {
-        "n_docs": n_docs,
-        "avgdl": avgdl,
+        "n_docs": int(stats["n"]),
+        "avgdl": float(stats["avgdl"]),
         "total_tokens": int(stats["total_tokens"]),
         "n_shards": n_shards,
         "n_salts": n_salts,
@@ -566,9 +573,8 @@ def build_index(
         "run_id": run_id,
         "with_positions": with_positions,
     }
-    with open(os.path.join(out_dir, "meta.json"), "w") as f:
-        json.dump(meta, f)
-    return {"meta": meta, "shard_metrics": metrics}
+    return {"meta": meta,
+            "shard_metrics": write_index(spark, out_dir, meta, groups, on_batch_done)}
 
 
 def reindex(spark, docs, dest_dir: str, query: dict | None = None,

@@ -61,7 +61,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-from .write_ops import MERGE_OPS, dedup_latest
+from .write_ops import MERGE_OPS
 
 _MANIFEST = "manifest.json"
 _LOCK = "_commit.lock"
@@ -225,11 +225,17 @@ class CowTable:
         """Initialize the table from a DataFrame (generation 0), recording
         its schema (every field nullable) in the manifest.  An id repeated
         in ``df`` keeps its last row, as ``index`` would."""
+        return self._create(df, "index")
+
+    def _create(self, df: DataFrame, op: str) -> dict:
+        """``create`` storing what the ``write_ops`` rule ``op`` stores on
+        an empty table: ``"index"`` keeps an id's last row, ``"create"``
+        its first, ``"update"`` none — one staging write."""
         if self.exists():
             raise ValueError(f"table already exists at {self.path}")
         os.makedirs(self.path, exist_ok=True)
         n = self._create_buckets
-        rel = self._stage(dedup_latest(df, self.id_col), n, 0)
+        rel = self._stage(MERGE_OPS[op](df.limit(0), df, self.id_col), n, 0)
         schema = StructType([StructField(f.name, f.dataType, True, f.metadata)
                              for f in df.schema])
 
@@ -265,9 +271,14 @@ class CowTable:
         is cast to the recorded schema.  Concurrent-writer safe: a
         conflicting commit reruns the merge on the new snapshot, so both
         batches land exactly once (Iceberg optimistic concurrency / ES
-        per-doc versioned upserts, out_elasticsearch.rb:761-784)."""
+        per-doc versioned upserts, out_elasticsearch.rb:761-784).  On an
+        absent table the batch creates it, storing what ``op`` stores on
+        an empty table."""
         if op not in MERGE_OPS:
             raise ValueError(f"unknown write op {op!r}; expected one of {sorted(MERGE_OPS)}")
+        if not self.exists():
+            m = self._create(batch, op)
+            return _result(m["generation"], range(m["n_buckets"]))
 
         def plan(m):
             n = m["n_buckets"]

@@ -77,11 +77,10 @@ class IngestPipeline:
             if self._cow is None:
                 self._cow = CowTable(batch.sparkSession, path,
                                      id_col="doc_id", n_buckets=self.n_buckets)
-            if not self._cow.exists():
-                self._cow.create(docs)
-                stats.update(created=True)
-            else:  # the write op's merge rule runs on the pinned touched buckets
-                stats.update(self._cow.upsert(docs, op=self.write_op))
+            # the write op's merge rule runs on the pinned touched buckets;
+            # the first batch creates the table with what the rule stores
+            # on an empty one
+            stats.update(self._cow.upsert(docs, op=self.write_op))
             return stats
         if self.write_op == "create" and self.id_keys:
             # insert-only: append just the fresh rows (target untouched)

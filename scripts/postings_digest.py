@@ -1,17 +1,21 @@
-"""Per-column digest of a built index's ``postings/`` and ``term_stats/``.
+"""Per-column digest of every table an index writer writes:
+``postings/``, ``doc_stats/``, ``term_stats/`` and ``meta.json``.
 
     python scripts/postings_digest.py <index_dir>
 
-Prints one line per column, ``<table>.<column> <rows> <sha256>``. Rows
-are put in a canonical order first (postings by shard, term, block_id;
-term_stats by term), so the digest does not depend on how Spark split the
-tables into files. Two builds hold identical postings exactly when every
-line matches: run it on both and ``diff`` the output.
+Prints one line per column, ``<table>.<column> <rows> <sha256>``, then
+one line per ``meta.json`` key, ``meta.<key> <json value>``. Rows are put
+in a canonical order first (postings by shard, term, block_id; doc_stats
+by shard, doc_id; term_stats by term), so the digest does not depend on
+how Spark split the tables into files. Two indexes are identical exactly
+when every line matches: run it on both and ``diff`` the output (pass the
+same ``run_id`` to both writes, since ``meta.json`` records it).
 """
 
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 import struct
 import sys
@@ -19,7 +23,8 @@ import sys
 import numpy as np
 import pyarrow.dataset as pads
 
-SORT_KEYS = {"postings": ["shard", "term", "block_id"], "term_stats": ["term"]}
+SORT_KEYS = {"postings": ["shard", "term", "block_id"], "doc_stats": ["shard", "doc_id"],
+             "term_stats": ["term"]}
 
 
 def _column_digest(values) -> str:
@@ -46,6 +51,9 @@ def digest(index_dir: str) -> list[str]:
         pdf = pdf.sort_values(keys, kind="stable").reset_index(drop=True)
         for col in sorted(pdf.columns):
             lines.append(f"{table}.{col} {len(pdf)} {_column_digest(pdf[col])}")
+    with open(os.path.join(index_dir, "meta.json")) as f:
+        meta = json.load(f)
+    lines += [f"meta.{k} {json.dumps(v)}" for k, v in meta.items()]
     return lines
 
 

@@ -252,9 +252,11 @@ def test_one_parquet_file_per_bucket_after_every_write(spark, tmp_path):
 
 # --- concurrent-writer CAS (VERDICT r5 item #3) ----------------------------
 
-def _bucket_of(spark, t, doc_id):
-    return (spark.createDataFrame([Row(doc_id=doc_id)])
-            .select(t._bucket_col(t.n_buckets).alias("b")).collect()[0]["b"])
+def _buckets_of(spark, t, doc_ids):
+    """{doc_id: bucket} of every id, in one Spark job."""
+    return {r["doc_id"]: r["b"] for r in
+            spark.createDataFrame([Row(doc_id=i) for i in doc_ids])
+            .select("doc_id", t._bucket_col(t.n_buckets).alias("b")).collect()}
 
 
 def test_interleaved_overlapping_upserts_both_land_exactly_once(
@@ -267,9 +269,8 @@ def test_interleaved_overlapping_upserts_both_land_exactly_once(
 
     # find an insert id in the SAME bucket as doc 5 (buckets are
     # xxhash64-based, so probe)
-    b5 = _bucket_of(spark, t, 5)
-    overlap_id = next(i for i in range(2000, 2200)
-                      if _bucket_of(spark, t, i) == b5)
+    buckets = _buckets_of(spark, t, [5, *range(2000, 2200)])
+    overlap_id = next(i for i in range(2000, 2200) if buckets[i] == buckets[5])
     batch_a = spark.createDataFrame([Row(doc_id=5, v="A5", n=-5),
                                      Row(doc_id=1005, v="A1005", n=-1)])
     batch_b = spark.createDataFrame([Row(doc_id=overlap_id, v="B", n=-9)])
@@ -300,9 +301,9 @@ def test_disjoint_bucket_writers_commit_without_conflict(
     t, _ = _mk(spark, tmp_path, n=100, n_buckets=4)
     t2 = CowTable(spark, t.path)
     # find two doc ids hashing to different buckets
-    ids = {}
+    buckets, ids = _buckets_of(spark, t, range(1000, 1040)), {}
     for i in range(1000, 1040):
-        ids.setdefault(_bucket_of(spark, t, i), i)
+        ids.setdefault(buckets[i], i)
         if len(ids) >= 2:
             break
     (b1, id1), (b2, id2) = sorted(ids.items())[:2]
@@ -334,9 +335,8 @@ def test_conflict_retries_exhausted_raises(spark, tmp_path, monkeypatch):
     batch_a = spark.createDataFrame([Row(doc_id=3, v="A", n=0)])
 
     orig = t._commit_buckets
-    b3 = _bucket_of(spark, t, 3)
-    same_bucket = [i for i in range(1000, 1400)
-                   if _bucket_of(spark, t, i) == b3]
+    buckets = _buckets_of(spark, t, [3, *range(1000, 1400)])
+    same_bucket = [i for i in range(1000, 1400) if buckets[i] == buckets[3]]
 
     def always_conflicting(base_dirs, gen_rel):
         t2.upsert(spark.createDataFrame(
@@ -479,6 +479,31 @@ def test_read_uses_recorded_schema(spark, tmp_path):
         json.dump(m, f)
     with pytest.raises(ValueError, match="'schema'"):
         t.read()
+
+
+def test_first_cow_batch_follows_the_write_op(spark, tmp_path):
+    """The batch that creates the table stores what its write op stores on
+    an empty table: `create` keeps an id's first row (ES 409s the later
+    ones), `index` its last, `update` nothing (ES 404s a missing doc)."""
+    import datetime as dt
+
+    from fluent_plugin_elasticsearch_spark.streaming.ingest import IngestPipeline
+
+    def events(*pairs):
+        return spark.createDataFrame([Row(time=dt.datetime(2024, 1, 1, 5), user=u, msg=m)
+                                      for u, m in pairs])
+
+    want = {"create": {"a": "first"}, "index": {"a": "second"}, "update": {}}
+    for op, rows in want.items():
+        pipe = IngestPipeline(str(tmp_path / op), id_keys=["user"], write_op=op,
+                              table_format="cow", n_buckets=4)
+        pipe.run_batch(events(("a", "first"), ("a", "second")), 0)
+        assert {r["user"]: r["msg"] for r in pipe._cow.read().collect()} == rows, op
+    pipe = IngestPipeline(str(tmp_path / "create"), id_keys=["user"], write_op="create",
+                          table_format="cow", n_buckets=4)
+    pipe.run_batch(events(("a", "third"), ("b", "first"), ("b", "second")), 1)
+    assert {r["user"]: r["msg"] for r in pipe._cow.read().collect()} == {
+        "a": "first", "b": "first"}
 
 
 def test_ingest_create_op_keeps_concurrent_writers_row(spark, tmp_path, monkeypatch):

@@ -4,6 +4,9 @@ same posting blocks (ids/tfs/dls byte-exact), rank-identical search."""
 
 from __future__ import annotations
 
+import glob
+
+import pyarrow.parquet as pq
 import pytest
 
 from fluent_plugin_elasticsearch_spark.operators.index_build import build_index, with_doc_id
@@ -29,6 +32,18 @@ def halves(spark, corpus_pdf):
     return a, b
 
 
+def assert_postings_files_sorted(*index_dirs):
+    """Every postings file is (term, first_doc)-sorted, so parquet
+    row-group min/max stats on `term` prune."""
+    for d in index_dirs:
+        files = glob.glob(f"{d}/postings/shard=*/*.parquet")
+        assert files, d
+        for f in files:
+            t = pq.read_table(f, columns=["term", "first_doc"])
+            keys = list(zip(t["term"].to_pylist(), t["first_doc"].to_pylist()))
+            assert keys == sorted(keys), f
+
+
 def _build(spark, docs, out, **kw):
     build_index(spark, docs, out, id_col="doc_id", html_col="html", text_col=None,
                 url_col="url", tokenizer="unicode", n_shards=4, n_salts=2,
@@ -45,6 +60,9 @@ def test_merge_equals_full_build(spark, corpus_pdf, halves, tmp_path):
     res = merge_indexes(spark, [ia, ib], merged)
     assert res["meta"]["n_docs"] == 600
     assert block_fingerprint(spark, merged) == block_fingerprint(spark, full)
+    assert_postings_files_sorted(full, ia, ib, merged)
+    # a small merge (shards < 2 x cores) writes one term-sorted term_stats file
+    assert len(glob.glob(f"{merged}/term_stats/*.parquet")) == 1
 
     fi, mi = InvertedIndex(spark, full), InvertedIndex(spark, merged)
     assert mi.meta["avgdl"] == pytest.approx(fi.meta["avgdl"], rel=1e-12)
@@ -67,6 +85,7 @@ def test_merge_positional_phrase_identical(spark, halves, tmp_path):
     ib = _build(spark, b, str(tmp_path / "pib"), with_positions=True)
     merged = str(tmp_path / "pmerged")
     merge_indexes(spark, [ia, ib], merged)
+    assert_postings_files_sorted(full, ia, ib, merged)
     fi, mi = InvertedIndex(spark, full), InvertedIndex(spark, merged)
     for phrase in ["the baba", "of the"]:
         gf = [(r["doc_id"], r["score"]) for r in fi.match_phrase(phrase, 10).collect()]

@@ -68,6 +68,41 @@ def test_kill_and_resume_identical(spark, small_docs, tmp_path):
     assert got_a == got_b
 
 
+def test_crash_before_term_stats_resumes_to_a_searchable_index(spark, small_docs, tmp_path):
+    """Crash after the LAST shard group's manifest rows, before term_stats
+    and meta.json: every shard is done, yet the index is unfinished. The
+    re-run must write term_stats and meta.json (the writer's finish step
+    runs whenever meta.json is absent) and rebuild no shard."""
+    import os
+
+    one_shot = str(tmp_path / "one")
+    build_index(spark, small_docs, one_shot, id_col="doc_id", html_col="html",
+                text_col=None, tokenizer="unicode", n_shards=4, n_salts=2)
+    out = str(tmp_path / "idx")
+    kw = dict(id_col="doc_id", html_col="html", text_col=None, tokenizer="unicode",
+              n_shards=4, n_salts=2, shard_batches=2)
+    seen = []
+
+    def die_after_second(group):
+        seen.append(group)
+        if len(seen) == 2:
+            raise Boom(f"crash after {group}")
+
+    with pytest.raises(Boom):
+        build_index(spark, small_docs, out, run_id="r1", on_batch_done=die_after_second, **kw)
+    assert {r["shard"] for r in spark.read.parquet(f"{out}/_manifest").collect()} == {0, 1, 2, 3}
+    assert not os.path.exists(f"{out}/term_stats") and not os.path.exists(f"{out}/meta.json")
+
+    res = build_index(spark, small_docs, out, run_id="r2", **kw)
+    assert res["shard_metrics"] == []  # no shard rebuilt
+    assert os.path.exists(f"{out}/term_stats") and os.path.exists(f"{out}/meta.json")
+    assert postings_fingerprint(spark, out) == postings_fingerprint(spark, one_shot)
+    got, want = ([(r["doc_id"], r["score"])
+                  for r in InvertedIndex(spark, p).search("the of café", 10).collect()]
+                 for p in (out, one_shot))
+    assert got == want and got
+
+
 def test_resume_rejects_changed_settings(spark, small_docs, tmp_path):
     """A checkpoint built with one tokenizer must not be finished with
     another (the index would hold terms its meta's tokenizer never emits)
