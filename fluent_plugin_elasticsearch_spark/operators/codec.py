@@ -201,15 +201,15 @@ def decode_postings(rows, sel: np.ndarray | None = None,
     columns to sequences — in one segmented pass per column: the rows'
     buffers are joined, varint-decoded at once, and doc ids (and, with
     ``positions``, token positions) rebuilt from their per-segment gaps.
-    ``sel`` picks rows by position, in the given order (list-like
-    columns only)."""
+    ``sel`` picks rows by position, in the given order (numpy columns
+    only)."""
     n = np.asarray(rows["n_docs"], dtype=np.int64)
     cols = ("docs_enc", "tfs_enc", "dls_enc") + (("pos_enc",) if positions else ())
     if sel is None:
         bufs = [b"".join(rows[c]) for c in cols]
     else:
         n = n[sel]
-        bufs = [b"".join([rows[c][i] for i in sel]) for c in cols]
+        bufs = [b"".join(rows[c][sel]) for c in cols]
     total = int(n.sum())
     gaps = varint_decode(bufs[0], total)
     ids = (segmented_cumsum(gaps, np.cumsum(n) - n, n) if total else gaps).view(np.int64)

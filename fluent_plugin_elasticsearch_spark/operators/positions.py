@@ -19,9 +19,8 @@ from __future__ import annotations
 from typing import NamedTuple
 
 import numpy as np
-import pandas as pd
 
-from .wand import _decode, _empty, _span_topk
+from .wand import Columns, _decode, _empty, _span_topk
 
 _POS_SHIFT = np.uint64(32)  # doc_code * 2^32 + position keys
 _POS_MASK = np.uint64(0xFFFFFFFF)
@@ -53,7 +52,7 @@ class _Expanded(NamedTuple):
         return np.sort(_key(self.doc[m], self.pos[m]))
 
     def score(self, match_docs: np.ndarray, idf_sum: float, k: int,
-              avgdl: float, k1: float, b: float) -> pd.DataFrame:
+              avgdl: float, k1: float, b: float) -> Columns:
         """Span-frequency BM25 (sf = matches per doc code in
         ``match_docs``), local top-k."""
         codes, sf = np.unique(match_docs, return_counts=True)
@@ -61,19 +60,19 @@ class _Expanded(NamedTuple):
                           idf_sum, k, avgdl, k1, b)
 
 
-def _expand(pdf: pd.DataFrame, required=()) -> _Expanded | None:
+def _expand(rows, required=()) -> _Expanded | None:
     """Decode a shard's positional rows and expand them to one entry per
-    token position, docs coded by pd.factorize. ``required``: term sets
+    token position, docs coded by np.unique. ``required``: term sets
     (phrase slots, clause terms) a matching doc must each hit with >= 1
     term — docs missing one are dropped at posting level, before the
     expansion (entry-level doc sets are much smaller than positions; with
     one rare term this collapses the position key-space: the
     conjunctive-query prefilter). None when no doc qualifies."""
-    if len(pdf) == 0:
+    if len(rows["n_docs"]) == 0:
         return None
-    pdf, p = _decode(pdf, positions=True)
-    terms = np.repeat(pdf["term"].to_numpy(), p.n)
-    doc_codes, uniq_docs = pd.factorize(p.ids)
+    r, p = _decode(rows, positions=True)
+    terms = np.repeat(r.terms[r.code], p.n)
+    uniq_docs, doc_codes = np.unique(p.ids, return_inverse=True)
     keep = None
     for req in required:
         docs_t = np.unique(doc_codes[_is_in(terms, req)])
@@ -83,14 +82,13 @@ def _expand(pdf: pd.DataFrame, required=()) -> _Expanded | None:
     pos_keep = slice(None) if keep is None else np.repeat(np.isin(doc_codes, keep), p.tfs)
     dl = np.zeros(len(uniq_docs), dtype=np.int64)
     dl[doc_codes] = p.dls  # last write wins; all equal per doc
-    return _Expanded(np.repeat(doc_codes.astype(np.int64), p.tfs)[pos_keep],
-                     np.repeat(terms, p.tfs)[pos_keep], p.positions[pos_keep],
-                     np.asarray(uniq_docs, dtype=np.int64), dl)
+    return _Expanded(np.repeat(doc_codes, p.tfs)[pos_keep],
+                     np.repeat(terms, p.tfs)[pos_keep], p.positions[pos_keep], uniq_docs, dl)
 
 
-def score_shard_phrase(pdf: pd.DataFrame, phrase_terms: list[str], idf_sum: float,
+def score_shard_phrase(rows, phrase_terms: list[str], idf_sum: float,
                        k: int, avgdl: float, k1: float, b: float,
-                       last_terms: list[str] | None = None) -> pd.DataFrame:
+                       last_terms: list[str] | None = None) -> Columns:
     """Phrase scoring for one shard: decode the phrase terms' positional
     blocks, count exact adjacent alignments per doc (phrase frequency),
     BM25-score with tf=pf and the summed idf. Returns local top-k.
@@ -104,7 +102,7 @@ def score_shard_phrase(pdf: pd.DataFrame, phrase_terms: list[str], idf_sum: floa
     slots: list[list[str]] = [[t] for t in phrase_terms]
     if last_terms is not None:
         slots.append(sorted(last_terms))
-    x = _expand(pdf, {tuple(s) for s in slots})
+    x = _expand(rows, {tuple(s) for s in slots})
     if x is None:
         return _empty()
     # keys for slot j shifted left by j: alignment ⇔ same key as slot 0
@@ -116,9 +114,9 @@ def score_shard_phrase(pdf: pd.DataFrame, phrase_terms: list[str], idf_sum: floa
     return x.score((target >> _POS_SHIFT).astype(np.int64), idf_sum, k, avgdl, k1, b)
 
 
-def score_shard_span_near(pdf: pd.DataFrame, first: str, second: str,
+def score_shard_span_near(rows, first: str, second: str,
                           slop: int, idf_sum: float, k: int, avgdl: float,
-                          k1: float, b: float) -> pd.DataFrame:
+                          k1: float, b: float) -> Columns:
     """span_near (two clauses, in_order) scoring for one shard: decode
     the two terms' positional blocks; span frequency = count of `second`
     positions with >= 1 `first` position 1..slop+1 tokens BEFORE them —
@@ -129,7 +127,7 @@ def score_shard_span_near(pdf: pd.DataFrame, first: str, second: str,
     composite (doc_code << 32 | position) keys — no per-doc loop: a
     `second` at p has a qualifying `first` iff the sorted first-keys
     contain an entry in [doc|max(p-slop-1, 0), doc|p-1]."""
-    x = _expand(pdf, [(first,), (second,)])
+    x = _expand(rows, [(first,), (second,)])
     if x is None:
         return _empty()
     keys1 = x.keys(first)
@@ -143,29 +141,29 @@ def score_shard_span_near(pdf: pd.DataFrame, first: str, second: str,
     return x.score(d2[exists], idf_sum, k, avgdl, k1, b)
 
 
-def score_shard_span_first(pdf: pd.DataFrame, term: str, end: int,
+def score_shard_span_first(rows, term: str, end: int,
                            idf_sum: float, k: int, avgdl: float,
-                           k1: float, b: float) -> pd.DataFrame:
+                           k1: float, b: float) -> Columns:
     """span_first for one shard: sf = the term's occurrences within the
     first `end` token positions (DF contract positions 1..end, 1-based;
     stored positions are 0-based, so pos <= end-1)."""
-    if len(pdf) == 0:
+    if len(rows["n_docs"]) == 0:
         return _empty()
-    _, p = _decode(pdf, positions=True)
+    _, p = _decode(rows, positions=True)
     per_pos_entry = np.repeat(np.arange(p.ids.size, dtype=np.int64), p.tfs)
     e_idx, sf = np.unique(per_pos_entry[p.positions <= end - 1], return_counts=True)
     return _span_topk(p.ids[e_idx], sf, p.dls[e_idx], idf_sum, k, avgdl, k1, b)
 
 
-def score_shard_span_not(pdf: pd.DataFrame, include: str, exclude: str,
+def score_shard_span_not(rows, include: str, exclude: str,
                          pre: int, post: int, idf_sum: float, k: int,
-                         avgdl: float, k1: float, b: float) -> pd.DataFrame:
+                         avgdl: float, k1: float, b: float) -> Columns:
     """span_not for one shard: sf = `include` positions p with NO
     `exclude` position q in [p-pre, p+post] (the span_not_df contract).
     The two-sided window test is two global searchsorted calls over
     composite (doc_code << 32 | position) keys — no per-doc loop. Docs
     holding `include` but not `exclude` match with their full tf."""
-    x = _expand(pdf)
+    x = _expand(rows)
     if x is None:
         return _empty()
     keys_x = x.keys(exclude)
@@ -177,9 +175,9 @@ def score_shard_span_not(pdf: pd.DataFrame, include: str, exclude: str,
     return x.score(di[~rejected], idf_sum, k, avgdl, k1, b)
 
 
-def score_shard_intervals(pdf: pd.DataFrame, terms: list[str], max_gaps: int,
+def score_shard_intervals(rows, terms: list[str], max_gaps: int,
                           ordered: bool, idf_sum: float, k: int,
-                          avgdl: float, k1: float, b: float) -> pd.DataFrame:
+                          avgdl: float, k1: float, b: float) -> Columns:
     """ES intervals `match` rule for one shard (contract exactly
     relevance.intervals_match_df):
 
@@ -196,7 +194,7 @@ def score_shard_intervals(pdf: pd.DataFrame, terms: list[str], max_gaps: int,
     a != p — one two-sided searchsorted window count with a self-hit
     correction when the clause terms are equal."""
     # every clause term must occur in a matching doc
-    x = _expand(pdf, [(t,) for t in set(terms)])
+    x = _expand(rows, [(t,) for t in set(terms)])
     if x is None:
         return _empty()
     mg = int(max_gaps)
@@ -236,10 +234,10 @@ def score_shard_intervals(pdf: pd.DataFrame, terms: list[str], max_gaps: int,
     return x.score(x.doc[ma][alive], idf_sum, k, avgdl, k1, b)
 
 
-def score_shard_span_contain(pdf: pd.DataFrame, first: str, second: str,
+def score_shard_span_contain(rows, first: str, second: str,
                              little: str, slop: int, within: bool,
                              idf_sum: float, k: int, avgdl: float,
-                             k1: float, b: float) -> pd.DataFrame:
+                             k1: float, b: float) -> Columns:
     """span_containing / span_within for one shard (contract exactly
     relevance.span_containing_df / span_within_df). Big spans are the
     ordered pairs (a, b2): `first` at a, `second` at b2, 1 <= b2-a <=
@@ -256,7 +254,7 @@ def score_shard_span_contain(pdf: pd.DataFrame, first: str, second: str,
     over the slop+2 candidate offsets — each a vectorized exact-match
     probe into the `second` keys plus a start-window existence probe
     with the a <= q cap. sf = count of qualifying q."""
-    x = _expand(pdf)
+    x = _expand(rows)
     if x is None:
         return _empty()
     keys1 = x.keys(first)

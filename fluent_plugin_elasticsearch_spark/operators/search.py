@@ -10,15 +10,15 @@ paths for that kernel:
 
 Resident (after ``warm()``): the postings live in driver memory as one
 Arrow table per shard, sorted by (term, first_doc), with each term's row
-range. A query takes its terms' rows from each shard, runs the kernel
-in-process, merges with one numpy lexsort and returns ``Hits``: the rows
-as a driver-side Arrow table. ``collect()``, ``toPandas()`` and
-``to_es_response`` read that table — no Spark job, no JVM call. A Spark
-DataFrame (a LocalTableScan over the table) is built only when the
-caller composes the result with Spark (a join, ``select``,
-``F.broadcast``). Memory cost: about the postings' Arrow ``nbytes``
-(6.8 MB for the 16k-doc perfbench index), plus one term→id dict over
-the vocabulary.
+range. A query takes its terms' rows from each shard as numpy columns,
+runs the kernel in-process, merges with one numpy lexsort and returns
+``Hits``: the rows as a driver-side Arrow table, no pandas object on the
+way. ``collect()``, ``toPandas()`` and ``to_es_response`` read that
+table — no Spark job, no JVM call. A Spark DataFrame (a LocalTableScan
+over the table) is built only when the caller composes the result with
+Spark (a join, ``select``, ``F.broadcast``). Memory cost: about the
+postings' Arrow ``nbytes`` (6.8 MB for the 16k-doc perfbench index),
+plus one term→id dict over the vocabulary.
 
 Spark (unwarmed): one job per query
     term_stats lookup (≤ query-term rows, parquet min/max pruned)
@@ -146,10 +146,10 @@ class _ResidentPostings:
         del table
         pa.default_memory_pool().release_unused()
 
-    def blocks(self, terms) -> list[pd.DataFrame]:
-        """Each shard's blocks of ``terms`` as the pandas frame
-        applyInPandas would hand the kernel; shards holding none of the
-        terms are left out, as groupBy leaves them out."""
+    def blocks(self, terms) -> list[dict[str, np.ndarray]]:
+        """Each shard's blocks of ``terms`` as numpy columns (row_columns)
+        — no pandas frame; shards holding none of the terms are left
+        out, as groupBy leaves them out."""
         ids = sorted({self.term_ids[t] for t in terms if t in self.term_ids})
         if not ids:
             return []
@@ -157,8 +157,14 @@ class _ResidentPostings:
         for part, starts in self.shards:
             rows = np.concatenate([np.arange(starts[i], starts[i + 1]) for i in ids])
             if rows.size:
-                out.append(part.take(rows).to_pandas())
+                out.append(row_columns(part.take(rows)))
         return out
+
+
+def row_columns(table: pa.Table) -> dict[str, np.ndarray]:
+    """Arrow posting rows as the column mapping a kernel reads: one
+    ``to_numpy`` per column, ``*_enc`` ones as object arrays of bytes."""
+    return {name: col.to_numpy() for name, col in zip(table.column_names, table.columns)}
 
 
 class InvertedIndex:
@@ -231,18 +237,19 @@ class InvertedIndex:
 
     def _per_shard(self, terms, kernel, schema: str, k: int | None = None,
                    per_query: bool = False) -> DataFrame | Hits:
-        """Run ``kernel`` (pandas blocks → rows of ``schema``) on each
-        shard's posting blocks of ``terms`` and merge the shards' rows:
+        """Run ``kernel`` (posting rows → numpy columns of ``schema``) on
+        each shard's posting blocks of ``terms`` and merge the shards' rows:
         with ``k``, the global top k by (score desc, doc_id asc) — per
         query_id, numbered in a ``rank`` column, when ``per_query`` — and
         without it, every row. Warmed, the kernel runs in-process on the
         resident blocks and the merged rows come back as ``Hits``, a
-        driver-side Arrow table that becomes a Spark DataFrame only when
-        the caller composes it with Spark; otherwise the kernel runs in
-        one Spark job through applyInPandas."""
+        driver-side Arrow table, with no pandas object on the way.
+        Otherwise the kernel runs in one Spark job through applyInPandas,
+        whose wrapper is the one place its columns become a frame."""
         if self._resident is None:
             blocks = self.postings().filter(F.col("term").isin(list(terms)))
-            local = blocks.groupBy("shard").applyInPandas(kernel, schema)
+            local = blocks.groupBy("shard").applyInPandas(
+                lambda pdf: pd.DataFrame(kernel(pdf)), schema)
             if k is None:
                 return local
             if not per_query:
@@ -252,8 +259,8 @@ class InvertedIndex:
                     .filter(F.col("rank") <= k)
                     .select("query_id", "doc_id", "score", "rank"))
         fields = _arrow_schema(schema + (", rank int" if per_query else ""))
-        parts = [kernel(pdf) for pdf in self._resident.blocks(terms)]
-        cols = {f.name: np.concatenate([p[f.name].to_numpy() for p in parts] or [[]])
+        parts = [kernel(rows) for rows in self._resident.blocks(terms)]
+        cols = {f.name: np.concatenate([p[f.name] for p in parts] or [[]])
                 .astype(f.type.to_pandas_dtype()) for f in fields if f.name != "rank"}
         if per_query:  # (query_id, score desc, doc_id); rank = 1 + place in the query's run
             order = np.lexsort((cols["doc_id"], -cols["score"], cols["query_id"]))
@@ -305,13 +312,13 @@ class InvertedIndex:
         avgdl, k1, b = self.bm25
         idfs = {t: bm25_idf(df, self.n_docs) for t, df in dfs.items()}
 
-        def shard_topk(pdf: pd.DataFrame) -> pd.DataFrame:
+        def shard_topk(rows):
             use_wand = msm <= 1 and (mode == "wand" or (
-                mode == "auto" and int(pdf["n_docs"].sum()) >= WAND_FALLBACK_POSTINGS
+                mode == "auto" and int(rows["n_docs"].sum()) >= WAND_FALLBACK_POSTINGS
             ))
             if use_wand:
-                return _wand.score_shard_wand(pdf, idfs, k, avgdl, k1, b)
-            return _wand.score_shard_exhaustive(pdf, idfs, k, avgdl, k1, b, msm)
+                return _wand.score_shard_wand(rows, idfs, k, avgdl, k1, b)
+            return _wand.score_shard_exhaustive(rows, idfs, k, avgdl, k1, b, msm)
 
         return self._per_shard(dfs, shard_topk, TOPK_SCHEMA, k)
 
@@ -348,8 +355,8 @@ class InvertedIndex:
             idfs = {t: bm25_idf(df, self.n_docs) * weights.get(t, 1.0)
                     for t, df in dfs.items()}
 
-        def shard_all(pdf: pd.DataFrame) -> pd.DataFrame:
-            return _wand.score_shard_matched(pdf, idfs, avgdl, k1, b, groups,
+        def shard_all(rows):
+            return _wand.score_shard_matched(rows, idfs, avgdl, k1, b, groups,
                                              quantize=quantize)
 
         return self._per_shard(dfs, shard_all, TOPK_SCHEMA)
@@ -370,8 +377,8 @@ class InvertedIndex:
             return self._empty("doc_id long, score_u long")
         units = {t: qus[t] for t in dfs}
 
-        def shard_sparse(pdf: pd.DataFrame) -> pd.DataFrame:
-            return _wand.score_shard_weighted_tf(pdf, units)
+        def shard_sparse(rows):
+            return _wand.score_shard_weighted_tf(rows, units)
 
         return self._per_shard(dfs, shard_sparse, "doc_id long, score_u long")
 
@@ -422,8 +429,8 @@ class InvertedIndex:
         if not subquery_idfs:
             return self._empty()
 
-        def shard_dismax(pdf: pd.DataFrame) -> pd.DataFrame:
-            return _wand.score_shard_dismax(pdf, subquery_idfs, tie_breaker,
+        def shard_dismax(rows):
+            return _wand.score_shard_dismax(rows, subquery_idfs, tie_breaker,
                                             k, avgdl, k1, b)
 
         return self._per_shard(dfs, shard_dismax, TOPK_SCHEMA, k)
@@ -448,8 +455,8 @@ class InvertedIndex:
         }
         query_idfs = {qid: m for qid, m in query_idfs.items() if m}
 
-        def shard_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-            return _wand.score_shard_batch(pdf, query_idfs, k, avgdl, k1, b)
+        def shard_batch(rows):
+            return _wand.score_shard_batch(rows, query_idfs, k, avgdl, k1, b)
 
         return self._per_shard(dfs, shard_batch, "query_id long, doc_id long, score double",
                                k, per_query=True)
@@ -475,8 +482,8 @@ class InvertedIndex:
         # idf sum in PHRASE order (duplicates counted), matching match_phrase_df
         idf_sum = sum(bm25_idf(dfs[t], self.n_docs) for t in terms)
 
-        def shard_phrase(pdf: pd.DataFrame) -> pd.DataFrame:
-            return _pos.score_shard_phrase(pdf, terms, idf_sum, k, avgdl, k1, b)
+        def shard_phrase(rows):
+            return _pos.score_shard_phrase(rows, terms, idf_sum, k, avgdl, k1, b)
 
         return self._per_shard(uniq, shard_phrase, TOPK_SCHEMA, k)
 
@@ -514,8 +521,8 @@ class InvertedIndex:
         idf_sum = sum(bm25_idf(dfs[t], self.n_docs) for t in exact) \
             + bm25_idf(df_prefix, self.n_docs)
 
-        def shard_phrase(pdf: pd.DataFrame) -> pd.DataFrame:
-            return _pos.score_shard_phrase(pdf, exact, idf_sum, k, avgdl, k1, b,
+        def shard_phrase(rows):
+            return _pos.score_shard_phrase(rows, exact, idf_sum, k, avgdl, k1, b,
                                            last_terms=expansion)
 
         wanted = sorted(set(exact) | set(expansion))
@@ -538,8 +545,8 @@ class InvertedIndex:
         # idf sum in CLAUSE order (first + second), matching span_near_df
         idf_sum = bm25_idf(dfs[first], self.n_docs) + bm25_idf(dfs[second], self.n_docs)
 
-        def shard_span(pdf: pd.DataFrame) -> pd.DataFrame:
-            return _pos.score_shard_span_near(pdf, first, second, int(slop),
+        def shard_span(rows):
+            return _pos.score_shard_span_near(rows, first, second, int(slop),
                                               idf_sum, k, avgdl, k1, b)
 
         return self._per_shard(sorted({first, second}), shard_span, TOPK_SCHEMA, k)
@@ -558,8 +565,8 @@ class InvertedIndex:
         avgdl, k1, b = self.bm25
         idf = bm25_idf(dfs[term], self.n_docs)
 
-        def shard(pdf: pd.DataFrame) -> pd.DataFrame:
-            return _pos.score_shard_span_first(pdf, term, int(end), idf, k,
+        def shard(rows):
+            return _pos.score_shard_span_first(rows, term, int(end), idf, k,
                                                avgdl, k1, b)
 
         return self._per_shard([term], shard, TOPK_SCHEMA, k)
@@ -579,8 +586,8 @@ class InvertedIndex:
         # contribute df=0 idf like the DF scorer's corpus pass)
         idf_sum = sum(bm25_idf(dfs.get(t, 0), self.n_docs) for t in terms)
 
-        def shard(pdf: pd.DataFrame) -> pd.DataFrame:
-            return _wand.score_shard_span_or(pdf, idf_sum, k, avgdl, k1, b)
+        def shard(rows):
+            return _wand.score_shard_span_or(rows, idf_sum, k, avgdl, k1, b)
 
         return self._per_shard(dfs, shard, TOPK_SCHEMA, k)
 
@@ -598,8 +605,8 @@ class InvertedIndex:
         avgdl, k1, b = self.bm25
         idf = bm25_idf(dfs[include], self.n_docs)
 
-        def shard(pdf: pd.DataFrame) -> pd.DataFrame:
-            return _pos.score_shard_span_not(pdf, include, exclude, int(pre),
+        def shard(rows):
+            return _pos.score_shard_span_not(rows, include, exclude, int(pre),
                                              int(post), idf, k, avgdl, k1, b)
 
         return self._per_shard(sorted({include, exclude}), shard, TOPK_SCHEMA, k)
@@ -628,8 +635,8 @@ class InvertedIndex:
         idf_sum = idf_u / 1e6
         terms = [r["term"] for r in exp_rows]
 
-        def shard(pdf: pd.DataFrame) -> pd.DataFrame:
-            return _wand.score_shard_span_or(pdf, idf_sum, k, avgdl, k1, b)
+        def shard(rows):
+            return _wand.score_shard_span_or(rows, idf_sum, k, avgdl, k1, b)
 
         return self._per_shard(terms, shard, TOPK_SCHEMA, k)
 
@@ -655,8 +662,8 @@ class InvertedIndex:
                    else bm25_idf(dfs[first], self.n_docs)
                    + bm25_idf(dfs[second], self.n_docs))
 
-        def shard(pdf: pd.DataFrame) -> pd.DataFrame:
-            return _pos.score_shard_span_contain(pdf, first, second, little,
+        def shard(rows):
+            return _pos.score_shard_span_contain(rows, first, second, little,
                                                  int(slop), within, idf_sum, k,
                                                  avgdl, k1, b)
 
@@ -690,8 +697,8 @@ class InvertedIndex:
         avgdl, k1, b = self.bm25
         idf_sum = sum(bm25_idf(dfs[t], self.n_docs) for t in terms)
 
-        def shard(pdf: pd.DataFrame) -> pd.DataFrame:
-            return _pos.score_shard_intervals(pdf, terms, int(max_gaps),
+        def shard(rows):
+            return _pos.score_shard_intervals(rows, terms, int(max_gaps),
                                               bool(ordered), idf_sum, k,
                                               avgdl, k1, b)
 

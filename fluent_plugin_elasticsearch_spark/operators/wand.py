@@ -3,32 +3,34 @@
 skipping) — the ES-side scoring the reference invokes via `client.search`
 (out_elasticsearch.rb:957, in_elasticsearch.rb:275), implemented natively.
 
-Every kernel takes one shard's posting blocks of the query terms as a
-pandas frame and returns that shard's local result; the caller merges the
-shards into the global top-k (search.InvertedIndex._per_shard). The same
-kernel runs on either of two paths:
+Every kernel takes one shard's posting blocks of the query terms and
+returns that shard's local result as a dict of typed numpy columns; the
+caller merges the shards into the global top-k (search.InvertedIndex.
+_per_shard). The rows come from either of two paths:
 
-* resident — on a warmed index, in-process on the driver, over the rows
-  taken from the shard's Arrow table in memory (about the postings' Arrow
-  ``nbytes``: 6.8 MB for the 16k-doc perfbench index), with no Spark job;
-* Spark — on an unwarmed index, inside ``applyInPandas`` groups keyed by
-  shard: postings.filter(term ∈ query) → groupBy(shard) → kernel.
+* resident — on a warmed index, in-process on the driver: the numpy
+  columns taken from the shard's Arrow table in memory, with no Spark
+  job and no pandas object;
+* Spark — on an unwarmed index, the pandas frame ``applyInPandas`` hands
+  each shard group (postings.filter(term ∈ query) → groupBy(shard)).
 
-Work per shard is proportional to the query terms' posting data only (doc
-lengths are inlined in the blocks, so no doc_stats join at query time).
-The blocks' columns are laid out in the operators/codec.py header; every
-kernel reads them through codec.decode_postings, and scores with the one
-BM25 tf-factor ``_tfn`` the build also uses for ``max_tfn``. Kernels sort
-their rows by (term, first_doc) first, so a result does not depend on the
-order the rows arrive in (applyInPandas does not order them).
+``_rows`` turns either into the one row type the kernels read: numpy
+columns in (term, first_doc) order, so a result does not depend on the
+order the rows arrive in, with per-row term codes for every term→value
+lookup. Work per shard is proportional to the query terms' posting data
+only (doc lengths are inlined in the blocks). The blocks' columns are
+laid out in the operators/codec.py header; every kernel reads them
+through codec.decode_postings, and scores with the one BM25 tf-factor
+``_tfn`` the build also uses for ``max_tfn``.
 
 Tie-break everywhere: (score desc, doc_id asc) — rank-identical contract.
 """
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
-import pandas as pd
 
 from .codec import Postings, decode_postings
 
@@ -36,10 +38,12 @@ EPS = 1e-12  # conservative slack on float upper bounds (sum-order slop)
 
 TOPK_COLS = {"doc_id": "int64", "score": "float64"}
 
+Columns = dict[str, np.ndarray]  # a kernel's result: column name → typed array
 
-def _empty(cols: dict[str, str] = TOPK_COLS) -> pd.DataFrame:
+
+def _empty(cols: dict[str, str] = TOPK_COLS) -> Columns:
     """A kernel's typed empty result."""
-    return pd.DataFrame({c: pd.Series([], dtype=t) for c, t in cols.items()})
+    return {c: np.empty(0, dtype=t) for c, t in cols.items()}
 
 
 def _tfn(tf: np.ndarray, dl: np.ndarray, avgdl: float, k1: float, b: float,
@@ -54,12 +58,34 @@ def _tfn(tf: np.ndarray, dl: np.ndarray, avgdl: float, k1: float, b: float,
     return weight * (k1 + 1.0) * tff / (tff + k1 * (1.0 - b + b * dl.astype(np.float64) / avgdl))
 
 
-def _decode(pdf: pd.DataFrame, positions: bool = False) -> tuple[pd.DataFrame, Postings]:
+class Rows(NamedTuple):
     """A shard's posting rows in (term, first_doc) order — the order every
-    per-doc float sum follows, whatever order the rows arrived in — and
-    their decoded postings."""
-    pdf = pdf.sort_values(["term", "first_doc"], kind="stable", ignore_index=True)
-    return pdf, decode_postings(pdf, positions=positions)
+    per-doc float sum follows, whatever order the rows arrived in."""
+
+    cols: dict[str, np.ndarray]  # every row column, numpy, in that order
+    terms: np.ndarray  # the distinct terms, ascending
+    code: np.ndarray  # each row's index into ``terms``
+
+    def per_row(self, by_term: dict, dtype) -> np.ndarray:
+        """``by_term`` (term → value, holding every row's term) per row."""
+        return np.array([by_term[t] for t in self.terms], dtype=dtype)[self.code]
+
+
+def _rows(rows) -> Rows:
+    """The one row normaliser: ``rows`` is the pandas frame applyInPandas
+    hands a kernel, or the column mapping a warmed index takes from its
+    Arrow table (search._ResidentPostings.blocks). One np.unique codes
+    the terms and one stable lexsort over (code, first_doc) orders the
+    rows."""
+    terms, code = np.unique(np.asarray(rows["term"], dtype=object), return_inverse=True)
+    order = np.lexsort((np.asarray(rows["first_doc"]), code))
+    return Rows({c: np.asarray(rows[c])[order] for c in rows}, terms, code[order])
+
+
+def _decode(rows, positions: bool = False) -> tuple[Rows, Postings]:
+    """A shard's rows (``_rows``) and their decoded postings."""
+    r = _rows(rows)
+    return r, decode_postings(r.cols, positions=positions)
 
 
 def _runs(ids: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -91,7 +117,9 @@ def _top(ids: np.ndarray, scores: np.ndarray, k: int) -> tuple[np.ndarray, np.nd
     at or above the k-th score (argpartition threshold): docs tied at the
     boundary must survive so the lexsort can pick the smallest doc_ids
     (dropping them returned larger ids and broke the rank-identity
-    contract)."""
+    contract). ``k <= 0`` (ES ``size: 0``) keeps no row."""
+    if k <= 0:
+        return ids[:0], scores[:0]
     if ids.size > k:
         part = np.argpartition(-scores, k - 1)
         mask = scores >= scores[part[:k]].min()
@@ -100,27 +128,27 @@ def _top(ids: np.ndarray, scores: np.ndarray, k: int) -> tuple[np.ndarray, np.nd
     return ids[order], scores[order]
 
 
-def _topk(ids: np.ndarray, scores: np.ndarray, k: int) -> pd.DataFrame:
+def _topk(ids: np.ndarray, scores: np.ndarray, k: int) -> Columns:
     ids, scores = _top(ids, scores, k)
-    return pd.DataFrame({"doc_id": ids, "score": scores})
+    return {"doc_id": ids, "score": scores}
 
 
 def _span_topk(doc_ids: np.ndarray, sf: np.ndarray, dl: np.ndarray,
                idf_sum: float, k: int, avgdl: float, k1: float,
-               b: float) -> pd.DataFrame:
+               b: float) -> Columns:
     """Span-frequency BM25 (tf = sf, one saturation with the summed clause
     idfs), local top-k — the tail of span_or and the positional kernels."""
     return _topk(doc_ids, _tfn(sf, dl, avgdl, k1, b, idf_sum), k)
 
 
-def _per_posting(pdf: pd.DataFrame, p: Postings, by_term: dict, dtype) -> np.ndarray:
+def _per_posting(r: Rows, p: Postings, by_term: dict, dtype) -> np.ndarray:
     """``by_term`` (term → value) per posting of the decoded rows."""
-    return np.repeat(pdf["term"].map(by_term).to_numpy(dtype=dtype), p.n)
+    return np.repeat(r.per_row(by_term, dtype), p.n)
 
 
-def score_shard_exhaustive(pdf: pd.DataFrame, idfs: dict[str, float], k: int,
+def score_shard_exhaustive(rows, idfs: dict[str, float], k: int,
                            avgdl: float, k1: float, b: float,
-                           msm: int = 1) -> pd.DataFrame:
+                           msm: int = 1) -> Columns:
     """Decode every block of the query terms in this shard, accumulate BM25
     fully vectorized (_groupsum: stable argsort + add.reduceat), return
     local top-k. This is the throughput path (no per-doc Python).
@@ -132,10 +160,10 @@ def score_shard_exhaustive(pdf: pd.DataFrame, idfs: dict[str, float], k: int,
     must run BEFORE top-k (not after WAND): block-max skipping ranks
     unqualified docs too, so a post-filter could return < k or wrong
     members."""
-    if len(pdf) == 0:
+    if len(rows["n_docs"]) == 0:
         return _empty()
-    pdf, p = _decode(pdf)
-    contrib = _per_posting(pdf, p, idfs, np.float64) * _tfn(p.tfs, p.dls, avgdl, k1, b)
+    r, p = _decode(rows)
+    contrib = _per_posting(r, p, idfs, np.float64) * _tfn(p.tfs, p.dls, avgdl, k1, b)
     runs = _runs(p.ids)
     uniq, scores = _groupsum(p.ids, contrib, runs)
     if msm > 1:
@@ -144,16 +172,16 @@ def score_shard_exhaustive(pdf: pd.DataFrame, idfs: dict[str, float], k: int,
     return _topk(uniq, scores, k)
 
 
-def score_shard_span_or(pdf: pd.DataFrame, idf_sum: float, k: int,
-                        avgdl: float, k1: float, b: float) -> pd.DataFrame:
+def score_shard_span_or(rows, idf_sum: float, k: int, avgdl: float, k1: float,
+                        b: float) -> Columns:
     """span_or over single-term clauses for one shard: span frequency =
     TOTAL occurrences of any clause term (Σ tf across the doc's matched
     postings), ONE saturation with the summed clause idfs — the span
     contract (relevance.span_or_df), not the per-term BM25 sum. tf
     postings only; no positions needed. Returns local top-k."""
-    if len(pdf) == 0:
+    if len(rows["n_docs"]) == 0:
         return _empty()
-    pdf, p = _decode(pdf)
+    r, p = _decode(rows)
     runs = _runs(p.ids)
     uniq, sf = _groupsum(p.ids, p.tfs.astype(np.float64), runs)
     # dl per unique doc: first posting's dl (all equal per doc)
@@ -161,8 +189,7 @@ def score_shard_span_or(pdf: pd.DataFrame, idf_sum: float, k: int,
     return _span_topk(uniq, sf, dl, idf_sum, k, avgdl, k1, b)
 
 
-def score_shard_weighted_tf(pdf: pd.DataFrame,
-                            weight_units: dict[str, int]) -> pd.DataFrame:
+def score_shard_weighted_tf(rows, weight_units: dict[str, int]) -> Columns:
     """Sparse-vector serving kernel: score_u(d) = Σ_t units(t) · tf · 1000
     over the query's tokens — the postings-bounded form of
     relevance.sparse_vector_df's BoW-tf scorer (identical integer
@@ -170,19 +197,19 @@ def score_shard_weighted_tf(pdf: pd.DataFrame,
     int64 per-(term,doc) products summed per doc). No corpus stats, no
     float path anywhere; work is proportional to the query terms'
     posting data only. Returns every doc with score_u > 0."""
-    if len(pdf) == 0:
+    if len(rows["n_docs"]) == 0:
         return _empty({"doc_id": "int64", "score_u": "int64"})
-    pdf, p = _decode(pdf)
-    contrib = _per_posting(pdf, p, weight_units, np.int64) * p.tfs * 1000
+    r, p = _decode(rows)
+    contrib = _per_posting(r, p, weight_units, np.int64) * p.tfs * 1000
     uniq, scores = _groupsum(p.ids, contrib)
     keep = scores > 0
-    return pd.DataFrame({"doc_id": uniq[keep], "score_u": scores[keep]})
+    return {"doc_id": uniq[keep], "score_u": scores[keep]}
 
 
-def score_shard_matched(pdf: pd.DataFrame, idfs: dict[str, float],
+def score_shard_matched(rows, idfs: dict[str, float],
                         avgdl: float, k1: float, b: float,
                         groups: list[list[str]] | None = None,
-                        quantize: bool = False) -> pd.DataFrame:
+                        quantize: bool = False) -> Columns:
     """Score EVERY doc in this shard matching >= 1 query term — no top-k
     cut. This is the postings-bounded serving primitive behind the
     index-backed multi_match / combined_fields / query_string paths:
@@ -198,10 +225,10 @@ def score_shard_matched(pdf: pd.DataFrame, idfs: dict[str, float],
     same reduceat pass as the scores, so the gate is O(postings) with no
     Python loop over docs; > 64 distinct terms raises (loudly) rather
     than silently truncating."""
-    if len(pdf) == 0:
+    if len(rows["n_docs"]) == 0:
         return _empty()
-    pdf, p = _decode(pdf)
-    contrib = _per_posting(pdf, p, idfs, np.float64) * _tfn(p.tfs, p.dls, avgdl, k1, b)
+    r, p = _decode(rows)
+    contrib = _per_posting(r, p, idfs, np.float64) * _tfn(p.tfs, p.dls, avgdl, k1, b)
     if quantize:
         # per-(term, doc) integer quantization BEFORE the per-doc sum: an
         # exact int64 sum is partition- and order-independent, so callers
@@ -215,7 +242,7 @@ def score_shard_matched(pdf: pd.DataFrame, idfs: dict[str, float],
         if len(bit) > 64:
             raise ValueError(
                 f"query_string gate supports <= 64 distinct terms, got {len(bit)}")
-        masks = np.uint64(1) << _per_posting(pdf, p, bit, np.uint64)
+        masks = np.uint64(1) << _per_posting(r, p, bit, np.uint64)
         docmask = np.bitwise_or.reduceat(masks[runs[0]], runs[1])
         keep = np.zeros(uniq.size, dtype=bool)
         for g in groups:
@@ -228,44 +255,35 @@ def score_shard_matched(pdf: pd.DataFrame, idfs: dict[str, float],
                 gm |= np.uint64(1) << np.uint64(bit[t])
             keep |= (docmask & gm) == gm
         uniq, scores = uniq[keep], scores[keep]
-    return pd.DataFrame({"doc_id": uniq, "score": scores})
+    return {"doc_id": uniq, "score": scores}
 
 
-def _term_luts(pdf: pd.DataFrame, p: Postings, term_maps):
+def _term_luts(r: Rows, p: Postings, term_maps):
     """Per-posting values of each term→value map in ``term_maps`` (NaN
     where the map lacks the posting's term), skipping maps that hit none
-    of the shard's terms: yields (map index, values). Terms are factorized
-    ONCE per shard, so each map costs one integer LUT gather — no np.isin
-    string scans, no per-element Python calls."""
-    blk_codes, uniq_terms = pd.factorize(pdf["term"])
-    codes = np.repeat(blk_codes, p.n)
-    term_pos = {t: i for i, t in enumerate(uniq_terms)}
+    of the shard's terms: yields (map index, values). Each map costs one
+    lookup per distinct term and one integer gather over the row term
+    codes — no np.isin string scans, no per-element Python calls."""
+    codes = np.repeat(r.code, p.n)
     for j, m in enumerate(term_maps):
-        lut = np.full(len(uniq_terms), np.nan, dtype=np.float64)
-        hit = False
-        for t, v in m.items():
-            i = term_pos.get(t)
-            if i is not None:
-                lut[i] = v
-                hit = True
-        if hit:
-            yield j, lut[codes]
+        if any(t in m for t in r.terms):
+            yield j, np.array([m.get(t, np.nan) for t in r.terms], dtype=np.float64)[codes]
 
 
-def score_shard_batch(pdf: pd.DataFrame, query_terms: dict[int, dict[str, float]], k: int,
-                      avgdl: float, k1: float, b: float) -> pd.DataFrame:
+def score_shard_batch(rows, query_terms: dict[int, dict[str, float]], k: int,
+                      avgdl: float, k1: float, b: float) -> Columns:
     """Batched multi-query exhaustive scoring for one shard: decode each
     query term's blocks once, score every query that uses the term, local
     top-k per query. This is the offline-query-set mode — one pass over the
     union of the queries' posting data serves the whole set."""
     cols = {"query_id": "int64", **TOPK_COLS}
-    if len(pdf) == 0:
+    if len(rows["n_docs"]) == 0:
         return _empty(cols)
-    pdf, p = _decode(pdf)
+    r, p = _decode(rows)
     tfn = _tfn(p.tfs, p.dls, avgdl, k1, b)
     qids = sorted(query_terms)
     out_q, out_d, out_s = [], [], []
-    for j, idf_per_posting in _term_luts(pdf, p, [query_terms[q] for q in qids]):
+    for j, idf_per_posting in _term_luts(r, p, [query_terms[q] for q in qids]):
         mask = ~np.isnan(idf_per_posting)
         ids, scores = _top(*_groupsum(p.ids[mask], tfn[mask] * idf_per_posting[mask]), k)
         out_q.append(np.full(ids.size, qids[j], dtype=np.int64))
@@ -273,10 +291,8 @@ def score_shard_batch(pdf: pd.DataFrame, query_terms: dict[int, dict[str, float]
         out_s.append(scores)
     if not out_q:
         return _empty(cols)
-    return pd.DataFrame(
-        {"query_id": np.concatenate(out_q), "doc_id": np.concatenate(out_d),
-         "score": np.concatenate(out_s)}
-    )
+    return {"query_id": np.concatenate(out_q), "doc_id": np.concatenate(out_d),
+            "score": np.concatenate(out_s)}
 
 
 # Blocks gathered per essential term per scoring window. Small windows
@@ -292,8 +308,8 @@ NB_PER_TERM = 32
 NE_MIN_FRACTION = 0.2
 
 
-def score_shard_wand(pdf: pd.DataFrame, idfs: dict[str, float], k: int,
-                     avgdl: float, k1: float, b: float) -> pd.DataFrame:
+def score_shard_wand(rows, idfs: dict[str, float], k: int,
+                     avgdl: float, k1: float, b: float) -> Columns:
     """Top-k BM25 for one shard with MaxScore/block-max pruning — fully
     vectorized, block-at-a-time (the round-2 per-doc cursor DAAT loop's
     Python constant set head-term latency; this kernel has no per-doc or
@@ -328,31 +344,26 @@ def score_shard_wand(pdf: pd.DataFrame, idfs: dict[str, float], k: int,
     order, so a pruned doc that merely TIES θ would lose the (score desc,
     doc_id asc) tie-break anyway — the split prunes at ≤ θ−EPS, strictly
     below θ."""
-    if len(pdf) == 0:
+    if len(rows["n_docs"]) == 0 or k <= 0:
         return _empty()
-    pdf = pdf.sort_values(["term", "first_doc"], kind="stable", ignore_index=True)
-    firsts = pdf["first_doc"].to_numpy(dtype=np.int64)
-    lasts = pdf["last_doc"].to_numpy(dtype=np.int64)
-    nblk = pdf["n_docs"].to_numpy(dtype=np.int64)
-    idf_blk = pdf["term"].map(idfs).to_numpy(dtype=np.float64)
-    ub_blk = idf_blk * pdf["max_tfn"].to_numpy(dtype=np.float64)
-    # the block columns as lists, so a window's selection decodes without
-    # building a frame
-    rows = {c: pdf[c].tolist() for c in ("docs_enc", "tfs_enc", "dls_enc")}
-    rows["n_docs"] = nblk
+    r = _rows(rows)
+    firsts = np.asarray(r.cols["first_doc"], dtype=np.int64)
+    lasts = np.asarray(r.cols["last_doc"], dtype=np.int64)
+    nblk = np.asarray(r.cols["n_docs"], dtype=np.int64)
+    idf_blk = r.per_row(idfs, np.float64)
+    ub_blk = idf_blk * np.asarray(r.cols["max_tfn"], dtype=np.float64)
 
     def decode(sel: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         """(doc ids, bm25 contributions) of the selected blocks, decoded
         in ascending block (= term-sorted) order in one segmented pass."""
-        p = decode_postings(rows, sel)
+        p = decode_postings(r.cols, sel)
         return p.ids, np.repeat(idf_blk[sel], p.n) * _tfn(p.tfs, p.dls, avgdl, k1, b)
 
-    # per-term contiguous block slices (pdf is term-sorted; within a term
-    # blocks are first_doc-sorted and non-overlapping)
-    codes = np.asarray(pd.factorize(pdf["term"])[0])
-    n_terms = int(codes[-1]) + 1
-    t_start = np.searchsorted(codes, np.arange(n_terms), side="left")
-    t_end = np.searchsorted(codes, np.arange(n_terms), side="right")
+    # per-term contiguous block slices (the rows are term-sorted; within a
+    # term blocks are first_doc-sorted and non-overlapping)
+    n_terms = r.terms.size
+    t_start = np.searchsorted(r.code, np.arange(n_terms), side="left")
+    t_end = np.searchsorted(r.code, np.arange(n_terms), side="right")
     term_ub = np.array([ub_blk[t_start[t]:t_end[t]].max() for t in range(n_terms)])
     ub_order = np.argsort(term_ub, kind="stable")  # ascending UB
     ub_cum = np.cumsum(term_ub[ub_order])
@@ -469,24 +480,24 @@ def score_shard_wand(pdf: pd.DataFrame, idfs: dict[str, float], k: int,
     return _topk(best_ids, best_scores, k)
 
 
-def score_shard_dismax(pdf: pd.DataFrame, subquery_idfs: list[dict[str, float]],
+def score_shard_dismax(rows, subquery_idfs: list[dict[str, float]],
                        tie_breaker: float, k: int,
-                       avgdl: float, k1: float, b: float) -> pd.DataFrame:
+                       avgdl: float, k1: float, b: float) -> Columns:
     """DisMax shard kernel: one decode of the UNION of all subqueries'
     posting blocks, one per-subquery accumulation over the SAME factorized
     doc-id domain, then the exact Lucene DisjunctionMax combination
     max + tie_breaker * (sum - max) per doc. Exact by construction — every
     matching doc in the shard is scored for every subquery before the
     combined local top-k (no per-list over-fetch heuristics)."""
-    if len(pdf) == 0:
+    if len(rows["n_docs"]) == 0:
         return _empty()
-    pdf, p = _decode(pdf)
+    r, p = _decode(rows)
     tfn = _tfn(p.tfs, p.dls, avgdl, k1, b)
     uniq, inv = np.unique(p.ids, return_inverse=True)
     best = np.zeros(uniq.size, dtype=np.float64)
     summed = np.zeros(uniq.size, dtype=np.float64)
     any_hit = False
-    for _, idf_per_posting in _term_luts(pdf, p, subquery_idfs):
+    for _, idf_per_posting in _term_luts(r, p, subquery_idfs):
         any_hit = True
         mask = ~np.isnan(idf_per_posting)
         scores = np.zeros(uniq.size, dtype=np.float64)

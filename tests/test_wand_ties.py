@@ -9,10 +9,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from fluent_plugin_elasticsearch_spark.operators import positions, wand
 from fluent_plugin_elasticsearch_spark.operators.codec import delta_encode, varint_encode
+from fluent_plugin_elasticsearch_spark.operators.search import row_columns
 from fluent_plugin_elasticsearch_spark.operators.wand import (
     _tfn,
     score_shard_batch,
@@ -53,7 +55,7 @@ def tied_pdf() -> pd.DataFrame:
 
 
 def test_exhaustive_keeps_boundary_ties(tied_pdf):
-    got = score_shard_exhaustive(tied_pdf, {"t": 1.5}, 5, AVGDL, K1, B)
+    got = pd.DataFrame(score_shard_exhaustive(tied_pdf, {"t": 1.5}, 5, AVGDL, K1, B))
     assert got["doc_id"].tolist() == [100, 101, 102, 103, 104]
     assert got["score"].nunique() == 1
 
@@ -89,9 +91,9 @@ def test_batch_multiquery_factorized_lut(tied_pdf):
                                  np.full(10, 1, dtype=np.int64),
                                  np.full(10, 10, dtype=np.int64)))
     pdf = pd.concat([tied_pdf, extra], ignore_index=True)
-    got = score_shard_batch(
+    got = pd.DataFrame(score_shard_batch(
         pdf, {1: {"t": 1.0}, 2: {"u": 2.0}, 3: {"zzz": 9.9}, 4: {"t": 1.0, "u": 2.0}},
-        3, AVGDL, K1, B)
+        3, AVGDL, K1, B))
     by_q = {q: g["doc_id"].tolist() for q, g in got.groupby("query_id")}
     assert by_q[1] == [100, 101, 102]
     assert by_q[2] == [500, 501, 502]
@@ -105,9 +107,10 @@ def test_batch_multiquery_factorized_lut(tied_pdf):
 
 
 # --- order invariance -------------------------------------------------------
-# applyInPandas hands a kernel its shard's block rows in no particular order,
-# while the resident (warmed) path hands them over sorted by (term,
-# first_doc): every kernel must return the same frame, bit for bit, either way.
+# applyInPandas hands a kernel its shard's block rows as a pandas frame in no
+# particular order, while the resident (warmed) path hands them over as the
+# numpy column mapping taken from an Arrow table: every kernel must return
+# the same columns, bit for bit, whatever the form and order of its rows.
 
 VOCAB = ["a", "b", "c", "d", "e"]
 
@@ -147,7 +150,13 @@ IDFS = {t: 0.3 + 0.4 * i for i, t in enumerate(VOCAB)}
 WAND_IDFS = {"a": 0.05, "b": 0.1, "c": 1.5, "d": 2.0, "e": 3.0}
 TOPK = {"doc_id": "int64", "score": "float64"}
 
-# name → (kernel(pdf, avgdl), result columns)
+def _only(rows, term: str):
+    """``rows`` (a frame or a column mapping) cut to ``term``'s blocks."""
+    keep = np.asarray(rows["term"]) == term
+    return rows[keep] if isinstance(rows, pd.DataFrame) else {c: v[keep] for c, v in rows.items()}
+
+
+# name → (kernel(rows, avgdl), result columns)
 KERNELS = {
     "exhaustive": (lambda p, a: score_shard_exhaustive(p, IDFS, 7, a, K1, B), TOPK),
     "exhaustive_msm": (lambda p, a: score_shard_exhaustive(p, IDFS, 7, a, K1, B, 3), TOPK),
@@ -167,7 +176,7 @@ KERNELS = {
         p, ["a"], 2.0, 7, a, K1, B, last_terms=["b", "c"]), TOPK),
     "span_near": (lambda p, a: positions.score_shard_span_near(p, "b", "a", 2, 2.0, 7, a, K1, B), TOPK),
     "span_first": (lambda p, a: positions.score_shard_span_first(
-        p[p["term"] == "c"], "c", 5, 1.1, 7, a, K1, B), TOPK),
+        _only(p, "c"), "c", 5, 1.1, 7, a, K1, B), TOPK),
     "span_not": (lambda p, a: positions.score_shard_span_not(p, "a", "b", 1, 1, 1.1, 7, a, K1, B), TOPK),
     "intervals_ordered": (lambda p, a: positions.score_shard_intervals(
         p, ["a", "b", "c"], 4, True, 2.0, 7, a, K1, B), TOPK),
@@ -186,27 +195,35 @@ def test_order_invariance_covers_every_kernel():
     assert kernels <= covered
 
 
+def _resident(pdf: pd.DataFrame) -> dict:
+    """The rows as a warmed index hands them to a kernel: the column
+    mapping search._ResidentPostings.blocks builds from an Arrow table."""
+    return row_columns(pa.Table.from_pandas(pdf, preserve_index=False))
+
+
 @pytest.mark.parametrize("name", sorted(KERNELS))
 def test_kernel_ignores_row_order(name, monkeypatch):
     # one block per WAND window, so the sweep crosses many windows
     monkeypatch.setattr(wand, "NB_PER_TERM", 1)
     kernel, _ = KERNELS[name]
     pdf, avgdl = _positional_blocks()
-    want = kernel(pdf, avgdl)
+    want = pd.DataFrame(kernel(pdf, avgdl))
     assert len(want) > 0
     for seed in range(3):
-        got = kernel(pdf.sample(frac=1.0, random_state=seed), avgdl)
-        pd.testing.assert_frame_equal(got.reset_index(drop=True),
-                                      want.reset_index(drop=True), check_exact=True)
+        shuffled = pdf.sample(frac=1.0, random_state=seed)
+        for rows in (shuffled, _resident(shuffled)):
+            got = pd.DataFrame(kernel(rows, avgdl))
+            pd.testing.assert_frame_equal(got, want, check_exact=True)
 
 
 @pytest.mark.parametrize("name", sorted(KERNELS))
 def test_kernel_on_zero_rows_returns_typed_empty_frame(name):
     kernel, cols = KERNELS[name]
     pdf, avgdl = _positional_blocks()
-    got = kernel(pdf.iloc[:0], avgdl)
-    assert len(got) == 0
-    assert {c: str(t) for c, t in got.dtypes.items()} == cols
+    for rows in (pdf.iloc[:0], _resident(pdf.iloc[:0])):
+        got = pd.DataFrame(kernel(rows, avgdl))
+        assert len(got) == 0
+        assert {c: str(t) for c, t in got.dtypes.items()} == cols
 
 
 def test_span_within_without_big_span_terms_is_empty():
@@ -214,6 +231,6 @@ def test_span_within_without_big_span_terms_is_empty():
     span: span_within matches nothing there (it used to index an empty
     key array)."""
     pdf, avgdl = _positional_blocks()
-    got = positions.score_shard_span_contain(pdf[pdf["term"] != "b"], "a", "b", "c", 3, True,
-                                             2.0, 7, avgdl, K1, B)
+    got = pd.DataFrame(positions.score_shard_span_contain(pdf[pdf["term"] != "b"], "a", "b", "c",
+                                                          3, True, 2.0, 7, avgdl, K1, B))
     assert len(got) == 0 and list(got.columns) == ["doc_id", "score"]

@@ -10,6 +10,8 @@ import sys
 import threading
 from contextlib import contextmanager
 
+import pandas as pd
+import pyarrow.pandas_compat
 from pyspark.sql import functions as F
 
 from fluent_plugin_elasticsearch_spark.operators.search import Hits, InvertedIndex, to_es_response
@@ -41,6 +43,27 @@ def _py4j_commands(spark):
         del client.send_command
 
 
+@contextmanager
+def _pandas_frames(monkeypatch):
+    """Record every pandas DataFrame this thread constructs and every
+    pyarrow ``Table.to_pandas`` it calls (both end in one of the two
+    patched functions)."""
+    made, caller = [], threading.get_ident()
+    init, to_frame = pd.DataFrame.__init__, pyarrow.pandas_compat.table_to_dataframe
+
+    def counting(fn, kind):
+        def wrapper(*args, **kwargs):
+            if threading.get_ident() == caller:
+                made.append(kind)
+            return fn(*args, **kwargs)
+        return wrapper
+
+    with monkeypatch.context() as m:
+        m.setattr(pd.DataFrame, "__init__", counting(init, "DataFrame"))
+        m.setattr(pyarrow.pandas_compat, "table_to_dataframe", counting(to_frame, "to_pandas"))
+        yield made
+
+
 def _typed(rows) -> list:
     """Rows as (field names, values, value types): equal only when the
     two results agree in field order, Python types and values."""
@@ -50,28 +73,33 @@ def _typed(rows) -> list:
 def _requests(idx: InvertedIndex) -> dict:
     out = {}
     for q in QUERIES:
-        for mode in ("auto", "wand", "exhaustive"):
-            out[q, mode] = _typed(idx.search(q, k=5, mode=mode).collect())
-        out[q, "phrase"] = _typed(idx.match_phrase(q, k=5).collect())
-    out["batch"] = sorted(_typed(idx.search_batch(dict(enumerate(QUERIES)), k=5).collect()))
+        for k in (5, 0):  # k=0 is ES size: 0, no hits
+            for mode in ("auto", "wand", "exhaustive"):
+                out[q, mode, k] = _typed(idx.search(q, k=k, mode=mode).collect())
+            out[q, "phrase", k] = _typed(idx.match_phrase(q, k=k).collect())
+    for k in (5, 0):
+        out["batch", k] = sorted(_typed(idx.search_batch(dict(enumerate(QUERIES)), k=k).collect()))
     out["es"] = to_es_response(idx.search("data query", k=5))
     return out
 
 
-def test_warm_queries_make_no_jvm_call(spark, pos_index):
+def test_warm_queries_make_no_jvm_call(spark, pos_index, monkeypatch):
     """search (auto, wand, exhaustive, an absent term), search_batch,
-    match_phrase and to_es_response on a warmed, term-cached index send
-    no command to the JVM, and their rows equal the unwarmed index's in
-    value, type and field order."""
+    match_phrase and to_es_response on a warmed, term-cached index, with
+    k=5 and k=0, send no command to the JVM and build no pandas frame,
+    and their rows equal the unwarmed index's in value, type and field
+    order."""
     warm_idx = InvertedIndex(spark, pos_index, cache_term_stats=True).warm()
-    with _py4j_commands(spark) as sent:
+    with _py4j_commands(spark) as sent, _pandas_frames(monkeypatch) as frames:
         got = _requests(warm_idx)
     assert sent == []
+    assert frames == []
     with _py4j_commands(spark) as sent:
         want = _requests(InvertedIndex(spark, pos_index))
     assert sent  # the unwarmed path's Spark calls are seen
     assert got == want
-    assert got["data query", "auto"] and got["zzznope", "auto"] == []
+    assert got["data query", "auto", 5] and got["zzznope", "auto", 5] == []
+    assert got["data query", "wand", 0] == [] and got["batch", 0] == []
     assert got["es"]["hits"]["total"]["value"] == 5
 
 
