@@ -85,9 +85,9 @@ def run_bench(cores: int, sf_dir: str, n_docs: int, out: dict | None = None) -> 
     res["index_build_docs_per_sec"] = round(n_docs / build_s, 1)
 
     # --- query latency (WAND), p50/p99 over the reference query set
-    # (serving mode: postings pinned in memory + term-stats cache, like an
+    # (serving mode: postings pinned in memory + the term dictionary, like an
     # ES node with page-cache-resident segments)
-    idx = InvertedIndex(spark, idx_dir, cache_term_stats=True).warm()
+    idx = InvertedIndex(spark, idx_dir).warm()
     lat = []
     for q in BENCH_QUERIES:  # cold-ish first pass (worker spin-up included)
         t0 = time.time()
@@ -126,8 +126,7 @@ def run_bench(cores: int, sf_dir: str, n_docs: int, out: dict | None = None) -> 
     build_index(spark, docs, url_idx_dir, id_col="doc_id", text_col="url",
                 tokenizer="unicode", n_shards=n_shards, n_salts=8)
     field_idx = {"text": idx,
-                 "url": InvertedIndex(spark, url_idx_dir,
-                                      cache_term_stats=True).warm()}
+                 "url": InvertedIndex(spark, url_idx_dir).warm()}
     mm_lat = []
     for _pass in range(2):
         for q in BENCH_QUERIES:
@@ -153,7 +152,7 @@ def run_bench(cores: int, sf_dir: str, n_docs: int, out: dict | None = None) -> 
         with_positions=True,
     )
     res["pos_index_build_sec"] = round(time.time() - t0, 3)
-    pidx = InvertedIndex(spark, pos_dir, cache_term_stats=True).warm()
+    pidx = InvertedIndex(spark, pos_dir).warm()
     ph_lat = []
     for _pass in range(2):
         for p in ["the bababa", "of the", "bababa the café", "madaba of"]:

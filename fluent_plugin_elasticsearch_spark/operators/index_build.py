@@ -51,7 +51,7 @@ onto an Iceberg table partitioned by ``shard``):
                                   max_tfn[, pos_enc])  sorted by
                                   (term, first_doc); codec.py header
     doc_stats/shard=K/*.parquet  (doc_id, doc_len[, url])
-    term_stats/*.parquet         (term, df)           sorted by term
+    term_stats/*.parquet         (term, df)           one file, sorted by term
     _tokenized/*.parquet         staging: the tokenizer output per doc
     _manifest/*.parquet          per-shard lineage + metrics rows
     _build_params.json           the settings the checkpoint was built with
@@ -404,24 +404,12 @@ def write_index(spark: SparkSession, out_dir: str, meta: dict, groups: list,
 
     # term stats: global df per term, derived from the written postings
     # (per-shard posting count per term sums to exact df) — no second
-    # tokenize/explode pass over the corpus.
-    ts = (
-        spark.read.parquet(os.path.join(out_dir, "postings"))
-        .groupBy("term")
-        .agg(F.sum("n_docs").alias("df"))
-    )
-    # Range partitioning gives term-range file pruning for the per-query
-    # pruned lookup mode, but its sampling pass executes the aggregation
-    # subtree twice — worth it only at cluster-scale vocabularies. Small
-    # indexes get ONE term-sorted file: row-group min/max stats give the
-    # same pruning granularity there, minus a whole job (A/B: 0.96 ->
-    # 0.63 s at the 100k-doc bench index).
-    if meta["n_shards"] >= 2 * spark.sparkContext.defaultParallelism:
-        ts = ts.repartitionByRange(max(1, meta["n_shards"] // 2), "term")
-    else:
-        ts = ts.repartition(1)
-    ts.sortWithinPartitions("term").write.mode("overwrite").parquet(
-        os.path.join(out_dir, "term_stats"))
+    # tokenize/explode pass over the corpus. One term-sorted file at every
+    # shard count: an open index reads it whole into its term dictionary.
+    (spark.read.parquet(os.path.join(out_dir, "postings"))
+     .groupBy("term").agg(F.sum("n_docs").alias("df"))
+     .repartition(1).sortWithinPartitions("term")
+     .write.mode("overwrite").parquet(os.path.join(out_dir, "term_stats")))
     with open(meta_path + ".tmp", "w") as f:
         json.dump(meta, f)
     os.replace(meta_path + ".tmp", meta_path)

@@ -17,12 +17,10 @@ way. ``collect()``, ``toPandas()`` and ``to_es_response`` read that
 table — no Spark job, no JVM call. A Spark DataFrame (a LocalTableScan
 over the table) is built only when the caller composes the result with
 Spark (a join, ``select``, ``F.broadcast``). Memory cost: about the
-postings' Arrow ``nbytes`` (6.8 MB for the 16k-doc perfbench index),
-plus one term→id dict over the vocabulary.
+postings' Arrow ``nbytes`` (6.8 MB for the 16k-doc perfbench index).
 
-Spark (unwarmed): one job per query
-    term_stats lookup (≤ query-term rows, parquet min/max pruned)
-  → postings.filter(term ∈ terms)            [scan limited to query terms]
+Spark (unwarmed): one job per query, started by ``collect()``
+    postings.filter(term ∈ terms)            [scan limited to query terms]
   → groupBy(shard).applyInPandas(kernel)      [WAND or exhaustive numpy]
   → global orderBy(score desc, doc_id asc).limit(k)   [TakeOrderedAndProject]
 
@@ -35,9 +33,11 @@ broadcast-joined back to ``docmap``/docs for materialization.
 
 from __future__ import annotations
 
+import bisect
 import json
 import math
 import os
+import re
 import threading
 
 import numpy as np
@@ -47,6 +47,7 @@ import pyarrow.compute as pc
 import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..textproc import bm25_idf, tokenize_simple, tokenize_unicode
 from . import positions as _pos
@@ -127,22 +128,66 @@ class Hits:
         return self._frame()[item]
 
 
+class TermDictionary:
+    """An index's vocabulary, read once from ``term_stats`` by pyarrow: the
+    terms in ascending order (Spark's byte order is Python's code-point
+    order), their dfs as Python ints and each term's position. Every df
+    and expansion comes from it, so building a query starts no Spark job."""
+
+    def __init__(self, term_stats_path: str):
+        table = pads.dataset(term_stats_path, format="parquet").to_table(
+            columns=["term", "df"]).sort_by("term")
+        self.terms: list[str] = table["term"].to_pylist()
+        self.dfs: list[int] = table["df"].to_pylist()
+        self.position = {t: i for i, t in enumerate(self.terms)}
+
+    def scan(self, head: str, limit: int, regex: re.Pattern | None = None) -> list[int]:
+        """Positions of the first ``limit`` terms that start with ``head``
+        (found by bisection) and fully match ``regex``, ascending."""
+        out = []
+        for i in range(bisect.bisect_left(self.terms, head), len(self.terms)):
+            if len(out) >= limit or not self.terms[i].startswith(head):
+                break
+            if regex is None or regex.fullmatch(self.terms[i]):
+                out.append(i)
+        return out
+
+
+def _like_regex(pattern: str) -> tuple[str, re.Pattern]:
+    """A SQL LIKE pattern as (its literal head, a full-match regex), by
+    Spark's rules: ``%`` any run, ``_`` one character, ``\\`` escapes
+    ``%``, ``_`` or itself and nothing else."""
+    tokens = re.findall(r"\\.?|.", pattern, re.DOTALL)  # escape pairs or single characters
+    if any(t[0] == "\\" and t[1:] not in ("%", "_", "\\") for t in tokens):
+        raise ValueError(f"invalid LIKE pattern {pattern!r}: the escape character "
+                         f"may precede only %, _ or itself")
+    wild = {"%": ".*", "_": "."}
+    n_head = next((i for i, t in enumerate(tokens) if t in wild), len(tokens))
+    head = "".join(t[-1] for t in tokens[:n_head])
+    regex = "".join(wild.get(t) or re.escape(t[-1]) for t in tokens)
+    return head, re.compile(regex, re.DOTALL)
+
+
 class _ResidentPostings:
     """A postings table held in driver memory: one Arrow table per shard,
     sorted by (term, first_doc), and each term's row range in it
-    (``starts[id]:starts[id + 1]`` for the term's id in ``term_ids``)."""
+    (``starts[i]:starts[i + 1]`` for the term at position ``i`` of the
+    index's ``TermDictionary``)."""
 
-    def __init__(self, postings_path: str):
+    def __init__(self, postings_path: str, vocab: TermDictionary):
         table = pads.dataset(postings_path, format="parquet",
                              partitioning="hive").to_table()
-        vocab = pc.unique(table["term"]).sort()
-        self.term_ids = {t: i for i, t in enumerate(vocab.to_pylist())}
+        self.vocab = vocab
+        value_set = pa.array(vocab.terms, pa.string())
         self.shards = []
         for s in sorted(pc.unique(table["shard"]).to_pylist()):
             part = table.filter(pc.equal(table["shard"], s)).sort_by(
                 [("term", "ascending"), ("first_doc", "ascending")])
-            ids = pc.index_in(part["term"], value_set=vocab).to_numpy()
-            self.shards.append((part, np.searchsorted(ids, np.arange(len(vocab) + 1))))
+            ids = pc.index_in(part["term"], value_set=value_set)
+            if ids.null_count:
+                raise ValueError(f"shard {s} has postings terms missing from term_stats")
+            self.shards.append((part, np.searchsorted(ids.to_numpy(),
+                                                      np.arange(len(vocab.terms) + 1))))
         del table
         pa.default_memory_pool().release_unused()
 
@@ -150,7 +195,8 @@ class _ResidentPostings:
         """Each shard's blocks of ``terms`` as numpy columns (row_columns)
         — no pandas frame; shards holding none of the terms are left
         out, as groupBy leaves them out."""
-        ids = sorted({self.term_ids[t] for t in terms if t in self.term_ids})
+        position = self.vocab.position
+        ids = sorted({position[t] for t in terms if t in position})
         if not ids:
             return []
         out = []
@@ -170,14 +216,11 @@ def row_columns(table: pa.Table) -> dict[str, np.ndarray]:
 class InvertedIndex:
     def __init__(self, spark: SparkSession, path: str,
                  cache_term_stats: bool = False):
-        """``cache_term_stats``: opt-in term→df cache — one parquet read at
-        open time saves one Spark job per query.
-
-        * ``True`` — plain driver dict. A Python str→int dict costs
-          ~100-200 B/entry, so this holds to ~10^6–10^7 terms (hundreds of
-          MB of driver heap); beyond that leave it off.
-        * ``False`` (default) — per-query pruned term_stats lookup; the
-          right mode for vocabularies that shouldn't live in one process."""
+        """Open a built index: ``meta.json`` and its ``TermDictionary``.
+        The vocabulary always lives on the driver (~100-200 B per term, so
+        up to ~10^6 terms; 28k in the 16k-doc perfbench index), and no df
+        lookup or term expansion runs a Spark job. ``cache_term_stats``
+        has no effect; it is kept for callers that still pass it."""
         self.spark = spark
         self.path = path
         with open(os.path.join(path, "meta.json")) as f:
@@ -187,20 +230,13 @@ class InvertedIndex:
         # pickle the session
         self.n_docs = self.meta["n_docs"]
         self.bm25 = (self.meta["avgdl"], self.meta["k1"], self.meta["b"])
-        self._df_cache: dict[str, int] | None = None
+        self.vocab = TermDictionary(os.path.join(path, "term_stats"))
         self._resident: _ResidentPostings | None = None
-        if cache_term_stats:
-            self._df_cache = {r["term"]: int(r["df"]) for r in self.term_stats().collect()}
 
-    def _lookup_dfs(self, terms: list[str]) -> dict[str, int]:
-        """term→df for the query terms, from the cache when it is on
-        (otherwise a pruned parquet lookup)."""
-        if self._df_cache is not None:
-            return {t: self._df_cache[t] for t in terms if t in self._df_cache}
-        return {
-            r["term"]: int(r["df"])
-            for r in self.term_stats().filter(F.col("term").isin(terms)).collect()
-        }
+    def _lookup_dfs(self, terms) -> dict[str, int]:
+        """term→df of the query terms the index holds, in ascending term order."""
+        pos, dfs = self.vocab.position, self.vocab.dfs
+        return {t: dfs[pos[t]] for t in sorted(set(terms)) if t in pos}
 
     def _require_positions(self) -> None:
         if not self.meta.get("with_positions"):
@@ -208,26 +244,29 @@ class InvertedIndex:
 
     # --- table accessors -------------------------------------------------
     def postings(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, "postings"))
+        """The postings table; pyarrow reads its schema, as Spark's inference runs a job."""
+        path = os.path.join(self.path, "postings")
+        schema = pads.dataset(path, format="parquet", partitioning="hive").schema
+        return self.spark.read.schema(from_arrow_schema(schema)).parquet(path)
 
     def warm(self) -> "InvertedIndex":
         """Load the postings into driver memory — the serving-mode
         analogue of ES's segments resident on the serving node. One
         pyarrow read of the postings parquet becomes one Arrow table per
-        shard, sorted by (term, first_doc), plus each term's row range;
-        freed read buffers go back to the OS.
+        shard, sorted by (term, first_doc), plus each term's row range,
+        keyed by the term dictionary's positions; freed read buffers go
+        back to the OS.
 
         From then on every posting-backed query runs its shard kernel
         in-process on the query terms' rows and returns ``Hits``, a
-        driver-side Arrow table: with a term cache (``cache_term_stats``)
-        a warmed search and its ``collect()`` make no JVM call, empty
-        results included. A Spark DataFrame over the rows is built only
-        when the caller composes them with Spark. Results are
-        bit-identical to the unwarmed Spark path. The cost is driver
-        memory of about the postings' Arrow ``nbytes`` (6.8 MB for the
-        16k-doc perfbench index); the tables are freed with the index
-        object."""
-        self._resident = _ResidentPostings(os.path.join(self.path, "postings"))
+        driver-side Arrow table: a warmed search and its ``collect()``
+        make no JVM call, empty results and prefix/wildcard expansions
+        included. A Spark DataFrame over the rows is built only when the
+        caller composes them with Spark. Results are bit-identical to
+        the unwarmed Spark path. The cost is driver memory of about the
+        postings' Arrow ``nbytes`` (6.8 MB for the 16k-doc perfbench
+        index); the tables are freed with the index object."""
+        self._resident = _ResidentPostings(os.path.join(self.path, "postings"), self.vocab)
         return self
 
     def _empty(self, schema: str = TOPK_SCHEMA) -> DataFrame | Hits:
@@ -301,11 +340,12 @@ class InvertedIndex:
         minimum_should_match=m requires >= m distinct terms. Either gate
         forces the exhaustive kernel (the gate must run before top-k;
         block-max skipping would rank unqualified docs), scoring stays
-        the full BM25 sum over matched terms — ES semantics."""
+        the full BM25 sum over matched terms — ES semantics. Any other
+        ``operator`` or ``mode`` raises ``ValueError``."""
+        if operator not in ("and", "or") or mode not in ("wand", "exhaustive", "auto"):
+            raise ValueError(f"unknown operator {operator!r} or mode {mode!r}")
         terms = self.query_terms(query_text)
         msm = len(terms) if operator == "and" else int(minimum_should_match)
-        if not terms:
-            return self._empty()
         dfs = self._lookup_dfs(terms)
         if not dfs:
             return self._empty()
@@ -343,8 +383,6 @@ class InvertedIndex:
             # mid-job inside the kernel
             raise ValueError(
                 f"query_string gate supports <= 64 distinct terms, got {len(terms)}")
-        if not terms:
-            return self._empty()
         dfs = self._lookup_dfs(terms)
         if not dfs:
             return self._empty()
@@ -372,7 +410,7 @@ class InvertedIndex:
         from .relevance import _sparse_query_units
 
         qus = dict(_sparse_query_units(query_vector))
-        dfs = self._lookup_dfs(list(qus))
+        dfs = self._lookup_dfs(qus)
         if not dfs:
             return self._empty("doc_id long, score_u long")
         units = {t: qus[t] for t in dfs}
@@ -383,26 +421,17 @@ class InvertedIndex:
         return self._per_shard(dfs, shard_sparse, "doc_id long, score_u long")
 
     def expand_prefix(self, prefix: str, max_expansions: int = 1024) -> list[str]:
-        """Dictionary expansion for a prefix clause: every index term
-        starting with ``prefix``, from the term_stats table (a dictionary
-        scan, never the corpus). More than ``max_expansions`` raises
-        loudly (the repo's raise-rather-than-silently-wrong rule) —
+        """Every index term starting with ``prefix``, ascending, by
+        bisection over the term dictionary. More than ``max_expansions``
+        raises (the repo's raise-rather-than-silently-wrong rule) —
         quietly truncating would change which docs match, unlike ES's
         bitset rewrite which is exhaustive."""
-        rows = (self.term_stats()
-                .filter(F.col("term").startswith(prefix))
-                .select("term").limit(max_expansions + 1).collect())
-        if len(rows) > max_expansions:
+        found = self.vocab.scan(prefix, max_expansions + 1)
+        if len(found) > max_expansions:
             raise ValueError(
                 f"prefix '{prefix}' expands to > {max_expansions} index "
                 f"terms; raise max_expansions or use a longer prefix")
-        return sorted(r["term"] for r in rows)
-
-    def matched_doc_ids(self, terms: list[str]) -> DataFrame:
-        """(doc_id) of every doc containing >= 1 of ``terms`` — postings
-        membership only (one row per doc: a doc lives in exactly one
-        shard). The constant-score primitive behind prefix clauses."""
-        return self.match_scores(terms).select("doc_id")
+        return [self.vocab.terms[i] for i in found]
 
     def search_dismax(self, queries: list[str], tie_breaker: float = 0.0,
                       k: int = 10) -> DataFrame | Hits:
@@ -414,10 +443,7 @@ class InvertedIndex:
         tie (score desc, doc_id asc); the single-subquery case is
         rank-identical to search(mode='exhaustive')."""
         per_q_terms = [self.query_terms(q) for q in queries]
-        all_terms = sorted({t for ts in per_q_terms for t in ts})
-        if not all_terms:
-            return self._empty()
-        dfs = self._lookup_dfs(all_terms)
+        dfs = self._lookup_dfs(t for ts in per_q_terms for t in ts)
         if not dfs:
             return self._empty()
         avgdl, k1, b = self.bm25
@@ -442,10 +468,7 @@ class InvertedIndex:
         Returns (query_id, doc_id, score, rank), rank-identical per query
         to `search()`."""
         per_query_terms = {qid: self.query_terms(q) for qid, q in queries.items()}
-        all_terms = sorted({t for ts in per_query_terms.values() for t in ts})
-        if not all_terms:
-            return self._empty("query_id long, doc_id long, score double, rank int")
-        dfs = self._lookup_dfs(all_terms)
+        dfs = self._lookup_dfs(t for ts in per_query_terms.values() for t in ts)
         if not dfs:
             return self._empty("query_id long, doc_id long, score double, rank int")
         avgdl, k1, b = self.bm25
@@ -474,8 +497,7 @@ class InvertedIndex:
         terms = _TOKENIZE[self.meta["tokenizer"]](phrase)
         if not terms:
             return self._empty()
-        uniq = sorted(set(terms))
-        dfs = self._lookup_dfs(uniq)
+        dfs = self._lookup_dfs(terms)
         if len(dfs) < len(set(terms)):
             return self._empty()  # a phrase term absent from the corpus ⇒ no match
         avgdl, k1, b = self.bm25
@@ -485,7 +507,7 @@ class InvertedIndex:
         def shard_phrase(rows):
             return _pos.score_shard_phrase(rows, terms, idf_sum, k, avgdl, k1, b)
 
-        return self._per_shard(uniq, shard_phrase, TOPK_SCHEMA, k)
+        return self._per_shard(dfs, shard_phrase, TOPK_SCHEMA, k)
 
     def match_phrase_prefix(self, phrase: str, k: int = 10,
                             max_expansions: int = 1024) -> DataFrame | Hits:
@@ -505,19 +527,14 @@ class InvertedIndex:
             return self._empty()
         exact, pref = terms[:-1], terms[-1]
         expansion = self.expand_prefix(pref, max_expansions)
-        if not expansion:
-            return self._empty()
-        uniq_exact = sorted(set(exact))
-        dfs = self._lookup_dfs(uniq_exact)
-        if len(dfs) < len(uniq_exact):
-            return self._empty()  # an exact term absent from the corpus ⇒ no match
+        dfs = self._lookup_dfs(exact)
+        if not expansion or len(dfs) < len(set(exact)):
+            return self._empty()  # no expansion, or an exact term absent ⇒ no match
         avgdl, k1, b = self.bm25
         # prefix-clause df = docs containing ANY expansion term (one
-        # match_scores row per doc, a postings-bounded count), matching
-        # the DF scorer's df
+        # match_scores row per doc, a postings-bounded count; > 0, as
+        # every dictionary term has postings), matching the DF scorer's df
         df_prefix = self.match_scores(expansion).count()
-        if df_prefix == 0:
-            return self._empty()
         idf_sum = sum(bm25_idf(dfs[t], self.n_docs) for t in exact) \
             + bm25_idf(df_prefix, self.n_docs)
 
@@ -525,8 +542,7 @@ class InvertedIndex:
             return _pos.score_shard_phrase(rows, exact, idf_sum, k, avgdl, k1, b,
                                            last_terms=expansion)
 
-        wanted = sorted(set(exact) | set(expansion))
-        return self._per_shard(wanted, shard_phrase, TOPK_SCHEMA, k)
+        return self._per_shard(sorted({*exact, *expansion}), shard_phrase, TOPK_SCHEMA, k)
 
     def span_near(self, first: str, second: str, slop: int = 0,
                   k: int = 10) -> DataFrame | Hits:
@@ -538,7 +554,7 @@ class InvertedIndex:
         terms' posting+position data only — never the corpus."""
         self._require_positions()
 
-        dfs = self._lookup_dfs(sorted({first, second}))
+        dfs = self._lookup_dfs((first, second))
         if len(dfs) < len({first, second}):
             return self._empty()  # a clause term absent from the corpus ⇒ no span
         avgdl, k1, b = self.bm25
@@ -549,7 +565,7 @@ class InvertedIndex:
             return _pos.score_shard_span_near(rows, first, second, int(slop),
                                               idf_sum, k, avgdl, k1, b)
 
-        return self._per_shard(sorted({first, second}), shard_span, TOPK_SCHEMA, k)
+        return self._per_shard(dfs, shard_span, TOPK_SCHEMA, k)
 
     def span_first(self, term: str, end: int, k: int = 10) -> DataFrame | Hits:
         """ES span_first served from the positional index: sf = the
@@ -577,8 +593,7 @@ class InvertedIndex:
         the summed clause idfs (contract as relevance.span_or_df). No
         positions needed — postings only."""
 
-        uniq = sorted(set(terms))
-        dfs = self._lookup_dfs(uniq)
+        dfs = self._lookup_dfs(terms)
         if not dfs:
             return self._empty()
         avgdl, k1, b = self.bm25
@@ -599,7 +614,7 @@ class InvertedIndex:
         not `exclude` match with their full tf."""
         self._require_positions()
 
-        dfs = self._lookup_dfs(sorted({include, exclude}))
+        dfs = self._lookup_dfs((include, exclude))
         if include not in dfs:
             return self._empty()
         avgdl, k1, b = self.bm25
@@ -614,26 +629,23 @@ class InvertedIndex:
     def span_multi(self, value: str, kind: str = "prefix",
                    max_expansions: int = 50, k: int = 10) -> DataFrame | Hits:
         """ES span_multi (prefix/wildcard inner query) served from the tf
-        index: the pattern expands against the TERM DICTIONARY (LIKE
-        pushdown on the sorted term_stats parquet, term-ascending, capped
-        — same expansion as relevance.span_multi_df, whose contract this
-        reproduces exactly: sf = Σ tf over expansion postings, one
-        saturation with the integer-quantized summed expansion idfs). No
-        positions needed; work per shard is the expansion terms'
-        postings only."""
+        index: the pattern expands against the TERM DICTIONARY (its LIKE
+        form, term-ascending, capped — same expansion as
+        relevance.span_multi_df, whose contract this reproduces exactly:
+        sf = Σ tf over expansion postings, one saturation with the
+        integer-quantized summed expansion idfs). No positions needed;
+        work per shard is the expansion terms' postings only."""
         from .relevance import _span_multi_like
 
-        like = _span_multi_like(value, kind)
-        exp_rows = (self.term_stats().filter(F.col("term").like(like))
-                    .orderBy(F.asc("term"))
-                    .limit(int(max_expansions)).collect())
-        if not exp_rows:
+        head, regex = _like_regex(_span_multi_like(value, kind))
+        found = self.vocab.scan(head, int(max_expansions), regex)
+        if not found:
             return self._empty()
         avgdl, k1, b = self.bm25
-        idf_u = sum(math.floor(bm25_idf(r["df"], self.n_docs) * 1e6)
-                    for r in exp_rows)
+        idf_u = sum(math.floor(bm25_idf(self.vocab.dfs[i], self.n_docs) * 1e6)
+                    for i in found)
         idf_sum = idf_u / 1e6
-        terms = [r["term"] for r in exp_rows]
+        terms = [self.vocab.terms[i] for i in found]
 
         def shard(rows):
             return _wand.score_shard_span_or(rows, idf_sum, k, avgdl, k1, b)
@@ -653,9 +665,8 @@ class InvertedIndex:
         contract)."""
         self._require_positions()
 
-        wanted = sorted({first, second, little})
-        dfs = self._lookup_dfs(wanted)
-        if any(t not in dfs for t in (first, second, little)):
+        dfs = self._lookup_dfs((first, second, little))
+        if len(dfs) < len({first, second, little}):
             return self._empty()  # a clause term absent ⇒ no span anywhere
         avgdl, k1, b = self.bm25
         idf_sum = (bm25_idf(dfs[little], self.n_docs) if within
@@ -667,7 +678,7 @@ class InvertedIndex:
                                                  int(slop), within, idf_sum, k,
                                                  avgdl, k1, b)
 
-        return self._per_shard(wanted, shard, TOPK_SCHEMA, k)
+        return self._per_shard(dfs, shard, TOPK_SCHEMA, k)
 
     def span_within(self, first: str, second: str, little: str,
                     slop: int = 0, k: int = 10) -> DataFrame | Hits:
@@ -690,9 +701,8 @@ class InvertedIndex:
             raise UnsupportedQuery("unordered intervals support exactly 2 terms")
         self._require_positions()
 
-        uniq = sorted(set(terms))
-        dfs = self._lookup_dfs(uniq)
-        if len(dfs) < len(uniq):
+        dfs = self._lookup_dfs(terms)
+        if len(dfs) < len(set(terms)):
             return self._empty()  # a clause term absent ⇒ no interval
         avgdl, k1, b = self.bm25
         idf_sum = sum(bm25_idf(dfs[t], self.n_docs) for t in terms)
@@ -702,14 +712,14 @@ class InvertedIndex:
                                               bool(ordered), idf_sum, k,
                                               avgdl, k1, b)
 
-        return self._per_shard(uniq, shard, TOPK_SCHEMA, k)
+        return self._per_shard(dfs, shard, TOPK_SCHEMA, k)
 
     def suggest(self, prefix: str, k: int = 10) -> DataFrame:
         """Completion suggester: top-k index terms with the given prefix,
         ranked by document frequency (df desc, term asc). One scan of the
         tiny term_stats table with StringStartsWith pushed to parquet
-        (term_stats is range-partitioned and sorted by term, so min/max
-        stats prune most files)."""
+        (term_stats is one term-sorted file, so row-group min/max stats
+        prune)."""
         return (
             self.term_stats()
             .filter(F.col("term").startswith(prefix))
@@ -818,7 +828,7 @@ def more_like_this_topk(index: "InvertedIndex", docs: DataFrame,
     if not tokens:
         return index._empty("doc_id long, score_u long")
     tfc = Counter(tokens)
-    dfs = index._lookup_dfs(sorted(tfc))
+    dfs = index._lookup_dfs(tfc)
     ranked = sorted(
         (-math.floor(tf * bm25_idf(dfs[t], index.n_docs) * 1e6), t)
         for t, tf in tfc.items() if t in dfs
@@ -948,7 +958,7 @@ def match_bool_prefix_topk(index: "InvertedIndex", query_terms: list[str],
     terms' postings — never the corpus."""
     *full, pref = query_terms
     parts = [quantize_scores(index.match_scores(full))] if full else []
-    parts.append(index.matched_doc_ids(index.expand_prefix(pref, max_expansions))
+    parts.append(index.match_scores(index.expand_prefix(pref, max_expansions)).select("doc_id")
                  .withColumn("score_u", F.lit(int(1e6))))
     return fuse_scores(parts, k, "sum")
 

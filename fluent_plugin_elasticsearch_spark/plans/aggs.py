@@ -446,10 +446,14 @@ def _compile_bucket_path(base: DataFrame, name: str, kind: str,
                          sub: dict[str, Any] | None) -> DataFrame:
     """Compile one bucket agg, possibly with NESTED bucket sub-aggs
     (terms inside date_histogram inside terms, …), to ONE multi-key
-    groupBy over the leaf path — the flattened-bucket-tree plan: a single
-    shuffle on the composite bucket key regardless of depth, then window
-    functions over the (already tiny) aggregated bucket rows for parent
-    doc_counts, per-level options, `size` and ES bucket ordering.
+    groupBy over the leaf path — the flattened-bucket-tree plan: one
+    aggregation on the composite bucket key regardless of depth, then
+    window functions over the (already tiny) aggregated bucket rows for
+    parent doc_counts, per-level options, `size` and ES bucket ordering.
+    The windows add exchanges: for terms>terms `explain()` shows three —
+    a hash on both keys (the aggregation), a hash on the parent key (its
+    doc_count window), then `SinglePartition` (the top level's size
+    rank); the deeper windows and the final sort run in that partition.
 
     Output columns: `<level>_key` per bucket level, `doc_count` (leaf),
     `<level>_doc_count` per NON-leaf level, plus leaf metric columns.

@@ -651,7 +651,7 @@ def _scored_hits(docs: DataFrame, out: DataFrame, body: dict[str, Any],
             # vocabulary-expansion DataFrame scorer (identical contract)
             from ..textproc import tokenize_simple
 
-            if (text.get("operator", "or") != "or"
+            if (text.get("operator", "or").lower() != "or"
                     or int(text.get("minimum_should_match", 1)) != 1):
                 # fuzzy scoring is bool-should (OR); an AND/msm gate over
                 # expanded clauses is not implemented — raise rather than
@@ -676,11 +676,12 @@ def _scored_hits(docs: DataFrame, out: DataFrame, body: dict[str, Any],
         if f_index is None:
             raise UnsupportedQuery("match query needs an InvertedIndex")
         if isinstance(text, dict):
-            # ES match options: {"query": ..., "operator": "and"|"or",
-            # "minimum_should_match": m} — forwarded to the index path
+            # ES match options: {"query": ..., "operator": "and"|"or"
+            # (any case, as ES parses it), "minimum_should_match": m} —
+            # forwarded to the index path
             return f_index.search(
                 text["query"], k=k,
-                operator=text.get("operator", "or"),
+                operator=text.get("operator", "or").lower(),
                 minimum_should_match=int(text.get("minimum_should_match", 1))), "score"
         return f_index.search(text, k=k), "score"
 

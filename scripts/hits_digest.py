@@ -2,17 +2,20 @@
 
     python scripts/hits_digest.py <index_dir>
 
-Warms the index (term cache on) and runs the perfbench query pool (the
+Opens and warms the index, and runs the perfbench query pool (the
 400 pool queries ``perfbench.gen.query_stream`` draws from, 336 of them
 distinct), plus queries of the index's own head terms, through each
 posting-backed entry: ``search`` in ``auto``, ``wand`` and
 ``exhaustive`` mode, ``search_batch``, ``search_dismax``,
-``match_scores``, ``sparse_vector_scores`` and ``span_or``, and on a
-positional index also ``match_phrase``, ``match_phrase_prefix`` and the
-span and intervals entries. Prints ``<entry> <sha256>`` per entry, over
-the result rows in the order they come back, each row's floats as
-``float.hex()``. Two runs give the same lines exactly when every row,
-score bit and row order is the same: run it in two checkouts and ``diff``.
+``match_scores``, ``sparse_vector_scores``, ``span_or`` and
+``span_multi`` (prefix, and wildcards with ``*``/``?`` at the start,
+middle and end), and on a positional index also ``match_phrase``,
+``match_phrase_prefix`` and the span and intervals entries. Prints
+``<entry> <sha256>`` per entry, over the result rows in the order they
+come back, each row's floats as ``float.hex()``; a request that raises
+``ValueError`` (an expansion over its cap) adds its message instead. Two
+runs give the same lines exactly when every row, score bit, row order
+and error is the same: run it in two checkouts and ``diff``.
 """
 
 from __future__ import annotations
@@ -30,7 +33,6 @@ from fluent_plugin_elasticsearch_spark.session import get_spark  # noqa: E402
 from perfbench import gen  # noqa: E402
 
 K = 10
-PREFIX_QUERIES = 20  # match_phrase_prefix expands through a Spark job per call
 
 
 def query_pool() -> list[str]:
@@ -66,11 +68,16 @@ def entries(idx: InvertedIndex, pool: list[str]):
         lambda ts=ts: idx.sparse_vector_scores({t: 0.5 + i for i, t in enumerate(ts)})
         for ts in terms if ts]
     yield "span_or", [lambda ts=ts: idx.span_or(ts, k=K) for ts in terms if ts]
+    lasts = [ts[-1] for ts in terms if ts]
+    yield "span_multi_prefix", [lambda t=t: idx.span_multi(t[:3], "prefix", k=K) for t in lasts]
+    shapes = (lambda t: "*" + t[-2:], lambda t: "?" + t[1:], lambda t: t[:1] + "?" + t[2:],
+              lambda t: t[:1] + "*" + t[-1:], lambda t: t[:2] + "*")
+    yield "span_multi_wildcard", [lambda t=t, f=f: idx.span_multi(f(t), "wildcard", k=K)
+                                  for t in lasts for f in shapes]
     if not idx.meta.get("with_positions"):
         return
     yield "match_phrase", [lambda q=q: idx.match_phrase(q, k=K) for q in pool]
-    yield "match_phrase_prefix", [lambda q=q: idx.match_phrase_prefix(q, k=K)
-                                  for q in pool[:PREFIX_QUERIES]]
+    yield "match_phrase_prefix", [lambda q=q: idx.match_phrase_prefix(q, k=K) for q in pool]
     yield "span_near", [lambda ts=ts: idx.span_near(ts[0], ts[1], slop=2, k=K) for ts in multi]
     yield "span_first", [lambda ts=ts: idx.span_first(ts[0], 5, k=K) for ts in terms if ts]
     yield "span_not", [lambda ts=ts: idx.span_not(ts[0], ts[1], 1, 1, k=K) for ts in multi]
@@ -86,12 +93,15 @@ def entries(idx: InvertedIndex, pool: list[str]):
 
 def main(index_dir: str) -> None:
     spark = get_spark(cores=2)
-    idx = InvertedIndex(spark, index_dir, cache_term_stats=True).warm()
+    idx = InvertedIndex(spark, index_dir).warm()
     for name, calls in entries(idx, query_pool() + head_queries(idx)):
         h = hashlib.sha256()
         for call in calls:
-            for row in call().collect():
-                h.update(_row(row).encode())
+            try:
+                for row in call().collect():
+                    h.update(_row(row).encode())
+            except ValueError as e:
+                h.update(f"raise {e}".encode())
             h.update(b"|")
         print(name, h.hexdigest(), flush=True)
     spark.stop()

@@ -52,7 +52,7 @@ def measure(spark, n_docs: int) -> dict:
                 text_col=None, url_col="url", tokenizer="unicode",
                 n_shards=n_shards, n_salts=8)
     build_s = time.time() - t0
-    idx = InvertedIndex(spark, idx_dir, cache_term_stats=True).warm()
+    idx = InvertedIndex(spark, idx_dir).warm()
     out: dict = {"n_docs": n_docs, "build_wall_s": round(build_s, 1),
                  "build_docs_per_sec": round(n_docs / build_s)}
     for mode in ("wand", "auto"):

@@ -280,6 +280,25 @@ def test_expand_prefix_cap_raises(spark, field_registry):
         idx.expand_prefix("", max_expansions=n - 1)
 
 
+def test_match_operator_is_case_insensitive_and_checked(spark, docs, field_registry):
+    """ES parses a match `operator` in any case: "AND" gives the rows of
+    "and" (not OR's). An unknown operator or search mode raises."""
+    from fluent_plugin_elasticsearch_spark.plans.query_ast import compile_query
+
+    def rows(operator):
+        body = {"query": {"match": {"text": {"query": "dup fast", "operator": operator}}},
+                "size": 50}
+        return [(r["doc_id"], r["score"]) for r in
+                compile_query(docs, body, index=field_registry).collect()]
+
+    both = rows("and")
+    assert rows("AND") == both and len(both) < len(rows("or")) and rows("OR") == rows("or")
+    with pytest.raises(ValueError, match="operator"):
+        rows("xor")
+    with pytest.raises(ValueError, match="mode"):
+        field_registry["text"].search("dup fast", mode="wnad")
+
+
 def test_ast_routes_registry(spark, docs, field_registry, monkeypatch):
     """compile_query with a dict registry serves multi_match /
     query_string / combined_fields from postings (the DF scorers must NOT

@@ -78,6 +78,19 @@ def test_merge_equals_full_build(spark, corpus_pdf, halves, tmp_path):
     assert all(r["n_postings"] > 0 and r["run_id"].startswith("merge-") for r in m)
 
 
+def test_term_stats_is_one_sorted_file_at_any_shard_count(spark, halves, tmp_path):
+    """A build with at least 2 x defaultParallelism shards writes term_stats
+    as one term-sorted file too, as a small build does."""
+    a, _ = halves
+    out = str(tmp_path / "wide")
+    build_index(spark, a, out, id_col="doc_id", html_col="html", text_col=None, url_col="url",
+                tokenizer="unicode", n_shards=max(8, 2 * spark.sparkContext.defaultParallelism),
+                n_salts=2, block_size=32)
+    (f,) = glob.glob(f"{out}/term_stats/*.parquet")
+    terms = pq.read_table(f, columns=["term"])["term"].to_pylist()
+    assert terms == sorted(terms) and len(terms) > 1
+
+
 def test_merge_positional_phrase_identical(spark, halves, tmp_path):
     a, b = halves
     full = _build(spark, a.unionByName(b), str(tmp_path / "pfull"), with_positions=True)

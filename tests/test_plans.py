@@ -29,11 +29,11 @@ def test_bm25_df_broadcasts_small_sides(spark, sf_dir):
 
 
 def test_warm_search_is_local_and_starts_no_job(spark, index_dir):
-    """A warmed, term-cached search scores on the driver-resident postings:
+    """A warmed search scores on the driver-resident postings:
     its plan is a LocalTableScan, building and collecting it starts no
     Spark job, and its rows are those of the unwarmed index."""
     sc = spark.sparkContext
-    idx = InvertedIndex(spark, index_dir, cache_term_stats=True).warm()
+    idx = InvertedIndex(spark, index_dir).warm()
     group = "warm-search"
     sc.setJobGroup(group, group)
     try:

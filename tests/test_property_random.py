@@ -31,7 +31,7 @@ def test_random_corpus_rank_identity(spark, tmp_path, seed):
     out = str(tmp_path / f"idx{seed}")
     build_index(spark, df, out, id_col="doc_id", text_col="text",
                 tokenizer="simple", n_shards=3, n_salts=2, block_size=16)
-    idx = InvertedIndex(spark, out, cache_term_stats=True)
+    idx = InvertedIndex(spark, out)
 
     tokens = {k: tokenize_simple(v) for k, v in docs.items()}
     rng = np.random.default_rng(seed + 1)

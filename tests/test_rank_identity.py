@@ -70,7 +70,7 @@ def test_warm_index_serves_concurrent_clients(spark, index_dir):
     """Two threads searching one warmed index get exactly the rows that
     sequential calls return, and those are bit-identical to the unwarmed
     index's rows."""
-    idx = InvertedIndex(spark, index_dir, cache_term_stats=True).warm()
+    idx = InvertedIndex(spark, index_dir).warm()
     calls = [(q, mode) for q in QUERIES for mode in ("exhaustive", "wand", "auto")]
 
     def run(call, index=idx):

@@ -1,4 +1,4 @@
-"""A warmed, term-cached index answers from driver memory: its results are
+"""A warmed index answers from driver memory: its results are
 ``Hits`` (a driver-side Arrow table) that collect without a single py4j
 call, carry exactly the unwarmed (Spark) path's rows, and become a Spark
 DataFrame only when the caller composes them with Spark."""
@@ -79,17 +79,22 @@ def _requests(idx: InvertedIndex) -> dict:
             out[q, "phrase", k] = _typed(idx.match_phrase(q, k=k).collect())
     for k in (5, 0):
         out["batch", k] = sorted(_typed(idx.search_batch(dict(enumerate(QUERIES)), k=k).collect()))
+        for q in ("the da", "data qu", "the zz"):  # the last expands to no term
+            out["phrase_prefix", q, k] = _typed(idx.match_phrase_prefix(q, k=k).collect())
+        for value, kind in (("s", "prefix"), ("zz", "prefix"), ("s*", "wildcard"),
+                            ("?a*", "wildcard"), ("*e", "wildcard")):
+            out["span_multi", value, kind, k] = _typed(idx.span_multi(value, kind, k=k).collect())
     out["es"] = to_es_response(idx.search("data query", k=5))
     return out
 
 
 def test_warm_queries_make_no_jvm_call(spark, pos_index, monkeypatch):
     """search (auto, wand, exhaustive, an absent term), search_batch,
-    match_phrase and to_es_response on a warmed, term-cached index, with
-    k=5 and k=0, send no command to the JVM and build no pandas frame,
-    and their rows equal the unwarmed index's in value, type and field
-    order."""
-    warm_idx = InvertedIndex(spark, pos_index, cache_term_stats=True).warm()
+    match_phrase, match_phrase_prefix, span_multi (prefix and wildcard)
+    and to_es_response on a warmed index, with k=5 and k=0, send no
+    command to the JVM and build no pandas frame, and their rows equal
+    the unwarmed index's in value, type and field order."""
+    warm_idx = InvertedIndex(spark, pos_index).warm()
     with _py4j_commands(spark) as sent, _pandas_frames(monkeypatch) as frames:
         got = _requests(warm_idx)
     assert sent == []
@@ -100,6 +105,8 @@ def test_warm_queries_make_no_jvm_call(spark, pos_index, monkeypatch):
     assert got == want
     assert got["data query", "auto", 5] and got["zzznope", "auto", 5] == []
     assert got["data query", "wand", 0] == [] and got["batch", 0] == []
+    assert got["phrase_prefix", "the da", 5] and got["phrase_prefix", "the zz", 5] == []
+    assert got["span_multi", "?a*", "wildcard", 5] and got["span_multi", "zz", "prefix", 5] == []
     assert got["es"]["hits"]["total"]["value"] == 5
 
 
@@ -107,7 +114,7 @@ def test_warm_hits_compose_with_spark(spark, index_dir):
     """A warmed result used as a DataFrame (search_with_urls, a broadcast
     join, a column reference) gives the unwarmed rows, over one lazily
     built LocalTableScan shared by concurrent callers."""
-    warm_idx = InvertedIndex(spark, index_dir, cache_term_stats=True).warm()
+    warm_idx = InvertedIndex(spark, index_dir).warm()
     cold = InvertedIndex(spark, index_dir)
     assert (warm_idx.search_with_urls("the baba", k=5).collect()
             == cold.search_with_urls("the baba", k=5).collect())
