@@ -405,7 +405,7 @@ def terms_enum(docs: DataFrame, field: str, string: str = "",
     if index is not None:
         cand = index.term_stats().select("term", "df")
         return (cand.filter(F.col("term").startswith(string))
-                .orderBy(F.asc("term")).limit(int(size)))
+                .orderBy(F.asc("term")).limit(index.vocab.cap(size)))
     toks = docs.select(
         F.explode(F.array_distinct(simple_tokens_col(F.col(field))))
         .alias("term"))

@@ -1218,12 +1218,11 @@ def span_multi_df(docs: DataFrame, value: str, kind: str = "prefix",
     score_u), tie (score desc, doc_id asc)."""
     like = _span_multi_like(value, kind)
     toks = tokens_frame(docs, id_col, text_col)
-    expansion = [r["term"] for r in
-                 (toks.select(F.explode(F.array_distinct("tokens"))
-                              .alias("term"))
-                  .filter(F.col("term").like(like))
-                  .distinct().orderBy(F.asc("term"))
-                  .limit(int(max_expansions)).collect())]
+    # capped on the driver, as a Spark limit sizes its top-n buffer by the
+    # cap up front; Python's code-point order is Spark's term order
+    matches = (toks.select(F.explode(F.array_distinct("tokens")).alias("term"))
+               .filter(F.col("term").like(like)).distinct().collect())
+    expansion = sorted(r["term"] for r in matches)[:int(max_expansions)]
     spark = docs.sparkSession
     if not expansion:
         from .search import empty_topk_df

@@ -141,6 +141,11 @@ class TermDictionary:
         self.dfs: list[int] = table["df"].to_pylist()
         self.position = {t: i for i, t in enumerate(self.terms)}
 
+    def cap(self, n: int) -> int:
+        """A caller's cap on dictionary terms, at most their number: Spark
+        sizes a sort's top-n buffer by the limit up front."""
+        return min(int(n), len(self.terms))
+
     def scan(self, head: str, limit: int, regex: re.Pattern | None = None) -> list[int]:
         """Positions of the first ``limit`` terms that start with ``head``
         (found by bisection) and fully match ``regex``, ascending."""
@@ -243,11 +248,15 @@ class InvertedIndex:
             raise ValueError("index was built without positions (with_positions=True)")
 
     # --- table accessors -------------------------------------------------
-    def postings(self) -> DataFrame:
-        """The postings table; pyarrow reads its schema, as Spark's inference runs a job."""
-        path = os.path.join(self.path, "postings")
+    def _table(self, name: str) -> DataFrame:
+        """An index table; pyarrow reads its schema from the parquet
+        footers, as Spark's inference runs a job."""
+        path = os.path.join(self.path, name)
         schema = pads.dataset(path, format="parquet", partitioning="hive").schema
         return self.spark.read.schema(from_arrow_schema(schema)).parquet(path)
+
+    def postings(self) -> DataFrame:
+        return self._table("postings")
 
     def warm(self) -> "InvertedIndex":
         """Load the postings into driver memory — the serving-mode
@@ -313,17 +322,17 @@ class InvertedIndex:
         return Hits(self.spark, pa.table(cols, schema=fields))
 
     def doc_stats(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, "doc_stats"))
+        return self._table("doc_stats")
 
     def term_stats(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, "term_stats"))
+        return self._table("term_stats")
 
     def docmap(self) -> DataFrame:
         # url mapping lives in the combined doc_stats table
         return self.doc_stats().select("doc_id", "url")
 
     def manifest(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, "_manifest"))
+        return self._table("_manifest")
 
     # --- full-text search --------------------------------------------------
     def query_terms(self, query_text: str) -> list[str]:
@@ -724,7 +733,7 @@ class InvertedIndex:
             self.term_stats()
             .filter(F.col("term").startswith(prefix))
             .orderBy(F.desc("df"), F.asc("term"))
-            .limit(k)
+            .limit(self.vocab.cap(k))
         )
 
     def suggest_term(self, term: str, max_edits: int = 2, size: int = 5) -> DataFrame:
@@ -746,7 +755,7 @@ class InvertedIndex:
             cand.withColumn("distance", F.levenshtein(F.col("term"), t))
             .filter(F.col("distance") <= max_edits)
             .orderBy(F.asc("distance"), F.desc("df"), F.asc("term"))
-            .limit(size)
+            .limit(self.vocab.cap(size))
             .select("term", "distance", "df")
         )
 

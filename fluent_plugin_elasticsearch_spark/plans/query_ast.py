@@ -11,11 +11,12 @@ engine:
     {"query": {"match"/"multi_match"/"span_near"/...}}    (scored hits)
     {"retriever": {"rrf"/"linear": ...}}, {"knn": ...}    (fusion, vectors)
 
-Filter queries compile to scan + filter + sort + limit on the docs table —
-Catalyst pushes the filters into the parquet/Iceberg scan. Scored queries
-compile to a top-k (doc_id, score) frame, served from the inverted index
-where one covers the field, and share one tail for min_score, the join
-back onto the docs, _source and from/size.
+Filter queries compile to scan + filter on the docs table — Catalyst
+pushes the filters into the parquet/Iceberg scan. Scored queries compile
+to a top-k (doc_id, score) frame, served from the inverted index where
+one covers the field, joined back onto the docs. Every body kind (filter,
+scored, knn, percolate) then takes one tail for min_score, post_filter,
+_source, search_after, sort and from/size.
 """
 
 from __future__ import annotations
@@ -558,9 +559,11 @@ def _knn_top(docs: DataFrame, spec: dict[str, Any], size) -> tuple:
     "k": n, "filter": {...}}} → brute-force cosine top-k
     (similarity.cosine_topk plans TakeOrderedAndProject for the single
     query); at scale swap in the LSH/IVF variants behind the same
-    contract. The knn-level "filter" is ES's PRE-filter: compiled and
-    applied to the candidate set before the top-k, so k survivors are
-    returned. Returns (candidates, top (vec_id, cosine, rank))."""
+    contract. ``k`` defaults to the body's ``size`` (10 when it is absent
+    or 0), as in ES, and is taken before any post_filter. The knn-level
+    "filter" is ES's PRE-filter: compiled and applied to the candidate
+    set before the top-k, so k survivors are returned. Returns
+    (candidates, top (vec_id, cosine, rank))."""
     from ..operators.similarity import cosine_topk
 
     field, qv = spec["field"], [float(x) for x in spec["query_vector"]]
@@ -1137,57 +1140,56 @@ def compile_query(docs: DataFrame, body: dict[str, Any], *,
                   index=None) -> DataFrame:
     """Compile an ES-style search body over the docs DataFrame.
 
-    Filter queries (ids, term(s), range, exists, prefix, wildcard, fuzzy,
-    regexp, terms_set, bool, nested, geo_*, match_all) compile to scan +
-    filter + sort + from/size on the docs table; Catalyst pushes the
-    filters into the scan. ``constant_score`` is a filter with a literal
-    ``score_u``, which ``min_score`` (on the float scale) compares
-    against; ``min_score`` on any other filter body raises
-    UnsupportedQuery, as there is no score to cut. ``percolate`` matches
-    a stored-query registry. A pure ``knn`` body joins its k nearest
-    candidates back, in its own order (or ``sort``'s); ``from``/``size``,
-    when given, page those k. ``min_score`` on it raises: it reports
-    cosine, not a ``_score``, so ``knn.similarity`` is its cutoff.
+    Each body kind builds its rows (from the docs plus any
+    ``runtime_mappings`` fields), its score column (or none), the columns
+    ``_source`` always keeps and its default order:
 
-    Scored queries — match (fuzzy too), multi_match (phrase types too),
-    combined_fields, query_string, sparse_vector, simple_query_string,
-    the span family and intervals, more_like_this, match_phrase,
-    match_phrase_prefix, match_bool_prefix, script_score,
-    distance_feature, the rrf/linear retrievers and hybrid knn+query —
-    each compile to their top ``from + size`` hits (size defaults to 10)
-    as (doc_id, score column): served from ``index`` (an InvertedIndex,
-    or a {field: InvertedIndex} registry) when it covers the field, else
-    from a DataFrame scorer. The column is float ``score`` for
-    index-served match/match_phrase, ``rrf_u``/``linear_u`` (×1e9) for
-    the retrievers and ``score_u`` (×1e6) otherwise. Then one tail:
+    * filter queries (ids, term(s), range, exists, prefix, wildcard,
+      fuzzy, regexp, terms_set, bool, nested, geo_*, match_all): the
+      filtered docs, unscored and unordered; Catalyst pushes the filters
+      into the scan;
+    * ``constant_score``: its filter's docs with a literal ``score_u``;
+    * scored queries — match (fuzzy too), multi_match (phrase types too),
+      combined_fields, query_string, sparse_vector, simple_query_string,
+      the span family and intervals, more_like_this, match_phrase,
+      match_phrase_prefix, match_bool_prefix, script_score,
+      distance_feature, the rrf/linear retrievers and hybrid knn+query:
+      their top ``from + size`` hits (the whole ranking under a
+      ``post_filter``) joined back onto the docs, ordered (score desc,
+      doc_id asc). The hits come from ``index`` (an InvertedIndex, or a
+      {field: InvertedIndex} registry) when it covers the field, else
+      from a DataFrame scorer. The score column is float ``score`` for
+      index-served match/match_phrase, ``rrf_u``/``linear_u`` (×1e9) for
+      the retrievers and ``score_u`` (×1e6) otherwise. Their hits are
+      score-ordered: ``sort`` or ``search_after`` raises
+      UnsupportedQuery;
+    * pure ``knn``: its k nearest (see ``_knn_top``) with ``cosine`` and
+      ``rank``, in rank order; ``sort`` reorders them, rank breaking ties;
+    * ``percolate``: the matching rows of a stored-query registry with
+      ``query_id`` and ``matched_terms``, in query_id order.
 
-    * ``min_score`` (on the float scale) drops hits below it, compared
-      at the column's scale;
-    * the hits join back onto the docs, ordered (score desc, doc_id asc);
-    * ``_source`` projects them as on the filter path, keeping the score;
-    * ``from`` skips that many hits, then ``size`` cuts the page.
+    Then one tail, in this order:
 
-    Scored hits are score-ordered: ``sort`` or ``search_after`` on a
-    scored query raises UnsupportedQuery. ``post_filter`` filters the
-    whole ranking, then pages it."""
+    * ``min_score`` (on the float scale) drops rows below it, compared at
+      the score column's scale; a kind without a score column raises
+      (pure knn reports cosine, so ``knn.similarity`` is its cutoff);
+    * ``post_filter`` prunes the rows (after scoring, before paging);
+    * ``_source`` projects them (false, a list, or includes/excludes),
+      keeping doc_id and the kind's columns;
+    * ``search_after`` keeps the rows after its cursor in ``sort`` order;
+    * ``sort``, then the kind's default order as tie-break;
+    * ``from`` skips that many rows, then ``size`` cuts the page.
+
+    An absent ``size`` means 10 for scored and post_filter bodies, k for
+    knn and every row for filter and percolate bodies; ``size: 0``
+    returns no rows."""
     body = dict(body or {})
-    if "post_filter" in body:
-        # ES post_filter: filters the HITS after scoring, before from/size
-        # (aggs — compiled separately by plans.aggs — intentionally don't
-        # see it, the faceted-navigation contract). The rest of the body
-        # compiles to its whole ranking (every doc may be a hit), the
-        # filter prunes it, then from/size page it in ranking order.
-        pf = body.pop("post_filter")
-        size, frm = body.pop("size", None), int(body.pop("from", None) or 0)
-        ranked = compile_query(docs, {**body, "size": docs.count()}, index=index)
-        out = ranked.filter(_compile_clause(pf))
-        if frm:
-            out = out.offset(frm)
-        return out.limit(10 if size is None else int(size))  # ES default size
     query = body.get("query")
     size = body.get("size")
+    page = 10 if size is None else int(size)  # ES default size
     frm = int(body.get("from") or 0)
     min_score = body.get("min_score")
+    post_filter = body.get("post_filter")
     out = docs
 
     rt = body.get("runtime_mappings")
@@ -1214,60 +1216,28 @@ def compile_query(docs: DataFrame, body: dict[str, Any], *,
                 expr = expr.cast(casts[rtype])
             out = out.withColumn(rname, expr)
 
-    if "knn" in body and not query and "retriever" not in body:
-        # explicit sort on pure-knn results (ES 8: the k NEAREST hits are
-        # retrieved by similarity, then presented in the requested order —
-        # sort changes presentation, never the candidate set); `rank`
-        # stays as the similarity rank and breaks ties deterministically
-        if min_score is not None:
-            raise UnsupportedQuery(
-                "min_score on a pure knn body: its hits carry cosine, not "
-                "a _score; cut them with knn.similarity")
-        cand, top = _knn_top(docs, body["knn"], size)
-        sort_exprs = []
-        for s in body.get("sort") or []:
-            if s == "_doc":
-                continue
-            if isinstance(s, str):
-                sort_exprs.append(F.col(s).asc())
-            else:
-                ((sfield, sspec),) = s.items()
-                sorder = (sspec.get("order", "asc")
-                          if isinstance(sspec, dict) else sspec)
-                sort_exprs.append(F.col(sfield).desc() if sorder == "desc"
-                                  else F.col(sfield).asc())
-        out = (
-            cand.join(F.broadcast(top.select(F.col("vec_id").alias("doc_id"), "cosine", "rank")), "doc_id")
-            .orderBy(*sort_exprs, F.asc("rank"))
-        )
-        if frm:
-            out = out.offset(frm)
-        if size is not None:
-            out = out.limit(int(size))
-        src = body.get("_source")
-        if src is False:
-            out = out.select("doc_id", "cosine", "rank")
-        elif isinstance(src, list):
-            out = out.select("doc_id", *[c for c in src if c != "doc_id"], "cosine", "rank")
-        return out
+    score = None  # the kind's score column
+    keep: list[str] = []  # columns _source keeps after doc_id
+    kind_order: list[Column] = []  # the kind's default order
+    pure_knn = "knn" in body and not query and "retriever" not in body
+    if pure_knn:
+        # ES 8: the k NEAREST hits are retrieved by similarity; sort
+        # changes their presentation, never the candidate set
+        cand, top = _knn_top(out, body["knn"], size)
+        out = cand.join(F.broadcast(top.select(
+            F.col("vec_id").alias("doc_id"), "cosine", "rank")), "doc_id")
+        keep, kind_order = ["cosine", "rank"], [F.asc("rank")]
 
-    score = None  # the score column of a scored query's hits
-    if _is_scored(body):
+    elif _is_scored(body):
         if body.get("sort") or body.get("search_after") is not None:
             raise UnsupportedQuery(
                 "scored queries are score-ordered; explicit sort and "
                 "search_after are unsupported")
-        topk, score = _scored_hits(docs, out, body, frm + int(size or 10), index)
-        if min_score is not None:  # ES min_score: drop hits below the bar
-            bar = float(min_score) * _SCORE_SCALE[score]
-            topk = topk.filter(F.col(score) >= (bar if score == "score" else int(bar)))
-        out = out.join(F.broadcast(topk), "doc_id").orderBy(
-            F.desc(score), F.asc("doc_id"))
-
-    elif min_score is not None and not (query and "constant_score" in query):
-        raise UnsupportedQuery(
-            "min_score needs a scored query or constant_score; a filter "
-            "body has no score to cut")
+        # a post_filter pages the filtered ranking, so every doc may be a hit
+        k = docs.count() if post_filter else frm + page
+        topk, score = _scored_hits(docs, out, body, k, index)
+        out = out.join(F.broadcast(topk), "doc_id")
+        keep, kind_order = [score], [F.desc(score), F.asc("doc_id")]
 
     elif query and "percolate" in query:
         # ES percolate query — REVERSE search: `docs` is the REGISTRY of
@@ -1290,7 +1260,7 @@ def compile_query(docs: DataFrame, body: dict[str, Any], *,
             raise UnsupportedQuery(
                 f"percolate document lacks field {dfield!r}")
         for c in ("terms", "msm", "query_id"):
-            if c not in docs.columns:
+            if c not in out.columns:
                 raise UnsupportedQuery(
                     "percolate runs against a stored-query registry "
                     "(query_id, terms, msm)")
@@ -1298,36 +1268,46 @@ def compile_query(docs: DataFrame, body: dict[str, Any], *,
         lit_arr = F.array(*[F.lit(t) for t in doc_terms]) if doc_terms \
             else F.array().cast("array<string>")
         hits = F.size(F.array_intersect(F.array_distinct("terms"), lit_arr))
-        out = (docs.withColumn("matched_terms", hits)
-               .filter(F.col("matched_terms") >= F.col("msm"))
-               .orderBy(F.asc("query_id")))
-        if size:
-            out = out.limit(int(size))
-        return out
+        out = (out.withColumn("matched_terms", hits)
+               .filter(F.col("matched_terms") >= F.col("msm")))
+        keep, kind_order = ["query_id", "matched_terms"], [F.asc("query_id")]
 
     elif query and "constant_score" in query:
         # ES constant_score: the wrapped filter selects, scoring is a
         # constant boost (no BM25 statistics touched — pure filter plan
         # with a literal column; quantized like every score here)
         spec = query["constant_score"]
+        score = "score_u"
         out = out.filter(_compile_clause(spec["filter"])).withColumn(
-            "score_u",
-            F.lit(int(float(spec.get("boost", 1.0)) * 1e6)).cast("long"))
-        if min_score is not None:
-            bar = int(float(min_score) * _SCORE_SCALE["score_u"])
-            out = out.filter(F.col("score_u") >= bar)
+            score, F.lit(int(float(spec.get("boost", 1.0)) * 1e6)).cast("long"))
+        keep = [score]
 
     elif query:
         out = out.filter(_compile_clause(query))
 
+    if min_score is not None:  # ES min_score: drop hits below the bar
+        if score is None:
+            raise UnsupportedQuery(
+                "min_score on a pure knn body: its hits carry cosine, not "
+                "a _score; cut them with knn.similarity" if pure_knn else
+                "min_score needs a scored query or constant_score; a "
+                "filter body has no score to cut")
+        bar = float(min_score) * _SCORE_SCALE[score]
+        out = out.filter(F.col(score) >= (bar if score == "score" else int(bar)))
+
+    if post_filter:
+        # ES post_filter: filters the HITS after scoring, before from/size
+        # (aggs — compiled separately by plans.aggs — intentionally don't
+        # see it, the faceted-navigation contract)
+        out = out.filter(_compile_clause(post_filter))
+
     src = body.get("_source")
     # the _id lead column only when the table has one (events-style tables
-    # address rows by their own keys); a scored query's score column stays
+    # address rows by their own keys)
     id_lead = ["doc_id"] if "doc_id" in out.columns else []
-    keep = [score] if score else []
     skip = {"doc_id", *keep}
     if src is False:
-        if not id_lead:
+        if not (id_lead or keep):
             raise UnsupportedQuery("_source: false needs a doc_id column")
         out = out.select(*id_lead, *keep)
     elif isinstance(src, list):
@@ -1353,7 +1333,7 @@ def compile_query(docs: DataFrame, body: dict[str, Any], *,
 
     sort_cols = []
     sort_keys: list[tuple[str, bool]] = []  # (field, ascending) for search_after
-    for s in body.get("sort", []):
+    for s in body.get("sort") or []:
         if s == "_doc":  # index order: no sort (S4, in_elasticsearch.rb:33)
             continue
         if isinstance(s, str):
@@ -1384,8 +1364,8 @@ def compile_query(docs: DataFrame, body: dict[str, Any], *,
             eq = eq & (fc == vc)
         out = out.filter(cond)
 
-    if sort_cols:  # one orderBy — chained orderBy calls would replace each other
-        out = out.orderBy(*sort_cols)
+    if sort_cols or kind_order:  # one orderBy — chained orderBy calls would replace each other
+        out = out.orderBy(*sort_cols, *kind_order)
 
     if frm:
         # ES from/size offset pagination. Spark plans Offset under the sort
@@ -1394,6 +1374,8 @@ def compile_query(docs: DataFrame, body: dict[str, Any], *,
         # driver merge — fine for UI paging; deep pagination should use
         # search_after (sargable keyset, O(page)) like ES recommends.
         out = out.offset(frm)
-    if size:
-        out = out.limit(int(size))
+    # without a size, knn rows are at most k and scored hits at most
+    # from + 10, so only a post_filtered body needs the default cut
+    if size is not None or post_filter:
+        out = out.limit(page)
     return out

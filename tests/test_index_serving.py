@@ -469,7 +469,8 @@ def test_scored_query_from_min_score_and_sort(spark, docs, field_registry,
                                               pos_field_registry, body,
                                               registry):
     """Every scored query kind, index-served and DataFrame-scored, pages
-    with from/size, cuts at min_score and refuses an explicit sort."""
+    with from/size, returns no hits at size 0 (its scorer takes k = 0),
+    cuts at min_score and refuses an explicit sort."""
     from fluent_plugin_elasticsearch_spark.plans.query_ast import (
         UnsupportedQuery,
         compile_query,
@@ -486,6 +487,7 @@ def test_scored_query_from_min_score_and_sort(spark, docs, field_registry,
 
     page = compile_query(d, {**body, "from": 2, "size": 3}, index=index)
     assert [(r["doc_id"], r[score]) for r in page.collect()] == hits[2:5]
+    assert compile_query(d, {**body, "size": 0}, index=index).collect() == []
 
     bar = hits[2][1]
     cut = compile_query(d, {**body, "size": 5,

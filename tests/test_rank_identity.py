@@ -248,8 +248,6 @@ def test_suggest_term_spelling_correction(spark, index_dir, docs_tokens):
     rows = idx.suggest_term("bababc", max_edits=2, size=5).collect()
     assert rows and rows[0]["term"] == "bababa" and rows[0]["distance"] == 1
     # exact term excluded from its own suggestions
-    assert all(r["term"] != "bababa" for r in
-               idx.suggest_term("bababa", max_edits=1, size=5).collect()) is False or True
     rows2 = idx.suggest_term("bababa", max_edits=1, size=10).collect()
     assert all(r["term"] != "bababa" for r in rows2)
     # brute-force check of the candidate set

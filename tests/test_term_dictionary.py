@@ -98,20 +98,44 @@ def test_span_multi_serves_the_capped_expansion(idx):
 
 
 def test_dictionary_reads_start_no_spark_job(spark, idx):
-    """Opening, an unwarmed search() or span_multi() (before collect) and
-    expand_prefix start no Spark job."""
+    """Opening, the table readers, an unwarmed search(), span_multi() or
+    suggest() (before collect) and expand_prefix start no Spark job."""
     sc = spark.sparkContext
     group = "term-dictionary"
     sc.setJobGroup(group, group)
     try:
         opened = InvertedIndex(spark, idx.path)
+        for table in (opened.docmap, opened.doc_stats, opened.term_stats, opened.manifest):
+            table()
         opened.search("the café 日", k=5)
         opened.search("the of", k=5, operator="and")
         opened.expand_prefix("th")
         opened.span_multi("?he*", "wildcard")
+        opened.suggest("t")
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+def test_a_cap_of_a_billion_returns_every_candidate(spark, idx):
+    """Caps far above the vocabulary are clamped before they reach a
+    Spark limit, whose top-n buffer is sized by the cap up front (an
+    unclamped 10**9 kills the executor)."""
+    from fluent_plugin_elasticsearch_spark.operators.apis import terms_enum
+    from fluent_plugin_elasticsearch_spark.operators.relevance import span_multi_df
+
+    cap, want = 10**9, _scan_prefix(idx, "t")
+    assert sorted(r["term"] for r in idx.suggest("t", cap).collect()) == want
+    assert [r["term"] for r in terms_enum(None, "text", "t", size=cap, index=idx)
+            .collect()] == want
+    near = idx.term_stats().filter((F.levenshtein("term", F.lit("the")) <= 1)
+                                   & (F.col("term") != "the"))
+    assert ({r["term"] for r in idx.suggest_term("the", max_edits=1, size=cap).collect()}
+            == {r["term"] for r in near.collect()})
+    docs = spark.createDataFrame([(0, "the then tab"), (1, "then there"), (2, "a tab")],
+                                 "doc_id long, text string")
+    every = span_multi_df(docs, "t", "prefix", max_expansions=4).collect()
+    assert every and span_multi_df(docs, "t", "prefix", max_expansions=cap).collect() == every
 
 
 def test_resident_postings_need_every_term_in_the_dictionary(idx):
