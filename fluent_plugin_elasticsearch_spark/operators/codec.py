@@ -32,7 +32,11 @@ at most the build's ``block_size`` postings and adds ``block_id``,
 ``first_doc`` and ``last_doc``. ``encode_postings`` is the one writer of
 the ``*_enc`` columns — the build's phase-1 partials and phase-2 blocks
 (index_build) call it, for tf-only and positional indexes alike — and
-``decode_postings`` the one reader.
+``decode_postings`` the one reader: the build's phase 2 decodes its
+partials with it, an unwarmed index's shard kernels decode their rows
+with it (wand._postings) on every query, and a warmed index decodes
+every block with it once, at ``warm()`` (search._ResidentPostings), after
+which kernels gather from the decoded columns and decode nothing.
 """
 
 from __future__ import annotations
@@ -56,20 +60,24 @@ def varint_encode(values: np.ndarray) -> bytes:
 
 def varint_decode(buf: bytes | bytearray | memoryview, count: int | None = None) -> np.ndarray:
     """Decode LEB128 buffer back to uint64 array. Vectorized via reduceat
-    over value boundaries."""
+    over value boundaries. A buffer that ends inside a value, or (with
+    ``count``) holds any other number of values, is truncated or corrupt:
+    ValueError names the expected and decoded counts."""
     b = np.frombuffer(buf, dtype=np.uint8)
+    is_last = (b & 0x80) == 0
+    ends = np.nonzero(is_last)[0]
+    truncated = b.size > 0 and not is_last[-1]
+    if truncated or (count is not None and ends.size != count):
+        raise ValueError(f"decoded {ends.size} values, expected {count}"
+                         + ("; the buffer ends inside a value" if truncated else ""))
     if b.size == 0:
         return np.empty(0, dtype=np.uint64)
-    is_last = (b & 0x80) == 0
     # index of the value each byte belongs to
-    starts = np.concatenate([[0], np.nonzero(is_last)[0][:-1] + 1])
+    starts = np.concatenate([[0], ends[:-1] + 1])
     val_idx = np.cumsum(np.concatenate([[0], is_last[:-1].astype(np.int64)]))
     pos_in_val = np.arange(b.size) - starts[val_idx]
     contrib = (b & 0x7F).astype(np.uint64) << (np.uint64(7) * pos_in_val.astype(np.uint64))
-    vals = np.bitwise_or.reduceat(contrib, starts)
-    if count is not None:
-        assert vals.size == count, f"decoded {vals.size} values, expected {count}"
-    return vals
+    return np.bitwise_or.reduceat(contrib, starts)
 
 
 def _varint_bytes_matrix(v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -153,18 +161,23 @@ def segmented_cumsum(gaps: np.ndarray, seg_starts: np.ndarray, seg_lens: np.ndar
     return acc - np.repeat(carry, seg_lens)
 
 
+def segment_index(seg_starts_src: np.ndarray, seg_lens: np.ndarray) -> np.ndarray:
+    """Source positions of variable-length segments (segment k starts at
+    seg_starts_src[k] and holds seg_lens[k] values) laid end to end, in
+    the given order — fully vectorized (repeat + intra-offset)."""
+    seg_lens = np.asarray(seg_lens, dtype=np.int64)
+    total = int(seg_lens.sum())
+    out_starts = np.cumsum(seg_lens) - seg_lens
+    intra = np.arange(total, dtype=np.int64) - np.repeat(out_starts, seg_lens)
+    return np.repeat(np.asarray(seg_starts_src, dtype=np.int64), seg_lens) + intra
+
+
 def gather_segments(values: np.ndarray, seg_starts_src: np.ndarray,
                     seg_lens: np.ndarray) -> np.ndarray:
     """Reorder variable-length segments: emit values of segment k (source
     start seg_starts_src[k], length seg_lens[k]) consecutively, for k in
-    the given order — fully vectorized (repeat + intra-offset gather)."""
-    total = int(seg_lens.sum())
-    if total == 0:
-        return values[:0]
-    out_starts = np.cumsum(seg_lens) - seg_lens
-    intra = np.arange(total, dtype=np.int64) - np.repeat(out_starts, seg_lens)
-    src_idx = np.repeat(seg_starts_src.astype(np.int64), seg_lens) + intra
-    return values[src_idx]
+    the given order."""
+    return values[segment_index(seg_starts_src, seg_lens)]
 
 
 def encode_postings(ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,

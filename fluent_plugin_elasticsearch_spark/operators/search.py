@@ -8,16 +8,22 @@ merges the per-shard results into the global top-k by (score desc,
 doc_id asc). ``InvertedIndex._per_shard`` picks one of two execution
 paths for that kernel:
 
-Resident (after ``warm()``): the postings live in driver memory as one
-Arrow table per shard, sorted by (term, first_doc), with each term's row
-range. A query takes its terms' rows from each shard as numpy columns,
-runs the kernel in-process, merges with one numpy lexsort and returns
-``Hits``: the rows as a driver-side Arrow table, no pandas object on the
-way. ``collect()``, ``toPandas()`` and ``to_es_response`` read that
-table — no Spark job, no JVM call. A Spark DataFrame (a LocalTableScan
-over the table) is built only when the caller composes the result with
-Spark (a join, ``select``, ``F.broadcast``). Memory cost: about the
-postings' Arrow ``nbytes`` (6.8 MB for the 16k-doc perfbench index).
+Resident (after ``warm()``): the postings are decoded once into driver
+memory — per shard, the rows' numpy columns sorted by (term, first_doc),
+each row's offset into the shard's decoded doc ids, tfs and doc lengths
+(and positions), and each term's row range. A query takes its terms'
+rows from each shard, runs the kernel in-process on postings gathered
+from the decoded columns (no varint decode), merges with one numpy
+lexsort and returns ``Hits``: the rows as a driver-side Arrow table, no
+pandas object on the way. ``collect()``, ``toPandas()`` and
+``to_es_response`` read that table — no Spark job, no JVM call. A Spark
+DataFrame (a LocalTableScan over the table) is built only when the
+caller composes the result with Spark (a join, ``select``,
+``F.broadcast``). Memory cost: each column takes the narrowest integer
+dtype that holds it, so 5 bytes per posting where doc ids and doc lengths
+fit uint16 and tfs uint8, 2 more per position where positions fit uint16,
+plus 17 bytes per block row: 6.3 MB for the 16k-doc perfbench index
+(1.08M postings), 11.0 MB for its positional twin.
 
 Spark (unwarmed): one job per query, started by ``collect()``
     postings.filter(term ∈ terms)            [scan limited to query terms]
@@ -53,6 +59,7 @@ from ..textproc import bm25_idf, tokenize_simple, tokenize_unicode
 from . import positions as _pos
 from . import wand as _wand
 from .bm25 import fuse_scores, quantize_scores
+from .codec import Postings, decode_postings, segment_index
 
 _TOKENIZE = {"unicode": tokenize_unicode, "simple": tokenize_simple, "simple_udf": tokenize_simple}
 
@@ -173,11 +180,88 @@ def _like_regex(pattern: str) -> tuple[str, re.Pattern]:
     return head, re.compile(regex, re.DOTALL)
 
 
+# Postings per decode_postings call while warm() decodes a shard. It bounds
+# the decoder's temporaries (tens of bytes per encoded byte) to about 1 MB,
+# which the heap reuses chunk after chunk: at 1 << 16 the process kept
+# ~20 MB more resident after three warm() calls on the 16k-doc perfbench
+# index, and warm() was no faster.
+DECODE_CHUNK = 1 << 14
+
+
+def _narrowest(values: np.ndarray) -> np.dtype:
+    """The narrowest of uint8, uint16, uint32 and int64 that holds the
+    int64 ``values`` exactly (promoting any two of them stays exact)."""
+    if values.size and values.min() >= 0:
+        t = np.min_scalar_type(values.max())
+        if t.itemsize < 8:
+            return t
+    return np.dtype(np.int64 if values.size else np.uint8)
+
+
+def _narrow(values: np.ndarray) -> np.ndarray:
+    return values.astype(_narrowest(values))
+
+
+def _put(col: np.ndarray, at: int, values: np.ndarray) -> np.ndarray:
+    """``values`` written into ``col`` from ``at``, ``col`` first widened
+    to a dtype that holds them exactly; returns ``col``."""
+    dtype = np.result_type(col.dtype, _narrowest(values))
+    if dtype != col.dtype:
+        col = col.astype(dtype)
+    col[at:at + values.size] = values
+    return col
+
+
+def _buffer(arr: pa.Array) -> np.ndarray:
+    """The rows of a binary Arrow array joined, as a view of its data
+    buffer (no Python bytes per row)."""
+    _, offsets, data = arr.buffers()
+    width = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    o = np.frombuffer(offsets, width)[arr.offset:arr.offset + len(arr) + 1]
+    return np.frombuffer(data, np.uint8)[o[0]:o[-1]]
+
+
+def _decode_shard(part: pa.Table) -> tuple[dict[str, np.ndarray], Postings]:
+    """One shard's sorted posting rows decoded once: the row columns a
+    kernel reads (no ``*_enc`` bytes, no terms), each row's ``offset``
+    (and ``pos_offset``) into the decoded postings, and those postings,
+    each column in its narrowest dtype. ``decode_postings`` runs on
+    bounded chunks of rows, read straight from the Arrow buffers, into
+    preallocated columns (positions, of unknown total, are joined)."""
+    enc = [c for c in ("docs_enc", "tfs_enc", "dls_enc", "pos_enc") if c in part.column_names]
+    arrays = {c: part[c].combine_chunks() for c in enc}
+    n = part["n_docs"].to_numpy().astype(np.int64)
+    offset = np.cumsum(n) - n
+    total = int(n.sum())
+    bounds = np.append(np.unique(np.searchsorted(offset, np.arange(0, total, DECODE_CHUNK))), n.size)
+    cols = [np.zeros(total, np.uint8) for _ in range(3)]
+    positions = []
+    for a, b in zip(bounds[:-1], bounds[1:]):
+        rows = {"n_docs": n[a:b], **{c: [_buffer(arrays[c].slice(a, b - a))] for c in enc}}
+        p = decode_postings(rows, positions="pos_enc" in arrays)
+        cols = [_put(col, offset[a], v) for col, v in zip(cols, p)]
+        if p.positions is not None:
+            positions.append(_narrow(p.positions))
+    rows = {c: _narrow(part[c].to_numpy()) for c in ("n_docs", "first_doc", "last_doc")}
+    rows["max_tfn"] = part["max_tfn"].to_numpy()
+    rows["offset"] = _narrow(offset)
+    store = Postings(*cols, rows["n_docs"], None)
+    if positions:
+        per_row = np.add.reduceat(cols[1], offset, dtype=np.int64)
+        rows["pos_offset"] = _narrow(np.cumsum(per_row) - per_row)
+        store = store._replace(positions=np.concatenate(positions))
+    return rows, store
+
+
 class _ResidentPostings:
-    """A postings table held in driver memory: one Arrow table per shard,
-    sorted by (term, first_doc), and each term's row range in it
-    (``starts[i]:starts[i + 1]`` for the term at position ``i`` of the
-    index's ``TermDictionary``)."""
+    """A postings table decoded into driver memory at open. Per shard, in
+    (term, first_doc) order: the rows' ``n_docs``, ``first_doc``,
+    ``last_doc``, ``max_tfn`` and ``offset`` (and ``pos_offset``) into
+    the shard's decoded ids, tfs, dls (and positions) — a codec.Postings,
+    each column in the narrowest integer dtype that holds it — and each
+    term's row range (``starts[i]:starts[i + 1]`` for the term at
+    position ``i`` of the index's ``TermDictionary``). It keeps no
+    encoded bytes and no term strings."""
 
     def __init__(self, postings_path: str, vocab: TermDictionary):
         table = pads.dataset(postings_path, format="parquet",
@@ -191,31 +275,31 @@ class _ResidentPostings:
             ids = pc.index_in(part["term"], value_set=value_set)
             if ids.null_count:
                 raise ValueError(f"shard {s} has postings terms missing from term_stats")
-            self.shards.append((part, np.searchsorted(ids.to_numpy(),
-                                                      np.arange(len(vocab.terms) + 1))))
+            starts = _narrow(np.searchsorted(ids.to_numpy(), np.arange(len(vocab.terms) + 1)))
+            self.shards.append((*_decode_shard(part), starts))
+            del part, ids
         del table
         pa.default_memory_pool().release_unused()
 
-    def blocks(self, terms) -> list[dict[str, np.ndarray]]:
-        """Each shard's blocks of ``terms`` as numpy columns (row_columns)
-        — no pandas frame; shards holding none of the terms are left
-        out, as groupBy leaves them out."""
+    def blocks(self, terms) -> list[_wand.Resident]:
+        """Each shard's rows of ``terms`` (the term column built from
+        their dictionary positions) — no pandas frame, no decode; shards
+        holding none of the terms are left out, as groupBy leaves them
+        out."""
         position = self.vocab.position
-        ids = sorted({position[t] for t in terms if t in position})
-        if not ids:
+        ids = np.array(sorted({position[t] for t in terms if t in position}), dtype=np.int64)
+        if not ids.size:
             return []
+        names = np.array([self.vocab.terms[i] for i in ids], dtype=object)
         out = []
-        for part, starts in self.shards:
-            rows = np.concatenate([np.arange(starts[i], starts[i + 1]) for i in ids])
-            if rows.size:
-                out.append(row_columns(part.take(rows)))
+        for rows, store, starts in self.shards:
+            lo, counts = starts[ids], starts[ids + 1] - starts[ids]
+            if counts.any():
+                take = segment_index(lo, counts)
+                cols = {c: v[take] for c, v in rows.items()}
+                cols["term"] = np.repeat(names, counts)
+                out.append(_wand.Resident(cols, store))
         return out
-
-
-def row_columns(table: pa.Table) -> dict[str, np.ndarray]:
-    """Arrow posting rows as the column mapping a kernel reads: one
-    ``to_numpy`` per column, ``*_enc`` ones as object arrays of bytes."""
-    return {name: col.to_numpy() for name, col in zip(table.column_names, table.columns)}
 
 
 class InvertedIndex:
@@ -261,10 +345,13 @@ class InvertedIndex:
     def warm(self) -> "InvertedIndex":
         """Load the postings into driver memory — the serving-mode
         analogue of ES's segments resident on the serving node. One
-        pyarrow read of the postings parquet becomes one Arrow table per
-        shard, sorted by (term, first_doc), plus each term's row range,
-        keyed by the term dictionary's positions; freed read buffers go
-        back to the OS.
+        pyarrow read of the postings parquet is sorted per shard by
+        (term, first_doc) and decoded once (``_ResidentPostings``): the
+        rows' columns, their offsets into the shard's decoded postings
+        and each term's row range, keyed by the term dictionary's
+        positions. The Arrow read is freed and its buffers go back to
+        the OS before ``warm()`` returns; a corrupt or truncated block
+        fails it with ``ValueError``.
 
         From then on every posting-backed query runs its shard kernel
         in-process on the query terms' rows and returns ``Hits``, a
@@ -272,9 +359,14 @@ class InvertedIndex:
         make no JVM call, empty results and prefix/wildcard expansions
         included. A Spark DataFrame over the rows is built only when the
         caller composes them with Spark. Results are bit-identical to
-        the unwarmed Spark path. The cost is driver memory of about the
-        postings' Arrow ``nbytes`` (6.8 MB for the 16k-doc perfbench
-        index); the tables are freed with the index object."""
+        the unwarmed Spark path, which decodes the stored bytes per
+        query. The cost is driver memory of ~5 bytes per posting (and 2
+        per position) plus 17 per block row: 6.3 MB for the 16k-doc
+        perfbench index against 7.3 MB for the encoded Arrow rows it
+        replaced, 11.0 MB against 10.0 MB for its positional twin, whose
+        decoded positions outweigh their varint gaps. It also decodes
+        every block at open; the columns are freed with the index
+        object."""
         self._resident = _ResidentPostings(os.path.join(self.path, "postings"), self.vocab)
         return self
 

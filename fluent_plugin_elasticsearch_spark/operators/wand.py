@@ -8,9 +8,10 @@ returns that shard's local result as a dict of typed numpy columns; the
 caller merges the shards into the global top-k (search.InvertedIndex.
 _per_shard). The rows come from either of two paths:
 
-* resident — on a warmed index, in-process on the driver: the numpy
-  columns taken from the shard's Arrow table in memory, with no Spark
-  job and no pandas object;
+* resident — on a warmed index, in-process on the driver: ``Resident``
+  rows, numpy columns taken from the shard's decoded store in memory
+  (each row's ``offset`` into the shard's decoded postings instead of
+  the ``*_enc`` bytes), with no Spark job and no pandas object;
 * Spark — on an unwarmed index, the pandas frame ``applyInPandas`` hands
   each shard group (postings.filter(term ∈ query) → groupBy(shard)).
 
@@ -19,9 +20,11 @@ columns in (term, first_doc) order, so a result does not depend on the
 order the rows arrive in, with per-row term codes for every term→value
 lookup. Work per shard is proportional to the query terms' posting data
 only (doc lengths are inlined in the blocks). The blocks' columns are
-laid out in the operators/codec.py header; every kernel reads them
-through codec.decode_postings, and scores with the one BM25 tf-factor
-``_tfn`` the build also uses for ``max_tfn``.
+laid out in the operators/codec.py header; every kernel gets its
+postings from ``_postings``, which gathers resident rows from the decoded
+columns and decodes Spark rows with codec.decode_postings, and scores
+with the one BM25 tf-factor ``_tfn`` the build also uses for
+``max_tfn``.
 
 Tie-break everywhere: (score desc, doc_id asc) — rank-identical contract.
 """
@@ -32,7 +35,7 @@ from typing import NamedTuple
 
 import numpy as np
 
-from .codec import Postings, decode_postings
+from .codec import Postings, decode_postings, gather_segments, segment_index
 
 EPS = 1e-12  # conservative slack on float upper bounds (sum-order slop)
 
@@ -58,6 +61,17 @@ def _tfn(tf: np.ndarray, dl: np.ndarray, avgdl: float, k1: float, b: float,
     return weight * (k1 + 1.0) * tff / (tff + k1 * (1.0 - b + b * dl.astype(np.float64) / avgdl))
 
 
+class Resident(dict):
+    """A warmed shard's posting rows (search._ResidentPostings.blocks):
+    the row columns, where each row's ``offset`` (and, positional,
+    ``pos_offset``) points into ``store``, the shard's decoded postings in
+    their narrow dtypes, in place of the ``*_enc`` bytes."""
+
+    def __init__(self, cols: dict[str, np.ndarray], store: Postings):
+        super().__init__(cols)
+        self.store = store
+
+
 class Rows(NamedTuple):
     """A shard's posting rows in (term, first_doc) order — the order every
     per-doc float sum follows, whatever order the rows arrived in."""
@@ -65,6 +79,7 @@ class Rows(NamedTuple):
     cols: dict[str, np.ndarray]  # every row column, numpy, in that order
     terms: np.ndarray  # the distinct terms, ascending
     code: np.ndarray  # each row's index into ``terms``
+    store: Postings | None  # the decoded postings Resident rows point into
 
     def per_row(self, by_term: dict, dtype) -> np.ndarray:
         """``by_term`` (term → value, holding every row's term) per row."""
@@ -73,19 +88,37 @@ class Rows(NamedTuple):
 
 def _rows(rows) -> Rows:
     """The one row normaliser: ``rows`` is the pandas frame applyInPandas
-    hands a kernel, or the column mapping a warmed index takes from its
-    Arrow table (search._ResidentPostings.blocks). One np.unique codes
-    the terms and one stable lexsort over (code, first_doc) orders the
-    rows."""
+    hands a kernel, or the ``Resident`` rows of a warmed index. One
+    np.unique codes the terms and one stable lexsort over (code,
+    first_doc) orders the rows."""
     terms, code = np.unique(np.asarray(rows["term"], dtype=object), return_inverse=True)
     order = np.lexsort((np.asarray(rows["first_doc"]), code))
-    return Rows({c: np.asarray(rows[c])[order] for c in rows}, terms, code[order])
+    return Rows({c: np.asarray(rows[c])[order] for c in rows}, terms, code[order],
+                rows.store if isinstance(rows, Resident) else None)
+
+
+def _postings(r: Rows, sel: np.ndarray | None = None, positions: bool = False) -> Postings:
+    """The postings of ``r``'s rows (with ``sel``, of the rows it picks,
+    in that order), as the int64 columns codec.decode_postings returns:
+    gathered from the decoded store when the rows carry offsets, else
+    decoded from their ``*_enc`` bytes."""
+    if r.store is None:
+        return decode_postings(r.cols, sel, positions)
+    at = slice(None) if sel is None else sel
+    n = r.cols["n_docs"][at].astype(np.int64)
+    idx = segment_index(r.cols["offset"][at], n)
+    ids, tfs, dls = (col[idx].astype(np.int64) for col in r.store[:3])
+    pos = None
+    if positions:
+        per_row = np.add.reduceat(tfs, np.cumsum(n) - n) if n.size else n
+        pos = gather_segments(r.store.positions, r.cols["pos_offset"][at], per_row).astype(np.int64)
+    return Postings(ids, tfs, dls, n, pos)
 
 
 def _decode(rows, positions: bool = False) -> tuple[Rows, Postings]:
-    """A shard's rows (``_rows``) and their decoded postings."""
+    """A shard's rows (``_rows``) and their postings."""
     r = _rows(rows)
-    return r, decode_postings(r.cols, positions=positions)
+    return r, _postings(r, positions=positions)
 
 
 def _runs(ids: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -356,7 +389,7 @@ def score_shard_wand(rows, idfs: dict[str, float], k: int,
     def decode(sel: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         """(doc ids, bm25 contributions) of the selected blocks, decoded
         in ascending block (= term-sorted) order in one segmented pass."""
-        p = decode_postings(r.cols, sel)
+        p = _postings(r, sel)
         return p.ids, np.repeat(idf_blk[sel], p.n) * _tfn(p.tfs, p.dls, avgdl, k1, b)
 
     # per-term contiguous block slices (the rows are term-sorted; within a

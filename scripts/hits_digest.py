@@ -1,8 +1,10 @@
-"""Digest of a warmed index's query results, one line per query entry.
+"""Digest of an index's query results, one line per query entry.
 
-    python scripts/hits_digest.py <index_dir>
+    python scripts/hits_digest.py [--cold] <index_dir>
 
-Opens and warms the index, and runs the perfbench query pool (the
+Opens and warms the index (with ``--cold``, leaves it unwarmed: every
+request then runs its shard kernels in a Spark job, on postings decoded
+from the stored bytes), and runs the perfbench query pool (the
 400 pool queries ``perfbench.gen.query_stream`` draws from, 336 of them
 distinct), plus queries of the index's own head terms, through each
 posting-backed entry: ``search`` in ``auto``, ``wand`` and
@@ -15,7 +17,8 @@ middle and end), and on a positional index also ``match_phrase``,
 come back, each row's floats as ``float.hex()``; a request that raises
 ``ValueError`` (an expansion over its cap) adds its message instead. Two
 runs give the same lines exactly when every row, score bit, row order
-and error is the same: run it in two checkouts and ``diff``.
+and error is the same: run it in two checkouts, or warm and ``--cold``,
+and ``diff``.
 """
 
 from __future__ import annotations
@@ -91,9 +94,11 @@ def entries(idx: InvertedIndex, pool: list[str]):
                                   for ts in multi]
 
 
-def main(index_dir: str) -> None:
+def main(index_dir: str, cold: bool) -> None:
     spark = get_spark(cores=2)
-    idx = InvertedIndex(spark, index_dir).warm()
+    idx = InvertedIndex(spark, index_dir)
+    if not cold:
+        idx.warm()
     for name, calls in entries(idx, query_pool() + head_queries(idx)):
         h = hashlib.sha256()
         for call in calls:
@@ -108,6 +113,8 @@ def main(index_dir: str) -> None:
 
 
 if __name__ == "__main__":
-    if len(sys.argv) != 2:
+    args = sys.argv[1:]
+    cold = args[:1] == ["--cold"]
+    if len(args) != 1 + cold:
         sys.exit(__doc__)
-    main(sys.argv[1])
+    main(args[-1], cold)

@@ -6,6 +6,7 @@ adversarial inputs — boundary bytes (7-bit group edges), empty segments,
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -32,6 +33,25 @@ values = st.lists(st.one_of(u64, boundary), max_size=200)
 def test_varint_roundtrip(vals):
     arr = np.array(vals, dtype=np.uint64)
     assert np.array_equal(varint_decode(varint_encode(arr), arr.size), arr)
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.lists(st.one_of(u64, boundary), min_size=1, max_size=200), st.data())
+def test_truncated_buffer_raises(vals, data):
+    """A block cut short — inside a value or at a value boundary — fails
+    the decode with ValueError naming both counts, with or without
+    ``python -O`` (no assert)."""
+    arr = np.array(vals, dtype=np.uint64)
+    enc = varint_encode(arr)
+    cut = data.draw(st.integers(0, len(enc) - 1))
+    with pytest.raises(ValueError, match=rf"decoded \d+ values, expected {arr.size}"):
+        varint_decode(enc[:cut], arr.size)
+
+
+def test_buffer_ending_inside_a_value_raises_without_count():
+    enc = varint_encode(np.array([5, 300], dtype=np.uint64))
+    with pytest.raises(ValueError, match="ends inside a value"):
+        varint_decode(enc[:-1])
 
 
 @settings(max_examples=100, deadline=None)

@@ -7,14 +7,17 @@ path while WAND and brute force returned [100..104].
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from fluent_plugin_elasticsearch_spark.operators import positions, wand
 from fluent_plugin_elasticsearch_spark.operators.codec import delta_encode, varint_encode
-from fluent_plugin_elasticsearch_spark.operators.search import row_columns
+from fluent_plugin_elasticsearch_spark.operators.search import TermDictionary, _ResidentPostings
 from fluent_plugin_elasticsearch_spark.operators.wand import (
     _tfn,
     score_shard_batch,
@@ -108,9 +111,10 @@ def test_batch_multiquery_factorized_lut(tied_pdf):
 
 # --- order invariance -------------------------------------------------------
 # applyInPandas hands a kernel its shard's block rows as a pandas frame in no
-# particular order, while the resident (warmed) path hands them over as the
-# numpy column mapping taken from an Arrow table: every kernel must return
-# the same columns, bit for bit, whatever the form and order of its rows.
+# particular order, while the resident (warmed) path hands them over as
+# numpy columns pointing into the postings it decoded at open: every kernel
+# must return the same columns, bit for bit, whatever the form and order of
+# its rows.
 
 VOCAB = ["a", "b", "c", "d", "e"]
 
@@ -151,9 +155,11 @@ WAND_IDFS = {"a": 0.05, "b": 0.1, "c": 1.5, "d": 2.0, "e": 3.0}
 TOPK = {"doc_id": "int64", "score": "float64"}
 
 def _only(rows, term: str):
-    """``rows`` (a frame or a column mapping) cut to ``term``'s blocks."""
+    """``rows`` (a frame or resident rows) cut to ``term``'s blocks."""
     keep = np.asarray(rows["term"]) == term
-    return rows[keep] if isinstance(rows, pd.DataFrame) else {c: v[keep] for c, v in rows.items()}
+    if isinstance(rows, pd.DataFrame):
+        return rows[keep]
+    return wand.Resident({c: v[keep] for c, v in rows.items()}, rows.store)
 
 
 # name → (kernel(rows, avgdl), result columns)
@@ -195,14 +201,24 @@ def test_order_invariance_covers_every_kernel():
     assert kernels <= covered
 
 
-def _resident(pdf: pd.DataFrame) -> dict:
-    """The rows as a warmed index hands them to a kernel: the column
-    mapping search._ResidentPostings.blocks builds from an Arrow table."""
-    return row_columns(pa.Table.from_pandas(pdf, preserve_index=False))
+def _resident(pdf: pd.DataFrame, path) -> wand.Resident:
+    """The rows as a warmed index hands them to a kernel: ``pdf`` written
+    as one shard's postings (and VOCAB as the term dictionary), read and
+    decoded by search._ResidentPostings, and all of VOCAB's rows taken
+    back through its ``blocks``."""
+    os.makedirs(path / "postings" / "shard=0")
+    os.makedirs(path / "term_stats")
+    pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False),
+                   path / "postings" / "shard=0" / "part-0.parquet")
+    pq.write_table(pa.table({"term": VOCAB, "df": [1] * len(VOCAB)}),
+                   path / "term_stats" / "part-0.parquet")
+    store = _ResidentPostings(str(path / "postings"), TermDictionary(str(path / "term_stats")))
+    (rows,) = store.blocks(VOCAB)
+    return rows
 
 
 @pytest.mark.parametrize("name", sorted(KERNELS))
-def test_kernel_ignores_row_order(name, monkeypatch):
+def test_kernel_ignores_row_order(name, monkeypatch, tmp_path):
     # one block per WAND window, so the sweep crosses many windows
     monkeypatch.setattr(wand, "NB_PER_TERM", 1)
     kernel, _ = KERNELS[name]
@@ -211,16 +227,18 @@ def test_kernel_ignores_row_order(name, monkeypatch):
     assert len(want) > 0
     for seed in range(3):
         shuffled = pdf.sample(frac=1.0, random_state=seed)
-        for rows in (shuffled, _resident(shuffled)):
+        for rows in (shuffled, _resident(shuffled, tmp_path / str(seed))):
             got = pd.DataFrame(kernel(rows, avgdl))
             pd.testing.assert_frame_equal(got, want, check_exact=True)
 
 
 @pytest.mark.parametrize("name", sorted(KERNELS))
-def test_kernel_on_zero_rows_returns_typed_empty_frame(name):
+def test_kernel_on_zero_rows_returns_typed_empty_frame(name, tmp_path):
     kernel, cols = KERNELS[name]
     pdf, avgdl = _positional_blocks()
-    for rows in (pdf.iloc[:0], _resident(pdf.iloc[:0])):
+    resident = _resident(pdf, tmp_path)
+    none = wand.Resident({c: v[:0] for c, v in resident.items()}, resident.store)
+    for rows in (pdf.iloc[:0], none):
         got = pd.DataFrame(kernel(rows, avgdl))
         assert len(got) == 0
         assert {c: str(t) for c, t in got.dtypes.items()} == cols

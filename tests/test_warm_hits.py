@@ -14,6 +14,7 @@ import pandas as pd
 import pyarrow.pandas_compat
 from pyspark.sql import functions as F
 
+from fluent_plugin_elasticsearch_spark.operators import codec
 from fluent_plugin_elasticsearch_spark.operators.search import Hits, InvertedIndex, to_es_response
 
 QUERIES = ["the data", "data query", "zzznope"]  # the last is absent
@@ -64,6 +65,22 @@ def _pandas_frames(monkeypatch):
         yield made
 
 
+@contextmanager
+def _varint_decodes(monkeypatch):
+    """Record every ``codec.varint_decode`` call this thread makes (every
+    posting decode goes through it)."""
+    made, caller, decode = [], threading.get_ident(), codec.varint_decode
+
+    def counting(*args, **kwargs):
+        if threading.get_ident() == caller:
+            made.append(len(args[0]))
+        return decode(*args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(codec, "varint_decode", counting)
+        yield made
+
+
 def _typed(rows) -> list:
     """Rows as (field names, values, value types): equal only when the
     two results agree in field order, Python types and values."""
@@ -92,13 +109,18 @@ def test_warm_queries_make_no_jvm_call(spark, pos_index, monkeypatch):
     """search (auto, wand, exhaustive, an absent term), search_batch,
     match_phrase, match_phrase_prefix, span_multi (prefix and wildcard)
     and to_es_response on a warmed index, with k=5 and k=0, send no
-    command to the JVM and build no pandas frame, and their rows equal
-    the unwarmed index's in value, type and field order."""
-    warm_idx = InvertedIndex(spark, pos_index).warm()
-    with _py4j_commands(spark) as sent, _pandas_frames(monkeypatch) as frames:
+    command to the JVM, build no pandas frame and decode no posting (the
+    postings were decoded once, at warm()), and their rows equal the
+    unwarmed index's in value, type and field order."""
+    with _varint_decodes(monkeypatch) as decodes:
+        warm_idx = InvertedIndex(spark, pos_index).warm()
+    assert decodes  # the counter sees warm() decode the index
+    with (_py4j_commands(spark) as sent, _pandas_frames(monkeypatch) as frames,
+          _varint_decodes(monkeypatch) as decodes):
         got = _requests(warm_idx)
     assert sent == []
     assert frames == []
+    assert decodes == []
     with _py4j_commands(spark) as sent:
         want = _requests(InvertedIndex(spark, pos_index))
     assert sent  # the unwarmed path's Spark calls are seen
