@@ -233,7 +233,9 @@ def _decode_shard(part: pa.Table) -> tuple[dict[str, np.ndarray], Postings]:
     n = part["n_docs"].to_numpy().astype(np.int64)
     offset = np.cumsum(n) - n
     total = int(n.sum())
-    bounds = np.append(np.unique(np.searchsorted(offset, np.arange(0, total, DECODE_CHUNK))), n.size)
+    # the first row at or after each chunk multiple; a multiple inside the
+    # last row maps to n.size, which the appended end then repeats
+    bounds = np.unique(np.append(np.searchsorted(offset, np.arange(0, total, DECODE_CHUNK)), n.size))
     cols = [np.zeros(total, np.uint8) for _ in range(3)]
     positions = []
     for a, b in zip(bounds[:-1], bounds[1:]):

@@ -15,8 +15,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from fluent_plugin_elasticsearch_spark.operators import positions, wand
-from fluent_plugin_elasticsearch_spark.operators.codec import delta_encode, varint_encode
+from fluent_plugin_elasticsearch_spark.operators import positions, search, wand
+from fluent_plugin_elasticsearch_spark.operators.codec import decode_postings, delta_encode, varint_encode
 from fluent_plugin_elasticsearch_spark.operators.search import TermDictionary, _ResidentPostings
 from fluent_plugin_elasticsearch_spark.operators.wand import (
     _tfn,
@@ -203,18 +203,51 @@ def test_order_invariance_covers_every_kernel():
 
 def _resident(pdf: pd.DataFrame, path) -> wand.Resident:
     """The rows as a warmed index hands them to a kernel: ``pdf`` written
-    as one shard's postings (and VOCAB as the term dictionary), read and
-    decoded by search._ResidentPostings, and all of VOCAB's rows taken
+    as one shard's postings (and its terms as the term dictionary), read
+    and decoded by search._ResidentPostings, and all of its rows taken
     back through its ``blocks``."""
+    terms = sorted(set(pdf["term"]))
     os.makedirs(path / "postings" / "shard=0")
     os.makedirs(path / "term_stats")
     pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False),
                    path / "postings" / "shard=0" / "part-0.parquet")
-    pq.write_table(pa.table({"term": VOCAB, "df": [1] * len(VOCAB)}),
+    pq.write_table(pa.table({"term": terms, "df": [1] * len(terms)}),
                    path / "term_stats" / "part-0.parquet")
     store = _ResidentPostings(str(path / "postings"), TermDictionary(str(path / "term_stats")))
-    (rows,) = store.blocks(VOCAB)
+    (rows,) = store.blocks(terms)
     return rows
+
+
+@pytest.mark.parametrize("chunk", [1, 3, 4, search.DECODE_CHUNK])
+def test_resident_decodes_in_chunks(chunk, monkeypatch, tmp_path):
+    """warm() decodes a shard DECODE_CHUNK postings at a time, widening a
+    column when a later chunk needs a wider dtype: the gathered postings
+    equal decode_postings of the same rows, also when a chunk multiple
+    falls inside the shard's last row."""
+    monkeypatch.setattr(search, "DECODE_CHUNK", chunk)
+    pdf, _ = _positional_blocks()
+    # the code-point-last term: 5 postings whose ids, tfs, dls and
+    # positions outgrow the earlier rows' uint8/uint16 columns
+    ids = np.array([70_000, 70_001, 1 << 20, 1 << 33, (1 << 40) + 3], dtype=np.int64)
+    tf = np.array([1, 2, 300, 1, 2], dtype=np.int64)
+    dl = np.array([5, 5, 70_000, 5, 1 << 17], dtype=np.int64)
+    pos = [np.arange(t, dtype=np.uint64) * 1000 for t in tf]
+    last = {"term": "zz", "first_doc": int(ids[0]), "last_doc": int(ids[-1]), "n_docs": 5,
+            "docs_enc": delta_encode(ids), "tfs_enc": varint_encode(tf),
+            "dls_enc": varint_encode(dl), "max_tfn": 1.0,
+            "pos_enc": b"".join(delta_encode(p) for p in pos)}
+    pdf = pd.concat([pdf, pd.DataFrame([last])], ignore_index=True)
+    start = int(pdf["n_docs"].sum()) - 5
+    if chunk < 5:
+        assert (start + 4) // chunk > start // chunk  # a chunk multiple inside the last row
+    rows = _resident(pdf.sample(frac=1.0, random_state=0), tmp_path)
+    assert rows.store.ids.dtype == np.int64 and rows.store.dls.dtype == np.uint32
+    assert rows.store.tfs.dtype == np.uint16 and rows.store.positions.dtype == np.uint32
+    _, got = wand._decode(rows, positions=True)
+    want = decode_postings(pdf.sort_values(["term", "first_doc"]), positions=True)
+    for g, w in zip(got, want):
+        assert g.dtype == np.int64
+        np.testing.assert_array_equal(g, w)
 
 
 @pytest.mark.parametrize("name", sorted(KERNELS))
@@ -225,7 +258,9 @@ def test_kernel_ignores_row_order(name, monkeypatch, tmp_path):
     pdf, avgdl = _positional_blocks()
     want = pd.DataFrame(kernel(pdf, avgdl))
     assert len(want) > 0
-    for seed in range(3):
+    # the resident rows decoded in one chunk, and in chunks that split rows
+    for seed, chunk in enumerate((search.DECODE_CHUNK, 3, 7)):
+        monkeypatch.setattr(search, "DECODE_CHUNK", chunk)
         shuffled = pdf.sample(frac=1.0, random_state=seed)
         for rows in (shuffled, _resident(shuffled, tmp_path / str(seed))):
             got = pd.DataFrame(kernel(rows, avgdl))
